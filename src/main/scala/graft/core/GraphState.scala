@@ -326,34 +326,33 @@ final class GraphState(
     }
 
   // Collected (eid, src, dst) triples per requested type set — the input
-  // of every driver-local traversal cutover (LocalHops / LocalSearch).
-  // Memoized on PINNED (loader) states only: those are session-shared
-  // across queries and never mutated, so hops-limit replays, subcritical
-  // var-expands and k-shortest passes stop re-collecting the same 1-2M
-  // edge triples per query (same lifetime family as the adjacency
-  // cache / text-index memos). Mutated versions are new instances with a
-  // fresh (empty) memo and skip it (!pinned). None = known supercritical
-  // under `cap` — the next caller skips the wasted probe too.
+  // of every driver-local traversal cutover (LocalHops / LocalSearch),
+  // probed under [[graft.operators.Cutover]]'s cap. Memoized on PINNED
+  // (loader) states only: those are session-shared across queries and
+  // never mutated, so hops-limit replays, subcritical var-expands and
+  // k-shortest passes stop re-collecting the same 1-2M edge triples per
+  // query (same lifetime family as the adjacency cache / text-index
+  // memos). Mutated versions are new instances with a fresh (empty) memo
+  // and skip it (!pinned). Right = the whole set; Left(cap) = more than
+  // `cap` triples, which answers any later probe under a cap no larger
+  // and is probed again under a larger one.
   private val localEdgesMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Option[Array[(Long, Long, Long)]]]
-  def localTypedEdges(
-      types: Seq[String], cap: Long): Option[Array[(Long, Long, Long)]] = {
+    .empty[String, Either[Long, Array[(Long, Long, Long)]]]
+  def localTypedEdges(types: Seq[String]): Option[Array[(Long, Long, Long)]] = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Cutover
     val key = types.sorted.mkString(",")
+    val cap = Cutover.cap(org.apache.spark.sql.SparkSession.active)
     if (adjCache.pinned) localEdgesMemo.get(key) match {
-      case Some(v) => return v.filter(_.length <= cap)
-      case None => ()
+      case Some(Right(all)) => return Some(all).filter(_.length <= cap)
+      case Some(Left(above)) if cap <= above => return None
+      case _ => ()
     }
-    val rows = edgesOfTypes(types)
-      .select(
-        org.apache.spark.sql.functions.col(GraphState.IdCol),
-        org.apache.spark.sql.functions.col(GraphState.SrcCol),
-        org.apache.spark.sql.functions.col(GraphState.DstCol))
-      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt)
-      .collect()
-    val res =
-      if (rows.length > cap) None
-      else Some(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-    if (adjCache.pinned) localEdgesMemo.put(key, res)
+    val triples = edgesOfTypes(types).select(
+      col(GraphState.IdCol), col(GraphState.SrcCol), col(GraphState.DstCol))
+    val res = Cutover.within(triples, cap)
+      .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    if (adjCache.pinned) localEdgesMemo.put(key, res.toRight(cap))
     res
   }
 

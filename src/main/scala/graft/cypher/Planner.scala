@@ -91,7 +91,7 @@ final class Planner(
   /** Append a sequential id column `start, start+1, …` in row order, PIN
     * the result (ids exist exactly once), and return its row count.
     *
-    * Small frames (≤ `spark.graft.mint.localRows`, default 20k — every
+    * Small frames (≤ [[MintLocalRows]], 20k — every
     * statement-literal gate graph and typical merge-miss set) take ONE
     * Spark job: collect the rows (partition-order = zipWithIndex order)
     * and mint the ids driver-side into a LocalRelation, which also
@@ -106,27 +106,31 @@ final class Planner(
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(
       df.schema.fields :+ StructField(idCol, LongType, nullable = false))
-    val cap = spark.conf.get("spark.graft.mint.localRows", "20000").toInt
     val head = graft.operators.Scratch.labeled(spark, s"graft:mint $idCol")(
-      df.limit(cap + 1).collect())
-    if (head.length <= cap) {
-      val rows = head.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (start + i))
-      }
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
-      (local, head.length.toLong)
-    } else
-      graft.operators.Scratch.labeled(spark, s"graft:mint $idCol") {
-        val cp = df.localCheckpoint(true)
-        val rdd = cp.rdd.zipWithIndex().map { case (r, i) =>
+      graft.operators.Cutover.within(df, MintLocalRows))
+    head match {
+      case Some(small) =>
+        val rows = small.zipWithIndex.map { case (r, i) =>
           org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (start + i))
         }
-        val pinned =
-          spark.createDataFrame(rdd, schema).localCheckpoint(true)
-        (pinned, pinned.count())
-      }
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), schema)
+        (local, small.length.toLong)
+      case None =>
+        graft.operators.Scratch.labeled(spark, s"graft:mint $idCol") {
+          val cp = df.localCheckpoint(true)
+          val rdd = cp.rdd.zipWithIndex().map { case (r, i) =>
+            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (start + i))
+          }
+          val pinned =
+            spark.createDataFrame(rdd, schema).localCheckpoint(true)
+          (pinned, pinned.count())
+        }
+    }
   }
+
+  /** Row cap of [[withSeqIdPinned]]'s one-job driver mint. */
+  private val MintLocalRows = 20000L
 
   final case class LF(
       df: DataFrame,
@@ -481,9 +485,6 @@ final class Planner(
       // pattern expands edges. Drives the small-side broadcast below.
       var curEstimate: Double =
         if (lfM.df.columns.isEmpty) 1.0 else Double.MaxValue
-      val bcGate =
-        try spark.conf.get("spark.graft.broadcastNodeScan", "100000").toLong
-        catch { case _: Throwable => 100000L }
       patterns.foreach { p =>
         val pVars = (p.start.variable.toSeq ++ p.hops.flatMap { case (r, nd) =>
           r.variable.toSeq ++ nd.variable.toSeq
@@ -496,7 +497,7 @@ final class Planner(
         // Cartesian (reference variable_start_planner.hpp:161-204 costing;
         // a small dim side must not shuffle the fact side at scale)
         val seed =
-          if (disconnected && curEstimate <= bcGate.toDouble)
+          if (disconnected && curEstimate <= BroadcastNodeScanRows)
             LF(broadcast(cur.df), cur.scope)
           else cur
         val (next, edges) = planPattern(seed, p, where)
@@ -1477,15 +1478,12 @@ final class Planner(
           // id→list map into one broadcast row, and substitute a map
           // lookup for the comprehension. Bounded by the node count, not
           // the outer row count — gated because the map lives in one row.
-          val maxN =
-            try spark.conf
-              .get("spark.graft.lambdaRollup.maxNodes", "2000000").toLong
-            catch { case _: Throwable => 2000000L }
+          val maxN = 2000000L
           if (state.totalNodeEstimate > maxN)
             throw new UnsupportedOperationException(
               "pattern comprehension correlated on a comprehension " +
-                s"variable over > $maxN nodes (raise " +
-                "spark.graft.lambdaRollup.maxNodes to run it)")
+                s"variable over > $maxN nodes (the id-to-list map lives " +
+                "in one broadcast row)")
           val x = startLam.get
           val sx = fresh("cs")
           val pc2 = PatternComprehension(
@@ -3110,8 +3108,7 @@ final class Planner(
       // bi12's message predicates likewise). Re-applying the same conjunct
       // in planWhere later is a no-op filter — the same rule
       // planShortest already uses for its seed set.
-      if (rel.varLength.isDefined &&
-        spark.conf.get("spark.graft.varexpand.pushWhere", "true").toBoolean)
+      if (rel.varLength.isDefined)
         pushWhere.foreach(w => cur = applyPushable(cur, w))
 
       // per-step filter lambda: pre-filter the oriented edge set; the
@@ -3291,29 +3288,24 @@ final class Planner(
               le: Array[(Long, Long, Long)],
               q: graft.operators.LocalHops.Quota,
               seedCap: Long): Option[graft.operators.LocalHops.Emu] = {
-            val srcRows = cur.df
-              .select(Frames.id(srcVar))
-              .distinct()
-              .limit(math.min(seedCap + 1, Int.MaxValue.toLong).toInt)
-              .collect()
-            if (srcRows.length > seedCap) None
-            else {
+            val srcs = cur.df.select(Frames.id(srcVar)).distinct()
+            graft.operators.Cutover.collect(srcs, seedCap).map { srcRows =>
               val srcIds = srcRows.map(_.getLong(0)).sorted.toSeq
               val allowedIds = edgesOv.map(
                 _.select(col(GraphState.IdCol))
                   .collect()
                   .map(_.getLong(0))
                   .toSet)
-              Some(graft.operators.LocalHops.dfs(
+              graft.operators.LocalHops.dfs(
                 le, srcIds,
                 dirOut = dir != Expand.In, dirIn = dir != Expand.Out,
                 minH, maxH.map(_.toLong).getOrElse(Long.MaxValue),
-                q, allowedIds))
+                q, allowedIds)
             }
           }
           val lhEmu: Option[graft.operators.LocalHops.Emu] =
             hopsLimit.filter(_ <= LocalHopsMaxCap).flatMap { cap =>
-              localTypedEdges(types).flatMap(le =>
+              state.localTypedEdges(types).flatMap(le =>
                 runLocalDfs(le, lhQuota(cap), cap))
             }.orElse {
               // GENERAL subcritical cutover (no USING HOPS LIMIT): the
@@ -3325,13 +3317,12 @@ final class Planner(
               // consumes ≥1 fetched edge); breaching it — a supercritical
               // closure — discards the pass and keeps the distributed
               // walk, so scale inputs never depend on driver memory.
-              // Default 250k: measured break-even — ldbc_bi12's ~500k-row
+              // 250k is the measured break-even: ldbc_bi12's ~500k-row
               // closure lost to encode+join-back (9.9 s vs 8.4 s
               // distributed) while bi9/bi3-sized walks (≤100k) win 2x.
-              val budget = spark.conf
-                .get("spark.graft.varexpand.localBudget", "250000").toLong
-              if (hopsLimit.isDefined || budget <= 0) None
-              else localTypedEdges(types).flatMap { le =>
+              val budget = 250000L
+              if (hopsLimit.isDefined) None
+              else state.localTypedEdges(types).flatMap { le =>
                 runLocalDfs(
                   le, new graft.operators.LocalHops.Quota(budget), budget)
                   .filterNot(_.breached)
@@ -3448,7 +3439,7 @@ final class Planner(
           if (hopMeta.size == 1 && hopCheckFrames.size == 1 &&
             lim <= LocalHopsMaxCap && !hopMeta.head._6) {
             val (preSrc, sV, eV, tps, d, _) = hopMeta.head
-            localTypedEdges(tps) match {
+            state.localTypedEdges(tps) match {
               case Some(le) =>
                 val srcIds =
                   preSrc.collect().map(_.getLong(0)).sorted.toSeq
@@ -3800,14 +3791,10 @@ final class Planner(
     * this bounds driver memory for the emulation's result. */
   private val LocalHopsMaxCap = 2000000L
 
-  /** Typed (id, src, dst) edge list collected to the driver for the
-    * hops-limit partial emulation; None above `spark.graft.local.edges`
-    * (the [[graft.operators.LocalGraph]] subcritical threshold). */
-  private def localTypedEdges(
-      types: Seq[String]): Option[Array[(Long, Long, Long)]] = {
-    val cap = spark.conf.get("spark.graft.local.edges", "2000000").toLong
-    state.localTypedEdges(types, cap) // memoized on pinned loader states
-  }
+  /** Label-count estimate under which a node scan entering a Cartesian
+    * product (and an accumulated side ahead of a disconnected pattern)
+    * is broadcast. */
+  private val BroadcastNodeScanRows = 100000L
 
   /** Struct of every column of bound var `v`, field names unprefixed —
     * the whole-entity value the step-filtered operators carry. */
@@ -4209,7 +4196,7 @@ final class Planner(
         unsupported("with weighted/all/k-shortest expansions is unsupported")
       if (cap > LocalHopsMaxCap)
         unsupported(s"above $LocalHopsMaxCap exceeds the driver-replay bound")
-      val le = localTypedEdges(rel.types).getOrElse(
+      val le = state.localTypedEdges(rel.types).getOrElse(
         unsupported(
           "over a supercritical edge set cannot be replayed exactly"))
       val srcIds =
@@ -4518,12 +4505,9 @@ final class Planner(
         else n.labels.headOption
           .map(l => state.labelCountEstimate(l).toDouble)
           .getOrElse(state.totalNodeEstimate.toDouble)
-      val bcGate =
-        try spark.conf.get("spark.graft.broadcastNodeScan", "100000").toLong
-        catch { case _: Throwable => 100000L }
       val df =
         if (lf.df.columns.isEmpty) bound // first scan replaces Once
-        else if (scanEst <= bcGate)
+        else if (scanEst <= BroadcastNodeScanRows)
           lf.df.crossJoin(broadcast(bound))
         else lf.df.crossJoin(bound) // Cartesian (operator.hpp:2797)
       val lf2 = LF(df, lf.scope + (name -> Binding.NodeB))

@@ -37,10 +37,8 @@ import org.apache.spark.sql.functions._
   * no reduction-class restriction. This replaces the r7 contraction-event
   * bcc labeling, which could split one true component that resolved
   * across several contraction events (theta-graph counterexample).
-  * Complements [[Bridges]]: contraction runs O(log n) rounds independent
-  * of diameter but only on loop/parallel/leaf/series-reducible graphs;
-  * this walk is O(forest depth) rounds — small exactly where contraction
-  * gives up (dense cores have shallow BFS trees).
+  * The walk is O(forest depth) rounds, which is small on dense cores
+  * (shallow BFS trees).
   *
   * Scale shape: per-round rows follow the ACTIVE chord frontier (walks
   * retire at their LCA); emissions are per-vertex facts deduped to
@@ -59,18 +57,17 @@ object Biconnected {
         col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .transform(Scratch.cp)
-    // SUBCRITICAL path: below the threshold a collect + one sequential
-    // Tarjan pass beats any fixpoint (each driver round costs a fixed
-    // scheduling quantum; see [[LocalGraph]]) — the reference itself is
-    // always a single-node DFS. Identical output either way (components
-    // and bridges are graph-theoretic; labels are min member edge id).
-    val threshold =
-      spark.conf.get("spark.graft.local.edges", "2000000").toLong
-    if (e.count() <= threshold) {
-      val rows = LocalGraph.biconnected(
-        e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    // SUBCRITICAL path ([[Cutover]]): below the cap a collect + one
+    // sequential Tarjan pass beats any fixpoint (each driver round costs
+    // a fixed scheduling quantum; see [[LocalGraph]]) — the reference
+    // itself is always a single-node DFS. Identical output either way
+    // (components and bridges are graph-theoretic; labels are min member
+    // edge id).
+    Cutover.collect(e).foreach { rows =>
       import spark.implicits._
-      return rows.toSeq
+      return LocalGraph
+        .biconnected(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+        .toSeq
         .toDF("edge_id", "is_bridge", "bcc")
     }
     val simple = e.filter(col("src") =!= col("dst"))

@@ -36,28 +36,24 @@ object Cycles {
       spark: SparkSession,
       nodes: DataFrame,
       edges: DataFrame): DataFrame = {
-    // SUBCRITICAL path — see [[LocalGraph]]: below the threshold a
+    // SUBCRITICAL path ([[Cutover]], [[LocalGraph]]): below the cap a
     // collect + sequential BFS-forest/LCA pass beats any fixpoint; the
     // node sets reproduce the same deterministic forest, so output is
     // identical to the distributed walk's.
-    val threshold =
-      spark.conf.get("spark.graft.local.edges", "2000000").toLong
-    val eCnt = edges.count()
-    if (eCnt <= threshold) {
-      val rows = LocalGraph.fundamentalCycles(
-        edges
-          .select(
-            col("edge_id").cast("long"),
-            col("src").cast("long"),
-            col("dst").cast("long"))
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-        nodes.select(col("node").cast("long")).collect().map(_.getLong(0)))
-      import spark.implicits._
-      return rows.toSeq
-        .flatMap { case (cid, ns) => ns.map(nd => (cid, nd)) }
-        .toDF("cycle_id", "node")
-    }
+    Cutover
+      .collect(edges.select(
+        col("edge_id").cast("long"),
+        col("src").cast("long"),
+        col("dst").cast("long")))
+      .foreach { es =>
+        val rows = LocalGraph.fundamentalCycles(
+          es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+          nodes.select(col("node").cast("long")).collect().map(_.getLong(0)))
+        import spark.implicits._
+        return rows.toSeq
+          .flatMap { case (cid, ns) => ns.map(nd => (cid, nd)) }
+          .toDF("cycle_id", "node")
+      }
     val und = edges
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))

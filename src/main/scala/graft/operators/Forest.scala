@@ -45,10 +45,8 @@ private[graft] object Forest {
     var rounds = 0
     val maxRounds = 100000 // diameter bound; breach = bug, raise below
     var live = !changed.isEmpty
-    val dbg = sys.env.contains("GRAFT_SP_DEBUG")
     while (live && rounds < maxRounds) {
       rounds += 1
-      val t0 = System.nanoTime()
       val offers = changed
         .join(und, col("node") === col("src"))
         .select(
@@ -78,9 +76,6 @@ private[graft] object Forest {
       changed = merged.filter(col("__ch")).select("node", "root", "parent", "depth")
       state = merged.select("node", "root", "parent", "depth")
       live = !changed.isEmpty
-      if (dbg)
-        System.err.println(
-          f"[forest] round $rounds%d ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     if (live)
       throw new IllegalStateException(

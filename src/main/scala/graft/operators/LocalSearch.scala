@@ -10,8 +10,8 @@ import graft.core.GraphState
 
 /** Driver-local exact pass for the shortest-path family on subcritical
   * inputs — the same adaptive cutover [[LocalGraph]]/LocalProcs use for
-  * cycles/biconnected/iterative procedures (r8/r9): below
-  * `spark.graft.local.edges` with a small seed set, a single-threaded
+  * cycles/biconnected/iterative procedures (r8/r9): below the
+  * [[Cutover]] cap with a small seed set, a single-threaded
   * BFS / Bellman–Ford over collected adjacency is exact, reproduces the
   * distributed operators' determinism rules bit-for-bit, and replaces
   * 10-20 fixpoint jobs with one collect. The reference's own cursors
@@ -37,25 +37,23 @@ private[graft] object LocalSearch {
   /** Max seeds × edges work product for the driver pass. */
   val MaxWork = 64L * 1000 * 1000
 
+  /** Enumeration budget of the path mirrors ([[kShortestDf]],
+    * [[allPathsDf]]): above it the distributed walk runs. */
+  private val MaxPaths = 2000000L
+
+  /** Largest hop bound the seed-reachable capture accepts. */
+  private val CaptureHops = 32
+
+  /** Largest per-level frontier the seed-reachable capture accepts. */
+  private val CaptureFrontier = 1024
+
   /** Collect (seeds, edges) when both are subcritical; None → stay
     * distributed. Seed rows are read via column 0 (SeedCol), edge rows as
     * (eid, src, dst[, weight]). */
-  private def dbg[T](label: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_SP_DEBUG")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[lsearch] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-
   def tryCollect(
       edges: DataFrame,
       seeds: DataFrame,
-      withWeight: Boolean): Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] = dbg("tryCollect") {
-    val spark = edges.sparkSession
-    val cap = spark.conf.get("spark.graft.local.edges", "2000000").toLong
+      withWeight: Boolean): Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] = {
     val hasInit = seeds.columns.contains(ShortestPath.InitWeightCol)
     val seedSel =
       if (hasInit)
@@ -63,9 +61,6 @@ private[graft] object LocalSearch {
           col(ShortestPath.SeedCol),
           coalesce(col(ShortestPath.InitWeightCol), lit(0.0)).cast("double"))
       else seeds.select(col(ShortestPath.SeedCol), lit(0.0))
-    val seedRows = seedSel.limit(MaxSeeds + 1).collect()
-    if (seedRows.length > MaxSeeds) return None
-    val seedIds = seedRows.toSeq.map(r => (r.getLong(0), r.getDouble(1)))
     val sel =
       if (withWeight)
         edges.select(
@@ -74,13 +69,17 @@ private[graft] object LocalSearch {
       else
         edges.select(
           col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
-    val rows = sel.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length > cap) return None
-    if (seedIds.size.toLong * rows.length > MaxWork) return None
-    val arr = rows.map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2),
-        if (withWeight) r.getDouble(3) else 0.0))
-    Some((arr, seedIds))
+    for {
+      seedRows <- Cutover.collect(seedSel, MaxSeeds)
+      // seeds × edges ≤ MaxWork, as an edge ceiling
+      maxEdges =
+        if (seedRows.isEmpty) Long.MaxValue else MaxWork / seedRows.length
+      rows <- Cutover.collect(sel, maxEdges)
+    } yield (
+      rows.map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2),
+          if (withWeight) r.getDouble(3) else 0.0)),
+      seedRows.toSeq.map(r => (r.getLong(0), r.getDouble(1))))
   }
 
   /** Seed-reachable capture: when the FULL edge set is supercritical but
@@ -92,48 +91,36 @@ private[graft] object LocalSearch {
     * capture gathers every out-edge of every node within maxHops-1, which
     * is precisely the edge set a maxHops-bounded traversal can use.
     * Bails (→ distributed fixpoint) when a frontier exceeds
-    * `spark.graft.local.captureFrontier` (hub explosion), the collected
-    * edges exceed `spark.graft.local.edges`, or the hop bound is above
-    * `spark.graft.local.captureHops`. */
+    * [[CaptureFrontier]] (hub explosion), the collected edges exceed the
+    * [[Cutover]] cap, or the hop bound is above [[CaptureHops]]. */
   def tryCollectReachable(
       edges: DataFrame,
       seeds: DataFrame,
       maxHops: Int)
-    : Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] =
-    dbg("tryCollectReachable") {
-      val spark = edges.sparkSession
-      val cap = spark.conf.get("spark.graft.local.edges", "2000000").toLong
-      if (cap <= 0) return None
-      val hopCap =
-        spark.conf.get("spark.graft.local.captureHops", "32").toInt
-      val frontierCap =
-        spark.conf.get("spark.graft.local.captureFrontier", "1024").toInt
-      if (maxHops > hopCap) return None
-      val seedRows = seeds.select(col(ShortestPath.SeedCol))
-        .limit(MaxSeeds + 1).collect()
-      if (seedRows.length > MaxSeeds) return None
-      val seedIds = seedRows.toSeq.map(_.getLong(0)).distinct
-      val sel = edges.select(
-        col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
-      val acc = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-      val reached = mutable.HashSet.empty[Long] ++ seedIds
-      var frontier: Seq[Long] = seedIds
-      var hop = 0
-      while (frontier.nonEmpty && hop < maxHops) {
-        hop += 1
-        if (frontier.size > frontierCap) return None
-        val remaining = cap - acc.size + 1
-        val batch = sel
-          .filter(col(GraphState.SrcCol).isin(frontier: _*))
-          .limit(math.min(remaining, Int.MaxValue.toLong).toInt)
-          .collect()
-        if (acc.size + batch.length > cap) return None
-        acc ++= batch.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), 0.0))
-        frontier = batch.map(_.getLong(2)).distinct.filterNot(reached)
-        reached ++= frontier
-      }
-      Some((acc.toArray, seedIds.map(_ -> 0.0)))
+    : Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] = {
+    if (maxHops > CaptureHops) return None
+    val cap = Cutover.cap(edges.sparkSession)
+    val seedIds = Cutover
+      .collect(seeds.select(col(ShortestPath.SeedCol)), MaxSeeds)
+      .getOrElse(return None)
+      .toSeq.map(_.getLong(0)).distinct
+    val sel = edges.select(
+      col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
+    val acc = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
+    val reached = mutable.HashSet.empty[Long] ++ seedIds
+    var frontier: Seq[Long] = seedIds
+    var hop = 0
+    while (frontier.nonEmpty && hop < maxHops) {
+      hop += 1
+      if (frontier.size > CaptureFrontier) return None
+      val out = sel.filter(col(GraphState.SrcCol).isin(frontier: _*))
+      val batch = Cutover.within(out, cap - acc.size).getOrElse(return None)
+      acc ++= batch.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), 0.0))
+      frontier = batch.map(_.getLong(2)).distinct.filterNot(reached)
+      reached ++= frontier
     }
+    Some((acc.toArray, seedIds.map(_ -> 0.0)))
+  }
 
   private val seqOrd: Ordering[Seq[Long]] =
     Ordering.Implicits.seqOrdering[Seq, Long]
@@ -148,7 +135,7 @@ private[graft] object LocalSearch {
     * budgeted frontier (the budget is a work bound, not a semantics
     * knob: both return the true k shortest, which is what the oracle
     * pins). Per-pair retention is capped at k DURING enumeration, so
-    * memory is k x |reached| — the `maxPaths` budget bounds enumeration
+    * memory is k x |reached| — the [[MaxPaths]] budget bounds enumeration
     * WORK; breaching it returns None and the distributed walk runs. */
   def kShortestDf(
       spark: SparkSession,
@@ -156,9 +143,7 @@ private[graft] object LocalSearch {
       seeds: Seq[Long],
       k: Int,
       minHops: Int,
-      maxHops: Int): Option[DataFrame] = dbg("kShortestDf") {
-    val budget =
-      spark.conf.get("spark.graft.local.maxPaths", "2000000").toLong
+      maxHops: Int): Option[DataFrame] = {
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Long, Long)]]
     edges.foreach { case (eid, s, d, _) =>
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((eid, d))
@@ -197,7 +182,7 @@ private[graft] object LocalSearch {
           val (eid, dst) = it.next()
           if (!nodes.contains(dst)) { // simple paths, seed included
             work += 1
-            if (work > budget) return None
+            if (work > MaxPaths) return None
             val eids2 = eid :: eids
             val dist = eids2.size.toLong
             if (dist >= minH1)
@@ -314,7 +299,7 @@ private[graft] object LocalSearch {
     * a level-walk of the shortest-path DAG where parallel edges yield
     * distinct paths). Returns None when the TRUE path count (Σ npaths,
     * computed from the DAG before enumerating anything) exceeds
-    * `spark.graft.local.maxPaths` (default 2,000,000) — path explosion
+    * [[MaxPaths]] — path explosion
     * stays on the distributed walk. Replaces ~2·maxD fixpoint jobs with
     * zero for the common subcritical case (the reference's cursor is
     * single-threaded here too). */
@@ -322,9 +307,7 @@ private[graft] object LocalSearch {
       spark: SparkSession,
       edges: Array[(Long, Long, Long, Double)],
       seeds: Seq[Long],
-      maxHops: Int): Option[DataFrame] = dbg("allPathsDf") {
-    val maxPaths =
-      spark.conf.get("spark.graft.local.maxPaths", "2000000").toLong
+      maxHops: Int): Option[DataFrame] = {
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Long, Long)]]
     edges.foreach { case (eid, s, d, _) =>
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((eid, d))
@@ -332,7 +315,7 @@ private[graft] object LocalSearch {
     val out = mutable.ArrayBuffer.empty[Row]
     // ONE budget across ALL seeds: the guard bounds DRIVER materialization,
     // which is the sum over seeds — a per-seed reset would admit up to
-    // MaxSeeds × maxPaths boxed path rows (multi-GB) on path-dense inputs
+    // MaxSeeds × MaxPaths boxed path rows (multi-GB) on path-dense inputs
     // the distributed walk handles with spillable partitions
     var total = 0L
     seeds.distinct.foreach { seed =>
@@ -342,7 +325,7 @@ private[graft] object LocalSearch {
       var level = Seq(seed)
       var k = 0L
       total += 1L
-      if (total > maxPaths) return None
+      if (total > MaxPaths) return None
       while (level.nonEmpty && k < maxHops) {
         k += 1
         val nPaths = mutable.HashMap.empty[Long, Long]
@@ -357,7 +340,7 @@ private[graft] object LocalSearch {
           dist(v) = k
           npaths(v) = nPaths(v)
           total += nPaths(v)
-          if (total > maxPaths) return None
+          if (total > MaxPaths) return None
         }
         level = discovered
       }

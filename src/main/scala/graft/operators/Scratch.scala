@@ -78,18 +78,19 @@ object Scratch {
     d
   }
 
-  /** Broadcast `df` only when its KNOWN row count is under the
-    * `spark.graft.varexpand.broadcastFrontier` threshold (default 100k) —
-    * the VarExpand frontier-loop gate, shared by every driver fixpoint.
+  /** Known-row-count ceiling for a broadcast frontier. */
+  val BroadcastFrontierRows = 100000L
+
+  /** Broadcast `df` only when its KNOWN row count is under
+    * [[BroadcastFrontierRows]] — the VarExpand frontier-loop gate,
+    * shared by every driver fixpoint.
     * Above the gate the join falls back to a shuffle: a multi-million-row
     * frontier must never be force-broadcast (8 GB broadcast limit /
     * driver OOM on a supernode graph at cluster scale). The loops count
     * their frontier anyway for the emptiness probe, so the decision is
     * free. */
   def gatedBroadcast(df: DataFrame, knownCount: Long): DataFrame = {
-    val max = df.sparkSession.conf
-      .get("spark.graft.varexpand.broadcastFrontier", "100000").toLong
-    if (knownCount >= 0 && knownCount <= max)
+    if (knownCount >= 0 && knownCount <= BroadcastFrontierRows)
       org.apache.spark.sql.functions.broadcast(df)
     else df
   }

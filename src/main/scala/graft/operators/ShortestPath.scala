@@ -47,6 +47,9 @@ object ShortestPath {
   val PathNodesCol = "__sp_path_nodes"
   val PathEdgesCol = "__sp_path_edges"
 
+  /** Candidate budget factor of [[kShortest]]'s spur-case hedge. */
+  private val KShortestOverprovision = 2L
+
   /** Columns the step-filtered variants ([[bfsFiltered]] /
     * [[weightedCarry]]) expose on the per-expansion candidate frame the
     * caller's `stepFilter` sees: full entity structs for the traversed
@@ -214,7 +217,6 @@ object ShortestPath {
         .agg(sum(NPathsCol).as(NPathsCol))
         .withColumn(DistCol, lit(k))
         .select(SeedCol, NodeCol, DistCol, NPathsCol)
-      val t0 = System.nanoTime()
       val fresh = next
         .join(visited, Seq(SeedCol, NodeCol), "left_anti")
         .transform(Scratch.cp)
@@ -223,9 +225,6 @@ object ShortestPath {
         levels ::= fresh
         frontier = fresh
       }
-      if (sys.env.contains("GRAFT_SP_DEBUG"))
-        System.err.println(
-          f"[bfs] level $k%d ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     if (!callerPersisted) edges.unpersist(blocking = false)
     visited
@@ -829,13 +828,8 @@ object ShortestPath {
     * the spur edge case. The hedge is TARGETED: pairs whose candidate set
     * contains a target-visiting prefix (the only pairs the spur case can
     * hit, and only when `targets` names the endpoints of interest) keep
-    * `factor × k` candidates in flight, everyone else exactly k; the final
-    * per-pair rank cut restores k. The factor is
-    * `spark.graft.kshortest.overprovision` (default 2) so a suspected
-    * spur miss is diagnosable by widening it;
-    * `spark.graft.kshortest.overprovision.all=true` applies the factor to
-    * every pair (the pre-r9 global behavior — the only hedge available
-    * when no target set exists).
+    * `KShortestOverprovision × k` candidates in flight, everyone else
+    * exactly k; the final per-pair rank cut restores k.
     *
     * @param edges0 pre-oriented (src, dst, `__sp_eid`) traversal edges
     * @param targets optional (SeedCol, NodeCol) pairs of interest: once
@@ -870,17 +864,11 @@ object ShortestPath {
     // round jobs (same per-round job floor as the varexpand fixpoint,
     // VarExpand.scala:35). The warm sweep sits at ~1.8 s. Both windows
     // below share one (seed, node) shuffle; the flag only exists when
-    // targets are present AND factor > 1.
-    val conf = edges0.sparkSession.conf
-    val factor = math.max(
-      1L,
-      conf.get("spark.graft.kshortest.overprovision", "2").toLong)
-    val widenAll =
-      conf.get("spark.graft.kshortest.overprovision.all", "false").toBoolean
-    // spur-case hedge: contended pairs carry `factor*k` candidates through
-    // the rounds, everyone else exactly k; the final cut keeps exactly k
-    val baseBudget = if (widenAll) factor * k else k.toLong
-    val wideBudget = factor * k
+    // targets are present.
+    // spur-case hedge: contended pairs carry `KShortestOverprovision*k`
+    // candidates through the rounds, everyone else exactly k; the final
+    // cut keeps exactly k
+    val wideBudget = KShortestOverprovision * k
     val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
     // per-seed target sets drive both the contention flag and early-stop;
     // target lists are per-query small — broadcast
@@ -939,7 +927,7 @@ object ShortestPath {
       val wPair = org.apache.spark.sql.expressions.Window
         .partitionBy(SeedCol, NodeCol)
       val flagged = targetSets match {
-        case Some(ts) if baseBudget < wideBudget =>
+        case Some(ts) =>
           expanded
             .join(ts, Seq(SeedCol), "left_outer")
             .withColumn(
@@ -960,7 +948,7 @@ object ShortestPath {
         .filter(
           col("__k_rn") + coalesce(col("__k_cnt"), lit(0L)) <=
             when(col("__k_contended"), lit(wideBudget))
-              .otherwise(lit(baseBudget)))
+              .otherwise(lit(k.toLong)))
         .drop("__k_rn", "__k_cnt", "__k_contended")
         .transform(Scratch.cp)
       done = frontier.isEmpty
@@ -1042,7 +1030,6 @@ object ShortestPath {
     var converged = frontier.isEmpty
     while (!converged && r < maxRounds) {
       r += 1
-      val t0 = System.nanoTime()
       val cand = frontier
         .join(e, col(NodeCol) === col(GraphState.SrcCol))
         .select(
@@ -1092,9 +1079,6 @@ object ShortestPath {
           .transform(Scratch.cp)
         frontier = improved
       }
-      if (sys.env.contains("GRAFT_SP_DEBUG"))
-        System.err.println(
-          f"[wsp] round $r%d ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     e.unpersist(blocking = false)
     dist

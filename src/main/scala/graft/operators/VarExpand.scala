@@ -32,6 +32,14 @@ object VarExpand {
   /** Safety valve for unbounded `*`: raise, never truncate. */
   val HardHopLimit = 64
 
+  /** Frontier rows at or under which a round scans only the frontier's
+    * out-edges (`src IN ids`) instead of the persisted edge frame. */
+  private val PruneFrontierRows = 1000L
+
+  /** Non-traversal column count from which the input rows are carried
+    * through the rounds by row id only (slim carry). */
+  private val SlimCarryColumns = 10
+
   // Round-12 A/B (varexpand_unbounded, sf0.1, warm, local[8]): prune ON
   // 2.7-3.6 s vs OFF 2.7-2.9 s — the sweep-visible cost is NOT the edge
   // scan but the fixpoint's per-round driver overhead (~10 jobs: one
@@ -157,24 +165,20 @@ object VarExpand {
                 p
               }
           }
-        val pruneMax = frame.sparkSession.conf
-          .get("spark.graft.varexpand.pruneFrontier", "1000").toLong
         // SLIM CARRY (opt guide §8 "move heavy bytes once"): the fixpoint
         // localCheckpoints AND (for large frontiers) shuffles the frontier
         // EVERY round, so a wide input frame (LDBC bi3/bi9/bi12 arrive
         // here with whole person+message rows bound) pays rounds×width in
-        // materialization and shuffle bytes. Above `slimCarry` non-
+        // materialization and shuffle bytes. From [[SlimCarryColumns]] non-
         // traversal columns, carry only (rowid, cur, path) through the
         // rounds and re-attach the wide row by rowid once at the end —
         // identical rows, the heavy columns move once. The rowid is
         // monotonically_increasing_id FROZEN by the eager checkpoint (its
         // values are computed exactly once, inside the cp materialization,
         // and every later read serves the stored blocks).
-        val slimMin = frame.sparkSession.conf
-          .get("spark.graft.varexpand.slimCarry", "10").toInt
         val wideCols = base.columns.filterNot(c => c == CUR || c == PATH)
         val keyed: Option[DataFrame] =
-          if (wideCols.length < slimMin) None
+          if (wideCols.length < SlimCarryColumns) None
           else Some(
             base
               .withColumn(RID, monotonically_increasing_id())
@@ -191,8 +195,6 @@ object VarExpand {
         // edge frame. The count the loop needs anyway (emptiness probe /
         // hops cap) doubles as the broadcast decision: a known-small
         // frontier is sent to the edge scan, no shuffle at all.
-        val bcastMax = frame.sparkSession.conf
-          .get("spark.graft.varexpand.broadcastFrontier", "100000").toLong
         var k = 0
         var traversed = 0L
         var curN = cur.count()
@@ -200,18 +202,17 @@ object VarExpand {
         if (minHops == 0) reachedN = curN else reachedN = 0L
         while (!empty && k < limit) {
           k += 1
-          val tRound = System.nanoTime()
-          // a ≤pruneMax-row CHECKPOINTED frontier re-reads for the id
-          // collect, not recomputes — two cheap actions beat one full
-          // edge-corpus scan
+          // a CHECKPOINTED frontier of ≤ PruneFrontierRows rows re-reads
+          // for the id collect, not recomputes — two cheap actions beat
+          // one full edge-corpus scan
           val frontierIds: Option[Seq[Long]] =
-            if (curN <= pruneMax)
+            if (curN <= PruneFrontierRows)
               Some(cur.select(col(CUR)).filter(col(CUR).isNotNull)
                 .distinct().collect().map(_.getLong(0)).toSeq)
             else None
           cur = step(
             cur, edgesFor(frontierIds), stepDir,
-            bcastFrontier = curN <= bcastMax)
+            bcastFrontier = curN <= Scratch.BroadcastFrontierRows)
             .transform(Scratch.cp)
           // one action per round: the frontier count serves the emptiness
           // probe, the hops cap check, and the next broadcast decision
@@ -230,10 +231,6 @@ object VarExpand {
             reached = reached :+ cur
             reachedN += curN
           }
-          if (sys.env.contains("GRAFT_VX_DEBUG"))
-            System.err.println(
-              f"[varexpand] round $k%d rows=$curN%d " +
-                f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
         }
         ePersisted.foreach(_.unpersist(blocking = false))
         if (!empty && bound.isEmpty)

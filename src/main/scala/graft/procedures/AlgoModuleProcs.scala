@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
+import graft.operators.Cutover
 
 /** The reference's cpp `algo` module (`src/mage/cpp/algo_module/
   * algo_module.cpp:20-47`): `algo.astar` (lat/lon-heuristic A* routing),
@@ -142,10 +143,9 @@ object AlgoModuleProcs {
     val scanTypes =
       if (relTypes.isEmpty || dirs.anyIncoming || dirs.anyOutgoing) Nil
       else dirs.byType.keys.toSeq
-    val edges = Procedures
-      .collectIfSubcritical(
-        ctx.g.edgesOfTypes(scanTypes)
-          .select(col(SrcCol), col(DstCol), col(TypeCol)))
+    val edges = Cutover.collect(
+      ctx.g.edgesOfTypes(scanTypes)
+        .select(col(SrcCol), col(DstCol), col(TypeCol)))
       .getOrElse(throw new IllegalStateException(
         "algo.all_simple_paths: graph above spark.graft.local.edges — " +
           "simple-path enumeration is an inherently sequential DFS " +
@@ -293,13 +293,12 @@ object AlgoModuleProcs {
     def optCol(name: String) =
       if (n0.columns.contains(name)) col(name).cast("double")
       else lit(null).cast("double")
-    val nodeRows = Procedures
-      .collectIfSubcritical(n0.select(
-        col(IdCol), col(LabelsCol),
-        (if (cfg.heuristicName.nonEmpty) optCol(cfg.heuristicName)
-         else lit(null).cast("double")).as("__h"),
-        optCol(cfg.latitudeName).as("__lat"),
-        optCol(cfg.longitudeName).as("__lon")))
+    val nodeRows = Cutover.collect(n0.select(
+      col(IdCol), col(LabelsCol),
+      (if (cfg.heuristicName.nonEmpty) optCol(cfg.heuristicName)
+       else lit(null).cast("double")).as("__h"),
+      optCol(cfg.latitudeName).as("__lat"),
+      optCol(cfg.longitudeName).as("__lon")))
       .getOrElse(throw new IllegalStateException(
         s"$what: graph above spark.graft.local.edges — A* is an " +
           "inherently sequential best-first search (reference " +
@@ -324,9 +323,8 @@ object AlgoModuleProcs {
         else if (e.columns.contains(cfg.distanceProp))
           col(cfg.distanceProp).cast("double")
         else lit(null).cast("double")
-      Procedures
-        .collectIfSubcritical(
-          e.select(col(SrcCol), col(DstCol), col(TypeCol), d.as("__d")))
+      Cutover.collect(
+        e.select(col(SrcCol), col(DstCol), col(TypeCol), d.as("__d")))
         .getOrElse(throw new IllegalStateException(
           s"$what: graph above spark.graft.local.edges — raise the " +
             "threshold to run the sequential search"))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
+import graft.operators.Cutover
 
 /** The apoc-style workhorse modules — the reference's
   * `src/mage/cpp/neighbors_module`, `path_module` and `refactor_module`
@@ -224,7 +225,7 @@ object ApocProcs {
     val all = types.map(t =>
       g.edges(t).select(col(IdCol), col(SrcCol), col(DstCol), col(TypeCol)))
       .reduce(_.unionByName(_))
-    Procedures.collectIfSubcritical(all)
+    Cutover.collect(all)
       .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))))
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, SrcCol, TypeCol}
+import graft.operators.Cutover
 
 /** The remaining MAGE algorithm tail: `union_find` and `max_flow`
   * (reference `src/mage/python/union_find.py`, `max_flow.py`) and the
@@ -123,9 +124,8 @@ object ExtraProcs {
   def bipartiteMatchingMax(ctx: ProcContext): DataFrame = {
     val spark = ctx.spark
     import spark.implicits._
-    val rows = Procedures
-      .collectIfSubcritical(
-        typedEdges(ctx).select(col(SrcCol), col(DstCol)))
+    val rows = Cutover.collect(
+      typedEdges(ctx).select(col(SrcCol), col(DstCol)))
       .getOrElse(throw new IllegalStateException(
         "bipartite_matching: graph above spark.graft.local.edges — " +
           "sequential augmenting-path search does not distribute (the " +
@@ -205,7 +205,7 @@ object ExtraProcs {
             col(prop).cast("double").as("w"))
       else e0.filter(lit(false))
         .select(col(IdCol), col(SrcCol), col(DstCol), lit(0.0).as("w"))
-    val rows = Procedures.collectIfSubcritical(withW).getOrElse(
+    val rows = Cutover.collect(withW).getOrElse(
       throw new IllegalStateException(
         "max_flow: graph above spark.graft.local.edges — sequential " +
           "augmenting-path search does not distribute (the reference " +
@@ -235,7 +235,7 @@ object ExtraProcs {
             col(prop).cast("double").as("w"))
       else e0.filter(lit(false))
         .select(col(IdCol), col(SrcCol), col(DstCol), lit(0.0).as("w"))
-    val rows = Procedures.collectIfSubcritical(withW).getOrElse(
+    val rows = Cutover.collect(withW).getOrElse(
       throw new IllegalStateException(
         "max_flow: graph above spark.graft.local.edges — sequential " +
           "augmenting-path search does not distribute (the reference " +
@@ -384,7 +384,7 @@ object ExtraProcs {
     }
 
     val reached: Seq[Long] =
-      Procedures.collectIfSubcritical(dirEdges) match {
+      Cutover.collect(dirEdges) match {
         case Some(rows) =>
           val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
           rows.foreach(r =>
@@ -441,8 +441,8 @@ object ExtraProcs {
     val edges = typedEdges(ctx).select(col(SrcCol).as("s"), col(DstCol).as("d"))
 
     val ordered: Seq[Long] =
-      (Procedures.collectIfSubcritical(edges),
-        Procedures.collectIfSubcritical(nodes)) match {
+      (Cutover.collect(edges),
+        Cutover.collect(nodes)) match {
         case (Some(es), Some(ns)) =>
           val ids = ns.map(_.getLong(0))
           val indeg = mutable.HashMap.empty[Long, Int] ++= ids.map(_ -> 0)

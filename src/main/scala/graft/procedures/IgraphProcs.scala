@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, SrcCol}
-import graft.operators.ShortestPath
+import graft.operators.{Cutover, ShortestPath}
 
 /** `igraphalg` MAGE module (reference `src/mage/python/igraphalg.py`) —
   * the reference wraps single-node igraph; here each procedure is either
@@ -24,8 +24,8 @@ import graft.operators.ShortestPath
   */
 object IgraphProcs {
 
-  private def maxRounds(ctx: ProcContext): Int =
-    ctx.spark.conf.get("spark.graft.igraph.maxRounds", "256").toInt
+  /** Relaxation-round bound of the weighted path searches. */
+  private val MaxRounds = 256
 
   private def longArg(ctx: ProcContext, i: Int, what: String): Long =
     ctx.args.lift(i) match {
@@ -117,7 +117,7 @@ object IgraphProcs {
     import spark.implicits._
     val seeds = Seq(source).toDF(ShortestPath.SeedCol)
     val dist = ShortestPath.weighted(
-      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), maxRounds(ctx))
+      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
     val hit = dist
       .filter(col(ShortestPath.NodeCol) === target)
       .select(col(ShortestPath.WeightCol))
@@ -140,7 +140,7 @@ object IgraphProcs {
     val ids = scopedNodes(ctx, sc).select(col(IdCol))
     val seeds = ids.select(col(IdCol).as(ShortestPath.SeedCol))
     val dist = ShortestPath.weighted(
-      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), maxRounds(ctx))
+      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
     ids.select(col(IdCol).as("src_node"))
       .crossJoin(ids.select(col(IdCol).as("dest_node")))
       .join(
@@ -163,8 +163,7 @@ object IgraphProcs {
       directed: Boolean,
       what: String,
       sc: Map[String, Any] = Map.empty): Array[(Long, Long, Double)] = {
-    val rows = Procedures
-      .collectIfSubcritical(weightedEdges(ctx, weights, directed, sc))
+    val rows = Cutover.collect(weightedEdges(ctx, weights, directed, sc))
       .getOrElse(throw new IllegalStateException(
         s"igraphalg.$what: graph above spark.graft.local.edges — the " +
           "reference module is single-node igraph; raise the threshold " +
@@ -187,7 +186,7 @@ object IgraphProcs {
     val edges = localEdges(ctx, weights, directed, "get_shortest_path", sc)
     val seeds = Seq(source).toDF(ShortestPath.SeedCol)
     val dist = ShortestPath.weighted(
-      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), maxRounds(ctx))
+      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
       .select(col(ShortestPath.NodeCol), col(ShortestPath.WeightCol))
       .collect()
       .map(r => r.getLong(0) -> r.getDouble(1))

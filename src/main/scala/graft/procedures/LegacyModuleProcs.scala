@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
-import graft.operators.Planarity
+import graft.operators.{Cutover, Planarity}
 
 /** The reference's legacy `query_modules/` samples re-expressed:
   * `graph_analyzer.{help, analyze, analyze_subgraph}`
@@ -152,7 +152,7 @@ object LegacyModuleProcs {
       nodeIds: Option[Seq[Long]],
       edgePairs: Option[Seq[(Long, Long)]]): LocalG = {
     val nodes = nodeIds.getOrElse {
-      Procedures.collectIfSubcritical(ctx.g.allNodes.select(col(IdCol)))
+      Cutover.collect(ctx.g.allNodes.select(col(IdCol)))
         .getOrElse(throw new IllegalStateException(
           "graph_analyzer: graph above spark.graft.local.edges — the " +
             "reference module materializes the whole graph in networkx; " +
@@ -161,7 +161,7 @@ object LegacyModuleProcs {
         .map(_.getLong(0)).toSeq
     }
     val edges = edgePairs.getOrElse {
-      Procedures.collectIfSubcritical(
+      Cutover.collect(
         ctx.g.allEdges.select(col(SrcCol), col(DstCol)))
         .getOrElse(throw new IllegalStateException(
           "graph_analyzer: graph above spark.graft.local.edges"))

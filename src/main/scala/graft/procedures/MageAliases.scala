@@ -124,11 +124,14 @@ object MageAliases {
     math.round(d * r) / r
   }
 
+  /** Vector count up to which [[knnGet]] scores the exact pair space. */
+  private val KnnExactNodes = 1024L
+
   /** `knn.get({nodeProperties, topK, similarityCutoff, …})` — cosine
     * top-k neighbours over per-node property vectors (knn_module.cpp:
     * 21-46; the reference's NN-Descent is approximate, sampleRate knob).
-    * Deterministic variant: below `spark.graft.knn.exact` nodes (default
-    * 1024) the candidate set is the exact pair space; above, candidates
+    * Deterministic variant: below [[KnnExactNodes]] nodes (1024) the
+    * candidate set is the exact pair space; above, candidates
     * are sign-code LSH buckets (the measured-recall scheme of
     * `knn_graph` — shuffle both sides by code, search bucket-locally, the
     * 100 TB plan). The exact pair space is quadratic AND its cosine runs
@@ -174,13 +177,11 @@ object MageAliases {
       .filter(!exists(col("vec"), _.isNull))
       .withColumn("nrm", LlmOps.l2norm(col("vec")))
       .filter(col("nrm") > 0)
-    val exactGate = ctx.spark.conf
-      .get("spark.graft.knn.exact", "1024").toLong
     val nVec = v.count()
     val q = v.select(
       col("node").as("__qn"), col("vec").as("__qv"), col("nrm").as("__qd"))
     val candidates =
-      if (nVec <= exactGate) q.crossJoin(v)
+      if (nVec <= KnnExactNodes) q.crossJoin(v)
       else {
         // adaptive code width, bucket size ≈ constant (knn_graph scheme)
         val bits = math.max(

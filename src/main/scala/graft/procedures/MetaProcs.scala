@@ -40,36 +40,30 @@ object MetaProcs {
 
   /** Property keys PRESENT on at least one entity of ANY frame (a column
     * that exists but is all-NULL carries no key — matches the reference's
-    * per-entity key walk, meta.cpp:102). Every frame's non-null-count
-    * aggregate packs into a prop→count MAP (one shared schema), the maps
-    * union into ONE plan, and a single action collects them — all frame
-    * scans ride one job whose independent stages the scheduler runs
-    * concurrently, instead of one job per frame multiplying scheduler
-    * latency by the label count (VERDICT r16 schema_info/meta_stats
+    * per-entity key walk, meta.cpp:102). Every frame projects one
+    * presence flag per key of the union key list (NULL where it lacks the
+    * key), so the frames union into ONE plan and a single global
+    * non-null count aggregates all of them: one shuffle and one collect
+    * whatever the frame count. A per-frame aggregate costs one AQE
+    * shuffle job per frame instead (VERDICT r16 schema_info/meta_stats
     * watch item). */
   private def presentKeysAll(
       frames: Seq[(DataFrame, Seq[String])]): Set[String] = {
-    val per = frames.flatMap { case (df, meta) =>
-      val props = df.columns.filterNot(meta.contains).toSeq
-      if (props.isEmpty) None
-      else Some(
-        df.agg(
-            count(col(props.head)).as("c0"),
-            props.tail.zipWithIndex.map { case (p, i) =>
-              count(col(p)).as(s"c${i + 1}")
-            }: _*)
-          .select(map_from_arrays(
-            array(props.map(lit): _*),
-            array(props.indices.map(i => col(s"c$i")): _*)).as("m")))
+    val props = frames
+      .map { case (df, meta) => (df, df.columns.filterNot(meta.contains)) }
+      .filter(_._2.nonEmpty)
+    val keys = props.flatMap(_._2).distinct
+    if (keys.isEmpty) return Set.empty
+    val flags = props.map { case (df, own) =>
+      df.select(keys.zipWithIndex.map { case (k, i) =>
+        (if (own.contains(k)) when(col(k).isNotNull, lit(1))
+         else lit(null).cast("int")).as(s"k$i")
+      }: _*)
     }
-    if (per.isEmpty) Set.empty
-    else per
-      .reduce(_ unionByName _)
-      .collect()
-      .iterator
-      .flatMap(r =>
-        r.getMap[String, Long](0).filter(_._2 > 0).keys)
-      .toSet
+    val tallies = keys.indices.map(i => count(col(s"k$i")))
+    val counts =
+      flags.reduce(_ union _).agg(tallies.head, tallies.tail: _*).head()
+    keys.indices.filter(counts.getLong(_) > 0).map(keys).toSet
   }
 
   /** `CALL meta.stats[_online|_offline]()` (meta.cpp:158-209).
@@ -86,7 +80,11 @@ object MetaProcs {
     val edges = g.allEdges
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    // one thread per tally, created on the calling thread, so it inherits
+    // the caller's Spark local properties (job group, description) that
+    // pooled threads would drop
+    implicit val ec: ExecutionContext =
+      ExecutionContext.fromExecutor(r => new Thread(r).start())
 
     // FAST PATH (one 2-column node scan + two 2-column edge scans, all
     // map-side-combined to tiny results — shuffled bytes ≈ zero): node

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, SrcCol}
+import graft.operators.Cutover
 
 /** Deterministic variants of the Python MAGE analytics modules
   * (`src/mage/python/set_cover.py`, `kmeans.py`, `link_prediction.py`).
@@ -74,6 +75,9 @@ object MlProcs {
   }
 
   // ---------------- kmeans ----------------
+
+  /** Driver Lloyd's ceiling on the embedded-node count. */
+  private val KMeansLocalRows = 100000L
 
   /** `kmeans.get_clusters(n_clusters, embedding_property, …)` → (node,
     * cluster_id) over every node carrying the property (kmeans.py:45). */
@@ -149,11 +153,8 @@ object MlProcs {
     // anyway) runs the same fixed-point locally: same init, same
     // (distance, index) argmin, same per-cluster mean and 1e-8 movement
     // test. Above the cap the distributed loop runs unchanged.
-    val localCap = ctx.spark.conf
-      .get("spark.graft.local.kmeansRows", "100000").toLong
-    val head = pts0raw.orderBy(col(IdCol))
-      .limit(math.min(localCap + 1, Int.MaxValue.toLong).toInt).collect()
-    if (head.length <= localCap) {
+    val ordered = pts0raw.orderBy(col(IdCol))
+    Cutover.collect(ordered, KMeansLocalRows).foreach { head =>
       require(head.length >= k, s"kmeans: fewer than $k embedded nodes")
       val ids = head.map(_.getLong(0))
       val vs = head.map(_.getSeq[Double](1))

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
+import graft.operators.Cutover
 
 /** Driver-local graph toolkit backing [[NxAlgProcs]] (the reference's
   * `query_modules/nxalg.py` converts the WHOLE graph into an in-process
@@ -78,8 +79,7 @@ private[procedures] object NxLocal {
   }
 
   def capture(ctx: ProcContext, weightProp: Option[String] = None): G = {
-    val nodes = Procedures
-      .collectIfSubcritical(ctx.g.allNodes.select(col(IdCol)))
+    val nodes = Cutover.collect(ctx.g.allNodes.select(col(IdCol)))
       .getOrElse(throw new IllegalStateException(
         "nxalg: graph above spark.graft.local.edges — the reference " +
           "module materializes the whole graph in networkx; raise the " +
@@ -90,9 +90,8 @@ private[procedures] object NxLocal {
       case Some(p) if e0.columns.contains(p) => col(p).cast("double")
       case _ => lit(null).cast("double")
     }
-    val rows = Procedures
-      .collectIfSubcritical(
-        e0.select(col(IdCol), col(SrcCol), col(DstCol), wCol.as("__w")))
+    val rows = Cutover.collect(
+      e0.select(col(IdCol), col(SrcCol), col(DstCol), wCol.as("__w")))
       .getOrElse(throw new IllegalStateException(
         "nxalg: graph above spark.graft.local.edges"))
     val known = nodes.toSet

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
-import graft.operators.{Expand, LocalProcs, ShortestPath}
+import graft.operators.{Cutover, Expand, LocalProcs, ShortestPath}
 
 /** `CALL name(args) YIELD …` procedure registry — the reference's query
   * modules (`CallProcedure`, `src/query/plan/operator.hpp:2891`; module
@@ -83,26 +83,6 @@ object Procedures {
 
   import GraphState.{DstCol, IdCol, SrcCol}
 
-  /** Subcritical dispatch gate shared by the iterative procedures (the
-    * [[graft.operators.LocalGraph]] philosophy): below
-    * `spark.graft.local.edges` rows, a driver-local exact pass
-    * ([[graft.operators.LocalProcs]]) replaces the level-synchronous
-    * fixpoint — each distributed round costs a fixed scheduling quantum
-    * regardless of volume. The probe IS the capture: one LIMIT-capped
-    * collect both answers "is it small?" and, when yes, hands the rows to
-    * the local pass — so the subcritical path costs exactly one scan of
-    * each input, and at scale the wasted work is bounded at `limit + 1`
-    * rows. Returns None above the threshold (or when disabled). */
-  private[procedures] def collectIfSubcritical(
-      df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val limit = df.sparkSession.conf
-      .get("spark.graft.local.edges", "2000000").toLong
-    if (limit <= 0) return None
-    val rows =
-      df.limit(math.min(limit + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length > limit) None else Some(rows)
-  }
-
   private def longPairs(rows: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] =
     rows.map(r => (r.getLong(0), r.getLong(1)))
 
@@ -128,7 +108,7 @@ object Procedures {
     val iters = ctx.optInt("iterations", 15)
     val d = ctx.opts.get("damping").map(_.toString.toDouble).getOrElse(0.85)
     val (nodes, edges) = selectGraph(ctx)
-    (collectIfSubcritical(edges), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(edges), Cutover.collect(nodes)) match {
       case (Some(es), Some(ns)) =>
         import ctx.spark.implicits._
         return LocalProcs
@@ -176,7 +156,7 @@ object Procedures {
     * with this). Returns (node, comp), comp = min node id of the component.
     */
   def minLabelComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    (collectIfSubcritical(edges), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(edges), Cutover.collect(nodes)) match {
       case (Some(es), Some(ns)) =>
         import nodes.sparkSession.implicits._
         return LocalProcs
@@ -194,7 +174,6 @@ object Procedures {
     val maxRounds = 64
     while (!converged && rounds < maxRounds) {
       rounds += 1
-      val t0 = System.nanoTime()
       val prop = comp
         .unionByName(
           comp.join(und, col("node") === col("src"))
@@ -217,9 +196,6 @@ object Procedures {
         .localCheckpoint(true)
       converged = next.filter(col("__ch")).isEmpty
       comp = next.select("node", "comp")
-      if (sys.env.contains("GRAFT_SP_DEBUG"))
-        System.err.println(
-          f"[wcc] round $rounds%d ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     und.unpersist(blocking = false)
     if (!converged)
@@ -258,7 +234,7 @@ object Procedures {
     val beta = ctx.optDouble("beta").getOrElse(1.0)
     val iters = ctx.optInt("iterations", 10)
     val (nodes, edges) = selectGraph(ctx)
-    (collectIfSubcritical(edges), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(edges), Cutover.collect(nodes)) match {
       case (Some(es), Some(ns)) =>
         import ctx.spark.implicits._
         return LocalProcs
@@ -429,7 +405,7 @@ object Procedures {
     val e0 = ShortestPath.oriented(
       edges.select(col("src").as(SrcCol), col("dst").as(DstCol)),
       if (directed) Expand.Out else Expand.Both)
-    (collectIfSubcritical(e0), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(e0), Cutover.collect(nodes)) match {
       case (Some(es), Some(ns)) =>
         import ctx.spark.implicits._
         val nsArr = ns.map(_.getLong(0))
@@ -904,7 +880,7 @@ object Procedures {
     val iters = ctx.optInt("iterations", 6)
     val (nodes, edges0) = selectGraph(ctx)
     val simple = edges0.filter(col("src") =!= col("dst"))
-    (collectIfSubcritical(simple), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(simple), Cutover.collect(nodes)) match {
       case (Some(esr), Some(ns)) =>
         import ctx.spark.implicits._
         val es = longPairs(esr)
@@ -987,7 +963,7 @@ object Procedures {
     val maxLevels = ctx.optInt("maxLevels", 10)
     val (nodes, edges0) = selectGraph(ctx)
     val simple = edges0.filter(col("src") =!= col("dst"))
-    (collectIfSubcritical(simple), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(simple), Cutover.collect(nodes)) match {
       case (Some(esr), Some(ns)) =>
         import ctx.spark.implicits._
         val es = longPairs(esr)
@@ -1118,28 +1094,12 @@ object Procedures {
   /** `CALL algo.bridges({type, weightProp, minWeight})` — exact bridges of
     * the undirected selected edge set via [[graft.operators.Biconnected]]
     * (BFS forest + chord-to-LCA aux components; exact on EVERY graph —
-    * dense cores, parallel edges — in O(forest depth) rounds). For graphs
-    * whose diameter dwarfs their density (long rings/paths at extreme
-    * scale), `spark.graft.bridges.contraction=true` switches to
-    * [[graft.operators.Bridges]] (cycle contraction, O(log n) rounds
-    * independent of diameter) with an automatic fall-back to Biconnected
-    * when the input leaves the contraction class. Yields (src, dst) per
-    * bridge edge, canonical src < dst. */
+    * dense cores, parallel edges — in O(forest depth) rounds). Yields
+    * (src, dst) per bridge edge, canonical src < dst. */
   def bridgesProc(ctx: ProcContext): DataFrame = {
     val edges = selectedEdges(ctx).localCheckpoint(true)
-    val useContraction = ctx.spark.conf
-      .get("spark.graft.bridges.contraction", "false").toBoolean
-    val flags =
-      if (!useContraction)
-        graft.operators.Biconnected(ctx.spark, edges)
-          .select(col("edge_id"), col("is_bridge"))
-      else
-        try graft.operators.Bridges(ctx.spark, edges)
-        catch {
-          case _: UnsupportedOperationException =>
-            graft.operators.Biconnected(ctx.spark, edges)
-              .select(col("edge_id"), col("is_bridge"))
-        }
+    val flags = graft.operators.Biconnected(ctx.spark, edges)
+      .select(col("edge_id"), col("is_bridge"))
     edges
       .join(flags.filter(col("is_bridge")), Seq("edge_id"), "left_semi")
       .select(
@@ -1199,7 +1159,7 @@ object Procedures {
   def labelPropagation(ctx: ProcContext): DataFrame = {
     val iters = ctx.optInt("iterations", 10)
     val (nodes, edges) = selectGraph(ctx)
-    (collectIfSubcritical(edges), collectIfSubcritical(nodes)) match {
+    (Cutover.collect(edges), Cutover.collect(nodes)) match {
       case (Some(esr), Some(ns)) =>
         import ctx.spark.implicits._
         val es = longPairs(esr)

@@ -32,7 +32,7 @@ import graft.core.GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
   *   - `gnn.*` (gnn.py:451-634): pure export/import between the graph
   *     and PyG / TF-GNN JSON payloads. The contract is ONE json string,
   *     so the export funnels through the driver like export_util.json —
-  *     gated by `spark.graft.gnn.maxExport` (raise above, never silently
+  *     gated by [[GnnMaxExport]] rows (raise above, never silently
   *     truncate); imports allocate a fresh id base and append frames
   *     distributed, exactly the import_util.json path.
   */
@@ -344,13 +344,15 @@ object PyTail3Procs {
 
   // ---------------- gnn ----------------
 
+  /** Node + edge rows a gnn export may funnel through the driver. */
+  private val GnnMaxExport = 1000000L
+
   private def gnnExportGate(spark: SparkSession, g: GraphState): Unit = {
-    val max = spark.conf.get("spark.graft.gnn.maxExport", "1000000").toLong
-    val probe = math.min(max + 1L, Int.MaxValue.toLong).toInt
+    val probe = (GnnMaxExport + 1L).toInt
     val n = g.allNodes.limit(probe).count() + g.allEdges.limit(probe).count()
-    if (n > max)
+    if (n > GnnMaxExport)
       throw new UnsupportedOperationException(
-        s"gnn export: graph exceeds spark.graft.gnn.maxExport=$max rows — " +
+        s"gnn export: graph exceeds $GnnMaxExport rows — " +
           "the contract is ONE driver-side JSON string; export frames " +
           "with export_util.json instead")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, SrcCol}
+import graft.operators.Cutover
 
 /** Deterministic Spark-native variants of the remaining Python MAGE
   * modules (`src/mage/python/`): `tsp.py`, `vrp.py`,
@@ -219,6 +220,9 @@ object PyTailProcs {
 
   // ---------------- graph_coloring ----------------
 
+  /** Driver-colouring ceiling on the directed conflict-edge count. */
+  private val ColoringLocalEdges = 100000L
+
   /** `graph_coloring.color_graph({params}, edge_property)` → (node,
     * color): distributed Jones–Plassmann greedy, deterministic. */
   def colorGraph(ctx: ProcContext): DataFrame = {
@@ -250,10 +254,8 @@ object PyTailProcs {
     // colours in-memory on one node too — graph_coloring.py's population
     // runs against a collected QA matrix); the distributed JP fixpoint
     // below is the scale path. Deterministic: ascending-id greedy.
-    val localMax = ctx.spark.conf
-      .get("spark.graft.coloring.localEdges", "100000").toLong
-    if (und.count() <= localMax) {
-      val pairs = und.collect().map(r => (r.getLong(0), r.getLong(1)))
+    Cutover.collect(und, ColoringLocalEdges).foreach { rows =>
+      val pairs = rows.map(r => (r.getLong(0), r.getLong(1)))
       val nbrs = pairs.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
       val colorOf = collection.mutable.LongMap.empty[Long]
       pairs.map(_._1).distinct.sorted.foreach { v =>

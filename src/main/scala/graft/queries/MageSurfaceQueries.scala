@@ -163,8 +163,8 @@ object MageSurfaceQueries {
              |SELECT round(d, 0) AS d1, round(d, 0) AS d2 FROM p""".stripMargin)),
 
     // knn.get — cosine top-2 over the Embedding nodes' vector property
-    // (knn_module.cpp:21-46). Exact path at gate scale (below
-    // spark.graft.knn.exact); the sign-code bucket path takes over above
+    // (knn_module.cpp:21-46). Exact path at gate scale (below the
+    // 1024-vector exact gate); the sign-code bucket path takes over above
     // it (knn_graph's measured-recall scheme). similarityCutoff 0 drops
     // negative-cosine candidates in BOTH engines.
     QueryDef(
@@ -191,8 +191,8 @@ object MageSurfaceQueries {
              |                             ORDER BY s DESC, c) <= 2)
              |ORDER BY q, c""".stripMargin)),
 
-    // knn.get on a corpus in the BUCKETED range: the spark.graft.knn.exact
-    // default moved 8192 -> 1024 (r16), silently switching 1k-8k corpora
+    // knn.get on a corpus in the BUCKETED range: the knn.get exact gate
+    // moved 8192 -> 1024 (r16), silently switching 1k-8k corpora
     // from exact pairwise top-k to the sign-code approximate path. This
     // gate pins that path's recall@2 against the in-engine exact answer
     // on a 1,500-vector corpus (3 deterministically-perturbed copies of

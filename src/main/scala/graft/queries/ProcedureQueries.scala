@@ -787,12 +787,12 @@ object ProcedureQueries {
              |  (9, 9), (10, 9), (11, 9)) AS t(nk, rep)
              |ORDER BY nk""".stripMargin)),
 
-    // CALL + bridges (src/mage/cpp/bridges_module): cycle-contraction +
-    // tree-pruning exact bridges. At minWeight 8 the thresholded KNOWS
-    // subgraph is a forest (periodic weight pattern → components of ≤ 4
-    // nodes at ANY scale factor), so every edge is a bridge; the operator
-    // still has to prove that by full contraction. Cyclic-graph behavior
-    // is covered by BridgesSpec.
+    // CALL + bridges (src/mage/cpp/bridges_module): exact bridges via
+    // Biconnected (BFS forest + chord-to-LCA walk). At minWeight 8 the
+    // thresholded KNOWS subgraph is a forest (periodic weight pattern →
+    // components of ≤ 4 nodes at ANY scale factor), so every edge is a
+    // bridge. Cyclic-graph behavior is covered by BiconnectedSpec and
+    // call_bridges_dense.
     cq(
       "call_bridges",
       s"""CALL algo.bridges({type: 'KNOWS',
@@ -904,9 +904,8 @@ object ProcedureQueries {
              |  (3, 6, 10), (3, 6, 10)) AS t(bcc_id, a, b)
              |ORDER BY bcc_id, a, b""".stripMargin)),
 
-    // Bridges on the same dense graph (K4 core is outside the r7
-    // contraction class — Biconnected handles it directly): exactly one
-    // bridge, the K4→theta connector.
+    // Bridges on the same dense graph (K4 core, theta, parallel pair):
+    // exactly one bridge, the K4→theta connector.
     QueryDef(
       "call_bridges_dense",
       (s, dir) => {

@@ -82,7 +82,7 @@ object LdbcGraphLoader {
         .toArray
       val d = Dims(nMax + 1, sMax + 1, pMax + 1)
       val g = build(spark, dir, d)
-      if (sys.env.get("GRAFT_NO_PREWARM").isEmpty) g.prewarmAdjacency()
+      g.prewarmAdjacency()
       (g, d)
     })
 

@@ -53,7 +53,7 @@ object PokecGraphLoader {
       val g =
         if (new java.io.File(s"$dir/users.parquet").exists()) native(spark, dir)
         else derived(spark, dir)
-      if (sys.env.get("GRAFT_NO_PREWARM").isEmpty) g.prewarmAdjacency()
+      g.prewarmAdjacency()
       g
     })
 

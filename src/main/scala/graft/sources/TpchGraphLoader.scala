@@ -273,7 +273,7 @@ object TpchGraphLoader {
       // load): kick the src-sorted adjacency view off in the background
       // so the first point-adjacency probe finds it warm instead of
       // paying a full-corpus resort inside its own timing
-      if (sys.env.get("GRAFT_NO_PREWARM").isEmpty) g.prewarmAdjacency()
+      g.prewarmAdjacency()
       g
     })
 

@@ -317,15 +317,17 @@ object GraphStream {
     case _ => TriggerEvent.Any
   }
 
+  /** Per-frame row cap of a trigger's collected batch diff. */
+  private val MaxDiffRows = 100000
+
   /** Batch diff → predefined trigger variables, as list-of-map
     * parameters ({id} for vertices, {id, start, end} for edges). The
     * collect is batch-bounded (BATCH_SIZE caps it) and capped by
-    * `spark.graft.trigger.maxDiffRows`; the trigger statement itself is
-    * a full distributed Cypher statement. */
+    * [[MaxDiffRows]]; the trigger statement itself is a full distributed
+    * Cypher statement. */
   private def diffParams(
       spark: SparkSession, res: IngestResult): Map[String, Any] = {
-    val cap = spark.conf
-      .get("spark.graft.trigger.maxDiffRows", "100000").toInt
+    val cap = MaxDiffRows
     def vrows(m: Map[String, DataFrame]): Seq[Map[String, Any]] =
       m.values.toSeq.flatMap(
         _.select(GraphState.IdCol).limit(cap).collect()

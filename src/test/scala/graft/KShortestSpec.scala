@@ -83,7 +83,16 @@ class KShortestSpec extends SparkTestBase {
     assert(secs < 60.0, f"hub kshortest took $secs%.1fs — frontier not bounded?")
   }
 
-  test("spur case: targeted overprovision keeps target-avoiding prefixes") {
+  /** Both cases below run twice: as they come (the driver-local mirror,
+    * the graphs are far under the cutover) and with the distributed
+    * operator forced by `spark.graft.local.edges=0`. */
+  private def distributed(body: => Unit): Unit = {
+    spark.conf.set("spark.graft.local.edges", "0")
+    try body
+    finally spark.conf.unset("spark.graft.local.edges")
+  }
+
+  private def spurCase(): Unit = {
     // Second-shortest path to 9 is 0→7→5→9, but BOTH lexicographically
     // best 2-hop prefixes at node 5 go through 9 (parallel 9→5 edges), so
     // an un-hedged k=2 cut at (0,5) would drop the avoiding prefix and
@@ -109,7 +118,7 @@ class KShortestSpec extends SparkTestBase {
     assert(out.toSeq == Seq(1L, 3L))
   }
 
-  test("direct kShortest operator respects target saturation early-stop") {
+  private def saturationCase(): Unit = {
     // long chain beyond the target: saturation at the target pair must stop
     // the loop before walking the tail
     val chain = (0L until 30L).map(i => (i, i + 1))
@@ -129,5 +138,22 @@ class KShortestSpec extends SparkTestBase {
       .collect()
       .map(_.getLong(0))
     assert(out.toSeq == Seq(3L))
+  }
+
+  test("spur case: targeted overprovision keeps target-avoiding prefixes") {
+    spurCase()
+  }
+
+  test("direct kShortest operator respects target saturation early-stop") {
+    saturationCase()
+  }
+
+  test("spur case, distributed: targeted overprovision keeps " +
+    "target-avoiding prefixes") {
+    distributed(spurCase())
+  }
+
+  test("direct kShortest operator, distributed: target saturation early-stop") {
+    distributed(saturationCase())
   }
 }

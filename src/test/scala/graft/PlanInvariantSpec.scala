@@ -278,7 +278,7 @@ class PlanInvariantSpec extends SparkTestBase {
     // AQE stats, absent on checkpointed frames) — and the gate, not a
     // blind hint, is what keeps a supernode frontier off the driver.
     val conf = spark.conf
-    conf.set("spark.graft.varexpand.localBudget", "0")
+    conf.set("spark.graft.local.edges", "0")
     try {
       val df = SparkEntry.queries("varexpand_unbounded")(spark, sfDir)
       val p = df.queryExecution.executedPlan.toString
@@ -286,6 +286,6 @@ class PlanInvariantSpec extends SparkTestBase {
         p.contains("BroadcastHashJoin"),
         s"distributed var-expand bind join is not broadcast for a " +
           s"counted-small traversal:\n$p")
-    } finally conf.unset("spark.graft.varexpand.localBudget")
+    } finally conf.unset("spark.graft.local.edges")
   }
 }

@@ -22,4 +22,26 @@ class SourceHygieneSpec extends AnyFunSuite {
       .toList
     assert(offenders.isEmpty, s"binary-classified sources: $offenders")
   }
+
+  test("src/main reads exactly the five documented spark.graft keys") {
+    // README "Configuration": every other size threshold is a named
+    // constant at its use site, and the cutover ceilings are bounded by
+    // spark.graft.local.edges through graft.operators.Cutover
+    val sources = Files
+      .walk(Paths.get("src/main"))
+      .iterator()
+      .asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(Files.readString)
+      .toList
+    def literals(re: scala.util.matching.Regex): Set[String] =
+      sources.flatMap(re.findAllMatchIn(_).map(_.group(1))).toSet
+    assert(literals("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r) == Set(
+      "spark.graft.local.edges",
+      "spark.graft.bfs.reconstructEdges",
+      "spark.graft.mutation.broadcastKeys",
+      "spark.graft.adjacency.maxDeltas",
+      "spark.graft.index.dir"))
+    assert(literals("\"(GRAFT_[A-Z]+_DEBUG|GRAFT_NO_PREWARM)\"".r).isEmpty)
+  }
 }
