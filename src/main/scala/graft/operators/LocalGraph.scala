@@ -18,6 +18,11 @@ import scala.collection.mutable
   * analog, and both paths produce IDENTICAL output (components and
   * bridges are graph-theoretic; cycle node sets reproduce the same
   * min-root/min-parent BFS forest the distributed walk builds).
+  *
+  * [[biconnected]] is also the one lowlink pass of the single-node module
+  * mirrors: `nxalg.biconnected_components`, `nxalg.bridges` and
+  * graph_analyzer's bridge and articulation counts reach it through
+  * `graft.procedures.NxLocal.biconnected`.
   */
 private[graft] object LocalGraph {
 

@@ -25,27 +25,12 @@ import graft.operators.Cutover
 object AlgoModuleProcs {
 
   import GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
-
-  private def nodeIdOf(v: Any, what: String): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case m: Map[_, _] =>
-      m.collectFirst { case (k, id: Long) if k.toString == IdCol => id }
-        .getOrElse(throw new IllegalArgumentException(
-          s"$what: node value lacks an id"))
-    case other =>
-      throw new IllegalArgumentException(s"$what: need a node, got $other")
-  }
+  import ProcArgs.{mapOf, nodeIdOf}
 
   private def listOf(v: Any): Seq[Any] = v match {
     case xs: Seq[_] => xs
     case null => Nil
     case other => Seq(other)
-  }
-
-  private def mapOf(v: Any): Map[String, Any] = v match {
-    case m: Map[_, _] => m.map { case (k, x) => k.toString -> x }
-    case _ => Map.empty
   }
 
   // ---------------------------------------------------------------------

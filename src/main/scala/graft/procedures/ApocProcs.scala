@@ -67,17 +67,6 @@ object ApocProcs {
       case other => other.toString.toLong
     }
 
-  private def optLongs(ctx: ProcContext, k: String): Seq[Long] =
-    ctx.opts.get(k) match {
-      case Some(s: Seq[_]) => s.map {
-        case l: Long => l
-        case i: Int => i.toLong
-        case other => other.toString.toLong
-      }
-      case Some(one) => Seq(one.toString.toLong)
-      case None => Seq.empty
-    }
-
   private def optStrings(ctx: ProcContext, k: String): Seq[String] =
     ctx.opts.get(k) match {
       case Some(s: Seq[_]) => s.map(_.toString)
@@ -89,7 +78,7 @@ object ApocProcs {
     ctx.opts.get(k).map(_.toString.toBoolean).getOrElse(dflt)
 
   private def startIds(ctx: ProcContext): Seq[Long] = {
-    val ids = optLong(ctx, "node").toSeq ++ optLongs(ctx, "nodes")
+    val ids = optLong(ctx, "node").toSeq ++ ctx.optLongs("nodes")
     require(ids.nonEmpty, "need a start node ('node' or 'nodes' option)")
     ids.distinct
   }
@@ -690,7 +679,7 @@ object ApocProcs {
     val oldL = ctx.optString("old", "")
     val newL = ctx.optString("new", "")
     require(oldL.nonEmpty && newL.nonEmpty, "need old and new label names")
-    val ids = optLongs(ctx, "nodes")
+    val ids = ctx.optLongs("nodes")
     def idOk = if (ids.isEmpty) lit(true)
       else col(IdCol).isin(ids.map(Long.box): _*)
     val hit = array_contains(col(LabelsCol), oldL) && idOk
@@ -817,7 +806,7 @@ object ApocProcs {
       case Seq() => ctx.g.edgeTypes
       case ts => ts.filter(ctx.g.hasType)
     }
-    val ids = optLongs(ctx, "ids")
+    val ids = ctx.optLongs("ids")
     def idOk = if (ids.isEmpty) lit(true)
       else col(IdCol).isin(ids.map(Long.box): _*)
     var g = ctx.g

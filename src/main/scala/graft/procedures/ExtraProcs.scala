@@ -38,17 +38,6 @@ object ExtraProcs {
 
   // ---------------- option helpers (shared shapes) ----------------
 
-  private def optLongs(ctx: ProcContext, k: String): Seq[Long] =
-    ctx.opts.get(k) match {
-      case Some(s: Seq[_]) => s.map {
-        case l: Long => l
-        case i: Int => i.toLong
-        case other => other.toString.toLong
-      }
-      case Some(one) => Seq(one.toString.toLong)
-      case None => Seq.empty
-    }
-
   private def optLong(ctx: ProcContext, k: String): Option[Long] =
     ctx.opts.get(k).map(_.toString.toLong)
 
@@ -81,8 +70,8 @@ object ExtraProcs {
     * — and the requested pairs broadcast-join against them. `mode`:
     * `pairwise` zips the two lists, `cartesian` crosses them. */
   def unionFindConnected(ctx: ProcContext): DataFrame = {
-    val n1 = optLongs(ctx, "nodes1")
-    val n2 = optLongs(ctx, "nodes2")
+    val n1 = ctx.optLongs("nodes1")
+    val n2 = ctx.optLongs("nodes2")
     val mode = ctx.optString("mode", "pairwise").toLowerCase
     val spark = ctx.spark
     import spark.implicits._
@@ -440,67 +429,68 @@ object ExtraProcs {
     val nodes = labeledNodes(ctx).select(col(IdCol).as("node"))
     val edges = typedEdges(ctx).select(col(SrcCol).as("s"), col(DstCol).as("d"))
 
-    val ordered: Seq[Long] =
-      (Cutover.collect(edges),
-        Cutover.collect(nodes)) match {
-        case (Some(es), Some(ns)) =>
-          val ids = ns.map(_.getLong(0))
-          val indeg = mutable.HashMap.empty[Long, Int] ++= ids.map(_ -> 0)
-          val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
-          es.foreach { r =>
-            val (s, d) = (r.getLong(0), r.getLong(1))
-            adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-            indeg(d) = indeg.getOrElse(d, 0) + 1
-          }
-          val acc = mutable.ArrayBuffer.empty[Long]
-          var layer = ids.filter(indeg(_) == 0).sorted.toSeq
-          while (layer.nonEmpty) {
-            acc ++= layer
-            val hits = mutable.HashMap.empty[Long, Int]
-            layer.foreach(v => adj.getOrElse(v, Nil).foreach(d =>
-              hits(d) = hits.getOrElse(d, 0) + 1))
-            layer = hits.iterator.collect {
-              case (d, k) if indeg(d) == k => d
-            }.toSeq.sorted
-            hits.foreach { case (d, k) => indeg(d) = indeg(d) - k }
-          }
-          require(acc.length == ids.length,
-            "The graph is cyclic and therefore no topological ordering exists.")
-          acc.toSeq
-        case _ =>
-          val e = edges.persist()
-          var remaining = nodes.localCheckpoint(true)
-          val acc = mutable.ArrayBuffer.empty[Long]
-          var total = 0L
-          var done = false
-          // `remaining` starts as ALL nodes — broadcast only when the
-          // tracked count (decremented per peeled layer) is under the
-          // frontier gate; otherwise the semi-join shuffles
-          var remainingN = remaining.count()
-          while (!done) {
-            val live = e.join(
-              graft.operators.Scratch.gatedBroadcast(
-                remaining.select(col("node").as("s")), remainingN),
-              Seq("s"), "leftsemi")
-            val layer = remaining
-              .join(live.select(col("d").as("node")).distinct(),
-                Seq("node"), "left_anti")
-              .as[Long].collect().sorted
-            if (layer.isEmpty) done = true
-            else {
-              acc ++= layer
-              total += layer.length
-              remainingN -= layer.length
-              remaining = remaining
-                .join(layer.toSeq.toDF("node"), Seq("node"), "left_anti")
-                .localCheckpoint(true)
-            }
-          }
-          e.unpersist()
-          require(remaining.isEmpty,
-            "The graph is cyclic and therefore no topological ordering exists.")
-          acc.toSeq
+    val local = for {
+      es <- Cutover.collect(edges)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      val ids = ns.map(_.getLong(0))
+      val indeg = mutable.HashMap.empty[Long, Int] ++= ids.map(_ -> 0)
+      val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
+      es.foreach { r =>
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
+        indeg(d) = indeg.getOrElse(d, 0) + 1
       }
+      val acc = mutable.ArrayBuffer.empty[Long]
+      var layer = ids.filter(indeg(_) == 0).sorted.toSeq
+      while (layer.nonEmpty) {
+        acc ++= layer
+        val hits = mutable.HashMap.empty[Long, Int]
+        layer.foreach(v => adj.getOrElse(v, Nil).foreach(d =>
+          hits(d) = hits.getOrElse(d, 0) + 1))
+        layer = hits.iterator.collect {
+          case (d, k) if indeg(d) == k => d
+        }.toSeq.sorted
+        hits.foreach { case (d, k) => indeg(d) = indeg(d) - k }
+      }
+      require(acc.length == ids.length,
+        "The graph is cyclic and therefore no topological ordering exists.")
+      acc.toSeq
+    }
+    val ordered: Seq[Long] = local.getOrElse {
+      val e = edges.persist()
+      var remaining = nodes.localCheckpoint(true)
+      val acc = mutable.ArrayBuffer.empty[Long]
+      var total = 0L
+      var done = false
+      // `remaining` starts as ALL nodes — broadcast only when the
+      // tracked count (decremented per peeled layer) is under the
+      // frontier gate; otherwise the semi-join shuffles
+      var remainingN = remaining.count()
+      while (!done) {
+        val live = e.join(
+          graft.operators.Scratch.gatedBroadcast(
+            remaining.select(col("node").as("s")), remainingN),
+          Seq("s"), "leftsemi")
+        val layer = remaining
+          .join(live.select(col("d").as("node")).distinct(),
+            Seq("node"), "left_anti")
+          .as[Long].collect().sorted
+        if (layer.isEmpty) done = true
+        else {
+          acc ++= layer
+          total += layer.length
+          remainingN -= layer.length
+          remaining = remaining
+            .join(layer.toSeq.toDF("node"), Seq("node"), "left_anti")
+            .localCheckpoint(true)
+        }
+      }
+      e.unpersist()
+      require(remaining.isEmpty,
+        "The graph is cyclic and therefore no topological ordering exists.")
+      acc.toSeq
+    }
     Seq(Tuple1(ordered)).toDF("sorted_nodes")
   }
 
@@ -511,7 +501,7 @@ object ExtraProcs {
     * everything outside the id range instead of rescanning every type
     * frame (reference does an O(deg) adjacency fetch). */
   def connectNodes(ctx: ProcContext): DataFrame = {
-    val ids = optLongs(ctx, "nodes")
+    val ids = ctx.optLongs("nodes")
     require(ids.nonEmpty, "need nodes")
     val boxed = ids.map(Long.box)
     ctx.g.adjacencyBySrc

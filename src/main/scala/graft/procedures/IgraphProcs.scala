@@ -228,24 +228,12 @@ object IgraphProcs {
     import spark.implicits._
     val edges =
       localEdges(ctx, None, directed = true, "get_all_simple_paths", sc)
-    val adj = edges.groupBy(_._1).map { case (s, es) =>
-      s -> es.map(_._2).distinct.sorted
+    val succ = edges.groupBy(_._1).map { case (s, es) =>
+      s -> es.map(_._2).distinct.sorted.toSeq
     }
-    val out = mutable.ArrayBuffer.empty[Seq[Long]]
-    def dfs(node: Long, path: mutable.ArrayBuffer[Long]): Unit = {
-      if (node == target && path.length > 1) { out += path.toSeq; return }
-      if (cutoff >= 0 && path.length > cutoff) return
-      adj.getOrElse(node, Array.empty[Long]).foreach { nxt =>
-        if (!path.contains(nxt)) {
-          path += nxt
-          dfs(nxt, path)
-          path.remove(path.length - 1)
-        }
-      }
-    }
-    if (source == target) out += Seq(source)
-    else dfs(source, mutable.ArrayBuffer(source))
-    out.toSeq.toDF("path")
+    NxLocal.simplePaths(
+      succ, source, target, if (cutoff < 0) Int.MaxValue else cutoff)
+      .toDF("path")
   }
 
   /** `igraphalg.topological_sort(mode)` → nodes (one row, list of ids).
@@ -297,9 +285,10 @@ object IgraphProcs {
   }
 
   /** `igraphalg.mincut(source, target, capacity, directed)` → (node,
-    * partition_id): after a driver max-flow, the source side is the set
-    * reachable over residual capacity (partition 0), the rest partition
-    * 1 — the classic max-flow/min-cut correspondence. */
+    * partition_id): after a driver max-flow ([[NxLocal.maxflow]]), the
+    * source side is the set reachable over residual capacity (partition
+    * 0), the rest partition 1 — the classic max-flow/min-cut
+    * correspondence; it is the smallest minimum-cut source side. */
   def mincut(ctx: ProcContext): DataFrame = {
     val source = longArg(ctx, 0, "source")
     val target = longArg(ctx, 1, "target")
@@ -310,67 +299,7 @@ object IgraphProcs {
     import spark.implicits._
     // unit capacities when no property given (igraph default)
     val edges = localEdges(ctx, cap, directed, "mincut", sc)
-    val flow = Array.fill(edges.length)(0.0)
-    val bySrc = edges.indices.groupBy(i => edges(i)._1)
-    val byDst = edges.indices.groupBy(i => edges(i)._2)
-    def residual(i: Int, forward: Boolean): Double =
-      if (forward) edges(i)._3 - flow(i) else flow(i)
-    def augment(): Double = {
-      // BFS for one augmenting path over positive residuals
-      val pred = mutable.HashMap.empty[Long, (Int, Boolean)]
-      val seen = mutable.HashSet(source)
-      var frontier = List(source)
-      var found = false
-      while (frontier.nonEmpty && !found) {
-        frontier = frontier.flatMap { v =>
-          val fwd = bySrc.getOrElse(v, Nil).iterator
-            .filter(i => residual(i, forward = true) > 1e-12)
-            .map(i => (edges(i)._2, i, true))
-          val bwd = byDst.getOrElse(v, Nil).iterator
-            .filter(i => residual(i, forward = false) > 1e-12)
-            .map(i => (edges(i)._1, i, false))
-          (fwd ++ bwd).flatMap { case (nxt, i, isF) =>
-            if (seen.add(nxt)) {
-              pred(nxt) = (i, isF)
-              if (nxt == target) found = true
-              Some(nxt)
-            } else None
-          }.toList
-        }
-      }
-      if (!found) return 0.0
-      // bottleneck + apply
-      var cur = target
-      var bottleneck = Double.PositiveInfinity
-      while (cur != source) {
-        val (i, isF) = pred(cur)
-        bottleneck = math.min(bottleneck, residual(i, isF))
-        cur = if (isF) edges(i)._1 else edges(i)._2
-      }
-      cur = target
-      while (cur != source) {
-        val (i, isF) = pred(cur)
-        flow(i) += (if (isF) bottleneck else -bottleneck)
-        cur = if (isF) edges(i)._1 else edges(i)._2
-      }
-      bottleneck
-    }
-    while (augment() > 0) ()
-    // source partition = residual-reachable set
-    val part0 = mutable.HashSet(source)
-    var frontier = List(source)
-    while (frontier.nonEmpty) {
-      frontier = frontier.flatMap { v =>
-        val nexts =
-          bySrc.getOrElse(v, Nil).iterator
-            .filter(i => residual(i, forward = true) > 1e-12)
-            .map(i => edges(i)._2) ++
-            byDst.getOrElse(v, Nil).iterator
-              .filter(i => residual(i, forward = false) > 1e-12)
-              .map(i => edges(i)._1)
-        nexts.filter(part0.add).toList
-      }
-    }
+    val (_, part0) = NxLocal.maxflow(edges.toSeq, source, target)
     val allIds = scopedNodes(ctx, sc).select(col(IdCol))
       .collect().map(_.getLong(0))
     allIds.toSeq

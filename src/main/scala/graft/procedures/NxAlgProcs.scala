@@ -4,8 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 
-import graft.core.GraphState
-
 /** The reference's `nxalg` module (`query_modules/nxalg.py` — proxied
   * NetworkX algorithms over the whole graph): traversals, paths,
   * components, tree/euler/tournament recognition, dominance, cuts.
@@ -22,43 +20,7 @@ import graft.core.GraphState
   */
 object NxAlgProcs {
 
-  import GraphState.IdCol
-
-  private[procedures] def nodeIdOf(v: Any, what: String): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case m: Map[_, _] =>
-      m.collectFirst { case (k, id: Long) if k.toString == IdCol => id }
-        .getOrElse(throw new IllegalArgumentException(
-          s"$what: node value lacks an id"))
-    case other =>
-      throw new IllegalArgumentException(s"$what: need a node, got $other")
-  }
-
-  private[procedures] def edgeIdOf(v: Any, what: String): Long =
-    nodeIdOf(v, what) // same shape: entity map with _id, or a bare id
-
-  private[procedures] def idList(v: Any, what: String): Seq[Long] = v match {
-    case null => Nil
-    case xs: Seq[_] => xs.map(nodeIdOf(_, what))
-    case other => Seq(nodeIdOf(other, what))
-  }
-
-  private[procedures] def optNode(v: Option[Any], what: String): Option[Long] =
-    v match {
-      case None | Some(null) => None
-      case Some(x) => Some(nodeIdOf(x, what))
-    }
-
-  private[procedures] def optInt(v: Option[Any]): Option[Int] = v match {
-    case Some(n: java.lang.Number) => Some(n.intValue())
-    case _ => None
-  }
-
-  private[procedures] def optStr(v: Option[Any]): Option[String] = v match {
-    case None | Some(null) => None
-    case Some(s) => Some(s.toString)
-  }
+  import ProcArgs.{idList, nodeIdOf, optInt, optNode, optStr}
 
   private[procedures] def one(ctx: ProcContext, name: String, v: Any)
     : DataFrame = {
@@ -407,23 +369,7 @@ object NxAlgProcs {
     val t = nodeIdOf(ctx.args.lift(1).getOrElse(
       throw new IllegalArgumentException(s"$what: need target")), what)
     val cutoff = optInt(ctx.args.lift(2)).getOrElse(g.n - 1)
-    val out = mutable.ArrayBuffer.empty[Seq[Long]]
-    val path = mutable.ArrayBuffer(s)
-    val onPath = mutable.HashSet(s)
-    def dfs(v: Long): Unit = {
-      if (v == t) { out += path.toSeq; return }
-      if (path.length - 1 >= cutoff) return
-      g.outSimple.getOrElse(v, Nil).foreach { nx =>
-        if (!onPath(nx)) {
-          path += nx; onPath += nx
-          dfs(nx)
-          path.remove(path.length - 1); onPath -= nx
-        }
-      }
-    }
-    if (s == t) out += Seq(s)
-    else dfs(s)
-    one(ctx, "paths", out.toSeq)
+    one(ctx, "paths", NxLocal.simplePaths(g.outSimple, s, t, cutoff))
   }
 
   // ------------------------------------------------------------------
@@ -431,26 +377,11 @@ object NxAlgProcs {
 
   def topologicalSortP(ctx: ProcContext): DataFrame = {
     val g = NxLocal.capture(ctx)
-    val indeg =
-      mutable.HashMap.empty[Long, Int].withDefaultValue(0)
-    g.nodes.foreach(v => indeg(v) = 0)
-    g.edges.foreach { case (_, _, v) => indeg(v) += 1 }
-    // Kahn, smallest-id-first (nx yields insertion order)
-    val avail = mutable.TreeSet.empty[Long]
-    g.nodes.foreach(v => if (indeg(v) == 0) avail += v)
-    val order = mutable.ArrayBuffer.empty[Long]
-    while (avail.nonEmpty) {
-      val v = avail.head; avail -= v
-      order += v
-      g.out.getOrElse(v, Nil).foreach { case (nx, _) =>
-        indeg(nx) -= 1
-        if (indeg(nx) == 0) avail += nx
-      }
-    }
+    val order = NxLocal.kahnOrder(g)
     if (order.length != g.n)
       throw new IllegalArgumentException(
         "Graph contains a cycle or graph changed during iteration")
-    one(ctx, "nodes", order.toSeq)
+    one(ctx, "nodes", order)
   }
 
   def ancestorsP(ctx: ProcContext): DataFrame = {
@@ -651,20 +582,7 @@ object NxAlgProcs {
   def weaklyConnectedComponentsSubgraph(ctx: ProcContext): DataFrame = {
     val what = "nxalg.weakly_connected_components_subgraph"
     val vertices = idList(ctx.args.headOption.getOrElse(Nil), what)
-    val edgeArgs = (ctx.args.lift(1) match {
-      case Some(xs: Seq[_]) => xs
-      case _ => Nil
-    }).map {
-      case m: Map[_, _] =>
-        val mm = m.map { case (k, x) => k.toString -> x }
-        (mm.get(GraphState.SrcCol), mm.get(GraphState.DstCol)) match {
-          case (Some(s: Long), Some(d: Long)) => (s, d)
-          case _ => throw new IllegalArgumentException(
-            s"$what: need relationship values")
-        }
-      case other => throw new IllegalArgumentException(
-        s"$what: need a relationship, got $other")
-    }
+    val edgeArgs = ProcArgs.edgePairs(ctx.args.lift(1), what)
     val nodes =
       (vertices ++ edgeArgs.flatMap(e => Seq(e._1, e._2))).distinct.sorted
     val sub = NxLocal.G(

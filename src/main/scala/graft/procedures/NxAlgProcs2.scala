@@ -4,43 +4,21 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 
-import graft.core.GraphState
-import graft.operators.Planarity
-
 /** nxalg part 2: centrality, clustering, cliques, components,
   * connectivity numbers, spectral measures, census. See [[NxAlgProcs]]
   * for the shared conventions (id yields, sorted determinism, local
   * gate). */
 object NxAlgProcs2 {
 
-  import NxAlgProcs.{edgeIdOf, idList, nodeIdOf, one, optInt, optNode, optStr}
+  import NxAlgProcs.one
+  import ProcArgs.{edgeIdOf, idList, nodeIdOf, optInt, optNode, optStr}
 
   // ------------------------------------------------------------------
   // basics
 
   def isBipartite(ctx: ProcContext): DataFrame = {
     val g = NxLocal.capture(ctx)
-    one(ctx, "is_bipartite", bipartite(g))
-  }
-
-  private def bipartite(g: NxLocal.G): Boolean = {
-    if (g.edges.exists(e => e._2 == e._3)) return false
-    val color = mutable.HashMap.empty[Long, Int]
-    g.nodes.forall { s =>
-      color.contains(s) || {
-        color(s) = 0
-        val q = mutable.Queue(s)
-        var ok = true
-        while (q.nonEmpty && ok) {
-          val v = q.dequeue()
-          g.undSimple.getOrElse(v, Nil).foreach { w =>
-            if (!color.contains(w)) { color(w) = 1 - color(v); q += w }
-            else if (color(w) == color(v)) ok = false
-          }
-        }
-        ok
-      }
-    }
+    one(ctx, "is_bipartite", NxLocal.bipartite(g))
   }
 
   def nodeBoundary(ctx: ProcContext): DataFrame = {
@@ -170,42 +148,18 @@ object NxAlgProcs2 {
     one(ctx, "is_at_free", !triple)
   }
 
-  def checkPlanarity(ctx: ProcContext): DataFrame = {
-    val g = NxLocal.capture(ctx)
-    val idx = g.nodes.zipWithIndex.toMap
-    one(ctx, "is_planar",
-      Planarity.isPlanar(
-        g.n, g.undSimpleEdges.map(e => (idx(e._2), idx(e._3)))))
-  }
+  def checkPlanarity(ctx: ProcContext): DataFrame =
+    one(ctx, "is_planar", NxLocal.planar(NxLocal.capture(ctx)))
 
   // ------------------------------------------------------------------
   // euler
 
-  private def eulerParts(g: NxLocal.G): (Boolean, Boolean) = {
-    val in = mutable.Map.empty[Long, Int].withDefaultValue(0)
-    val out = mutable.Map.empty[Long, Int].withDefaultValue(0)
-    g.edges.foreach { case (_, u, v) => out(u) += 1; in(v) += 1 }
-    val balanced = g.nodes.forall(v => in(v) == out(v))
-    val eulerian =
-      g.n > 0 && balanced && NxLocal.tarjanScc(g).size == 1
-    // nx has_eulerian_path (directed): eulerian, OR at most one node
-    // out-heavy by 1 and one in-heavy by 1 (rest balanced) and weakly
-    // connected over ALL nodes (an isolated node disqualifies)
-    val plus = g.nodes.count(v => out(v) - in(v) == 1)
-    val minus = g.nodes.count(v => in(v) - out(v) == 1)
-    val noBig = g.nodes.forall(v => math.abs(in(v) - out(v)) <= 1)
-    val hasPath = eulerian ||
-      (g.n > 0 && noBig && plus <= 1 && minus <= 1 &&
-        NxLocal.wcc(g).size == 1)
-    (eulerian, hasPath)
-  }
-
   def isEulerian(ctx: ProcContext): DataFrame =
-    one(ctx, "is_eulerian", eulerParts(NxLocal.capture(ctx))._1)
+    one(ctx, "is_eulerian", NxLocal.eulerParts(NxLocal.capture(ctx))._1)
   def hasEulerianPath(ctx: ProcContext): DataFrame =
-    one(ctx, "has_eulerian_path", eulerParts(NxLocal.capture(ctx))._2)
+    one(ctx, "has_eulerian_path", NxLocal.eulerParts(NxLocal.capture(ctx))._2)
   def isSemieulerian(ctx: ProcContext): DataFrame = {
-    val (eu, path) = eulerParts(NxLocal.capture(ctx))
+    val (eu, path) = NxLocal.eulerParts(NxLocal.capture(ctx))
     one(ctx, "is_semieulerian", path && !eu)
   }
 
@@ -215,80 +169,13 @@ object NxAlgProcs2 {
   def stronglyConnectedComponents(ctx: ProcContext): DataFrame =
     one(ctx, "components", NxLocal.tarjanScc(NxLocal.capture(ctx)))
 
-  /** biconnected components + bridges + chain machinery share one DFS */
-  private def bcc(g: NxLocal.G): (Seq[Seq[Long]], Seq[Long]) = {
-    // components as vertex sets; bridges as representative eids
-    val disc = mutable.HashMap.empty[Long, Int]
-    val low = mutable.HashMap.empty[Long, Int]
-    val parent = mutable.HashMap.empty[Long, Long]
-    var timer = 0
-    val comps = mutable.ArrayBuffer.empty[Seq[Long]]
-    val bridges = mutable.ArrayBuffer.empty[Long]
-    val estack = mutable.ArrayBuffer.empty[(Long, Long)]
-    val simple = g.undSimpleEdges
-    val adjS = {
-      val b = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Long, Long)]]
-      simple.foreach { case (eid, u, v) =>
-        b.getOrElseUpdate(u, mutable.ArrayBuffer.empty) += ((v, eid))
-        b.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += ((u, eid))
-      }
-      b.view.mapValues(_.sortBy(_._1).toSeq).toMap
-    }
-    // nxalg computes bridges on the SIMPLE reduction (nx.bridges over
-    // MemgraphGraph, nxalg.py:73) — a mutual/parallel pair still counts
-    g.nodes.foreach { root =>
-      if (!disc.contains(root)) {
-        val stack = mutable.Stack[(Long, Int)]((root, 0))
-        disc(root) = timer; low(root) = timer; timer += 1
-        while (stack.nonEmpty) {
-          val (v, i) = stack.pop()
-          val nbrs = adjS.getOrElse(v, Nil)
-          if (i < nbrs.length) {
-            stack.push((v, i + 1))
-            val (w, _) = nbrs(i)
-            if (!disc.contains(w)) {
-              parent(w) = v
-              estack += ((v, w))
-              disc(w) = timer; low(w) = timer; timer += 1
-              stack.push((w, 0))
-            } else if (!parent.get(v).contains(w) && disc(w) < disc(v)) {
-              estack += ((v, w))
-              low(v) = math.min(low(v), disc(w))
-            }
-          } else if (parent.contains(v)) {
-            val p = parent(v)
-            low(p) = math.min(low(p), low(v))
-            if (low(v) >= disc(p)) {
-              // articulation boundary: pop the component
-              val members = mutable.HashSet.empty[Long]
-              var done = false
-              while (estack.nonEmpty && !done) {
-                val (a, b) = estack.remove(estack.length - 1)
-                members += a; members += b
-                if ((a, b) == ((p, v))) done = true
-              }
-              if (members.nonEmpty) comps += members.toSeq.sorted
-            }
-            if (low(v) > disc(p)) {
-              val key = if (p < v) (p, v) else (v, p)
-              bridges += simple
-                .collectFirst { case (eid, a, b) if (a, b) == key => eid }
-                .get
-            }
-          }
-        }
-      }
-    }
-    (comps.toSeq.sortBy(_.head), bridges.toSeq.sorted)
-  }
-
   def biconnectedComponents(ctx: ProcContext): DataFrame =
-    one(ctx, "components", bcc(NxLocal.capture(ctx))._1)
+    one(ctx, "components", NxLocal.biconnected(NxLocal.capture(ctx))._1)
 
   def bridgesP(ctx: ProcContext): DataFrame = {
     val g = NxLocal.capture(ctx)
     val root = optNode(ctx.args.headOption, "nxalg.bridges")
-    val all = bcc(g)._2
+    val all = NxLocal.biconnected(g)._2
     val keep = root match {
       case None => all
       case Some(r) =>
@@ -380,7 +267,7 @@ object NxAlgProcs2 {
     def edgeFlow(s: Long, t: Long): Double =
       NxLocal.maxflow(
         g.edges.filter(e => e._2 != e._3)
-          .map(e => (e._2, e._3, 1.0)), s, t)
+          .map(e => (e._2, e._3, 1.0)), s, t)._1
     NxLocal.tarjanScc(g).foreach { comp =>
       val arr = comp.toArray
       for (i <- arr.indices; j <- (i + 1) until arr.length)

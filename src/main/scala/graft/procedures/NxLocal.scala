@@ -5,14 +5,24 @@ import scala.collection.mutable
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
-import graft.operators.Cutover
+import graft.operators.{Cutover, LocalGraph, Planarity}
 
-/** Driver-local graph toolkit backing [[NxAlgProcs]] (the reference's
-  * `query_modules/nxalg.py` converts the WHOLE graph into an in-process
-  * networkx object for every call — single-node by construction; this
-  * capture is the same execution model applied under the
-  * `spark.graft.local.edges` gate, with the distributed operators as
-  * the scale path).
+/** Driver-local graph toolkit: one captured graph [[G]] plus one copy of
+  * each kernel, backing the single-node module mirrors
+  *   - [[NxAlgProcs]] / [[NxAlgProcs2]] (`query_modules/nxalg.py`),
+  *   - graph_analyzer in [[LegacyModuleProcs]]
+  *     (`query_modules/graph_analyzer.py`),
+  *   - the enumeration and cut procedures of [[IgraphProcs]]
+  *     (`igraphalg.py`).
+  * Each reference module converts the WHOLE graph into one in-process
+  * graph object per call — single-node by construction; this capture is
+  * the same execution model applied under the `spark.graft.local.edges`
+  * gate, with the distributed operators as the scale path.
+  *
+  * No kernel recurses: walks keep explicit stacks, so a long path or
+  * chain cannot overflow the driver's stack (the rule
+  * [[graft.operators.LocalGraph]] follows too, and its lowlink pass is
+  * the biconnectivity kernel here).
   *
   * Determinism: every adjacency is sorted by (neighbor id, edge id), so
   * traversal orders are reproducible; networkx follows storage insertion
@@ -81,8 +91,8 @@ private[procedures] object NxLocal {
   def capture(ctx: ProcContext, weightProp: Option[String] = None): G = {
     val nodes = Cutover.collect(ctx.g.allNodes.select(col(IdCol)))
       .getOrElse(throw new IllegalStateException(
-        "nxalg: graph above spark.graft.local.edges — the reference " +
-          "module materializes the whole graph in networkx; raise the " +
+        "graph above spark.graft.local.edges — the reference module " +
+          "materializes the whole graph in one process; raise the " +
           "threshold, or use the distributed algo.* procedures"))
       .map(_.getLong(0)).toSeq.sorted
     val e0 = ctx.g.allEdges
@@ -93,7 +103,7 @@ private[procedures] object NxLocal {
     val rows = Cutover.collect(
       e0.select(col(IdCol), col(SrcCol), col(DstCol), wCol.as("__w")))
       .getOrElse(throw new IllegalStateException(
-        "nxalg: graph above spark.graft.local.edges"))
+        "graph above spark.graft.local.edges"))
     val known = nodes.toSet
     val edges = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -184,6 +194,88 @@ private[procedures] object NxLocal {
     comps.toSeq.sortBy(_.head)
   }
 
+  /** Biconnected components (sorted vertex sets, ordered
+    * lexicographically: by head, then by the rest) and bridges
+    * (representative edge ids, sorted) of the simple undirected view —
+    * one [[LocalGraph.biconnected]] lowlink pass. A vertex in two or more
+    * components is an articulation point. */
+  def biconnected(g: G): (Seq[Seq[Long]], Seq[Long]) = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val ends = g.undSimpleEdges.map(e => e._1 -> e).toMap
+    val rows = LocalGraph.biconnected(g.undSimpleEdges.toArray)
+    val comps = rows.groupBy(_._3).values
+      .map(_.flatMap { r => val e = ends(r._1); Seq(e._2, e._3) }
+        .distinct.sorted.toSeq)
+      .toSeq.sorted
+    (comps, rows.collect { case (e, true, _) => e }.sorted.toSeq)
+  }
+
+  /** Two-colourable over the simple undirected view; any self-loop
+    * disqualifies. */
+  def bipartite(g: G): Boolean = {
+    if (g.edges.exists(e => e._2 == e._3)) return false
+    val color = mutable.HashMap.empty[Long, Int]
+    g.nodes.forall { s =>
+      color.contains(s) || {
+        color(s) = 0
+        val q = mutable.Queue(s)
+        var ok = true
+        while (q.nonEmpty && ok) {
+          val v = q.dequeue()
+          g.undSimple.getOrElse(v, Nil).foreach { w =>
+            if (!color.contains(w)) { color(w) = 1 - color(v); q += w }
+            else if (color(w) == color(v)) ok = false
+          }
+        }
+        ok
+      }
+    }
+  }
+
+  /** (is_eulerian, has_eulerian_path) of the directed multigraph. */
+  def eulerParts(g: G): (Boolean, Boolean) = {
+    val in = mutable.Map.empty[Long, Int].withDefaultValue(0)
+    val out = mutable.Map.empty[Long, Int].withDefaultValue(0)
+    g.edges.foreach { case (_, u, v) => out(u) += 1; in(v) += 1 }
+    val balanced = g.nodes.forall(v => in(v) == out(v))
+    val eulerian = g.n > 0 && balanced && tarjanScc(g).size == 1
+    // nx has_eulerian_path (directed): eulerian, OR at most one node
+    // out-heavy by 1 and one in-heavy by 1 (rest balanced) and weakly
+    // connected over ALL nodes (an isolated node disqualifies)
+    val plus = g.nodes.count(v => out(v) - in(v) == 1)
+    val minus = g.nodes.count(v => in(v) - out(v) == 1)
+    val noBig = g.nodes.forall(v => math.abs(in(v) - out(v)) <= 1)
+    val hasPath = eulerian ||
+      (g.n > 0 && noBig && plus <= 1 && minus <= 1 && wcc(g).size == 1)
+    (eulerian, hasPath)
+  }
+
+  /** Kahn topological order of the directed multigraph, smallest id first
+    * among the ready nodes (nx yields insertion order). Shorter than
+    * `g.n` exactly when the graph has a cycle. */
+  def kahnOrder(g: G): Seq[Long] = {
+    val indeg = mutable.HashMap.empty[Long, Int].withDefaultValue(0)
+    g.nodes.foreach(v => indeg(v) = 0)
+    g.edges.foreach { case (_, _, v) => indeg(v) += 1 }
+    val avail = mutable.TreeSet.empty[Long] ++ g.nodes.filter(indeg(_) == 0)
+    val order = mutable.ArrayBuffer.empty[Long]
+    while (avail.nonEmpty) {
+      val v = avail.head; avail -= v
+      order += v
+      g.out.getOrElse(v, Nil).foreach { case (nx, _) =>
+        indeg(nx) -= 1
+        if (indeg(nx) == 0) avail += nx
+      }
+    }
+    order.toSeq
+  }
+
+  def planar(g: G): Boolean = {
+    val idx = g.nodes.zipWithIndex.toMap
+    Planarity.isPlanar(
+      g.n, g.undSimpleEdges.map(e => (idx(e._2), idx(e._3))))
+  }
+
   // ------------------------------------------------------------------
   // distances
 
@@ -247,16 +339,51 @@ private[procedures] object NxLocal {
     buf.toSeq
   }
 
-  // ------------------------------------------------------------------
-  // max-flow (Dinic, integer/unit capacities) for connectivity numbers
+  /** Every simple path s → t over the successor lists, in DFS order
+    * (successors as listed), at most `cutoff` edges long; s == t yields
+    * the one-node path. */
+  def simplePaths(
+      succ: Map[Long, Seq[Long]],
+      s: Long,
+      t: Long,
+      cutoff: Int): Seq[Seq[Long]] = {
+    if (s == t) return Seq(Seq(s))
+    val out = mutable.ArrayBuffer.empty[Seq[Long]]
+    val path = mutable.ArrayBuffer(s)
+    val onPath = mutable.HashSet(s)
+    // one successor iterator per path node
+    val its = mutable.ArrayBuffer.empty[Iterator[Long]]
+    if (cutoff > 0) its += succ.getOrElse(s, Nil).iterator
+    while (its.nonEmpty) {
+      val it = its.last
+      if (!it.hasNext) {
+        its.remove(its.length - 1)
+        onPath -= path.remove(path.length - 1)
+      } else {
+        val nx = it.next()
+        if (nx == t) out += (path :+ nx).toSeq
+        else if (!onPath(nx) && path.length < cutoff) {
+          path += nx; onPath += nx
+          its += succ.getOrElse(nx, Nil).iterator
+        }
+      }
+    }
+    out.toSeq
+  }
 
-  /** Dinic max flow on an explicit arc list (u, v, cap). Node ids are
-    * arbitrary longs. */
-  def maxflow(arcs: Seq[(Long, Long, Double)], s: Long, t: Long): Double = {
+  // ------------------------------------------------------------------
+  // max-flow (Dinic) for cuts and connectivity numbers
+
+  /** Dinic max flow on an explicit arc list (u, v, cap); node ids are
+    * arbitrary longs. Returns the flow value and the source side of the
+    * minimal minimum cut: the ids reachable from `s` over positive
+    * residual capacity, the same set for every maximum flow. */
+  def maxflow(arcs: Seq[(Long, Long, Double)], s: Long, t: Long)
+    : (Double, Set[Long]) = {
     val ids = (arcs.flatMap(a => Seq(a._1, a._2)) ++ Seq(s, t)).distinct
     val idx = ids.zipWithIndex.toMap
     val n = ids.length
-    val head = mutable.ArrayBuffer.empty[Int]
+    // arc e and its residual twin e ^ 1
     val to = mutable.ArrayBuffer.empty[Int]
     val nxt = mutable.ArrayBuffer.empty[Int]
     val cap = mutable.ArrayBuffer.empty[Double]
@@ -265,12 +392,13 @@ private[procedures] object NxLocal {
       to += v; cap += c; nxt += first(u); first(u) = to.length - 1
       to += u; cap += 0.0; nxt += first(v); first(v) = to.length - 1
     }
-    val _ = head
     arcs.foreach { case (u, v, c) => addArc(idx(u), idx(v), c) }
     val S = idx(s); val T = idx(t)
-    var flow = 0.0
     val level = new Array[Int](n)
     val it = new Array[Int](n)
+    def open(e: Int, v: Int): Boolean =
+      cap(e) > 1e-9 && level(to(e)) == level(v) + 1
+    /** BFS levels over positive residuals; true when T is reached */
     def bfs(): Boolean = {
       java.util.Arrays.fill(level, -1)
       level(S) = 0
@@ -288,28 +416,34 @@ private[procedures] object NxLocal {
       }
       level(T) != -1
     }
-    def dfs(v: Int, f: Double): Double = {
-      if (v == T) return f
-      while (it(v) != -1) {
-        val e = it(v)
-        if (cap(e) > 1e-9 && level(to(e)) == level(v) + 1) {
-          val d = dfs(to(e), math.min(f, cap(e)))
-          if (d > 1e-9) {
-            cap(e) -= d
-            cap(if (e % 2 == 0) e + 1 else e - 1) += d
-            return d
-          }
+    /** One S→T path in the level graph, walked with an explicit arc
+      * stack; dead ends advance their parent's current arc. Returns the
+      * pushed flow, 0 once the level graph is blocked. */
+    def augment(): Double = {
+      val path = mutable.ArrayBuffer.empty[Int]
+      var v = S
+      while (v != T) {
+        while (it(v) != -1 && !open(it(v), v)) it(v) = nxt(it(v))
+        if (it(v) != -1) { path += it(v); v = to(it(v)) }
+        else if (path.isEmpty) return 0.0
+        else {
+          val back = path.remove(path.length - 1)
+          v = to(back ^ 1)
+          it(v) = nxt(back)
         }
-        it(v) = nxt(e)
       }
-      0.0
+      val d = path.iterator.map(cap).min
+      path.foreach { e => cap(e) -= d; cap(e ^ 1) += d }
+      d
     }
-    while (bfs()) {
-      (0 until n).foreach(i => it(i) = first(i))
-      var f = dfs(S, Double.MaxValue)
-      while (f > 1e-9) { flow += f; f = dfs(S, Double.MaxValue) }
+    var flow = 0.0
+    // the final bfs leaves level(x) != -1 exactly on the source side
+    while (bfs() && S != T) {
+      Array.copy(first, 0, it, 0, n)
+      var f = augment()
+      while (f > 0.0) { flow += f; f = augment() }
     }
-    flow
+    (flow, ids.indices.iterator.filter(level(_) != -1).map(ids).toSet)
   }
 
   /** st vertex connectivity (= max node-independent s→t paths, Menger)
@@ -332,7 +466,7 @@ private[procedures] object NxLocal {
         if (u != v) arcs += ((outId(u), inId(v), 1.0))
       }
     }
-    math.round(maxflow(arcs.toSeq, outId(s), inId(t))).toInt
+    math.round(maxflow(arcs.toSeq, outId(s), inId(t))._1).toInt
   }
 
   /** Global directed vertex connectivity: min over ordered non-equal
@@ -427,97 +561,27 @@ private[procedures] object NxLocal {
   // the brute-force-verified answer, networkx does not.
 
   /** st vertex connectivity AND one minimum s-t vertex cut on an
-    * UNDIRECTED simple adjacency (Even–Tarjan split-node Dinic; the cut
-    * is read off the final residual: split arcs whose in-copy is
-    * BFS-reachable from the source while the out-copy is not). */
+    * UNDIRECTED simple adjacency (Even–Tarjan split nodes over
+    * [[maxflow]]; the cut is read off the residual source side: nodes
+    * whose in-copy is on it while the out-copy is not). */
   def undStCut(
       adj: Map[Long, Seq[Long]],
       nodes: Seq[Long],
       s: Long,
       t: Long): (Int, Set[Long]) = {
     val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
-    def inId(x: Long) = 2 * idx(x)
-    def outId(x: Long) = 2 * idx(x) + 1
-    val big = n + 1
-    // compact Dinic over 2n vertices
-    val to = mutable.ArrayBuffer.empty[Int]
-    val nxt = mutable.ArrayBuffer.empty[Int]
-    val cap = mutable.ArrayBuffer.empty[Int]
-    val first = Array.fill(2 * n)(-1)
-    def addArc(u: Int, v: Int, c: Int): Unit = {
-      to += v; cap += c; nxt += first(u); first(u) = to.length - 1
-      to += u; cap += 0; nxt += first(v); first(v) = to.length - 1
-    }
-    val splitArc = mutable.HashMap.empty[Int, Long] // arc idx -> node
-    nodes.foreach { x =>
-      splitArc(to.length) = x
-      addArc(inId(x), outId(x), if (x == s || x == t) big else 1)
-    }
-    nodes.foreach { u =>
-      adj.getOrElse(u, Nil).foreach { v =>
-        if (u != v && idx.contains(v)) addArc(outId(u), inId(v), 1)
-      }
-    }
-    val S = outId(s); val T = inId(t)
-    val level = new Array[Int](2 * n)
-    val it = new Array[Int](2 * n)
-    def bfs(): Boolean = {
-      java.util.Arrays.fill(level, -1)
-      level(S) = 0
-      val q = mutable.Queue(S)
-      while (q.nonEmpty) {
-        val v = q.dequeue()
-        var e = first(v)
-        while (e != -1) {
-          if (cap(e) > 0 && level(to(e)) == -1) {
-            level(to(e)) = level(v) + 1; q += to(e)
-          }
-          e = nxt(e)
-        }
-      }
-      level(T) != -1
-    }
-    def dfs(v: Int, f: Int): Int = {
-      if (v == T) return f
-      while (it(v) != -1) {
-        val e = it(v)
-        if (cap(e) > 0 && level(to(e)) == level(v) + 1) {
-          val d = dfs(to(e), math.min(f, cap(e)))
-          if (d > 0) {
-            cap(e) -= d
-            cap(if (e % 2 == 0) e + 1 else e - 1) += d
-            return d
-          }
-        }
-        it(v) = nxt(e)
-      }
-      0
-    }
-    var flow = 0
-    while (bfs()) {
-      var i = 0
-      while (i < 2 * n) { it(i) = first(i); i += 1 }
-      var f = dfs(S, Int.MaxValue)
-      while (f > 0) { flow += f; f = dfs(S, Int.MaxValue) }
-    }
-    // residual reachability from S; cut = saturated split arcs on the
-    // boundary (in reachable, out not) — these are vertex cut members
-    val reach = Array.fill(2 * n)(false)
-    reach(S) = true
-    val q2 = mutable.Queue(S)
-    while (q2.nonEmpty) {
-      val v = q2.dequeue()
-      var e = first(v)
-      while (e != -1) {
-        if (cap(e) > 0 && !reach(to(e))) { reach(to(e)) = true; q2 += to(e) }
-        e = nxt(e)
-      }
-    }
-    val cut = splitArc.values.collect {
-      case x if reach(inId(x)) && !reach(outId(x)) => x
-    }.toSet
-    (flow, cut)
+    def inId(x: Long) = 2L * idx(x)
+    def outId(x: Long) = 2L * idx(x) + 1
+    val big = nodes.length + 1.0
+    val split = nodes.map(x =>
+      (inId(x), outId(x), if (x == s || x == t) big else 1.0))
+    val links = for {
+      u <- nodes
+      v <- adj.getOrElse(u, Nil) if u != v && idx.contains(v)
+    } yield (outId(u), inId(v), 1.0)
+    val (flow, side) = maxflow(split ++ links, outId(s), inId(t))
+    (math.round(flow).toInt,
+      nodes.filter(x => side(inId(x)) && !side(outId(x))).toSet)
   }
 
   /** Exact global vertex connectivity of an undirected simple adjacency,

@@ -34,6 +34,79 @@ final case class ProcContext(
     opts.get(k).map(_.toString.toInt).getOrElse(dflt)
   def optDouble(k: String): Option[Double] =
     opts.get(k).map(_.toString.toDouble)
+  /** Option `k` as a list of ids; a single value is a one-element list. */
+  def optLongs(k: String): Seq[Long] = opts.get(k) match {
+    case Some(s: Seq[_]) => s.map {
+      case l: Long => l
+      case i: Int => i.toLong
+      case other => other.toString.toLong
+    }
+    case Some(one) => Seq(one.toString.toLong)
+    case None => Seq.empty
+  }
+}
+
+/** Positional argument decoders shared by the procedure modules. A node
+  * or relationship argument is a bare id or an entity map carrying
+  * `_id`; `what` names the procedure in error messages. */
+private[procedures] object ProcArgs {
+
+  def nodeIdOf(v: Any, what: String): Long = v match {
+    case l: Long => l
+    case i: Int => i.toLong
+    case m: Map[_, _] =>
+      m.collectFirst { case (k, id: Long) if k.toString == GraphState.IdCol => id }
+        .getOrElse(throw new IllegalArgumentException(
+          s"$what: node value lacks an id"))
+    case other =>
+      throw new IllegalArgumentException(s"$what: need a node, got $other")
+  }
+
+  def edgeIdOf(v: Any, what: String): Long =
+    nodeIdOf(v, what) // same shape: entity map with _id, or a bare id
+
+  def idList(v: Any, what: String): Seq[Long] = v match {
+    case null => Nil
+    case xs: Seq[_] => xs.map(nodeIdOf(_, what))
+    case other => Seq(nodeIdOf(other, what))
+  }
+
+  /** (src, dst) of each relationship value in a list argument. */
+  def edgePairs(v: Option[Any], what: String): Seq[(Long, Long)] =
+    (v match {
+      case Some(xs: Seq[_]) => xs
+      case _ => Nil
+    }).map {
+      case m: Map[_, _] =>
+        val mm = mapOf(m)
+        (mm.get(GraphState.SrcCol), mm.get(GraphState.DstCol)) match {
+          case (Some(s: Long), Some(d: Long)) => (s, d)
+          case _ => throw new IllegalArgumentException(
+            s"$what: need relationship values")
+        }
+      case other => throw new IllegalArgumentException(
+        s"$what: need a relationship, got $other")
+    }
+
+  def optNode(v: Option[Any], what: String): Option[Long] = v match {
+    case None | Some(null) => None
+    case Some(x) => Some(nodeIdOf(x, what))
+  }
+
+  def optInt(v: Option[Any]): Option[Int] = v match {
+    case Some(n: java.lang.Number) => Some(n.intValue())
+    case _ => None
+  }
+
+  def optStr(v: Option[Any]): Option[String] = v match {
+    case None | Some(null) => None
+    case Some(s) => Some(s.toString)
+  }
+
+  def mapOf(v: Any): Map[String, Any] = v match {
+    case m: Map[_, _] => m.map { case (k, x) => k.toString -> x }
+    case _ => Map.empty
+  }
 }
 
 object Procedures {
@@ -108,15 +181,17 @@ object Procedures {
     val iters = ctx.optInt("iterations", 15)
     val d = ctx.opts.get("damping").map(_.toString.toDouble).getOrElse(0.85)
     val (nodes, edges) = selectGraph(ctx)
-    (Cutover.collect(edges), Cutover.collect(nodes)) match {
-      case (Some(es), Some(ns)) =>
-        import ctx.spark.implicits._
-        return LocalProcs
-          .pagerank(ns.map(_.getLong(0)), longPairs(es), d, iters)
-          .toSeq
-          .toDF("node", "rank")
-      case _ => ()
+    val local = for {
+      es <- Cutover.collect(edges)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import ctx.spark.implicits._
+      LocalProcs
+        .pagerank(ns.map(_.getLong(0)), longPairs(es), d, iters)
+        .toSeq
+        .toDF("node", "rank")
     }
+    if (local.nonEmpty) return local.get
     val n = nodes.count().toDouble
     val e = edges.persist()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg")).persist()
@@ -156,15 +231,17 @@ object Procedures {
     * with this). Returns (node, comp), comp = min node id of the component.
     */
   def minLabelComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    (Cutover.collect(edges), Cutover.collect(nodes)) match {
-      case (Some(es), Some(ns)) =>
-        import nodes.sparkSession.implicits._
-        return LocalProcs
-          .wcc(ns.map(_.getLong(0)), longPairs(es))
-          .toSeq
-          .toDF("node", "comp")
-      case _ => ()
+    val local = for {
+      es <- Cutover.collect(edges)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import nodes.sparkSession.implicits._
+      LocalProcs
+        .wcc(ns.map(_.getLong(0)), longPairs(es))
+        .toSeq
+        .toDF("node", "comp")
     }
+    if (local.nonEmpty) return local.get
     val und = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
@@ -234,15 +311,17 @@ object Procedures {
     val beta = ctx.optDouble("beta").getOrElse(1.0)
     val iters = ctx.optInt("iterations", 10)
     val (nodes, edges) = selectGraph(ctx)
-    (Cutover.collect(edges), Cutover.collect(nodes)) match {
-      case (Some(es), Some(ns)) =>
-        import ctx.spark.implicits._
-        return LocalProcs
-          .katz(ns.map(_.getLong(0)), longPairs(es), alpha, beta, iters)
-          .toSeq
-          .toDF("node", "centrality")
-      case _ => ()
+    val local = for {
+      es <- Cutover.collect(edges)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import ctx.spark.implicits._
+      LocalProcs
+        .katz(ns.map(_.getLong(0)), longPairs(es), alpha, beta, iters)
+        .toSeq
+        .toDF("node", "centrality")
     }
+    if (local.nonEmpty) return local.get
     val e = edges.persist()
     var c = nodes.withColumn("centrality", lit(0.0)).localCheckpoint(true)
     for (_ <- 1 to iters) {
@@ -405,20 +484,22 @@ object Procedures {
     val e0 = ShortestPath.oriented(
       edges.select(col("src").as(SrcCol), col("dst").as(DstCol)),
       if (directed) Expand.Out else Expand.Both)
-    (Cutover.collect(e0), Cutover.collect(nodes)) match {
-      case (Some(es), Some(ns)) =>
-        import ctx.spark.implicits._
-        val nsArr = ns.map(_.getLong(0))
-        return LocalProcs
-          .betweenness(
-            nsArr,
-            longPairs(es),
-            nsArr.filter(n => (n & ((1L << 48) - 1)) < seedMax),
-            maxDepth)
-          .toSeq
-          .toDF("node", "centrality")
-      case _ => ()
+    val local = for {
+      es <- Cutover.collect(e0)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import ctx.spark.implicits._
+      val nsArr = ns.map(_.getLong(0))
+      LocalProcs
+        .betweenness(
+          nsArr,
+          longPairs(es),
+          nsArr.filter(n => (n & ((1L << 48) - 1)) < seedMax),
+          maxDepth)
+        .toSeq
+        .toDF("node", "centrality")
     }
+    if (local.nonEmpty) return local.get
     val e = e0.persist()
     val vis = ShortestPath
       .bfsEdges(e, seeds, maxDepth)
@@ -880,19 +961,21 @@ object Procedures {
     val iters = ctx.optInt("iterations", 6)
     val (nodes, edges0) = selectGraph(ctx)
     val simple = edges0.filter(col("src") =!= col("dst"))
-    (Cutover.collect(simple), Cutover.collect(nodes)) match {
-      case (Some(esr), Some(ns)) =>
-        import ctx.spark.implicits._
-        val es = longPairs(esr)
-        return LocalProcs
-          .louvain(
-            ns.map(_.getLong(0)),
-            es ++ es.map(_.swap), // the distributed body's undirected view
-            iters)
-          .toSeq
-          .toDF("node", "community")
-      case _ => ()
+    val local = for {
+      esr <- Cutover.collect(simple)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import ctx.spark.implicits._
+      val es = longPairs(esr)
+      LocalProcs
+        .louvain(
+          ns.map(_.getLong(0)),
+          es ++ es.map(_.swap), // the distributed body's undirected view
+          iters)
+        .toSeq
+        .toDF("node", "community")
     }
+    if (local.nonEmpty) return local.get
     val und = simple
       .unionByName(simple.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
@@ -963,16 +1046,18 @@ object Procedures {
     val maxLevels = ctx.optInt("maxLevels", 10)
     val (nodes, edges0) = selectGraph(ctx)
     val simple = edges0.filter(col("src") =!= col("dst"))
-    (Cutover.collect(simple), Cutover.collect(nodes)) match {
-      case (Some(esr), Some(ns)) =>
-        import ctx.spark.implicits._
-        val es = longPairs(esr)
-        return LocalProcs
-          .leiden(ns.map(_.getLong(0)), es ++ es.map(_.swap), iters, maxLevels)
-          .toSeq
-          .toDF("node", "community")
-      case _ => ()
+    val local = for {
+      esr <- Cutover.collect(simple)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import ctx.spark.implicits._
+      val es = longPairs(esr)
+      LocalProcs
+        .leiden(ns.map(_.getLong(0)), es ++ es.map(_.swap), iters, maxLevels)
+        .toSeq
+        .toDF("node", "community")
     }
+    if (local.nonEmpty) return local.get
     // weighted both-direction view, self-loops excluded (they live in selfw)
     var und = simple
       .unionByName(simple.select(col("dst").as("src"), col("src").as("dst")))
@@ -1159,19 +1244,21 @@ object Procedures {
   def labelPropagation(ctx: ProcContext): DataFrame = {
     val iters = ctx.optInt("iterations", 10)
     val (nodes, edges) = selectGraph(ctx)
-    (Cutover.collect(edges), Cutover.collect(nodes)) match {
-      case (Some(esr), Some(ns)) =>
-        import ctx.spark.implicits._
-        val es = longPairs(esr)
-        return LocalProcs
-          .labelPropagation(
-            ns.map(_.getLong(0)),
-            es ++ es.map(_.swap), // undirected multiset incl. self-loops
-            iters)
-          .toSeq
-          .toDF("node", "community")
-      case _ => ()
+    val local = for {
+      esr <- Cutover.collect(edges)
+      ns <- Cutover.collect(nodes)
+    } yield {
+      import ctx.spark.implicits._
+      val es = longPairs(esr)
+      LocalProcs
+        .labelPropagation(
+          ns.map(_.getLong(0)),
+          es ++ es.map(_.swap), // undirected multiset incl. self-loops
+          iters)
+        .toSeq
+        .toDF("node", "community")
     }
+    if (local.nonEmpty) return local.get
     val und = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist()

@@ -20,21 +20,11 @@ import graft.operators.{Mutations, Ranks}
 object RefactorProcs {
 
   import GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
+  import ProcArgs.{mapOf, nodeIdOf}
 
   private val Meta = Set(IdCol, LabelsCol, SrcCol, DstCol, TypeCol)
 
   private final case class EdgeArg(id: Long, src: Long, dst: Long, tpe: String)
-
-  private def nodeIdOf(v: Any, what: String): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case m: Map[_, _] =>
-      m.collectFirst { case (k, id: Long) if k.toString == IdCol => id }
-        .getOrElse(throw new IllegalArgumentException(
-          s"$what: node value lacks an id"))
-    case other =>
-      throw new IllegalArgumentException(s"$what: need a node, got $other")
-  }
 
   private def edgeArgOf(v: Any, what: String): EdgeArg = v match {
     case m: Map[_, _] =>
@@ -430,11 +420,6 @@ object RefactorProcs {
       yields :+= ((e.id, newNode))
     }
     (g.withIdBase(base), entityYield(g, yields))
-  }
-
-  private def mapOf(v: Any): Map[String, Any] = v match {
-    case m: Map[_, _] => m.map { case (k, x) => k.toString -> x }
-    case _ => Map.empty
   }
 
   /** Path argument: the PathB value struct `{nodes: [...], edges: [...]}`

@@ -2,19 +2,27 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.ShortestPath
+import graft.operators.{Cutover, ShortestPath}
 
-/** BFS representative-path agreement across the adaptive dispatch:
-  * below `spark.graft.bfs.reconstructEdges` the one-fixpoint array-carry
-  * runs; above it the DAG reconstruction runs. Both must return the same
-  * (seed, node, dist, npaths, path_nodes, path_edges) rows — the
-  * lexicographically-smallest-path tie-break included.
+/** BFS representative-path agreement across the adaptive dispatch: the
+  * driver-local mirror answers below `spark.graft.local.edges`; above it
+  * the one-fixpoint array-carry runs below
+  * `spark.graft.bfs.reconstructEdges` and the DAG reconstruction above.
+  * All three must return the same (seed, node, dist, npaths, path_nodes,
+  * path_edges) rows — the lexicographically-smallest-path tie-break
+  * included.
   */
 class BfsPathsSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  /** Run withPaths BFS both ways and assert identical row sets. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body
+    finally spark.conf.unset(key)
+  }
+
+  /** Run withPaths BFS all three ways and assert identical row sets. */
   private def run(
       edges: Seq[(Long, Long, Long)], // (eid, src, dst)
       seeds: Seq[Long],
@@ -31,16 +39,16 @@ class BfsPathsSpec extends SparkTestBase {
       .collect()
       .map(_.toSeq.map(String.valueOf).mkString("|"))
       .toSet
-    val carry = go()
-    spark.conf.set("spark.graft.bfs.reconstructEdges", "0")
-    val reconstruct =
-      try go()
-      finally spark.conf.unset("spark.graft.bfs.reconstructEdges")
-    assert(
-      carry == reconstruct,
-      s"carry/reconstruct disagree:\n  carry-only=${carry -- reconstruct}" +
-        s"\n  reconstruct-only=${reconstruct -- carry}")
-    carry
+    val local = go()
+    val (carry, reconstruct) = withConf(Cutover.LocalEdgesKey, "0") {
+      (go(), withConf("spark.graft.bfs.reconstructEdges", "0")(go()))
+    }
+    def diff(a: Set[String], b: Set[String]) =
+      s"\n  first-only=${a -- b}\n  second-only=${b -- a}"
+    assert(carry == reconstruct,
+      "carry/reconstruct disagree:" + diff(carry, reconstruct))
+    assert(local == carry, "local/carry disagree:" + diff(local, carry))
+    local
   }
 
   test("diamond with tie: both branches same length, smaller node wins") {

@@ -23,19 +23,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"binary-classified sources: $offenders")
   }
 
+  /** Text of every Scala source under `dir`. */
+  private def sources(dir: String): List[String] = Files
+    .walk(Paths.get(dir))
+    .iterator()
+    .asScala
+    .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+    .map(Files.readString)
+    .toList
+
   test("src/main reads exactly the five documented spark.graft keys") {
     // README "Configuration": every other size threshold is a named
     // constant at its use site, and the cutover ceilings are bounded by
     // spark.graft.local.edges through graft.operators.Cutover
-    val sources = Files
-      .walk(Paths.get("src/main"))
-      .iterator()
-      .asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .map(Files.readString)
-      .toList
     def literals(re: scala.util.matching.Regex): Set[String] =
-      sources.flatMap(re.findAllMatchIn(_).map(_.group(1))).toSet
+      sources("src/main").flatMap(re.findAllMatchIn(_).map(_.group(1))).toSet
     assert(literals("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r) == Set(
       "spark.graft.local.edges",
       "spark.graft.bfs.reconstructEdges",
@@ -43,5 +45,20 @@ class SourceHygieneSpec extends AnyFunSuite {
       "spark.graft.adjacency.maxDeltas",
       "spark.graft.index.dir"))
     assert(literals("\"(GRAFT_[A-Z]+_DEBUG|GRAFT_NO_PREWARM)\"".r).isEmpty)
+  }
+
+  test("no tuple of two eager Cutover.collect probes in src/main") {
+    // a tuple evaluates both probes; chain them in a for-comprehension
+    // so the second runs only when the first stayed under the cap
+    val collect = """(?:graft\.operators\.)?Cutover\.collect\("""
+    val pair = ("""\(\s*""" + collect + """(?:[^()]|\([^()]*\))*\)\s*,\s*""" +
+      collect).r
+    assert(sources("src/main").flatMap(pair.findAllIn(_)).isEmpty)
+  }
+
+  test("the procedures share one node-argument decoder") {
+    val defs = sources("src/main/scala/graft/procedures")
+      .map("""def nodeIdOf\b""".r.findAllIn(_).size).sum
+    assert(defs == 1)
   }
 }
