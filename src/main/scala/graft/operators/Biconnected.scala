@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   *        - member(chord → x): the chord rides its cycle's last-stepped
   *          tree edge.
   *   3. Biconnected components = min-label connected components
-  *      ([[graft.procedures.Procedures.minLabelComponents]], pointer-
-  *      jumping) over tree edges — identified by child vertex — under
+  *      ([[graft.procedures.Procedures.minLabelComponents]]: a one-job
+  *      spanning-forest reduction and a driver union-find when the
+  *      covered vertices fit under the cutover cap, a pointer-jumping
+  *      fixpoint otherwise) over tree edges —
+  *      identified by child vertex — under
   *      chain ∪ top: two edges share a component iff they are linked
   *      through overlapping fundamental cycles (the classic equivalence
   *      "lie on a common simple cycle", transitively closed).

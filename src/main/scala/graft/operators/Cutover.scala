@@ -40,8 +40,9 @@ object Cutover {
   def within(df: DataFrame, cap: Long): Option[Array[Row]] =
     if (cap <= 0) None
     else {
-      val rows =
-        df.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      // cap + 1 saturates: at cap = Long.MaxValue it would wrap negative
+      val limit = if (cap >= Int.MaxValue) Int.MaxValue else cap.toInt + 1
+      val rows = df.limit(limit).collect()
       if (rows.length > cap) None else Some(rows)
     }
 }

@@ -13,6 +13,13 @@ import scala.collection.mutable
   * `community_detection_module`, `betweenness_centrality_module`) — this
   * path is their direct analog.
   *
+  * The pagerank sweep ([[rankSweep]]) and the union-find
+  * ([[spanningForest]]) are also the kernels of the vertex-resident
+  * placement ([[VertexResident]]), which runs them per edge partition:
+  * the sweep when the nodes fit under the cap but the edges do not, the
+  * union-find whenever the nodes fit ([[wcc]] always labels that
+  * placement's spanning forest).
+  *
   * Every function here reproduces its distributed twin BIT-COMPATIBLY at
   * the gate's observation grain: integer scores and tie-breaks are exact
   * (louvain/label-prop/wcc), and the centrality accumulations replicate
@@ -20,7 +27,7 @@ import scala.collection.mutable
   * `BigDecimal(x).setScale(12, HALF_UP)` — the same canonical
   * double→decimal conversion Spark's `Cast` performs — so floor/round
   * gates observe identical values. `ProcsLocalSpec` asserts agreement on
-  * adversarial shapes with the threshold forced both ways.
+  * adversarial shapes with the threshold forced each way.
   */
 private[graft] object LocalProcs {
 
@@ -29,40 +36,96 @@ private[graft] object LocalProcs {
   private def dec12(x: Double): BigDecimal =
     BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
 
+  /** Sorted distinct copy of `ids` — the index space of the dense
+    * per-vertex arrays: a vertex's state lives at its binary-search
+    * position. */
+  def sortedIds(ids: Array[Long]): Array[Long] = {
+    val a = ids.clone()
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** Position of `v` in the sorted `ids`, -1 when absent. */
+  def indexOf(ids: Array[Long], v: Long): Int = {
+    val i = java.util.Arrays.binarySearch(ids, v)
+    if (i < 0) -1 else i
+  }
+
+  /** A block of edges as indices into `ids`: only edges out of a member
+    * source are kept; `dst` is -1 for a non-member target. */
+  final case class RankBlock(src: Array[Int], dst: Array[Int])
+
+  def rankBlock(ids: Array[Long], edges: Iterator[(Long, Long)]): RankBlock = {
+    val s = Array.newBuilder[Int]
+    val t = Array.newBuilder[Int]
+    edges.foreach { case (u, w) =>
+      val i = indexOf(ids, u)
+      if (i >= 0) { s += i; t += indexOf(ids, w) }
+    }
+    RankBlock(s.result(), t.result())
+  }
+
+  /** Adds the block's out-degrees into `deg` — every edge out of a member
+    * source counts, member target or not; returns `deg`. */
+  def outDegrees(b: RankBlock, deg: Array[Double]): Array[Double] = {
+    b.src.foreach(u => deg(u) += 1)
+    deg
+  }
+
+  /** One PageRank sweep over a block: every edge u→w with a member
+    * target adds rank(u)/deg(u) into `into(w)`; returns `into`. */
+  def rankSweep(
+      b: RankBlock,
+      rank: Array[Double],
+      deg: Array[Double],
+      into: Array[Double]): Array[Double] = {
+    var k = 0
+    while (k < b.src.length) {
+      val w = b.dst(k)
+      if (w >= 0) { val u = b.src(k); into(w) += rank(u) / deg(u) }
+      k += 1
+    }
+    into
+  }
+
+  /** The PageRank iteration over dense state of `n` vertices, given the
+    * per-round contribution sums: pr₀ = 1/N, prᵢ₊₁ = (1-d)/N + d·cᵢ. */
+  def rankRounds(n: Int, count: Long, d: Double, iters: Int)(
+      contrib: Array[Double] => Array[Double]): Array[Double] = {
+    var pr = Array.fill(n)(1.0 / count)
+    for (_ <- 1 to iters) {
+      val c = contrib(pr)
+      var i = 0
+      while (i < n) { c(i) = (1 - d) / count + d * c(i); i += 1 }
+      pr = c
+    }
+    pr
+  }
+
   /** PageRank, simple variant — mirrors the distributed plan: contrib
-    * only from nodes present in `nodes` (inner join on outdeg), received
-    * only by nodes in `nodes` (final left join); plain double sums.
+    * only from nodes present in `nodes` (inner join on outdeg), whose
+    * degree counts all their edges; received only by nodes in `nodes`
+    * (final left join); plain double sums, no dangling redistribution.
+    * The collected edges are one [[RankBlock]]; [[VertexResident]] runs
+    * the same sweep per cached edge partition.
     * @return (node, rank) for every node in `nodes` */
   def pagerank(
       nodes: Array[Long],
       edges: Array[(Long, Long)],
       d: Double,
       iters: Int): Array[(Long, Double)] = {
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length.toDouble
-    val deg = new Array[Long](nodes.length)
-    edges.foreach { case (s, _) => idx.get(s).foreach(deg(_) += 1) }
-    // in-adjacency restricted to member endpoints
-    val in = Array.fill(nodes.length)(mutable.ArrayBuffer.empty[Int])
-    edges.foreach { case (s, t) =>
-      (idx.get(s), idx.get(t)) match {
-        case (Some(u), Some(w)) => in(w) += u
-        case _ => ()
-      }
-    }
-    var pr = Array.fill(nodes.length)(1.0 / n)
-    for (_ <- 1 to iters) {
-      val next = new Array[Double](nodes.length)
-      var i = 0
-      while (i < nodes.length) {
-        var s = 0.0
-        in(i).foreach(u => if (deg(u) > 0) s += pr(u) / deg(u))
-        next(i) = (1 - d) / n + d * s
-        i += 1
-      }
-      pr = next
-    }
-    nodes.zip(pr)
+    val ids = sortedIds(nodes)
+    val b = rankBlock(ids, edges.iterator)
+    val deg = outDegrees(b, new Array[Double](ids.length))
+    val pr = rankRounds(ids.length, nodes.length, d, iters)(
+      rank => rankSweep(b, rank, deg, new Array[Double](ids.length)))
+    nodes.map(v => (v, pr(indexOf(ids, v))))
   }
 
   /** Katz centrality — per-round neighbor sums in decimal(·,12) exactly
@@ -299,40 +362,65 @@ private[graft] object LocalProcs {
     nodes.map(v => (v, member(v)))
   }
 
-  /** Min-label weakly-connected components — output rows exactly match
-    * the distributed fixpoint: every vertex (initial node OR edge
-    * endpoint) whose component contains at least one initial node, with
-    * comp = min INITIAL-node id of the component.
-    * @return (node, comp) */
-  def wcc(
-      nodes: Array[Long],
-      edges: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val idx = mutable.HashMap.empty[Long, Int]
-    val ids = mutable.ArrayBuffer.empty[Long]
-    def ix(v: Long): Int =
-      idx.getOrElseUpdate(v, { ids += v; ids.size - 1 })
-    nodes.foreach(ix)
-    edges.foreach { case (s, t) => ix(s); ix(t) }
-    val parent = Array.tabulate(ids.size)(identity)
+  /** Union-find over the distinct ids among `vs` and the endpoints of
+    * the edges `src(k)`–`dst(k)`.
+    * @return the sorted distinct ids and each one's root index */
+  private def unionFind(
+      vs: Array[Long],
+      src: Array[Long],
+      dst: Array[Long]): (Array[Long], Array[Int]) = {
+    val ids = sortedIds(Array.concat(vs, src, dst))
+    val parent = Array.tabulate(ids.length)(identity)
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    edges.foreach { case (s, t) =>
-      val (a, b) = (find(ix(s)), find(ix(t)))
+    var k = 0
+    while (k < src.length) {
+      val a = find(indexOf(ids, src(k)))
+      val b = find(indexOf(ids, dst(k)))
       if (a != b) parent(a) = b
+      k += 1
     }
+    (ids, Array.tabulate(ids.length)(find))
+  }
+
+  /** A spanning forest of the edges `src(k)`–`dst(k)`: one (v, root) edge
+    * per endpoint, self-loop endpoints included — the same connectivity
+    * and the same endpoint set as the input, in at most one edge per
+    * endpoint. */
+  def spanningForest(
+      src: Array[Long],
+      dst: Array[Long]): (Array[Long], Array[Long]) = {
+    val (ids, root) = unionFind(Array.emptyLongArray, src, dst)
+    (ids, root.map(ids))
+  }
+
+  /** Min-label weakly-connected components — output rows exactly match
+    * the distributed fixpoint: every vertex (initial node OR edge
+    * endpoint) whose component contains at least one initial node, with
+    * comp = min INITIAL-node id of the component. Any edge set with the
+    * same connectivity and endpoints gives the same rows, so
+    * [[VertexResident.forest]]'s spanning forest may stand in for the
+    * edges.
+    * @return (node, comp) */
+  def wcc(
+      nodes: Array[Long],
+      src: Array[Long],
+      dst: Array[Long]): Array[(Long, Long)] = {
+    val (ids, root) = unionFind(nodes, src, dst)
     // min initial id per root
-    val minInit = mutable.HashMap.empty[Int, Long]
+    val hasInit = new Array[Boolean](ids.length)
+    val minInit = new Array[Long](ids.length)
     nodes.foreach { v =>
-      val r = find(idx(v))
-      val cur = minInit.get(r)
-      if (cur.isEmpty || v < cur.get) minInit(r) = v
+      val r = root(indexOf(ids, v))
+      if (!hasInit(r) || v < minInit(r)) { hasInit(r) = true; minInit(r) = v }
     }
-    ids.toArray.flatMap { v =>
-      minInit.get(find(idx(v))).map(c => (v, c))
-    }
+    ids.indices.iterator
+      .filter(i => hasInit(root(i)))
+      .map(i => (ids(i), minInit(root(i))))
+      .toArray
   }
 
   /** Brandes betweenness restricted to `seeds`, depth-capped BFS,

@@ -4,18 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
-import graft.operators.{Cutover, Expand, LocalProcs, ShortestPath}
+import graft.operators.{Cutover, Expand, LocalProcs, ShortestPath, VertexResident}
 
 /** `CALL name(args) YIELD …` procedure registry — the reference's query
   * modules (`CallProcedure`, `src/query/plan/operator.hpp:2891`; module
   * registry `src/query/procedure/module.cpp`) with the MAGE graph
-  * algorithms (`src/mage/cpp/pagerank_module`, `connected_components`, …)
-  * re-expressed as driver-steered iterative DataFrame programs.
+  * algorithms (`src/mage/cpp/pagerank_module`, `connected_components`, …).
   *
   * A procedure is `ProcContext => DataFrame` (table-valued, like mgp_proc).
-  * Iterative algorithms follow the ShortestPath discipline: one shuffle per
-  * round, `localCheckpoint` for lineage truncation, convergence probes for
-  * early stop — the shape that scales to 1000 executors.
+  * The iterative algorithms have up to three placements, chosen by the
+  * [[Cutover]] probes: driver-local ([[LocalProcs]]) when the edges fit
+  * under the cap; vertex-resident ([[VertexResident]]: driver arrays, one
+  * job per round over cached edge partitions) for `pagerank` when only
+  * the nodes fit, and for `minLabelComponents` whenever they fit (one
+  * spanning-forest job, no edge probe); otherwise a DataFrame
+  * fixpoint in the ShortestPath discipline — one shuffle per round,
+  * `localCheckpoint` for lineage truncation, convergence probes for early
+  * stop.
   */
 final case class ProcContext(
     spark: SparkSession,
@@ -176,22 +181,24 @@ object Procedures {
     * nodes leak rank; documented, and mirrored exactly by the oracle):
     * pr₀ = 1/N;  prᵢ₊₁(v) = (1-d)/N + d·Σ_{u→v} prᵢ(u)/outdeg(u).
     * Reference analog: `src/mage/cpp/pagerank_module`. Yields (node, rank).
+    * The node probe runs first: nodes above the cap take the DataFrame
+    * fixpoint without an edge probe; under it, the edge probe picks the
+    * driver-local or the vertex-resident placement.
     */
   def pagerank(ctx: ProcContext): DataFrame = {
     val iters = ctx.optInt("iterations", 15)
     val d = ctx.opts.get("damping").map(_.toString.toDouble).getOrElse(0.85)
     val (nodes, edges) = selectGraph(ctx)
-    val local = for {
-      es <- Cutover.collect(edges)
-      ns <- Cutover.collect(nodes)
-    } yield {
-      import ctx.spark.implicits._
-      LocalProcs
-        .pagerank(ns.map(_.getLong(0)), longPairs(es), d, iters)
-        .toSeq
-        .toDF("node", "rank")
+    val local = Cutover.collect(nodes).map(_.map(_.getLong(0))).map { ns =>
+      Cutover.collect(edges) match {
+        case Some(es) => LocalProcs.pagerank(ns, longPairs(es), d, iters)
+        case None => VertexResident.pagerank(ns, edges, d, iters)
+      }
     }
-    if (local.nonEmpty) return local.get
+    if (local.nonEmpty) {
+      import ctx.spark.implicits._
+      return local.get.toSeq.toDF("node", "rank")
+    }
     val n = nodes.count().toDouble
     val e = edges.persist()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg")).persist()
@@ -228,20 +235,22 @@ object Procedures {
   /** Connected components over arbitrary (node) + directed (src, dst)
     * frames — the WCC core, reusable outside the CALL surface (e.g. the
     * near-duplicate clustering pipeline composes MinHash candidate pairs
-    * with this). Returns (node, comp), comp = min node id of the component.
+    * with this). Returns (node, comp) for every node and edge endpoint
+    * whose component holds a node, comp = min node id of the component.
+    * Nodes above the cap take the DataFrame fixpoint; under it, one job
+    * reduces the edges to a spanning forest ([[VertexResident.forest]])
+    * and [[LocalProcs.wcc]] labels it on the driver, whether or not the
+    * edges fit. A forest above the cap bails to the fixpoint.
     */
   def minLabelComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val local = for {
-      es <- Cutover.collect(edges)
-      ns <- Cutover.collect(nodes)
-    } yield {
-      import nodes.sparkSession.implicits._
-      LocalProcs
-        .wcc(ns.map(_.getLong(0)), longPairs(es))
-        .toSeq
-        .toDF("node", "comp")
+    val local = Cutover.collect(nodes).map(_.map(_.getLong(0))).flatMap { ns =>
+      VertexResident.forest(edges, Cutover.cap(nodes.sparkSession))
+        .map { case (src, dst) => LocalProcs.wcc(ns, src, dst) }
     }
-    if (local.nonEmpty) return local.get
+    if (local.nonEmpty) {
+      import nodes.sparkSession.implicits._
+      return local.get.toSeq.toDF("node", "comp")
+    }
     val und = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
@@ -262,14 +271,18 @@ object Procedures {
       // so the 64-round cap covers any graph up to diameter ~2^64.
       // Change detection is FOLDED into the materialized frame (`__ch`) so
       // the convergence probe is a narrow scan of the cached round, not a
-      // second shuffle job.
+      // second shuffle job. An endpoint outside `nodes` joins the frame
+      // when a label first reaches it (a change), and forwards labels
+      // from then on.
       val next = prop
         .join(
           prop.select(col("node").as("__c"), col("comp").as("__cc")),
           col("comp") === col("__c"))
         .select(col("node"), col("__cc").as("comp"))
-        .join(comp.select(col("node"), col("comp").as("__old")), Seq("node"))
-        .select(col("node"), col("comp"), (col("comp") < col("__old")).as("__ch"))
+        .join(comp.select(col("node"), col("comp").as("__old")), Seq("node"),
+          "left_outer")
+        .select(col("node"), col("comp"),
+          (col("__old").isNull || col("comp") < col("__old")).as("__ch"))
         .localCheckpoint(true)
       converged = next.filter(col("__ch")).isEmpty
       comp = next.select("node", "comp")

@@ -5,11 +5,15 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.core.GraphState
-import graft.operators.{Biconnected, Cutover, Cycles, ShortestPath}
+import graft.operators.{Biconnected, Cutover, Cycles, ShortestPath, VertexResident}
+import graft.procedures.Procedures
 
 /** The driver-local / distributed cutover ([[Cutover]]): the pinned-state
-  * edge memo honours the cap it is asked under, and on random multigraphs
-  * the driver-local pass (default cap) and the distributed operator
+  * edge memo honours the cap it is asked under, a cap of Long.MaxValue
+  * collects every row, and on random multigraphs the driver-local pass
+  * (default cap), the vertex-resident placement where there is one (a cap
+  * between the node and edge counts; for WCC, any cap the nodes fit
+  * under) and the distributed operator
   * (`spark.graft.local.edges=0`) return the same rows. The graphs come
   * from `org.scalacheck.Gen` under fixed seeds, so a failure names the
   * seed that reproduces it.
@@ -18,11 +22,13 @@ class CutoverSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def distributed[T](body: => T): T = {
-    spark.conf.set(Cutover.LocalEdgesKey, "0")
+  private def underCap[T](cap: Long)(body: => T): T = {
+    spark.conf.set(Cutover.LocalEdgesKey, cap.toString)
     try body
     finally spark.conf.unset(Cutover.LocalEdgesKey)
   }
+
+  private def distributed[T](body: => T): T = underCap(0L)(body)
 
   /** (local, distributed) results of one run. */
   private def bothWays[T](run: => T): (T, T) = {
@@ -110,6 +116,117 @@ class CutoverSpec extends SparkTestBase {
       val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
       val (local, dist) = bothWays(
         ShortestPath.bfsEdges(df, sdf, 16, withPaths = true)
+          .collect().map(_.toSeq.map(String.valueOf)).toSet)
+      assert(local.nonEmpty)
+      assert(local == dist)
+    }
+  }
+
+  /** (node, comp) rows of [[Procedures.minLabelComponents]]. */
+  private def components(nodes: Seq[Long], edges: Seq[(Long, Long)]) =
+    Procedures
+      .minLabelComponents(nodes.toDF("node"), edges.toDF("src", "dst"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("a cap of Long.MaxValue runs the local pass on every row") {
+    val edges = Seq((0L, 1L), (1L, 2L), (3L, 4L))
+    val nodes = Seq(0L, 3L, 5L)
+    val local = underCap(Long.MaxValue)(components(nodes, edges))
+    assert(local.nonEmpty)
+    assert(local == distributed(components(nodes, edges)))
+  }
+
+  test("property: minLabelComponents agrees at the default cap, between " +
+    "the node and edge counts, and at 0") {
+    forAllGraphs { edges =>
+      val endpoints = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      // omit every third endpoint, add two isolated nodes
+      val nodes = endpoints.zipWithIndex.collect {
+        case (v, i) if i % 3 != 1 => v
+      } ++ Seq(100L, 101L)
+      // the nodes and the partial forests (at most every endpoint) fit
+      // while the edges do not, so the forest folds a partition in more
+      // than one chunk
+      val between = edges.size - 1L
+      assert(nodes.size < between && endpoints.size <= between)
+      val local = components(nodes, edges)
+      assert(local.exists(_._1 == 100L) && local.size > nodes.size)
+      assert(underCap(between)(components(nodes, edges)) == local)
+      assert(distributed(components(nodes, edges)) == local)
+    }
+  }
+
+  test("minLabelComponents: a partial forest above the cap bails to the " +
+    "fixpoint") {
+    val nodes = Seq(0L, 1L, 2L)
+    val edges = Seq((0L, 1L), (2L, 1000L)) ++
+      (0L until 200L).map(i => (2000L + 2 * i, 2001L + 2 * i))
+    val cap = 10L
+    val df = edges.toDF("src", "dst")
+    assert(VertexResident.forest(df, cap).isEmpty)
+    val bailed = underCap(cap)(components(nodes, edges))
+    assert(bailed == Set((0L, 0L), (1L, 0L), (2L, 2L), (1000L, 2L)))
+    assert(bailed == distributed(components(nodes, edges)))
+  }
+
+  test("minLabelComponents: one partition of more than cap edges over " +
+    "few endpoints returns the fixpoint's rows") {
+    val nodes = Seq(0L, 1L, 7L)
+    val edges = (0L until 300L).map(i => (i % 5, (i + 1) % 6)) ++
+      Seq((8L, 9L), (1L, 1L))
+    val cap = 10L
+    val df = edges.toDF("src", "dst").coalesce(1)
+    assert(df.rdd.getNumPartitions == 1 && edges.size > cap)
+    val forest = VertexResident.forest(df, cap)
+    val endpoints = edges.flatMap(e => Seq(e._1, e._2)).toSet
+    assert(forest.map(_._1.toSet) == Some(endpoints))
+    def run = Procedures
+      .minLabelComponents(nodes.toDF("node"), df)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaForest = underCap(cap)(run)
+    assert(viaForest.map(_._1) == Set(0L, 1L, 2L, 3L, 4L, 5L, 7L))
+    assert(viaForest == distributed(run))
+  }
+
+  test("VertexResident.partitionForest stops reading once the forest " +
+    "exceeds the cap") {
+    var read = 0
+    val edges = Iterator.tabulate(100000) { i =>
+      read += 1
+      (2L * i, 2L * i + 1)
+    }
+    assert(VertexResident.partitionForest(edges, 10L).isEmpty)
+    assert(read <= 10)
+  }
+
+  test("property: ShortestPath.bfsAllPathsEdges local equals distributed") {
+    forAllGraphs { edges =>
+      val df = edgeFrame(edges).select(
+        col("src").as(GraphState.SrcCol),
+        col("dst").as(GraphState.DstCol),
+        col("edge_id").as("__sp_eid"))
+      val hub = edges.map(e => math.max(e._1, e._2)).max
+      val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
+      val (local, dist) = bothWays(
+        ShortestPath.bfsAllPathsEdges(df, sdf, 6)
+          .collect().map(_.toSeq.map(String.valueOf)).toSet)
+      assert(local.nonEmpty)
+      assert(local == dist)
+    }
+  }
+
+  test("property: ShortestPath.weightedAllPaths local equals distributed") {
+    forAllGraphs { edges =>
+      val df = edgeFrame(edges).select(
+        col("src").as(GraphState.SrcCol),
+        col("dst").as(GraphState.DstCol),
+        col("edge_id").as("__sp_eid"),
+        (col("edge_id") * 7 % 3 + 1).cast("double")
+          .as(ShortestPath.EdgeWeightCol))
+      val hub = edges.map(e => math.max(e._1, e._2)).max
+      val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
+      val (local, dist) = bothWays(
+        ShortestPath.weightedAllPaths(df, sdf, 6)
           .collect().map(_.toSeq.map(String.valueOf)).toSet)
       assert(local.nonEmpty)
       assert(local == dist)

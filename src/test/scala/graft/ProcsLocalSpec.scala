@@ -8,11 +8,14 @@ import graft.sources.TpchGraphLoader
 /** Subcritical/distributed agreement for the iterative procedures: every
   * algorithm runs BOTH the driver-local pass (default — sf0.001 is far
   * below the threshold) and the distributed fixpoint (forced via
-  * spark.graft.local.edges=0) on the real KNOWS graph and must agree —
-  * integer-exact for the community/component algorithms, at the
-  * correctness-gate grain for the float centralities (the decimal(·,12)
-  * accumulation discipline makes katz/betweenness bit-stable; pagerank
-  * sums plain doubles, so it is compared at the gate's 6dp rounding).
+  * spark.graft.local.edges=0) on the real KNOWS graph and must agree;
+  * pagerank and wcc also run three ways on denser KNOWS graphs, adding
+  * the vertex-resident placement (a cap between the node and edge counts;
+  * wcc takes it under any cap its nodes fit). Agreement is integer-exact for the
+  * community/component algorithms, at the correctness-gate grain for the
+  * float centralities (the decimal(·,12) accumulation discipline makes
+  * katz/betweenness bit-stable; pagerank sums plain doubles, so it is
+  * compared at the gate's 6dp rounding).
   */
 class ProcsLocalSpec extends SparkTestBase {
 
@@ -31,19 +34,47 @@ class ProcsLocalSpec extends SparkTestBase {
     (local, dist)
   }
 
+  /** Rows of `run` under the default cap, under a cap strictly between
+    * the node count and the edge count of `opts`' graph (the
+    * vertex-resident placement), and under `spark.graft.local.edges=0`
+    * (the DataFrame fixpoint). */
+  private def threeWays(opts: Map[String, Any])(
+      run: => DataFrame): Seq[Seq[Seq[Any]]] = {
+    val nodes = g.nodes(opts("label").toString).count()
+    val edges = g.edges(opts("type").toString)
+      .filter(org.apache.spark.sql.functions.col(opts("weightProp").toString) >=
+        opts("minWeight").asInstanceOf[Double])
+      .count()
+    val between = (nodes + edges) / 2
+    assert(nodes < between && between < edges)
+    def rows(cap: Option[Long]) = {
+      cap.foreach(c => spark.conf.set("spark.graft.local.edges", c.toString))
+      try run.collect().toSeq.map(_.toSeq)
+      finally spark.conf.unset("spark.graft.local.edges")
+    }
+    Seq(rows(None), rows(Some(between)), rows(Some(0L)))
+  }
+
   private val knows6 = Map[String, Any](
     "label" -> "Customer", "type" -> "KNOWS",
     "weightProp" -> "k_weight", "minWeight" -> 6.0)
   private val knows8 = knows6 + ("minWeight" -> 8.0)
+  // more edges than nodes, so a cap can sit strictly between the two
+  private val knows3 = knows6 + ("minWeight" -> 3.0)
+  private val knows5 = knows6 + ("minWeight" -> 5.0)
 
   test("pagerank local/distributed agree at 6dp") {
-    val (l, d) = bothWays(Procedures.pagerank(ctx(knows6 +
-      ("iterations" -> 15, "damping" -> 0.85))))
+    def pr(opts: Map[String, Any]) =
+      Procedures.pagerank(ctx(opts + ("iterations" -> 15, "damping" -> 0.85)))
     def grain(r: Seq[Seq[Any]]) = r.map {
       case Seq(n: Long, v: Double) =>
         (n, math.round(v * 1e6))
     }.sortBy(_._1)
+    val (l, d) = bothWays(pr(knows6))
     assert(grain(l) == grain(d))
+    val runs = threeWays(knows3)(pr(knows3))
+    assert(runs.head.nonEmpty)
+    runs.tail.foreach(r => assert(grain(r) == grain(runs.head)))
   }
 
   test("katz local/distributed agree bitwise") {
@@ -64,6 +95,10 @@ class ProcsLocalSpec extends SparkTestBase {
     val (l, d) = bothWays(Procedures.wcc(ctx(knows8)))
     assert(l.sortBy(_.head.asInstanceOf[Long]) ==
       d.sortBy(_.head.asInstanceOf[Long]))
+    val runs = threeWays(knows5)(Procedures.wcc(ctx(knows5)))
+      .map(_.sortBy(_.head.asInstanceOf[Long]))
+    assert(runs.head.nonEmpty)
+    runs.tail.foreach(r => assert(r == runs.head))
   }
 
   test("louvain local/distributed agree exactly") {
