@@ -237,8 +237,10 @@ final class GraphState(
   /** Memoized per-label node-count estimates — the planner's
     * VariableStartPlanner analog costs MATCH start alternatives with them
     * (reference `plan/vertex_count_cache.hpp`). A plain label-frame count
-    * is footer-metadata cheap on parquet scans; memoized per state
-    * version. */
+    * is footer-metadata cheap on parquet scans, but still one Spark job;
+    * memoized per version, and since a read returns the version it ran on
+    * ([[withIdBase]]), a session pays each label's count once per version
+    * rather than once per statement. */
   private val countCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]
 
@@ -327,15 +329,14 @@ final class GraphState(
 
   // Collected (eid, src, dst) triples per requested type set — the input
   // of every driver-local traversal cutover (LocalHops / LocalSearch),
-  // probed under [[graft.operators.Cutover]]'s cap. Memoized on PINNED
-  // (loader) states only: those are session-shared across queries and
-  // never mutated, so hops-limit replays, subcritical var-expands and
-  // k-shortest passes stop re-collecting the same 1-2M edge triples per
-  // query (same lifetime family as the adjacency cache / text-index
-  // memos). Mutated versions are new instances with a fresh (empty) memo
-  // and skip it (!pinned). Right = the whole set; Left(cap) = more than
-  // `cap` triples, which answers any later probe under a cap no larger
-  // and is probed again under a larger one.
+  // probed under [[graft.operators.Cutover]]'s session cap. Memoized on
+  // every version and shared by every statement the session runs on it
+  // (hops-limit replays, subcritical var-expands, path searches): a
+  // version's frames never change — a write makes a new version with an
+  // empty memo — so a capture cannot go stale. One entry per distinct type
+  // set, each holding at most cap triples. Right = the whole set; Left(cap)
+  // = more than `cap` triples, which answers any later probe under a cap
+  // no larger without a job and is probed again under a larger one.
   private val localEdgesMemo = scala.collection.concurrent.TrieMap
     .empty[String, Either[Long, Array[(Long, Long, Long)]]]
   def localTypedEdges(types: Seq[String]): Option[Array[(Long, Long, Long)]] = {
@@ -343,17 +344,17 @@ final class GraphState(
     import graft.operators.Cutover
     val key = types.sorted.mkString(",")
     val cap = Cutover.cap(org.apache.spark.sql.SparkSession.active)
-    if (adjCache.pinned) localEdgesMemo.get(key) match {
-      case Some(Right(all)) => return Some(all).filter(_.length <= cap)
-      case Some(Left(above)) if cap <= above => return None
-      case _ => ()
+    localEdgesMemo.get(key) match {
+      case Some(Right(all)) => Some(all).filter(a => Cutover.fits(a.length, cap))
+      case Some(Left(above)) if cap <= above => None
+      case _ =>
+        val triples = edgesOfTypes(types).select(
+          col(GraphState.IdCol), col(GraphState.SrcCol), col(GraphState.DstCol))
+        val res = Cutover.within(triples, cap)
+          .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+        localEdgesMemo.put(key, res.toRight(cap))
+        res
     }
-    val triples = edgesOfTypes(types).select(
-      col(GraphState.IdCol), col(GraphState.SrcCol), col(GraphState.DstCol))
-    val res = Cutover.within(triples, cap)
-      .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-    if (adjCache.pinned) localEdgesMemo.put(key, res.toRight(cap))
-    res
   }
 
   /** New graph version with one node frame replaced/added — the snapshot
@@ -549,11 +550,16 @@ final class GraphState(
       adjOps.take(shared) ++ tail)
   }
 
-  /** New version with the id high-water mark advanced (never lowered) —
-    * no frame content changes, so the index tag carries over. */
+  /** The version with the id high-water mark advanced to `base` (never
+    * lowered). A base at or below [[idBase]] mints no id, so the result is
+    * this very version: a read returns the graph it ran on, and its memos
+    * (label counts, typed-edge captures, frames, text indexes) serve the
+    * session's next statement. A higher base is a new version with empty
+    * memos; no frame content changes, so the index tag carries over. */
   def withIdBase(base: Long): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, math.max(base, idBase), mayOverlap, enums,
+    if (base <= idBase) this
+    else new GraphState(
+      nodeThunks, edgeThunks, base, mayOverlap, enums,
       indexTag, indexes, descriptions, serverParams, adjCache, adjBase, adjOps)
 
   /** Mark that node rows may now live in more than one label frame. */

@@ -64,6 +64,13 @@ final class ExprLowering(
   def typeOf(c: Column): Option[DataType] =
     Try(typeProbe.select(c).schema.head.dataType).toOption
 
+  /** The column whose NULL marks an unbound path `n`: its node-id array,
+    * else its length. */
+  private def pathWitness(n: String): Option[Column] =
+    Seq("_nodes", "_len")
+      .find(k => df.columns.contains(s"$n${Frames.Sep}$k"))
+      .map(Frames.f(n, _))
+
   /** A driver value as a literal Column. `lit` only takes scalars —
     * parameter maps lower to RECORDS (same as MapLit: every value keeps
     * its own type) and lists to arrays, recursively, so `$m.k` / `$xs[0]`
@@ -199,6 +206,13 @@ final class ExprLowering(
         if scope.get(n).exists(b =>
           b == Binding.NodeB || b == Binding.EdgeB) =>
       if (neg) Frames.id(n).isNotNull else Frames.id(n).isNull
+    // A path is NULL iff it didn't bind: its node-id array witnesses the
+    // bind (the same contract as the path VALUE above), or its length when
+    // it carries no id arrays — so the test needs no entity arrays.
+    case IsNull(Var(n), neg)
+        if scope.get(n).contains(Binding.PathB) && pathWitness(n).nonEmpty =>
+      val w = pathWitness(n).get
+      if (neg) w.isNotNull else w.isNull
     case IsNull(x, false) => lower(x).isNull
     case IsNull(x, true) => lower(x).isNotNull
 

@@ -4018,6 +4018,21 @@ final class Planner(
         .cast(org.apache.spark.sql.types.DecimalType(28, 6))
         .cast(org.apache.spark.sql.types.DayTimeIntervalType()))
 
+  /** An unweighted search's traversal edges: the filtered frame when the
+    * pattern filters its edges, else the version's typed edge set, whose
+    * driver capture is memoized on the version. */
+  private def searchEdges(
+      filtered: Option[DataFrame],
+      types: Seq[String],
+      dir: Expand.Direction): ShortestPath.SearchEdges =
+    filtered
+      .map(e =>
+        ShortestPath.FrameEdges(e.select(
+          col(GraphState.SrcCol),
+          col(GraphState.DstCol),
+          col(GraphState.IdCol).as("__sp_eid"))))
+      .getOrElse(ShortestPath.TypedEdges(state, types, dir))
+
   /** Shortest-path pattern — `p = shortestPath((a)-[:T*..h]->(b))`,
     * `allShortestPaths(...)`, or the reference's inline modes
     * `-[e:T *BFS|*WSHORTEST ...]->` (`operator.cpp:2458,2726,3000,3309`).
@@ -4028,7 +4043,7 @@ final class Planner(
     * has two lowerings: WITHOUT a bound path variable, rows are multiplied
     * by the shortest-path count (`npaths` explode) — same cardinality and
     * lengths as the reference's per-path rows, no vertex lists materialized;
-    * WITH one, [[graft.operators.ShortestPath.bfsAllPaths]] enumerates each
+    * WITH one, [[graft.operators.ShortestPath.bfsAllPathsEdges]] enumerates each
     * path's own vertex/edge chain by walking the shortest-path DAG.
     */
   private def planShortest(
@@ -4118,22 +4133,9 @@ final class Planner(
               Frames.id(dstName).as(ShortestPath.NodeCol))
             .distinct())
         else None
-      val kEdges = edgesOv
-        .map(e =>
-          e.select(
-            col(GraphState.SrcCol),
-            col(GraphState.DstCol),
-            col(GraphState.IdCol).as("__sp_eid")))
-        .getOrElse(
-          ShortestPath.oriented(
-            state.edgesOfTypes(rel.types)
-              .select(
-                col(GraphState.SrcCol),
-                col(GraphState.DstCol),
-                col(GraphState.IdCol).as("__sp_eid")),
-            dir))
       val walks = ShortestPath.kShortest(
-        kEdges, kSeeds, k, math.max(minH, 1), hiB, kTargets)
+        searchEdges(edgesOv, rel.types, dir), kSeeds, k, math.max(minH, 1),
+        hiB, kTargets)
       var joined = cur0.df
         .join(walks, Frames.id(srcName) === col(ShortestPath.SeedCol))
         .drop(ShortestPath.SeedCol)
@@ -4327,29 +4329,12 @@ final class Planner(
         // path's own vertex/edge chain (operator.cpp:3309) — the DAG
         // enumeration. Without a path var the multiplicity explode below is
         // equivalent and cheaper (no arrays carried through the rounds).
-        def bfsE = edgesOv.map(e =>
-          e.select(
-            col(GraphState.SrcCol),
-            col(GraphState.DstCol),
-            col(GraphState.IdCol).as("__sp_eid")))
+        val search = searchEdges(edgesOv, rel.types, dir)
         val wantPaths = part.pathVar.isDefined || rel.variable.isDefined
         if (all && wantPaths)
-          bfsE match {
-            case Some(e) => ShortestPath.bfsAllPathsEdges(e, seeds, maxH)
-            case None =>
-              ShortestPath.bfsAllPaths(state, seeds, rel.types, dir, maxH)
-          }
-        else {
-          val orientedE = bfsE.getOrElse(
-            ShortestPath.oriented(
-              state.edgesOfTypes(rel.types)
-                .select(
-                  col(GraphState.SrcCol),
-                  col(GraphState.DstCol),
-                  col(GraphState.IdCol).as("__sp_eid")),
-              dir))
-          ShortestPath.bfsEdges(orientedE, seeds, maxH, withPaths = wantPaths)
-        }
+          ShortestPath.bfsAllPathsEdges(search, seeds, maxH)
+        else
+          ShortestPath.bfsEdges(search, seeds, maxH, withPaths = wantPaths)
     })
 
     var joined = cur0.df
@@ -5366,8 +5351,8 @@ final class Planner(
     * positions included) — best-effort; construct-local lambda vars may
     * be over-included, which only costs a no-op materialization probe.
     * With `skipLengthOnly`, `length(v)` / `size(v)` / `size(nodes(v))` /
-    * `size(relationships(v))` subtrees are NOT counted — those answers
-    * come from the id arrays, no entity values required. */
+    * `size(relationships(v))` / `v IS [NOT] NULL` subtrees are NOT counted
+    * — those answers come from the id arrays, no entity values required. */
   private def varsIn(
       e: Expr,
       skipLengthOnly: Boolean = false): Set[String] = {
@@ -5390,6 +5375,7 @@ final class Planner(
           if skipLengthOnly && fn.toLowerCase == "size" &&
             Set("nodes", "relationships")(inner.toLowerCase) =>
         ()
+      case IsNull(Var(_), _) if skipLengthOnly => ()
       case Var(n) => out += n
       case Prop(a, _) => g(a)
       case BinOp(_, a, b) => g(a); g(b)

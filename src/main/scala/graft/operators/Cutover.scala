@@ -8,8 +8,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * distributed operator runs unchanged. Every such decision goes through
   * [[collect]], and the probe IS the capture: one LIMIT(cap + 1) collect
   * answers "is it small?" and, when it is, hands the rows to the local
-  * pass. The local path therefore costs one job per input, and the work
-  * a supercritical input wastes is bounded at cap + 1 rows.
+  * pass. The local path therefore costs one collect per input — one job
+  * per query stage under AQE, so a probe over a shuffled input (a
+  * `distinct` seed set) runs several — and the work a supercritical input
+  * wastes is bounded at cap + 1 rows. A version memoizes the probes of its
+  * own typed edge sets ([[graft.core.GraphState.localTypedEdges]]), so a
+  * session pays those once per graph version.
   *
   * The cap is `min(ceiling, spark.graft.local.edges)`: a call site names
   * its own ceiling (a driver-work bound), and the session key bounds every
@@ -42,7 +46,12 @@ object Cutover {
     else {
       // cap + 1 saturates: at cap = Long.MaxValue it would wrap negative
       val limit = if (cap >= Int.MaxValue) Int.MaxValue else cap.toInt + 1
-      val rows = df.limit(limit).collect()
-      if (rows.length > cap) None else Some(rows)
+      Some(df.limit(limit).collect()).filter(rows => fits(rows.length, cap))
     }
+
+  /** The cutover decision itself: `rows` rows take the local path under
+    * `cap`. A cap that is not positive admits nothing, not even zero rows.
+    * Callers that already hold the rows (a memoized capture) decide with
+    * this, so they agree with [[within]] row for row. */
+  def fits(rows: Long, cap: Long): Boolean = cap > 0 && rows <= cap
 }

@@ -48,10 +48,10 @@ private[graft] object LocalSearch {
   private val CaptureFrontier = 1024
 
   /** Collect (seeds, edges) when both are subcritical; None → stay
-    * distributed. Seed rows are read via column 0 (SeedCol), edge rows as
-    * (eid, src, dst[, weight]). */
+    * distributed. Seed rows are read via column 0 (SeedCol); weighted
+    * searches pass a frame with a weight column. */
   def tryCollect(
-      edges: DataFrame,
+      edges: ShortestPath.SearchEdges,
       seeds: DataFrame,
       withWeight: Boolean): Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] = {
     val hasInit = seeds.columns.contains(ShortestPath.InitWeightCol)
@@ -61,26 +61,54 @@ private[graft] object LocalSearch {
           col(ShortestPath.SeedCol),
           coalesce(col(ShortestPath.InitWeightCol), lit(0.0)).cast("double"))
       else seeds.select(col(ShortestPath.SeedCol), lit(0.0))
-    val sel =
-      if (withWeight)
-        edges.select(
-          col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol),
-          col(ShortestPath.EdgeWeightCol).cast("double"))
-      else
-        edges.select(
-          col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
     for {
       seedRows <- Cutover.collect(seedSel, MaxSeeds)
       // seeds × edges ≤ MaxWork, as an edge ceiling
-      maxEdges =
-        if (seedRows.isEmpty) Long.MaxValue else MaxWork / seedRows.length
-      rows <- Cutover.collect(sel, maxEdges)
-    } yield (
-      rows.map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2),
-          if (withWeight) r.getDouble(3) else 0.0)),
-      seedRows.toSeq.map(r => (r.getLong(0), r.getDouble(1))))
+      cap = Cutover.cap(
+        seeds.sparkSession,
+        if (seedRows.isEmpty) Long.MaxValue else MaxWork / seedRows.length)
+      rows <- captureEdges(edges, cap, withWeight)
+    } yield (rows, seedRows.toSeq.map(r => (r.getLong(0), r.getDouble(1))))
   }
+
+  /** The search's oriented (eid, src, dst, weight) rows when there are at
+    * most `cap` of them, else None. Both sources decide with
+    * [[Cutover.fits]] on the ORIENTED row count, so they agree row for row:
+    * a typed search reads its version's memoized capture (a `Both` search
+    * counts each triple twice) and orients it on the driver, without a job
+    * once the version has been probed; a frame search collects at most
+    * cap + 1 rows of its frame. */
+  private def captureEdges(
+      edges: ShortestPath.SearchEdges,
+      cap: Long,
+      withWeight: Boolean): Option[Array[(Long, Long, Long, Double)]] =
+    edges match {
+      case ShortestPath.TypedEdges(g, types, dir) =>
+        val perTriple = if (dir == Expand.Both) 2L else 1L
+        g.localTypedEdges(types)
+          .filter(t => Cutover.fits(perTriple * t.length, cap))
+          .map { t =>
+            lazy val out = t.map { case (e, s, d) => (e, s, d, 0.0) }
+            lazy val in = t.map { case (e, s, d) => (e, d, s, 0.0) }
+            dir match {
+              case Expand.Out => out
+              case Expand.In => in
+              case Expand.Both => out ++ in
+            }
+          }
+      case ShortestPath.FrameEdges(frame) =>
+        val sel =
+          if (withWeight)
+            frame.select(
+              col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol),
+              col(ShortestPath.EdgeWeightCol).cast("double"))
+          else
+            frame.select(
+              col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
+        Cutover.within(sel, cap).map(_.map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2),
+            if (withWeight) r.getDouble(3) else 0.0)))
+    }
 
   /** Seed-reachable capture: when the FULL edge set is supercritical but
     * the seed set is small and the hop bound tight, the subgraph a

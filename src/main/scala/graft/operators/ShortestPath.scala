@@ -12,9 +12,9 @@ import graft.core.GraphState
   * `ExpandVariable` (`src/query/plan/operator.hpp:1172`):
   *
   *   - `STShortestPathCursor` / `SingleSourceShortestPathCursor`
-  *     (`operator.cpp:2458`, `:2726`) → [[bfs]]
+  *     (`operator.cpp:2458`, `:2726`) → [[bfsEdges]]
   *   - `ExpandWeightedShortestPathCursor` (`operator.cpp:3000`) → [[weighted]]
-  *   - `ExpandAllShortestPathsCursor` (`operator.cpp:3309`) → [[bfs]]'s
+  *   - `ExpandAllShortestPathsCursor` (`operator.cpp:3309`) → [[bfsEdges]]'s
   *     `npaths` column (shortest-path multiplicity), exploded by the planner
   *     into one row per path.
   *
@@ -43,7 +43,7 @@ object ShortestPath {
     * seed too). Absent → 0. */
   val InitWeightCol = "__sp_w0"
   /** One concrete shortest path per (seed, node) — node-id / edge-id arrays
-    * ([[bfs]] with `withPaths = true`). */
+    * ([[bfsEdges]] with `withPaths = true`). */
   val PathNodesCol = "__sp_path_nodes"
   val PathEdgesCol = "__sp_path_edges"
 
@@ -80,8 +80,45 @@ object ShortestPath {
     }
   }
 
+  /** The traversal edges of an unweighted path search ([[bfsEdges]],
+    * [[bfsAllPathsEdges]], [[kShortest]]). The distributed operators run on
+    * [[frame]], pre-oriented (src, dst, `__sp_eid`); the driver-local probe
+    * ([[LocalSearch.tryCollect]]) captures the same rows under the cutover. */
+  sealed trait SearchEdges { def frame: DataFrame }
+
+  /** A caller-built frame (filtered subgraphs, procedures): the probe
+    * collects it. */
+  final case class FrameEdges(frame: DataFrame) extends SearchEdges
+
+  /** A version's whole edge set of `types`, oriented by `dir`: the probe
+    * reads the version's memoized capture ([[GraphState.localTypedEdges]])
+    * and orients it on the driver, so repeated searches on one version
+    * collect no edges. The frame is built only when the search runs
+    * distributed. */
+  final case class TypedEdges(
+      g: GraphState, types: Seq[String], dir: Expand.Direction)
+      extends SearchEdges {
+    lazy val frame: DataFrame =
+      oriented(
+        g.edgesOfTypes(types)
+          .select(
+            col(GraphState.SrcCol),
+            col(GraphState.DstCol),
+            col(GraphState.IdCol).as("__sp_eid")),
+        dir)
+  }
+
+  /** `edges` with an `__sp_eid` column (0 when the caller has none). */
+  private def withEid(edges: DataFrame): DataFrame =
+    if (edges.columns.contains("__sp_eid")) edges
+    else edges.withColumn("__sp_eid", lit(0L))
+
   /** Multi-source BFS with shortest-path counting.
     *
+    * @param edges0 pre-oriented traversal edges ([[GraphState.SrcCol]],
+    *        [[GraphState.DstCol]], optionally `__sp_eid`) — procedures run
+    *        BFS on filtered subgraphs (e.g. weight-thresholded edges)
+    *        without routing through `GraphState.edgesOfTypes`
     * @param seeds one column [[SeedCol]] of distinct start-node ids
     * @param withPaths also materialize ONE concrete shortest path per
     *        (seed, node) as node-id/edge-id arrays ([[PathNodesCol]] /
@@ -93,51 +130,42 @@ object ShortestPath {
     *         number of distinct shortest paths, for every node reachable
     *         within `maxHops` (dist 0 = the seed itself, npaths 1)
     */
-  def bfs(
-      g: GraphState,
-      seeds: DataFrame,
-      types: Seq[String],
-      dir: Expand.Direction,
-      maxHops: Int,
-      withPaths: Boolean = false): DataFrame =
-    bfsEdges(
-      oriented(
-        g.edgesOfTypes(types)
-          .select(
-            col(GraphState.SrcCol),
-            col(GraphState.DstCol),
-            col(GraphState.IdCol).as("__sp_eid")),
-        dir),
-      seeds,
-      maxHops,
-      withPaths)
-
-  /** [[bfs]] over a caller-supplied pre-oriented edge frame (columns
-    * [[GraphState.SrcCol]], [[GraphState.DstCol]], optionally `__sp_eid`) —
-    * lets procedures run BFS on filtered subgraphs (e.g. weight-thresholded
-    * edges) without routing through `GraphState.edgesOfTypes`. */
   def bfsEdges(
       edges0: DataFrame,
       seeds: DataFrame,
       maxHops: Int,
-      withPaths: Boolean = false): DataFrame = {
-    // only unpersist a cache THIS call created — a caller-persisted edge
-    // frame (bfsAllPaths reuses it for the DAG join) must stay cached
-    val hadEid = edges0.columns.contains("__sp_eid")
-    val callerPersisted =
-      hadEid && edges0.storageLevel != StorageLevel.NONE
-    val edges = (if (hadEid) edges0
-                 else edges0.withColumn("__sp_eid", lit(0L)))
+      withPaths: Boolean = false): DataFrame =
+    bfsEdges(FrameEdges(withEid(edges0)), seeds, maxHops, withPaths)
+
+  /** [[bfsEdges]] over either capture source ([[SearchEdges]]). */
+  def bfsEdges(
+      search: SearchEdges,
+      seeds: DataFrame,
+      maxHops: Int,
+      withPaths: Boolean): DataFrame = {
     // subcritical + small seed set: one driver pass replaces the whole
     // fixpoint (LocalSearch header; determinism rules mirrored exactly).
     // The limit-capped probe is bounded work and runs UNPERSISTED — the
     // common small case must not pay a cache materialization (A/B at
     // sf3: persist-first taxed every subcritical BFS ~2×)
-    LocalSearch.tryCollect(edges, seeds, withWeight = false).foreach {
+    LocalSearch.tryCollect(search, seeds, withWeight = false).foreach {
       case (arr, s) =>
         return LocalSearch.bfsDf(
-          edges.sparkSession, arr, s, maxHops, withPaths)
+          seeds.sparkSession, arr, s, maxHops, withPaths)
     }
+    bfsBeyondCutover(search.frame, seeds, maxHops, withPaths)
+  }
+
+  /** [[bfsEdges]] once the driver-local probe has bailed: the seed-reachable
+    * capture, else the distributed fixpoint. `edges` carries `__sp_eid`. */
+  private def bfsBeyondCutover(
+      edges: DataFrame,
+      seeds: DataFrame,
+      maxHops: Int,
+      withPaths: Boolean): DataFrame = {
+    // only unpersist a cache THIS call created — a caller-persisted edge
+    // frame (bfsAllPathsEdges reuses it for the DAG join) must stay cached
+    val callerPersisted = edges.storageLevel != StorageLevel.NONE
     // supercritical (or many-seed) path: persist once — the cache backs
     // both the reachable-capture's pruned per-level scans and the
     // distributed fixpoint rounds (A/B at sf10: capturing against the
@@ -432,7 +460,7 @@ object ShortestPath {
       edges: DataFrame,
       seeds: DataFrame,
       maxHops: Int): DataFrame = {
-    val vis = bfsEdges(edges, seeds, maxHops)
+    val vis = bfsBeyondCutover(edges, seeds, maxHops, withPaths = false)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val dag = vis
       .select(col(SeedCol), col(NodeCol).as("__v"), col(DistCol).as("__dv"))
@@ -516,7 +544,7 @@ object ShortestPath {
 
   /** ALL distinct shortest paths per (seed, node), each with its own
     * vertex/edge chain — the full `ExpandAllShortestPathsCursor` semantics
-    * (`operator.cpp:3309`): where [[bfs]] returns one representative path
+    * (`operator.cpp:3309`): where [[bfsEdges]] returns one representative path
     * plus a multiplicity count, this enumerates every path.
     *
     * Two phases, both level-synchronous:
@@ -530,41 +558,35 @@ object ShortestPath {
     * exponential in depth — same as the reference, which enumerates too).
     * @return (seed, node, dist, pathNodes, pathEdges), one row per path
     */
-  def bfsAllPaths(
-      g: GraphState,
-      seeds: DataFrame,
-      types: Seq[String],
-      dir: Expand.Direction,
-      maxHops: Int): DataFrame =
-    bfsAllPathsEdges(
-      oriented(
-        g.edgesOfTypes(types)
-          .select(
-            col(GraphState.SrcCol),
-            col(GraphState.DstCol),
-            col(GraphState.IdCol).as("__sp_eid")),
-        dir),
-      seeds,
-      maxHops)
-
-  /** [[bfsAllPaths]] over a caller-supplied pre-oriented edge frame
-    * (src, dst, `__sp_eid`) — the filter-lambda path. */
   def bfsAllPathsEdges(
       edges0: DataFrame,
+      seeds: DataFrame,
+      maxHops: Int): DataFrame =
+    bfsAllPathsEdges(FrameEdges(edges0), seeds, maxHops)
+
+  /** [[bfsAllPathsEdges]] over either capture source ([[SearchEdges]]). */
+  def bfsAllPathsEdges(
+      search: SearchEdges,
       seeds: DataFrame,
       maxHops: Int): DataFrame = {
     // subcritical: one collect + an exact driver enumeration replaces the
     // BFS fixpoint AND the 2·maxD-job DAG walk (LocalSearch.allPathsDf
     // mirrors both phases bit-for-bit; bails to the distributed walk on
     // path explosion)
-    LocalSearch.tryCollect(edges0, seeds, withWeight = false).foreach {
-      case (arr, s) =>
-        LocalSearch
-          .allPathsDf(edges0.sparkSession, arr, s.map(_._1), maxHops)
-          .foreach(return _)
+    val captured = LocalSearch.tryCollect(search, seeds, withWeight = false)
+    captured.foreach { case (arr, s) =>
+      LocalSearch
+        .allPathsDf(seeds.sparkSession, arr, s.map(_._1), maxHops)
+        .foreach(return _)
     }
-    val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val vis = bfsEdges(edges, seeds, maxHops)
+    val edges = search.frame.persist(StorageLevel.MEMORY_AND_DISK)
+    // the layering reuses the probe's answer: a capture that only bailed
+    // on path explosion still layers on the driver
+    val vis = captured
+      .map { case (arr, s) =>
+        LocalSearch.bfsDf(seeds.sparkSession, arr, s, maxHops, withPaths = false)
+      }
+      .getOrElse(bfsBeyondCutover(edges, seeds, maxHops, withPaths = false))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Per-seed shortest-path DAG: u→w survives iff w sits exactly one BFS
     // level below u for that seed.
@@ -844,18 +866,28 @@ object ShortestPath {
       k: Int,
       minHops: Int,
       maxHops: Int,
-      targets: Option[DataFrame] = None): DataFrame = {
+      targets: Option[DataFrame] = None): DataFrame =
+    kShortest(FrameEdges(edges0), seeds, k, minHops, maxHops, targets)
+
+  /** [[kShortest]] over either capture source ([[SearchEdges]]). */
+  def kShortest(
+      search: SearchEdges,
+      seeds: DataFrame,
+      k: Int,
+      minHops: Int,
+      maxHops: Int,
+      targets: Option[DataFrame]): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // subcritical + small seed set: one driver pass enumerates the simple
     // paths and cuts the same (hops, edge-list lex) top-k per pair that
     // the distributed final window produces — replaces ~4 jobs x maxHops
     // rounds (LocalSearch header; budget-bailed on path explosion)
     LocalSearch
-      .tryCollect(edges0, seeds, withWeight = false)
+      .tryCollect(search, seeds, withWeight = false)
       .foreach { case (arr, s) =>
         LocalSearch
           .kShortestDf(
-            edges0.sparkSession, arr, s.map(_._1), k, minHops, maxHops)
+            seeds.sparkSession, arr, s.map(_._1), k, minHops, maxHops)
           .foreach(df => return df)
       }
     // r13 A/B (sf0.1, cold selective runs): overprovision=2 4.1 s vs
@@ -869,7 +901,7 @@ object ShortestPath {
     // candidates through the rounds, everyone else exactly k; the final
     // cut keeps exactly k
     val wideBudget = KShortestOverprovision * k
-    val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = search.frame.persist(StorageLevel.MEMORY_AND_DISK)
     // per-seed target sets drive both the contention flag and early-stop;
     // target lists are per-query small — broadcast
     val targetSets = targets.map(t =>
@@ -1002,10 +1034,7 @@ object ShortestPath {
     // the whole relaxation fixpoint (LocalSearch header; identical strict
     // (weight, dist)-lexicographic improvement)
     LocalSearch
-      .tryCollect(
-        (if (edges.columns.contains("__sp_eid")) edges
-         else edges.withColumn("__sp_eid", lit(0L))),
-        seeds, withWeight = true)
+      .tryCollect(FrameEdges(withEid(edges)), seeds, withWeight = true)
       .foreach { case (arr, s) =>
         return LocalSearch.weightedDf(edges.sparkSession, arr, s, maxRounds)
       }
@@ -1016,7 +1045,7 @@ object ShortestPath {
     // is a small fraction of the reached set. One action per round (the
     // improved-delta checkpoint doubles as the convergence probe); the
     // union+min merge only runs on non-final rounds.
-    // Same lineage discipline as [[bfs]]: localCheckpoint per round.
+    // Same lineage discipline as [[bfsEdges]]: localCheckpoint per round.
     var dist = seeds
       .select(
         col(SeedCol),

@@ -5,11 +5,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.core.GraphState
-import graft.operators.{Biconnected, Cutover, Cycles, ShortestPath, VertexResident}
-import graft.procedures.Procedures
+import graft.operators.{Biconnected, Cutover, Cycles, Expand, LocalSearch, ShortestPath, VertexResident}
+import graft.procedures.{ProcContext, Procedures}
 
-/** The driver-local / distributed cutover ([[Cutover]]): the pinned-state
-  * edge memo honours the cap it is asked under, a cap of Long.MaxValue
+/** The driver-local / distributed cutover ([[Cutover]]): the version's
+  * edge memo honours the cap it is asked under and decides like a capture
+  * of the oriented frame, a cap of Long.MaxValue
   * collects every row, and on random multigraphs the driver-local pass
   * (default cap), the vertex-resident placement where there is one (a cap
   * between the node and edge counts; for WCC, any cap the nodes fit
@@ -230,6 +231,92 @@ class CutoverSpec extends SparkTestBase {
           .collect().map(_.toSeq.map(String.valueOf)).toSet)
       assert(local.nonEmpty)
       assert(local == dist)
+    }
+  }
+
+  /** A version whose one edge type "E" holds `edges`; node ids are the
+    * endpoints plus one isolated node. */
+  private def graphOf(edges: Seq[(Long, Long)]): GraphState = {
+    val es = edges.zipWithIndex
+      .map { case ((s, d), i) => (i.toLong, s, d, "E") }
+      .toDF("_id", "_src", "_dst", "_type")
+    val ids = (edges.flatMap(e => Seq(e._1, e._2)) :+ 1000L).distinct
+    val nodes = ids.toDF("_id").withColumn("_labels", array(lit("V")))
+    GraphState(Map("V" -> (() => nodes)), Map("E" -> (() => es)))
+  }
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.map(String.valueOf)).toSet
+
+  test("property: memo and frame captures decide alike and return the " +
+    "same bfsEdges / bfsAllPathsEdges rows at the default cap, between " +
+    "the one-way and the Both counts, and at 0") {
+    forAllGraphs { edges =>
+      val g = graphOf(edges)
+      val hub = edges.map(e => math.max(e._1, e._2)).max
+      val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
+      // one-way fits, Both (each triple twice) does not
+      val between = edges.size + edges.size / 2L
+      // Both orients every triple both ways, so it covers In as well
+      Seq(Expand.Out, Expand.Both).foreach { dir =>
+        val typed = ShortestPath.TypedEdges(g, Seq("E"), dir)
+        val frame = ShortestPath.FrameEdges(typed.frame)
+        def results(e: ShortestPath.SearchEdges) = (
+          rowSet(ShortestPath.bfsEdges(e, sdf, 16, withPaths = true)),
+          rowSet(ShortestPath.bfsAllPathsEdges(e, sdf, 6)))
+        val dist = distributed(results(typed))
+        assert(dist._1.nonEmpty && dist._2.nonEmpty)
+        Seq(None, Some(between), Some(0L)).foreach { cap =>
+          withClue(s"$dir under $cap: ") {
+            def run[T](body: => T): T = cap.fold(body)(c => underCap(c)(body))
+            def captured(e: ShortestPath.SearchEdges) = run(
+              LocalSearch.tryCollect(e, sdf, withWeight = false)
+                .map(_._1.sortBy(r => (r._1, r._2, r._3)).toSeq))
+            val viaMemo = captured(typed)
+            assert(viaMemo == captured(frame))
+            val local = cap.isEmpty || (cap.contains(between) && dir != Expand.Both)
+            assert(viaMemo.isDefined == local)
+            // both sources' local runs, and the memo's bail under the cap
+            // between, return the distributed rows (`dist` is the memo's
+            // run at 0; a frame that bails runs the same operator)
+            if (local) assert(run(results(frame)) == dist)
+            if (!cap.contains(0L)) assert(run(results(typed)) == dist)
+          }
+        }
+      }
+    }
+  }
+
+  /** (node, value) rows of a procedure over `graphOf(edges)`, sorted. */
+  private def procRows(
+      proc: ProcContext => org.apache.spark.sql.DataFrame,
+      edges: Seq[(Long, Long)],
+      opts: Map[String, Any]) =
+    proc(ProcContext(spark, graphOf(edges),
+      Seq(opts ++ Map("label" -> "V", "type" -> "E"))))
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+
+  test("property: katz local equals distributed") {
+    forAllGraphs { edges =>
+      val opts = Map[String, Any]("alpha" -> 0.1, "beta" -> 1.0, "iterations" -> 10)
+      val (local, dist) = bothWays(procRows(Procedures.katz, edges, opts))
+      assert(local.nonEmpty)
+      assert(local == dist)
+    }
+  }
+
+  test("property: betweenness local equals distributed") {
+    forAllGraphs { edges =>
+      Seq("true", "false").foreach { directed =>
+        withClue(s"directed=$directed: ") {
+          val opts = Map[String, Any](
+            "seedMax" -> 1000, "maxDepth" -> 8, "directed" -> directed)
+          val (local, dist) =
+            bothWays(procRows(Procedures.betweenness, edges, opts))
+          assert(local.nonEmpty)
+          assert(local == dist)
+        }
+      }
     }
   }
 }

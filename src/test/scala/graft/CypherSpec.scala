@@ -1,12 +1,19 @@
 package graft
 
-import org.apache.spark.sql.Row
+import scala.collection.mutable
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{array, lit}
+
+import graft.core.GraphState
 import graft.cypher.Cypher
 import graft.sources.TpchGraphLoader
 
 /** Semantic tests for the Cypher frontend against the sf0.001 graph, checked
-  * against independently-computed DataFrame results. */
+  * against independently-computed DataFrame results, and the lifetime of
+  * the graph versions `Cypher.execute` returns, on a small path graph. */
 class CypherSpec extends SparkTestBase {
 
   lazy val g = TpchGraphLoader(spark, sfDir)
@@ -239,5 +246,145 @@ class CypherSpec extends SparkTestBase {
           org.apache.spark.sql.functions.col("__nk"))
       .count()
     assert(df.collect()(0).getLong(0) == expected)
+  }
+
+  test("a path's IS NULL test reads the id arrays, not the entity arrays") {
+    def planned(q: String) = {
+      val df = run(q)
+      val names = df.queryExecution.analyzed
+        .collect { case n => n.output.map(_.name) }.flatten
+      assert(!names.exists(_.endsWith("_nodestructs")), names.distinct)
+      df.collect().map(_.toSeq).toSeq
+    }
+    val miss = planned(
+      """MATCH (a:Customer {c_custkey: 0})
+        |OPTIONAL MATCH p = (a)-[:KNOWS *BFS]->(b:Customer {c_custkey: -1})
+        |RETURN p IS NULL AS miss, p IS NOT NULL AS hit""".stripMargin)
+    assert(miss == Seq(Seq(true, false)))
+    val hit = planned(
+      """MATCH (a:Customer {c_custkey: 0})
+        |OPTIONAL MATCH p = (a)-[:KNOWS *BFS]->(b:Customer {c_custkey: 8})
+        |RETURN p IS NULL AS miss,
+        |  CASE p IS NULL WHEN true THEN -1 ELSE size(p) END AS len""".stripMargin)
+    // 8 = 1 + 7: the ring edge 0->1, then the chord 1->8
+    assert(hit == Seq(Seq(false, 2L)))
+  }
+
+  /** Two KNOWS components, 0-1-2-3-4 and 5-6-7, plus isolated 8 and 9;
+    * partitioned, so every count and collect over them is a Spark job. */
+  private def pathGraph(): GraphState = {
+    import spark.implicits._
+    val nodes = (0L to 9L).map(i => (i, i)).toDF("_id", "pid")
+      .withColumn("_labels", array(lit("P")))
+      .repartition(2)
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L))
+      .zipWithIndex
+      .map { case ((s, d), i) => (100L + i, s, d, "KNOWS") }
+      .toDF("_id", "_src", "_dst", "_type")
+      .repartition(2)
+    GraphState(Map("P" -> (() => nodes)), Map("KNOWS" -> (() => edges)))
+  }
+
+  private def pathLen(from: Long, to: Long) =
+    s"""MATCH (a:P {pid: $from}), (b:P {pid: $to})
+       |MATCH p = (a)-[:KNOWS *BFS]-(b)
+       |RETURN CASE p IS NULL WHEN true THEN -1 ELSE size(p) END AS len""".stripMargin
+
+  private def lens(r: Cypher.ExecResult): Seq[Long] =
+    r.result.collect().map(_.getLong(0)).toSeq
+
+  /** Call sites (stage and SQL-execution stack traces) of every Spark job
+    * `body` starts. A marker job closes the window: listener events
+    * arrive in order, so once its start is seen every earlier job's is. */
+  private def jobSites[T](body: => T): (T, Seq[String]) = {
+    val sites = mutable.ArrayBuffer.empty[String]
+    val executions = mutable.HashMap.empty[Long, String]
+    @volatile var closed = false
+    val marker = "job-sites-marker"
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          synchronized { executions(x.executionId) = x.details }
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        val props = Option(e.properties)
+        if (props.exists(p => p.getProperty("spark.job.description") == marker))
+          closed = true
+        else {
+          val viaExecution = props
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => executions.get(id.toLong))
+          sites += (e.stageInfos.map(_.details) ++ viaExecution).mkString("\n")
+        }
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!closed && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(closed, "the listener never saw the marker job")
+      (out, listener.synchronized(sites.toList))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Jobs issued by the per-version memos' probes. */
+  private val memoSites = Seq(
+    "GraphState.labelCountEstimate", "GraphState.localTypedEdges",
+    "LocalSearch$.captureEdges")
+  private def memoJobs(sites: Seq[String]): Seq[String] =
+    sites.filter(s => memoSites.exists(s.contains))
+
+  test("version lifetime: a read returns the version it ran on") {
+    val g0 = pathGraph()
+    val r = Cypher.execute(spark, g0, pathLen(0, 4))
+    assert(r.graph eq g0)
+    assert(lens(r) == Seq(4L))
+    assert(Cypher.execute(spark, g0, "MATCH (a:P) RETURN count(*) AS n").graph eq g0)
+  }
+
+  test("version lifetime: writes and DDL return a new version") {
+    val g0 = pathGraph()
+    def next(q: String) = Cypher.execute(spark, g0, q).graph
+    Seq(
+      "CREATE (:P {pid: 99})",
+      "MATCH (a:P {pid: 1}) SET a.tag = 1",
+      "MATCH (a:P {pid: 9}) DELETE a",
+      "CREATE INDEX ON :P(pid)").foreach { q =>
+      withClue(q) { assert(!(next(q) eq g0)) }
+    }
+  }
+
+  test("version lifetime: a repeated read on the returned version starts " +
+    "no label-count or edge-capture job") {
+    val g0 = pathGraph()
+    val (r1, first) = jobSites(Cypher.execute(spark, g0, pathLen(0, 4)))
+    assert(lens(r1) == Seq(4L))
+    // the first statement on a fresh version pays the probes...
+    assert(first.exists(_.contains("GraphState.labelCountEstimate")), first)
+    assert(first.exists(_.contains("GraphState.localTypedEdges")), first)
+    // ...the second identical one, on the returned version, none of them
+    val (r2, second) = jobSites(Cypher.execute(spark, r1.graph, pathLen(0, 4)))
+    assert(r2.graph eq g0)
+    assert(memoJobs(second).isEmpty, memoJobs(second))
+    assert(lens(r2) == Seq(4L))
+  }
+
+  test("version lifetime: a write's version does not inherit the memos") {
+    val g0 = pathGraph()
+    val r1 = Cypher.execute(spark, g0, pathLen(0, 7))
+    assert(r1.graph eq g0)
+    assert(lens(r1).isEmpty) // two components: no path
+    val w = Cypher.execute(spark, r1.graph,
+      "MATCH (a:P {pid: 4}), (b:P {pid: 5}) CREATE (a)-[:KNOWS]->(b)")
+    assert(!(w.graph eq g0))
+    assert(lens(Cypher.execute(spark, w.graph, pathLen(0, 7))) == Seq(7L))
+    // the memoized parent still answers from its own edges
+    assert(lens(Cypher.execute(spark, g0, pathLen(0, 7))).isEmpty)
   }
 }
