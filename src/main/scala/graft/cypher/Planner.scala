@@ -3608,9 +3608,8 @@ final class Planner(
     * instead of a per-step re-evaluation: same semantics, no per-round
     * filtering cost, and the BFS/DFS loops stay single-equi-join rounds.
     * Returns (id, src, dst) with src→dst in TRAVERSAL orientation.
-    * The accumulated-path form routes through the per-step filtered
-    * operators instead ([[ShortestPath.bfsFiltered]] /
-    * [[ShortestPath.weightedCarry]]); callers pass only 2-var lambdas
+    * The accumulated-path form routes through the searches that take a
+    * [[ShortestPath.PathFilter]] instead; callers pass only 2-var lambdas
     * here (raises otherwise — an accepted-but-ignored lambda would be a
     * silent wrong answer). */
   private def filteredOrientedEdges(
@@ -3846,12 +3845,10 @@ final class Planner(
     * PathB lowering, `nodes(p)`/`relationships(p)`/`size(p)`, resolves),
     * `w` to the accumulated weight (WSHORTEST; converted back to an
     * interval for duration-weighted searches).
-    * @return (candidate-frame → predicate, node-struct frame, path col names)
     */
   private def pathStepFilter(
       lam: StepLambda,
-      isDurationWeight: Boolean = false)
-    : (DataFrame => Column, DataFrame, (String, String, String)) = {
+      isDurationWeight: Boolean = false): ShortestPath.PathFilter = {
     val pv = lam.path.getOrElse(fresh("p"))
     val nframe = Frames.bind(lam.n)(state.allNodes)
     val nodes = nframe.select(
@@ -3876,7 +3873,7 @@ final class Planner(
       new ExprLowering(df, fScope, params, lvars, state.enums)
         .lower(lam.pred)
     }
-    (mk, nodes, pathCols)
+    ShortestPath.PathFilter(nodes, mk, pathCols)
   }
 
   /** Shared WSHORTEST / weighted-ALLSHORTEST prelude.
@@ -4270,10 +4267,9 @@ final class Planner(
             // path-dependent admissibility invalidates the shortest-path
             // DAG factorization — direct enumeration with dominance
             // pruning ([[ShortestPath.weightedAllCarry]])
-            val (stepF, nodesF, pathCols) =
-              pathStepFilter(l, isDurationWeight = isDur)
             ShortestPath.weightedAllCarry(
-              oriented, Some(nodesF), wSeeds, maxH, Some(stepF), pathCols)
+              oriented, wSeeds, maxH,
+              pathStepFilter(l, isDurationWeight = isDur))
           case None =>
             ShortestPath.weightedAllPaths(
               oriented.drop(ShortestPath.EStructCol), wSeeds, maxH)
@@ -4288,29 +4284,18 @@ final class Planner(
         val wRes =
           if (!needCarry)
             ShortestPath.weighted(
-              state, wSeeds,
+              wSeeds,
               oriented.drop("__sp_eid", ShortestPath.EStructCol),
               maxRounds = maxH)
-          else {
-            val (stepF, nodesF, pathCols) = pathLambda match {
-              case Some(l) =>
-                val (f, nodes, pc) =
-                  pathStepFilter(l, isDurationWeight = isDur)
-                (Some(f), Some(nodes), pc)
-              case None =>
-                (None, None,
-                  (ShortestPath.PathNodeStructsCol,
-                    ShortestPath.PathEdgeStructsCol, "__sp_plen"))
-            }
+          else
             ShortestPath.weightedCarry(
-              oriented, nodesF, wSeeds, maxH, stepF, pathCols)
-          }
+              oriented, wSeeds, maxH,
+              pathLambda.map(pathStepFilter(_, isDurationWeight = isDur)))
         if (isDur) durationWeightOut(wRes) else wRes
       case _ if pathLambda.isDefined =>
-        // accumulated-path filter: per-expansion evaluation via
-        // [[ShortestPath.bfsFiltered]] (entity structs ride the fixpoint —
-        // the price of path-dependent admissibility; only these queries
-        // pay it)
+        // accumulated-path filter: per-expansion evaluation in the
+        // distributed BFS (entity structs ride the fixpoint — the price of
+        // path-dependent admissibility; only these queries pay it)
         if (all)
           throw new UnsupportedOperationException(
             "allShortestPaths with an accumulated-path filter lambda is " +
@@ -4319,10 +4304,9 @@ final class Planner(
         if (l.weightVar.isDefined)
           throw new UnsupportedOperationException(
             "accumulated-weight lambda variable requires *WSHORTEST")
-        val (stepF, nodesF, pathCols) = pathStepFilter(l)
-        ShortestPath.bfsFiltered(
+        ShortestPath.bfsEdges(
           orientedStructEdges(rel.types, dir, l.e, edgesOv),
-          nodesF, seeds, maxH, stepF, pathCols)
+          seeds, maxH, pathStepFilter(l))
 
       case _ =>
         // allShortestPaths with a bound path variable needs every distinct

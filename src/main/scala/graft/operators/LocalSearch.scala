@@ -19,7 +19,8 @@ import graft.core.GraphState
   * execution model, applied when the data provably fits; above the
   * thresholds the distributed fixpoints run unchanged.
   *
-  * Determinism parity (checked by BfsPathsSpec / the oracle gates):
+  * Determinism parity (checked by BfsPathsSpec, CutoverSpec's local ==
+  * distributed properties and the oracle gates):
   *   - BFS: dist = level, npaths = Σ over parent EDGES (multiplicity
   *     counts), representative path = lexicographically smallest
   *     (node-seq, edge-seq) propagated prefix-wise — exactly the
@@ -47,41 +48,50 @@ private[graft] object LocalSearch {
   /** Largest per-level frontier the seed-reachable capture accepts. */
   private val CaptureFrontier = 1024
 
-  /** Collect (seeds, edges) when both are subcritical; None → stay
-    * distributed. Seed rows are read via column 0 (SeedCol); weighted
-    * searches pass a frame with a weight column. */
-  def tryCollect(
-      edges: ShortestPath.SearchEdges,
-      seeds: DataFrame,
-      withWeight: Boolean): Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] = {
-    val hasInit = seeds.columns.contains(ShortestPath.InitWeightCol)
+  /** The search's (seed, initial weight) rows when there are at most
+    * min([[MaxSeeds]], `spark.graft.local.edges`) of them, else None: the
+    * one seed probe of a search, whose rows both edge captures
+    * ([[captureEdges]], [[tryCollectReachable]]) take. Seed rows are read
+    * via column 0 (SeedCol); weighted searches' seeds may carry
+    * [[ShortestPath.InitWeightCol]]. */
+  def collectSeeds(seeds: DataFrame): Option[Seq[(Long, Double)]] = {
     val seedSel =
-      if (hasInit)
+      if (seeds.columns.contains(ShortestPath.InitWeightCol))
         seeds.select(
           col(ShortestPath.SeedCol),
           coalesce(col(ShortestPath.InitWeightCol), lit(0.0)).cast("double"))
       else seeds.select(col(ShortestPath.SeedCol), lit(0.0))
-    for {
-      seedRows <- Cutover.collect(seedSel, MaxSeeds)
-      // seeds × edges ≤ MaxWork, as an edge ceiling
-      cap = Cutover.cap(
-        seeds.sparkSession,
-        if (seedRows.isEmpty) Long.MaxValue else MaxWork / seedRows.length)
-      rows <- captureEdges(edges, cap, withWeight)
-    } yield (rows, seedRows.toSeq.map(r => (r.getLong(0), r.getDouble(1))))
+    Cutover
+      .collect(seedSel, MaxSeeds)
+      .map(_.toSeq.map(r => (r.getLong(0), r.getDouble(1))))
   }
 
+  /** Collect (seeds, edges) when both are subcritical; None → stay
+    * distributed. Weighted searches pass a frame with a weight column. */
+  def tryCollect(
+      edges: ShortestPath.SearchEdges,
+      seeds: DataFrame,
+      withWeight: Boolean): Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] =
+    for {
+      s <- collectSeeds(seeds)
+      rows <- captureEdges(seeds.sparkSession, edges, s, withWeight)
+    } yield (rows, s)
+
   /** The search's oriented (eid, src, dst, weight) rows when there are at
-    * most `cap` of them, else None. Both sources decide with
+    * most `cap` of them, else None; the cap bounds seeds × edges by
+    * [[MaxWork]] as an edge ceiling. Both sources decide with
     * [[Cutover.fits]] on the ORIENTED row count, so they agree row for row:
     * a typed search reads its version's memoized capture (a `Both` search
     * counts each triple twice) and orients it on the driver, without a job
     * once the version has been probed; a frame search collects at most
     * cap + 1 rows of its frame. */
-  private def captureEdges(
+  def captureEdges(
+      spark: SparkSession,
       edges: ShortestPath.SearchEdges,
-      cap: Long,
-      withWeight: Boolean): Option[Array[(Long, Long, Long, Double)]] =
+      seeds: Seq[(Long, Double)],
+      withWeight: Boolean): Option[Array[(Long, Long, Long, Double)]] = {
+    val cap = Cutover.cap(
+      spark, if (seeds.isEmpty) Long.MaxValue else MaxWork / seeds.length)
     edges match {
       case ShortestPath.TypedEdges(g, types, dir) =>
         val perTriple = if (dir == Expand.Both) 2L else 1L
@@ -109,6 +119,7 @@ private[graft] object LocalSearch {
           (r.getLong(0), r.getLong(1), r.getLong(2),
             if (withWeight) r.getDouble(3) else 0.0)))
     }
+  }
 
   /** Seed-reachable capture: when the FULL edge set is supercritical but
     * the seed set is small and the hop bound tight, the subgraph a
@@ -120,18 +131,15 @@ private[graft] object LocalSearch {
     * is precisely the edge set a maxHops-bounded traversal can use.
     * Bails (→ distributed fixpoint) when a frontier exceeds
     * [[CaptureFrontier]] (hub explosion), the collected edges exceed the
-    * [[Cutover]] cap, or the hop bound is above [[CaptureHops]]. */
+    * [[Cutover]] cap, or the hop bound is above [[CaptureHops]].
+    * `seeds` are the rows of the search's seed probe ([[collectSeeds]]). */
   def tryCollectReachable(
       edges: DataFrame,
-      seeds: DataFrame,
-      maxHops: Int)
-    : Option[(Array[(Long, Long, Long, Double)], Seq[(Long, Double)])] = {
+      seeds: Seq[Long],
+      maxHops: Int): Option[Array[(Long, Long, Long, Double)]] = {
     if (maxHops > CaptureHops) return None
     val cap = Cutover.cap(edges.sparkSession)
-    val seedIds = Cutover
-      .collect(seeds.select(col(ShortestPath.SeedCol)), MaxSeeds)
-      .getOrElse(return None)
-      .toSeq.map(_.getLong(0)).distinct
+    val seedIds = seeds.distinct
     val sel = edges.select(
       col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
     val acc = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
@@ -147,7 +155,7 @@ private[graft] object LocalSearch {
       frontier = batch.map(_.getLong(2)).distinct.filterNot(reached)
       reached ++= frontier
     }
-    Some((acc.toArray, seedIds.map(_ -> 0.0)))
+    Some(acc.toArray)
   }
 
   private val seqOrd: Ordering[Seq[Long]] =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 import graft.core.GraphState
 
@@ -26,6 +26,15 @@ import graft.core.GraphState
   * probe for early stop. No driver-side per-row loops; the driver only
   * steers rounds. Per-round `persist` bounds lineage; frames are unpersisted
   * eagerly when superseded.
+  *
+  * Like the reference, which runs each search kind as one cursor with the
+  * filter lambda as an optional argument, every distributed search shares
+  * one expansion step ([[expand]]) and differs only in what it carries
+  * ([[Carry]]: nothing, the representative path's id arrays, or entity
+  * structs under a [[PathFilter]]) and in its merge rule: the BFS loop
+  * ([[bfsLoop]]) keeps the first level that reaches a node, the relaxation
+  * loop ([[relax]]) keeps strict (weight, dist) improvements, and
+  * [[weightedAllCarry]] keeps every path tying the best weight.
   */
 object ShortestPath {
 
@@ -50,18 +59,15 @@ object ShortestPath {
   /** Candidate budget factor of [[kShortest]]'s spur-case hedge. */
   private val KShortestOverprovision = 2L
 
-  /** Columns the step-filtered variants ([[bfsFiltered]] /
-    * [[weightedCarry]]) expose on the per-expansion candidate frame the
-    * caller's `stepFilter` sees: full entity structs for the traversed
-    * edge / target node and accumulated entity-struct path arrays
-    * INCLUDING the candidate — the reference evaluates its filter lambda
-    * against exactly this state per expansion (`operator.cpp:2458`
+  /** Columns a [[PathFilter]]'s step sees on the per-expansion candidate
+    * frame: full entity structs for the traversed edge / target node; the
+    * accumulated entity-struct path arrays INCLUDING the candidate ride
+    * under the filter's `pathCols` — the reference evaluates its filter
+    * lambda against exactly this state per expansion (`operator.cpp:2458`
     * region). The caller supplies [[EStructCol]] on the edge frame and
-    * [[NStructCol]] on the node frame. */
+    * [[NStructCol]] on the filter's node frame. */
   val EStructCol = "__sp_estruct"
   val NStructCol = "__sp_nstruct"
-  val PathNodeStructsCol = "__sp_pnstructs"
-  val PathEdgeStructsCol = "__sp_pestructs"
 
   /** Direction-adjusted (src, dst, …) edge view. */
   def oriented(edges: DataFrame, dir: Expand.Direction): DataFrame = {
@@ -83,7 +89,8 @@ object ShortestPath {
   /** The traversal edges of an unweighted path search ([[bfsEdges]],
     * [[bfsAllPathsEdges]], [[kShortest]]). The distributed operators run on
     * [[frame]], pre-oriented (src, dst, `__sp_eid`); the driver-local probe
-    * ([[LocalSearch.tryCollect]]) captures the same rows under the cutover. */
+    * ([[LocalSearch.captureEdges]]) captures the same rows under the
+    * cutover. */
   sealed trait SearchEdges { def frame: DataFrame }
 
   /** A caller-built frame (filtered subgraphs, procedures): the probe
@@ -112,6 +119,170 @@ object ShortestPath {
   private def withEid(edges: DataFrame): DataFrame =
     if (edges.columns.contains("__sp_eid")) edges
     else edges.withColumn("__sp_eid", lit(0L))
+
+  /** A per-expansion filter over the accumulated path — the reference's
+    * 3-var filter lambda `(e, n, p | pred)` (`ast.hpp:1899`, evaluated per
+    * expansion in `operator.cpp:2458`). Path-dependent admissibility
+    * forces the entity-struct path arrays INTO the fixpoint (an
+    * after-the-fact reconstruction can't re-apply a predicate that pruned
+    * mid-search), so rows carry O(dist) structs — the same per-expansion
+    * cost the reference pays; only queries that ask for path-dependent
+    * filtering pay it. The searches that take one need [[EStructCol]] (the
+    * full edge entity struct, original `_src`/`_dst` kept for direction
+    * recovery) on their edge frame.
+    *
+    * @param nodes (`GraphState.IdCol`, [[NStructCol]]) full node structs
+    * @param step candidate frame → keep-predicate; sees [[EStructCol]],
+    *        [[NStructCol]], the accumulated path (including the candidate
+    *        edge/node) under the three `pathCols` names and, in the
+    *        weighted searches, the accumulated weight (incl. the candidate
+    *        edge) under [[WeightCol]]
+    * @param pathCols (nodestructs, edgestructs, len) column names the
+    *        accumulated path is exposed under (the caller picks its
+    *        frame-variable naming so its expression lowering resolves)
+    */
+  final case class PathFilter(
+      nodes: DataFrame,
+      step: DataFrame => Column,
+      pathCols: (String, String, String))
+
+  /** What a distributed search carries per (seed, node) besides its
+    * distances. */
+  private sealed trait Carry {
+    /** The representative path's id arrays, which break ties. */
+    def ids: Seq[String] = Seq(PathNodesCol, PathEdgesCol)
+    /** Entity-struct arrays: the representative's payload, never compared
+      * (struct fields like maps aren't orderable). */
+    def structs: Seq[String] = Nil
+  }
+
+  /** Distances only. */
+  private case object NoPath extends Carry {
+    override def ids: Seq[String] = Nil
+  }
+
+  /** The representative path's node-id / edge-id arrays. */
+  private case object IdPath extends Carry
+
+  /** Id arrays plus entity-struct arrays under `filter`, which prunes every
+    * expansion. `nodes` is (`__sp_nid`, [[NStructCol]]), persisted by
+    * [[carrying]]. */
+  private final case class StructPath(
+      filter: PathFilter, nodes: DataFrame, edgeStruct: DataType)
+      extends Carry {
+    override def structs: Seq[String] =
+      Seq(filter.pathCols._1, filter.pathCols._2)
+  }
+
+  /** Run a path-carrying `search` over `edges0`, persisted for its
+    * duration, with the carry `filter` asks for: the id arrays without one;
+    * with one, the entity structs too, over its node structs (also
+    * persisted), dropped from the result. */
+  private def carrying(edges0: DataFrame, filter: Option[PathFilter])(
+      search: (DataFrame, Carry) => DataFrame): DataFrame = {
+    val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
+    val res = filter match {
+      case None => search(edges, IdPath)
+      case Some(f) =>
+        val nodes = f.nodes
+          .select(col(GraphState.IdCol).as("__sp_nid"), col(NStructCol))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val carry = StructPath(f, nodes, edges.schema(EStructCol).dataType)
+        val out = search(edges, carry)
+        nodes.unpersist(blocking = false)
+        out.drop(carry.structs: _*)
+    }
+    edges.unpersist(blocking = false)
+    res
+  }
+
+  /** A search's level 0, checkpointed: every seed at itself with
+    * `measures` and the carry's one-node path. A filtered search starts
+    * only from seeds that have a node struct. */
+  private def start(
+      seeds: DataFrame, carry: Carry, measures: Seq[Column]): DataFrame = {
+    val ids =
+      if (carry.ids.isEmpty) Nil
+      else
+        Seq(
+          array(col(SeedCol)).as(PathNodesCol),
+          array().cast("array<long>").as(PathEdgesCol))
+    val (from, structs) = carry match {
+      case StructPath(f, nodes, edgeStruct) =>
+        val (pnCol, peCol, _) = f.pathCols
+        (seeds.join(nodes, col(SeedCol) === col("__sp_nid")),
+          Seq(
+            array(col(NStructCol)).as(pnCol),
+            array().cast(ArrayType(edgeStruct)).as(peCol)))
+      case _ => (seeds, Nil)
+    }
+    from
+      .select(
+        Seq(col(SeedCol), col(SeedCol).as(NodeCol)) ++ measures ++ ids ++
+          structs: _*)
+      .transform(Scratch.cp)
+  }
+
+  /** The expansion step of every distributed search: join the frontier
+    * with the edges (and, under a filter, the target's node struct),
+    * append the edge to the carried arrays, and keep the candidates the
+    * filter admits.
+    *
+    * @param measures the search's per-candidate columns over the joined
+    *        row (path counts, or the accumulated weight and hop count)
+    * @param len the candidate's hop count, the filter's path length
+    * @return (seed, node, measures…, carried arrays…) per candidate
+    */
+  private def expand(
+      frontier: DataFrame,
+      edges: DataFrame,
+      carry: Carry,
+      measures: Seq[Column],
+      len: Column): DataFrame = {
+    val joined = frontier.join(edges, col(NodeCol) === col(GraphState.SrcCol))
+    val ids =
+      if (carry.ids.isEmpty) Nil
+      else
+        Seq(
+          concat(col(PathNodesCol), array(col(GraphState.DstCol)))
+            .as(PathNodesCol),
+          concat(col(PathEdgesCol), array(col("__sp_eid")))
+            .as(PathEdgesCol))
+    val cols =
+      Seq(col(SeedCol), col(GraphState.DstCol).as(NodeCol)) ++ measures ++ ids
+    carry match {
+      case StructPath(f, nodes, _) =>
+        val (pnCol, peCol, plenCol) = f.pathCols
+        val cand = joined
+          .join(nodes, col(GraphState.DstCol) === col("__sp_nid"))
+          .select(
+            cols ++ Seq(
+              concat(col(pnCol), array(col(NStructCol))).as(pnCol),
+              concat(col(peCol), array(col(EStructCol))).as(peCol),
+              col(EStructCol),
+              col(NStructCol)): _*)
+          .withColumn(plenCol, len)
+        cand.filter(f.step(cand)).drop(plenCol, EStructCol, NStructCol)
+      case _ => joined.select(cols: _*)
+    }
+  }
+
+  /** The representative of a (seed, node) group: `min` over `key` then the
+    * id arrays — the lexicographically smallest path among the smallest
+    * keys — with the entity-struct arrays as `min_by` payload of the same
+    * order. Returns the aggregates and the columns that unpack them. */
+  private def representative(
+      carry: Carry, key: Seq[String]): (Seq[Column], Seq[Column]) = {
+    val order = key ++ carry.ids
+    val by = struct(order.map(col): _*)
+    val aggs =
+      (if (order.isEmpty) Nil else Seq(min(by).as("__sp_m"))) ++
+        (if (carry.structs.isEmpty) Nil
+         else Seq(min_by(struct(carry.structs.map(col): _*), by).as("__sp_ms")))
+    (aggs,
+      order.map(c => col("__sp_m")(c).as(c)) ++
+        carry.structs.map(c => col("__sp_ms")(c).as(c)))
+  }
 
   /** Multi-source BFS with shortest-path counting.
     *
@@ -148,19 +319,22 @@ object ShortestPath {
     // The limit-capped probe is bounded work and runs UNPERSISTED — the
     // common small case must not pay a cache materialization (A/B at
     // sf3: persist-first taxed every subcritical BFS ~2×)
-    LocalSearch.tryCollect(search, seeds, withWeight = false).foreach {
-      case (arr, s) =>
-        return LocalSearch.bfsDf(
-          seeds.sparkSession, arr, s, maxHops, withPaths)
-    }
-    bfsBeyondCutover(search.frame, seeds, maxHops, withPaths)
+    val seedRows = LocalSearch.collectSeeds(seeds)
+    for {
+      s <- seedRows
+      arr <- LocalSearch.captureEdges(
+        seeds.sparkSession, search, s, withWeight = false)
+    } return LocalSearch.bfsDf(seeds.sparkSession, arr, s, maxHops, withPaths)
+    bfsBeyondCutover(search.frame, seeds, seedRows, maxHops, withPaths)
   }
 
   /** [[bfsEdges]] once the driver-local probe has bailed: the seed-reachable
-    * capture, else the distributed fixpoint. `edges` carries `__sp_eid`. */
+    * capture when the seed probe fit (`seedRows`), else the distributed
+    * loop. `edges` carries `__sp_eid`. */
   private def bfsBeyondCutover(
       edges: DataFrame,
       seeds: DataFrame,
+      seedRows: Option[Seq[(Long, Double)]],
       maxHops: Int,
       withPaths: Boolean): DataFrame = {
     // only unpersist a cache THIS call created — a caller-persisted edge
@@ -171,254 +345,80 @@ object ShortestPath {
     // distributed fixpoint rounds (A/B at sf10: capturing against the
     // UNPERSISTED frame pays the edge derivation once per level, ~2×)
     if (!callerPersisted) edges.persist(StorageLevel.MEMORY_AND_DISK)
-    def unp(): Unit =
-      if (!callerPersisted) edges.unpersist(blocking = false)
     // small seeds + tight hop bound over a supercritical edge set:
     // collect only the seed-reachable subgraph (one pruned in-memory
     // scan per level) and run the exact driver pass on it — the 100 TB
     // case where a 6-hop neighborhood of one node is KB-sized inside a
     // TB-sized graph
-    LocalSearch.tryCollectReachable(edges, seeds, maxHops).foreach {
-      case (arr, s) =>
-        val res = LocalSearch.bfsDf(
-          edges.sparkSession, arr, s, maxHops, withPaths)
-        unp()
-        return res
-    }
-    if (withPaths) {
-      // Path-array carry vs DAG reconstruction: reconstruction keeps arrays
-      // out of the fixpoint shuffles but pays a SECOND fixpoint (layering,
-      // then a per-level rebuild). A/B at sf0.1 and sf1 (r8 judge run) the
-      // one-fixpoint array-carry wins at every measurable scale, so it is
-      // the default; reconstruction engages only past an edge-count cutover
-      // where per-round array shuffle volume dominates round overhead
-      // (same adaptive philosophy as LocalGraph's subcritical path).
-      val cutover = edges.sparkSession.conf
-        .getOption("spark.graft.bfs.reconstructEdges")
-        .map(_.toLong)
-        .getOrElse(32L * 1000 * 1000)
-      // count() doubles as the cache materializer the first join needs
-      val res =
-        if (edges.count() >= cutover) bfsOnePath(edges, seeds, maxHops)
-        else bfsCarryPaths(edges, seeds, maxHops)
-      unp()
-      return res
-    }
-
-    // Iterative driver loops MUST truncate lineage every round: the round-k
-    // plan references round-(k-1) twice (expand + anti-join), so without
-    // truncation the logical plan grows exponentially and the driver dies
-    // re-analyzing it long before any data is large. `localCheckpoint`
-    // materializes the round AND cuts the plan to a leaf — on a real cluster
-    // the same code runs with `checkpoint` to durable storage.
-    // `visited` is a UNION of per-level checkpointed leaves, never
-    // re-checkpointed: each level's rows are materialized exactly once
-    // (their own Scratch.cp). Re-checkpointing the growing union every
-    // round (the pre-r17 shape) copied every visited row once per
-    // remaining level — O(levels × |visited|) extra materialization for
-    // zero plan benefit (a union of k leaves is a linear, flat plan; the
-    // anti-join scans the same rows either way).
-    var levels = List(
-      seeds
-        .select(
-          col(SeedCol),
-          col(SeedCol).as(NodeCol),
-          lit(0L).as(DistCol),
-          lit(1L).as(NPathsCol))
-        .transform(Scratch.cp))
-    def visited: DataFrame = levels.reduce(_ unionByName _)
-    var frontier = levels.head
-    var k = 0L
-    var done = frontier.isEmpty
-    while (!done && k < maxHops) {
-      k += 1
-      // one BFS level: expand the frontier, fold path counts per node,
-      // drop nodes already reached at a smaller depth (first level wins —
-      // exactly the BFS layering the reference's cursor maintains)
-      val next = frontier
-        .join(edges, col(NodeCol) === col(GraphState.SrcCol))
-        .select(
-          col(SeedCol),
-          col(GraphState.DstCol).as(NodeCol),
-          col(NPathsCol))
-        .groupBy(SeedCol, NodeCol)
-        .agg(sum(NPathsCol).as(NPathsCol))
-        .withColumn(DistCol, lit(k))
-        .select(SeedCol, NodeCol, DistCol, NPathsCol)
-      val fresh = next
-        .join(visited, Seq(SeedCol, NodeCol), "left_anti")
-        .transform(Scratch.cp)
-      done = fresh.isEmpty
-      if (!done) {
-        levels ::= fresh
-        frontier = fresh
-      }
-    }
+    val reachable = for {
+      s <- seedRows
+      arr <- LocalSearch.tryCollectReachable(edges, s.map(_._1), maxHops)
+    } yield LocalSearch.bfsDf(edges.sparkSession, arr, s, maxHops, withPaths)
+    val res = reachable.getOrElse(
+      bfsLoop(edges, seeds, maxHops, if (withPaths) IdPath else NoPath))
     if (!callerPersisted) edges.unpersist(blocking = false)
-    visited
+    res
   }
 
-  /** One-fixpoint BFS that CARRIES the representative path arrays through
-    * every level's groupBy (`min` over the (node-seq, edge-seq) struct =
-    * lexicographically smallest path, propagated prefix-wise). Array
-    * comparisons ride the per-level shuffle, but there is only ONE fixpoint
-    * and one job per level — measured faster than [[bfsOnePath]] at every
-    * gate/sf1 scale (r8 A/B); the default below the reconstruct cutover.
-    * `edges` must already be persisted by the caller. */
-  private def bfsCarryPaths(
-      edges: DataFrame,
-      seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    // per-level checkpointed leaves, unioned lazily (see bfsEdges)
-    var levels = List(
-      seeds
-        .select(
-          col(SeedCol),
-          col(SeedCol).as(NodeCol),
-          lit(0L).as(DistCol),
-          lit(1L).as(NPathsCol),
-          array(col(SeedCol)).as(PathNodesCol),
-          array().cast("array<long>").as(PathEdgesCol))
-        .transform(Scratch.cp))
-    def visited: DataFrame = levels.reduce(_ unionByName _)
-    var frontier = levels.head
-    var k = 0L
-    var done = frontier.isEmpty
-    while (!done && k < maxHops) {
-      k += 1
-      val next = frontier
-        .join(edges, col(NodeCol) === col(GraphState.SrcCol))
-        .select(
-          col(SeedCol),
-          col(GraphState.DstCol).as(NodeCol),
-          col(NPathsCol),
-          concat(col(PathNodesCol), array(col(GraphState.DstCol)))
-            .as(PathNodesCol),
-          concat(col(PathEdgesCol), array(col("__sp_eid")))
-            .as(PathEdgesCol))
-        .groupBy(SeedCol, NodeCol)
-        .agg(
-          sum(NPathsCol).as(NPathsCol),
-          // one deterministic representative path: min over the
-          // (node-seq, edge-seq) struct = lexicographically smallest
-          min(struct(col(PathNodesCol), col(PathEdgesCol))).as("__sp_p"))
-        .withColumn(DistCol, lit(k))
-        .select(
-          col(SeedCol),
-          col(NodeCol),
-          col(DistCol),
-          col(NPathsCol),
-          col("__sp_p")(PathNodesCol).as(PathNodesCol),
-          col("__sp_p")(PathEdgesCol).as(PathEdgesCol))
-      val fresh = next
-        .join(visited, Seq(SeedCol, NodeCol), "left_anti")
-        .transform(Scratch.cp)
-      done = fresh.isEmpty
-      if (!done) {
-        levels ::= fresh
-        frontier = fresh
-      }
-    }
-    visited
-  }
-
-  /** Multi-source BFS with a PER-EXPANSION filter over the accumulated
-    * path — the reference's 3-var filter lambda `(e, n, p | pred)`
-    * (`ast.hpp:1899`, evaluated per expansion in `operator.cpp:2458`).
-    * Path-dependent admissibility forces the entity-struct path arrays
-    * INTO the fixpoint (an after-the-fact reconstruction can't re-apply a
-    * predicate that pruned mid-search), so rows carry O(dist) structs —
-    * the same per-expansion cost the reference pays; only queries that
-    * ask for path-dependent filtering pay it.
+  /** [[bfsEdges]] with representative paths, under a per-expansion
+    * [[PathFilter]]. Always distributed: no driver mirror evaluates the
+    * filter.
     *
-    * @param edges pre-oriented frame: [[GraphState.SrcCol]],
-    *        [[GraphState.DstCol]], `__sp_eid`, [[EStructCol]] (full edge
-    *        entity struct, original `_src`/`_dst` kept for direction
-    *        recovery)
-    * @param nodes (`GraphState.IdCol`, [[NStructCol]]) full node structs
-    * @param stepFilter candidate-frame → keep-predicate; sees
-    *        [[EStructCol]], [[NStructCol]], and the accumulated path
-    *        (including the candidate edge/node) under the three
-    *        `pathCols` names
-    * @param pathCols (nodestructs, edgestructs, len) column names the
-    *        accumulated path is exposed under (the caller picks its
-    *        frame-variable naming so its expression lowering resolves)
+    * @param edges0 pre-oriented frame: [[GraphState.SrcCol]],
+    *        [[GraphState.DstCol]], `__sp_eid`, [[EStructCol]]
     * @return (seed, node, dist, npaths, path-node ids, path-edge ids) per
     *         node reachable through admissible expansions only
     */
-  def bfsFiltered(
+  def bfsEdges(
       edges0: DataFrame,
-      nodes: DataFrame,
       seeds: DataFrame,
       maxHops: Int,
-      stepFilter: DataFrame => Column,
-      pathCols: (String, String, String)): DataFrame = {
-    val (pnCol, peCol, plenCol) = pathCols
-    val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodeStructs = nodes
-      .select(col(GraphState.IdCol).as("__sp_nid"), col(NStructCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eStructT = edges.schema(edges.schema.fieldIndex(EStructCol)).dataType
-    // per-level checkpointed leaves, unioned lazily (see bfsEdges)
-    var levels = List(
-      seeds
-        .join(nodeStructs, col(SeedCol) === col("__sp_nid"))
-        .select(
-          col(SeedCol),
-          col(SeedCol).as(NodeCol),
-          lit(0L).as(DistCol),
-          lit(1L).as(NPathsCol),
-          array(col(SeedCol)).as(PathNodesCol),
-          array().cast("array<long>").as(PathEdgesCol),
-          array(col(NStructCol)).as(pnCol),
-          array().cast(ArrayType(eStructT)).as(peCol))
-        .transform(Scratch.cp))
+      filter: PathFilter): DataFrame =
+    carrying(edges0, Some(filter))(bfsLoop(_, seeds, maxHops, _))
+
+  /** The level-synchronous BFS of every distributed unweighted search. Each
+    * level expands the frontier, folds path counts per node (and, with a
+    * carry, picks the lexicographically smallest (node-seq, edge-seq) as
+    * the representative, propagated prefix-wise), and drops nodes already
+    * reached at a smaller depth — first level wins, exactly the BFS
+    * layering the reference's cursor maintains. `edges` must already be
+    * persisted by the caller.
+    *
+    * Iterative driver loops MUST truncate lineage every round: the round-k
+    * plan references round-(k-1) twice (expand + anti-join), so without
+    * truncation the logical plan grows exponentially and the driver dies
+    * re-analyzing it long before any data is large. `localCheckpoint`
+    * materializes the round AND cuts the plan to a leaf — on a real cluster
+    * the same code runs with `checkpoint` to durable storage.
+    * `visited` is a UNION of per-level checkpointed leaves, never
+    * re-checkpointed: each level's rows are materialized exactly once
+    * (their own Scratch.cp). Re-checkpointing the growing union every
+    * round (the pre-r17 shape) copied every visited row once per
+    * remaining level — O(levels × |visited|) extra materialization for
+    * zero plan benefit (a union of k leaves is a linear, flat plan; the
+    * anti-join scans the same rows either way).
+    */
+  private def bfsLoop(
+      edges: DataFrame,
+      seeds: DataFrame,
+      maxHops: Int,
+      carry: Carry): DataFrame = {
+    val (pick, picked) = representative(carry, Nil)
+    var levels =
+      List(start(seeds, carry, Seq(lit(0L).as(DistCol), lit(1L).as(NPathsCol))))
     def visited: DataFrame = levels.reduce(_ unionByName _)
     var frontier = levels.head
     var k = 0L
     var done = frontier.isEmpty
     while (!done && k < maxHops) {
       k += 1
-      val cand = frontier
-        .join(edges, col(NodeCol) === col(GraphState.SrcCol))
-        .join(nodeStructs, col(GraphState.DstCol) === col("__sp_nid"))
-        .select(
-          col(SeedCol),
-          col(GraphState.DstCol).as("__sp_next"),
-          col(NPathsCol),
-          concat(col(PathNodesCol), array(col(GraphState.DstCol)))
-            .as(PathNodesCol),
-          concat(col(PathEdgesCol), array(col("__sp_eid")))
-            .as(PathEdgesCol),
-          concat(col(pnCol), array(col(NStructCol))).as(pnCol),
-          concat(col(peCol), array(col(EStructCol))).as(peCol),
-          col(EStructCol),
-          col(NStructCol))
-        .withColumn(plenCol, lit(k))
-      val next = cand
-        .filter(stepFilter(cand))
-        .withColumnRenamed("__sp_next", NodeCol)
+      val next = expand(frontier, edges, carry, Seq(col(NPathsCol)), lit(k))
         .groupBy(SeedCol, NodeCol)
-        .agg(
-          sum(NPathsCol).as(NPathsCol),
-          // one deterministic representative: min over the id arrays;
-          // its struct arrays ride as min_by payload (same ordering key,
-          // never themselves compared — struct fields like maps aren't
-          // orderable)
-          min(struct(col(PathNodesCol), col(PathEdgesCol))).as("__sp_p"),
-          min_by(
-            struct(col(pnCol), col(peCol)),
-            struct(col(PathNodesCol), col(PathEdgesCol))).as("__sp_ps"))
+        .agg(sum(NPathsCol).as(NPathsCol), pick: _*)
         .withColumn(DistCol, lit(k))
         .select(
-          col(SeedCol),
-          col(NodeCol),
-          col(DistCol),
-          col(NPathsCol),
-          col("__sp_p")(PathNodesCol).as(PathNodesCol),
-          col("__sp_p")(PathEdgesCol).as(PathEdgesCol),
-          col("__sp_ps")(pnCol).as(pnCol),
-          col("__sp_ps")(peCol).as(peCol))
+          Seq(col(SeedCol), col(NodeCol), col(DistCol), col(NPathsCol)) ++
+            picked: _*)
       val fresh = next
         .join(visited, Seq(SeedCol, NodeCol), "left_anti")
         .transform(Scratch.cp)
@@ -428,118 +428,7 @@ object ShortestPath {
         frontier = fresh
       }
     }
-    edges.unpersist(blocking = false)
-    nodeStructs.unpersist(blocking = false)
-    visited.drop(pnCol, peCol)
-  }
-
-  /** ONE deterministic (lexicographically smallest) shortest path per
-    * (seed, node), reconstructed from the shortest-path DAG — r6 ask #4:
-    *
-    *   1. plain [[bfsEdges]] computes the layering (no arrays in flight);
-    *   2. the DAG (u→w kept iff dist(w) = dist(u)+1, per seed — the same
-    *      build [[bfsAllPathsEdges]] uses) is walked level by level
-    *      carrying only a per-(seed, node) RANK: the rank of a node's
-    *      lexicographically smallest path among its seed's level. Because
-    *      prefix order is totally encoded by the rank, the best
-    *      predecessor is `min (rank(u), edge_id)` and the next level's
-    *      ranks come from a distributed sort over (seed, pred rank, node)
-    *      ([[Ranks.orderedIds]] — global ids are monotone within each
-    *      seed, which is all the min-comparison needs; a per-seed window
-    *      would funnel each seed's whole level through one partition) —
-    *      long comparisons in every shuffle, never array comparisons;
-    *   3. paths assemble with ONE append-join per level over the chosen
-    *      predecessor edges — one row per (seed, node), total shuffle
-    *      volume = output size, the lower bound.
-    *
-    * Identical output to [[bfsCarryPaths]] (min over (node-seq, edge-seq)
-    * propagates prefix-wise), without its per-level array shuffles — but
-    * with a second fixpoint, so it only wins past the reconstruct cutover.
-    * `edges` must already be persisted by the caller. */
-  private def bfsOnePath(
-      edges: DataFrame,
-      seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    val vis = bfsBeyondCutover(edges, seeds, maxHops, withPaths = false)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dag = vis
-      .select(col(SeedCol), col(NodeCol).as("__v"), col(DistCol).as("__dv"))
-      .join(edges, col("__v") === col(GraphState.SrcCol))
-      .join(
-        vis.select(
-          col(SeedCol).as("__s2"),
-          col(NodeCol).as("__w"),
-          col(DistCol).as("__dw")),
-        col(SeedCol) === col("__s2") &&
-          col(GraphState.DstCol) === col("__w") &&
-          col("__dw") === col("__dv") + lit(1L))
-      .select(col(SeedCol), col("__v"), col("__w"),
-        col("__sp_eid"), col("__dw"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxD = Option(vis.agg(max(DistCol)).first().get(0))
-      .map(_.asInstanceOf[Long].toInt)
-      .getOrElse(0)
-    // level 0: each seed is its own rank-0 path
-    var ranks = seeds
-      .select(col(SeedCol), col(SeedCol).as("__rn_node"), lit(0L).as("__rk"))
-      .transform(Scratch.cp)
-    var paths = seeds
-      .select(
-        col(SeedCol),
-        col(SeedCol).as(NodeCol),
-        lit(0L).as(DistCol),
-        array(col(SeedCol)).as(PathNodesCol),
-        array().cast("array<long>").as(PathEdgesCol))
-      .transform(Scratch.cp)
-    var out = paths
-    for (l <- 1 to maxD) {
-      // best predecessor per (seed, w): smallest (pred rank, edge id)
-      val best = dag
-        .filter(col("__dw") === l)
-        .join(
-          ranks.select(
-            col(SeedCol), col("__rn_node").as("__v"), col("__rk")),
-          Seq(SeedCol, "__v"))
-        .groupBy(SeedCol, "__w")
-        .agg(min(struct(col("__rk"), col("__sp_eid"), col("__v"))).as("__b"))
-        .select(
-          col(SeedCol), col("__w"),
-          col("__b")("__rk").as("__bk"),
-          col("__b")("__sp_eid").as("__be"),
-          col("__b")("__v").as("__bv"))
-        .transform(Scratch.cp)
-      // distributed rank: global 0-based ids over (seed, pred-rank, node)
-      // are monotone within each seed — no single-partition window
-      ranks = Ranks
-        .orderedIds(
-          best.select(col(SeedCol), col("__bk"), col("__w")),
-          "__rk", SeedCol, "__bk", "__w")
-        .select(col(SeedCol), col("__w").as("__rn_node"), col("__rk"))
-      paths = best
-        .join(
-          paths.select(
-            col(SeedCol), col(NodeCol).as("__bv"),
-            col(PathNodesCol), col(PathEdgesCol)),
-          Seq(SeedCol, "__bv"))
-        .select(
-          col(SeedCol),
-          col("__w").as(NodeCol),
-          lit(l.toLong).as(DistCol),
-          concat(col(PathNodesCol), array(col("__w"))).as(PathNodesCol),
-          concat(col(PathEdgesCol), array(col("__be"))).as(PathEdgesCol))
-        .transform(Scratch.cp)
-      out = out.unionByName(paths)
-    }
-    val res = out
-      .join(
-        vis.select(col(SeedCol), col(NodeCol), col(DistCol), col(NPathsCol)),
-        Seq(SeedCol, NodeCol, DistCol))
-      .select(
-        col(SeedCol), col(NodeCol), col(DistCol), col(NPathsCol),
-        col(PathNodesCol), col(PathEdgesCol))
-      .transform(Scratch.cp)
-    Seq(vis, dag).foreach(_.unpersist(blocking = false))
-    res
+    visited
   }
 
   /** ALL distinct shortest paths per (seed, node), each with its own
@@ -573,7 +462,12 @@ object ShortestPath {
     // BFS fixpoint AND the 2·maxD-job DAG walk (LocalSearch.allPathsDf
     // mirrors both phases bit-for-bit; bails to the distributed walk on
     // path explosion)
-    val captured = LocalSearch.tryCollect(search, seeds, withWeight = false)
+    val seedRows = LocalSearch.collectSeeds(seeds)
+    val captured = for {
+      s <- seedRows
+      arr <- LocalSearch.captureEdges(
+        seeds.sparkSession, search, s, withWeight = false)
+    } yield (arr, s)
     captured.foreach { case (arr, s) =>
       LocalSearch
         .allPathsDf(seeds.sparkSession, arr, s.map(_._1), maxHops)
@@ -586,7 +480,8 @@ object ShortestPath {
       .map { case (arr, s) =>
         LocalSearch.bfsDf(seeds.sparkSession, arr, s, maxHops, withPaths = false)
       }
-      .getOrElse(bfsBeyondCutover(edges, seeds, maxHops, withPaths = false))
+      .getOrElse(
+        bfsBeyondCutover(edges, seeds, seedRows, maxHops, withPaths = false))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Per-seed shortest-path DAG: u→w survives iff w sits exactly one BFS
     // level below u for that seed.
@@ -661,7 +556,7 @@ object ShortestPath {
       seeds: DataFrame,
       maxHops: Int): DataFrame = {
     val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val dist = weighted(null, seeds, edges, maxRounds = maxHops)
+    val dist = weighted(seeds, edges, maxRounds = maxHops)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eps = 1e-9
     val dag = dist
@@ -684,8 +579,7 @@ object ShortestPath {
         col(SeedCol),
         col(SeedCol).as(NodeCol),
         lit(0L).as(DistCol),
-        (if (seeds.columns.contains(InitWeightCol)) col(InitWeightCol)
-         else lit(0.0)).as(WeightCol),
+        seedWeight(seeds),
         array(col(SeedCol)).as(PathNodesCol),
         array().cast("array<long>").as(PathEdgesCol))
       .transform(Scratch.cp)
@@ -731,103 +625,44 @@ object ShortestPath {
     * Same input contract as [[weightedCarry]]. */
   def weightedAllCarry(
       edges0: DataFrame,
-      nodes: Option[DataFrame],
       seeds: DataFrame,
       maxRounds: Int,
-      stepFilter: Option[DataFrame => Column],
-      pathCols: (String, String, String)): DataFrame = {
-    val (pnCol, peCol, plenCol) = pathCols
-    val withStructs = stepFilter.isDefined
+      filter: PathFilter): DataFrame = {
     val eps = 1e-9
-    val e = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodeStructs = nodes.map(
-      _.select(col(GraphState.IdCol).as("__sp_nid"), col(NStructCol))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    def structCols0(seedStruct: Column): Seq[Column] =
-      if (!withStructs) Nil
-      else {
-        val eStructT = e.schema(e.schema.fieldIndex(EStructCol)).dataType
-        Seq(
-          array(seedStruct).as(pnCol),
-          array().cast(ArrayType(eStructT)).as(peCol))
+    carrying(edges0, Some(filter)) { (e, carry) =>
+      var dist =
+        start(seeds, carry, Seq(seedWeight(seeds), lit(0L).as(DistCol)))
+      var frontier = dist
+      var r = 0
+      var converged = frontier.isEmpty
+      while (!converged && r < maxRounds) {
+        r += 1
+        val cand = expand(frontier, e, carry, relaxed, col(DistCol))
+        // merge, then keep only paths tying their (seed, node)'s best
+        // admissible weight; a path is identified by its edge sequence
+        val all = dist
+          .unionByName(cand)
+          .dropDuplicates(SeedCol, NodeCol, PathEdgesCol)
+        val best = all
+          .groupBy(SeedCol, NodeCol)
+          .agg(min(WeightCol).as("__sp_bw"))
+        val keep = all
+          .join(best, Seq(SeedCol, NodeCol))
+          .filter(col(WeightCol) <= col("__sp_bw") + eps)
+          .drop("__sp_bw")
+          .transform(Scratch.cp)
+        val fresh = keep
+          .join(
+            dist.select(SeedCol, NodeCol, PathEdgesCol),
+            Seq(SeedCol, NodeCol, PathEdgesCol),
+            "left_anti")
+          .transform(Scratch.cp)
+        converged = fresh.isEmpty
+        dist = keep
+        frontier = fresh
       }
-    var dist = {
-      val s0 = nodeStructs
-        .map(ns => seeds.join(ns, col(SeedCol) === col("__sp_nid")))
-        .getOrElse(seeds)
-      s0.select(
-        Seq(
-          col(SeedCol),
-          col(SeedCol).as(NodeCol),
-          (if (seeds.columns.contains(InitWeightCol)) col(InitWeightCol)
-           else lit(0.0)).as(WeightCol),
-          lit(0L).as(DistCol),
-          array(col(SeedCol)).as(PathNodesCol),
-          array().cast("array<long>").as(PathEdgesCol)) ++
-          structCols0(col(NStructCol)): _*)
-        .transform(Scratch.cp)
+      dist
     }
-    var frontier = dist
-    var r = 0
-    var converged = frontier.isEmpty
-    while (!converged && r < maxRounds) {
-      r += 1
-      val candCols =
-        Seq(
-          col(SeedCol),
-          col(GraphState.DstCol).as("__sp_next"),
-          (col(WeightCol) + col(EdgeWeightCol)).as(WeightCol),
-          (col(DistCol) + 1L).as(DistCol),
-          concat(col(PathNodesCol), array(col(GraphState.DstCol)))
-            .as(PathNodesCol),
-          concat(col(PathEdgesCol), array(col("__sp_eid")))
-            .as(PathEdgesCol)) ++
-          (if (withStructs)
-             Seq(
-               concat(col(pnCol), array(col(NStructCol))).as(pnCol),
-               concat(col(peCol), array(col(EStructCol))).as(peCol),
-               col(EStructCol),
-               col(NStructCol))
-           else Nil)
-      val cand0raw = frontier
-        .join(e, col(NodeCol) === col(GraphState.SrcCol))
-      val cand0 = nodeStructs
-        .map(ns =>
-          cand0raw.join(ns, col(GraphState.DstCol) === col("__sp_nid")))
-        .getOrElse(cand0raw)
-        .select(candCols: _*)
-        .withColumn(plenCol, col(DistCol))
-      val cand = stepFilter
-        .map(f => cand0.filter(f(cand0)))
-        .getOrElse(cand0)
-        .withColumnRenamed("__sp_next", NodeCol)
-        .drop(plenCol, EStructCol, NStructCol)
-      // merge, then keep only paths tying their (seed, node)'s best
-      // admissible weight; a path is identified by its edge sequence
-      val all = dist
-        .unionByName(cand)
-        .dropDuplicates(SeedCol, NodeCol, PathEdgesCol)
-      val best = all
-        .groupBy(SeedCol, NodeCol)
-        .agg(min(WeightCol).as("__sp_bw"))
-      val keep = all
-        .join(best, Seq(SeedCol, NodeCol))
-        .filter(col(WeightCol) <= col("__sp_bw") + eps)
-        .drop("__sp_bw")
-        .transform(Scratch.cp)
-      val fresh = keep
-        .join(
-          dist.select(SeedCol, NodeCol, PathEdgesCol),
-          Seq(SeedCol, NodeCol, PathEdgesCol),
-          "left_anti")
-        .transform(Scratch.cp)
-      converged = fresh.isEmpty
-      dist = keep
-      frontier = fresh
-    }
-    e.unpersist(blocking = false)
-    nodeStructs.foreach(_.unpersist(blocking = false))
-    if (withStructs) dist.drop(pnCol, peCol) else dist
   }
 
   /** K shortest paths by hop count — the reference's lazily-evaluated Yen
@@ -918,7 +753,7 @@ object ShortestPath {
     // `out` = lazy union of the per-round checkpointed frontiers (each
     // round's rows are materialized once by their own Scratch.cp;
     // re-checkpointing the growing union per round copied every kept path
-    // O(rounds) times — see bfsEdges). UNLIKE the write-only BFS
+    // O(rounds) times — see bfsLoop). UNLIKE the write-only BFS
     // accumulators, kShortest READS its accumulator every round (budget
     // filter + saturation probe), so aggregating the leaf union per round
     // re-scanned and re-shuffled every prior round's paths each round —
@@ -1026,7 +861,6 @@ object ShortestPath {
     * @return (seed, node, weight-dist, hop count) per reachable node
     */
   def weighted(
-      g: GraphState,
       seeds: DataFrame,
       edges: DataFrame,
       maxRounds: Int): DataFrame = {
@@ -1039,40 +873,74 @@ object ShortestPath {
         return LocalSearch.weightedDf(edges.sparkSession, arr, s, maxRounds)
       }
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // DELTA relaxation: only rows improved last round join the edge frame
-    // (classic frontier Bellman–Ford), so per-round relax work scales with
-    // the frontier, not |visited| — at 100× data the steady-state frontier
-    // is a small fraction of the reached set. One action per round (the
-    // improved-delta checkpoint doubles as the convergence probe); the
-    // union+min merge only runs on non-final rounds.
-    // Same lineage discipline as [[bfsEdges]]: localCheckpoint per round.
-    var dist = seeds
-      .select(
-        col(SeedCol),
-        col(SeedCol).as(NodeCol),
-        (if (seeds.columns.contains(InitWeightCol)) col(InitWeightCol)
-         else lit(0.0)).as(WeightCol),
-        lit(0L).as(DistCol))
-      .transform(Scratch.cp)
+    val res = relax(e, seeds, maxRounds, NoPath)
+    e.unpersist(blocking = false)
+    res
+  }
+
+  /** [[weighted]] with representative-path carry and an optional
+    * per-expansion filter — the reference's
+    * `ExpandWeightedShortestPathCursor` with `filter_lambda_`
+    * (`operator.cpp:3000` region) binds the traversed edge list / path and
+    * may filter each expansion against the accumulated path and weight.
+    * The same relaxation rounds as [[weighted]], but rows carry the
+    * representative path's id arrays (and, when filtering, entity-struct
+    * arrays — path-dependent admissibility can't be replayed after the
+    * fact). Always distributed: no driver mirror carries paths.
+    *
+    * @param edges0 pre-oriented: [[GraphState.SrcCol]],
+    *        [[GraphState.DstCol]], [[EdgeWeightCol]], `__sp_eid`, and —
+    *        with a `filter` — [[EStructCol]]
+    * @return (seed, node, weight, dist, path-node ids, path-edge ids)
+    */
+  def weightedCarry(
+      edges0: DataFrame,
+      seeds: DataFrame,
+      maxRounds: Int,
+      filter: Option[PathFilter]): DataFrame =
+    carrying(edges0, filter)(relax(_, seeds, maxRounds, _))
+
+  /** Each seed's initial weight: [[InitWeightCol]] when the seeds frame has
+    * it, else 0. */
+  private def seedWeight(seeds: DataFrame): Column =
+    (if (seeds.columns.contains(InitWeightCol)) col(InitWeightCol)
+     else lit(0.0)).as(WeightCol)
+
+  /** A weighted candidate's measures: the accumulated weight and hop count
+    * through the joined edge. */
+  private def relaxed: Seq[Column] = Seq(
+    (col(WeightCol) + col(EdgeWeightCol)).as(WeightCol),
+    (col(DistCol) + 1L).as(DistCol))
+
+  /** The relaxation rounds of [[weighted]] and [[weightedCarry]]: DELTA
+    * relaxation — only rows improved last round join the edge frame
+    * (classic frontier Bellman–Ford), so per-round relax work scales with
+    * the frontier, not |visited| — at 100× data the steady-state frontier
+    * is a small fraction of the reached set. One action per round (the
+    * improved-delta checkpoint doubles as the convergence probe); the
+    * anti-join merge only runs on non-final rounds. Same lineage
+    * discipline as [[bfsLoop]]: localCheckpoint per round.
+    *
+    * Weight-tie determinism: within a round the smallest (weight, dist)
+    * wins, then the lexicographically smallest (node-seq, edge-seq);
+    * across rounds an equal (weight, dist) candidate never displaces the
+    * incumbent. `edges` must already be persisted by the caller. */
+  private def relax(
+      edges: DataFrame,
+      seeds: DataFrame,
+      maxRounds: Int,
+      carry: Carry): DataFrame = {
+    val (pick, picked) = representative(carry, Seq(WeightCol, DistCol))
+    var dist = start(seeds, carry, Seq(seedWeight(seeds), lit(0L).as(DistCol)))
     var frontier = dist
     var r = 0
     var converged = frontier.isEmpty
     while (!converged && r < maxRounds) {
       r += 1
-      val cand = frontier
-        .join(e, col(NodeCol) === col(GraphState.SrcCol))
-        .select(
-          col(SeedCol),
-          col(GraphState.DstCol).as(NodeCol),
-          (col(WeightCol) + col(EdgeWeightCol)).as(WeightCol),
-          (col(DistCol) + 1L).as(DistCol))
+      val cand = expand(frontier, edges, carry, relaxed, col(DistCol))
         .groupBy(SeedCol, NodeCol)
-        .agg(min(struct(col(WeightCol), col(DistCol))).as("__m"))
-        .select(
-          col(SeedCol),
-          col(NodeCol),
-          col("__m")(WeightCol).as(WeightCol),
-          col("__m")(DistCol).as(DistCol))
+        .agg(pick.head, pick.tail: _*)
+        .select(Seq(col(SeedCol), col(NodeCol)) ++ picked: _*)
       // strict improvements only — (weight, dist) lexicographic, matching
       // the reference's total_weight-then-depth ordering
       val improved = cand
@@ -1109,156 +977,6 @@ object ShortestPath {
         frontier = improved
       }
     }
-    e.unpersist(blocking = false)
     dist
-  }
-
-  /** [[weighted]] with representative-path carry and an optional
-    * per-expansion filter — the reference's
-    * `ExpandWeightedShortestPathCursor` with `filter_lambda_`
-    * (`operator.cpp:3000` region) binds the traversed edge list / path and
-    * may filter each expansion against the accumulated path and weight.
-    * The same delta-relaxation rounds as [[weighted]], but rows carry the
-    * representative path's id arrays (and, when filtering, entity-struct
-    * arrays — path-dependent admissibility can't be replayed after the
-    * fact). Weight-tie determinism: within a round the lexicographically
-    * smallest (node-seq, edge-seq) wins; across rounds an equal
-    * (weight, dist) candidate never displaces the incumbent.
-    *
-    * @param edges pre-oriented: [[GraphState.SrcCol]],
-    *        [[GraphState.DstCol]], [[EdgeWeightCol]], `__sp_eid`, and —
-    *        when `stepFilter` is set — [[EStructCol]]
-    * @param nodes (`GraphState.IdCol`, [[NStructCol]]); required with
-    *        `stepFilter`
-    * @param stepFilter sees [[EStructCol]], [[NStructCol]], the
-    *        accumulated path under `pathCols` names, and the accumulated
-    *        weight (incl. the candidate edge) under [[WeightCol]] — the
-    *        caller aliases its lambda's weight variable to that
-    * @return (seed, node, weight, dist, path-node ids, path-edge ids)
-    */
-  def weightedCarry(
-      edges0: DataFrame,
-      nodes: Option[DataFrame],
-      seeds: DataFrame,
-      maxRounds: Int,
-      stepFilter: Option[DataFrame => Column],
-      pathCols: (String, String, String)): DataFrame = {
-    val (pnCol, peCol, plenCol) = pathCols
-    val withStructs = stepFilter.isDefined
-    val e = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodeStructs = nodes.map(
-      _.select(col(GraphState.IdCol).as("__sp_nid"), col(NStructCol))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    def structCols0(seedStruct: Column): Seq[Column] =
-      if (!withStructs) Nil
-      else {
-        val eStructT = e.schema(e.schema.fieldIndex(EStructCol)).dataType
-        Seq(
-          array(seedStruct).as(pnCol),
-          array().cast(ArrayType(eStructT)).as(peCol))
-      }
-    var dist = {
-      val s0 = nodeStructs
-        .map(ns => seeds.join(ns, col(SeedCol) === col("__sp_nid")))
-        .getOrElse(seeds)
-      s0.select(
-        Seq(
-          col(SeedCol),
-          col(SeedCol).as(NodeCol),
-          (if (seeds.columns.contains(InitWeightCol)) col(InitWeightCol)
-           else lit(0.0)).as(WeightCol),
-          lit(0L).as(DistCol),
-          array(col(SeedCol)).as(PathNodesCol),
-          array().cast("array<long>").as(PathEdgesCol)) ++
-          structCols0(col(NStructCol)): _*)
-        .transform(Scratch.cp)
-    }
-    var frontier = dist
-    var r = 0
-    var converged = frontier.isEmpty
-    while (!converged && r < maxRounds) {
-      r += 1
-      val candCols =
-        Seq(
-          col(SeedCol),
-          col(GraphState.DstCol).as("__sp_next"),
-          (col(WeightCol) + col(EdgeWeightCol)).as(WeightCol),
-          (col(DistCol) + 1L).as(DistCol),
-          concat(col(PathNodesCol), array(col(GraphState.DstCol)))
-            .as(PathNodesCol),
-          concat(col(PathEdgesCol), array(col("__sp_eid")))
-            .as(PathEdgesCol)) ++
-          (if (withStructs)
-             Seq(
-               concat(col(pnCol), array(col(NStructCol))).as(pnCol),
-               concat(col(peCol), array(col(EStructCol))).as(peCol),
-               col(EStructCol),
-               col(NStructCol))
-           else Nil)
-      val cand0raw = frontier
-        .join(e, col(NodeCol) === col(GraphState.SrcCol))
-      val cand0 = nodeStructs
-        .map(ns => cand0raw.join(ns, col(GraphState.DstCol) === col("__sp_nid")))
-        .getOrElse(cand0raw)
-        .select(candCols: _*)
-        .withColumn(plenCol, col(DistCol))
-      val cand1 = stepFilter
-        .map(f => cand0.filter(f(cand0)))
-        .getOrElse(cand0)
-        .withColumnRenamed("__sp_next", NodeCol)
-      val ordKey = struct(
-        col(WeightCol), col(DistCol), col(PathNodesCol), col(PathEdgesCol))
-      val aggs =
-        Seq(min(ordKey).as("__m")) ++
-          (if (withStructs)
-             Seq(min_by(struct(col(pnCol), col(peCol)), ordKey).as("__ms"))
-           else Nil)
-      val cand = cand1
-        .groupBy(SeedCol, NodeCol)
-        .agg(aggs.head, aggs.tail: _*)
-        .select(
-          Seq(
-            col(SeedCol),
-            col(NodeCol),
-            col("__m")(WeightCol).as(WeightCol),
-            col("__m")(DistCol).as(DistCol),
-            col("__m")(PathNodesCol).as(PathNodesCol),
-            col("__m")(PathEdgesCol).as(PathEdgesCol)) ++
-            (if (withStructs)
-               Seq(
-                 col("__ms")(pnCol).as(pnCol),
-                 col("__ms")(peCol).as(peCol))
-             else Nil): _*)
-      val improved = cand
-        .join(
-          dist.select(
-            col(SeedCol),
-            col(NodeCol),
-            col(WeightCol).as("__old_w"),
-            col(DistCol).as("__old_d")),
-          Seq(SeedCol, NodeCol),
-          "left_outer")
-        .filter(
-          col("__old_w").isNull || col(WeightCol) < col("__old_w") ||
-            (col(WeightCol) === col("__old_w") &&
-              col(DistCol) < col("__old_d")))
-        .drop("__old_w", "__old_d")
-        .transform(Scratch.cp)
-      converged = improved.isEmpty
-      if (!converged) {
-        dist = dist
-          .join(
-            improved.select(SeedCol, NodeCol),
-            Seq(SeedCol, NodeCol),
-            "left_anti")
-          .unionByName(improved)
-          .transform(Scratch.cp)
-        frontier = improved
-      }
-    }
-    e.unpersist(blocking = false)
-    nodeStructs.foreach(_.unpersist(blocking = false))
-    (if (withStructs) dist.drop(pnCol, peCol) else dist)
-      .drop(plenCol)
   }
 }

@@ -117,7 +117,7 @@ object IgraphProcs {
     import spark.implicits._
     val seeds = Seq(source).toDF(ShortestPath.SeedCol)
     val dist = ShortestPath.weighted(
-      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
+      seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
     val hit = dist
       .filter(col(ShortestPath.NodeCol) === target)
       .select(col(ShortestPath.WeightCol))
@@ -140,7 +140,7 @@ object IgraphProcs {
     val ids = scopedNodes(ctx, sc).select(col(IdCol))
     val seeds = ids.select(col(IdCol).as(ShortestPath.SeedCol))
     val dist = ShortestPath.weighted(
-      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
+      seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
     ids.select(col(IdCol).as("src_node"))
       .crossJoin(ids.select(col(IdCol).as("dest_node")))
       .join(
@@ -186,7 +186,7 @@ object IgraphProcs {
     val edges = localEdges(ctx, weights, directed, "get_shortest_path", sc)
     val seeds = Seq(source).toDF(ShortestPath.SeedCol)
     val dist = ShortestPath.weighted(
-      ctx.g, seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
+      seeds, weightedEdges(ctx, weights, directed, sc), MaxRounds)
       .select(col(ShortestPath.NodeCol), col(ShortestPath.WeightCol))
       .collect()
       .map(r => r.getLong(0) -> r.getDouble(1))

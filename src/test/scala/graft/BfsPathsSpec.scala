@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Cutover, ShortestPath}
 
-/** BFS representative-path agreement across the adaptive dispatch: the
-  * driver-local mirror answers below `spark.graft.local.edges`; above it
-  * the one-fixpoint array-carry runs below
-  * `spark.graft.bfs.reconstructEdges` and the DAG reconstruction above.
-  * All three must return the same (seed, node, dist, npaths, path_nodes,
+/** BFS representative-path agreement across the cutover: the driver-local
+  * mirror answers below `spark.graft.local.edges`, the distributed BFS
+  * loop (which carries the path arrays through its levels) above it. Both
+  * must return the same (seed, node, dist, npaths, path_nodes,
   * path_edges) rows — the lexicographically-smallest-path tie-break
   * included.
   */
@@ -22,7 +21,7 @@ class BfsPathsSpec extends SparkTestBase {
     finally spark.conf.unset(key)
   }
 
-  /** Run withPaths BFS all three ways and assert identical row sets. */
+  /** Run withPaths BFS both ways and assert identical row sets. */
   private def run(
       edges: Seq[(Long, Long, Long)], // (eid, src, dst)
       seeds: Seq[Long],
@@ -40,14 +39,11 @@ class BfsPathsSpec extends SparkTestBase {
       .map(_.toSeq.map(String.valueOf).mkString("|"))
       .toSet
     val local = go()
-    val (carry, reconstruct) = withConf(Cutover.LocalEdgesKey, "0") {
-      (go(), withConf("spark.graft.bfs.reconstructEdges", "0")(go()))
-    }
+    val distributed = withConf(Cutover.LocalEdgesKey, "0")(go())
     def diff(a: Set[String], b: Set[String]) =
       s"\n  first-only=${a -- b}\n  second-only=${b -- a}"
-    assert(carry == reconstruct,
-      "carry/reconstruct disagree:" + diff(carry, reconstruct))
-    assert(local == carry, "local/carry disagree:" + diff(local, carry))
+    assert(local == distributed,
+      "local/distributed disagree:" + diff(local, distributed))
     local
   }
 

@@ -234,6 +234,75 @@ class CutoverSpec extends SparkTestBase {
     }
   }
 
+  /** Weight of edge `i` of a generated graph: 1, 2 or 3, so equal-weight
+    * ties are common. */
+  private def weightOf(i: Long): Double = (i * 7 % 3 + 1).toDouble
+
+  test("property: ShortestPath.weighted local equals distributed, and the " +
+    "path carry returns its rows along paths of matching length and weight") {
+    forAllGraphs { edges =>
+      val df = edgeFrame(edges).select(
+        col("src").as(GraphState.SrcCol),
+        col("dst").as(GraphState.DstCol),
+        col("edge_id").as("__sp_eid"),
+        (col("edge_id") * 7 % 3 + 1).cast("double")
+          .as(ShortestPath.EdgeWeightCol))
+      val hub = edges.map(e => math.max(e._1, e._2)).max
+      val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
+      def key(r: org.apache.spark.sql.Row) = (
+        r.getAs[Long](ShortestPath.SeedCol),
+        r.getAs[Long](ShortestPath.NodeCol),
+        r.getAs[Double](ShortestPath.WeightCol),
+        r.getAs[Long](ShortestPath.DistCol))
+      val (local, dist) = bothWays(
+        ShortestPath.weighted(sdf, df, 6).collect().map(key).toSet)
+      assert(local.exists(_._4 > 1))
+      assert(local == dist)
+      val carried =
+        ShortestPath.weightedCarry(df, sdf, 6, filter = None).collect()
+      assert(carried.map(key).toSet == dist)
+      carried.foreach { r =>
+        val (seed, node, w, d) = key(r)
+        val pn = r.getAs[scala.collection.Seq[Long]](ShortestPath.PathNodesCol)
+        val pe = r.getAs[scala.collection.Seq[Long]](ShortestPath.PathEdgesCol)
+        assert(pe.size == d && pn.size == d + 1, r)
+        assert(pn.head == seed && pn.last == node, r)
+        assert(pe.map(weightOf).sum == w, r)
+        assert(
+          pe.indices.forall(i => edges(pe(i).toInt) == (pn(i), pn(i + 1))), r)
+      }
+    }
+  }
+
+  test("property: a node-only step filter returns the bfsEdges rows over " +
+    "the edges into passing nodes") {
+    forAllGraphs { edges =>
+      val df = edgeFrame(edges).select(
+        col("src").as(GraphState.SrcCol),
+        col("dst").as(GraphState.DstCol),
+        col("edge_id").as("__sp_eid"),
+        struct(col("edge_id").as("id")).as(ShortestPath.EStructCol))
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+        .toDF(GraphState.IdCol)
+        .withColumn(
+          ShortestPath.NStructCol, struct(col(GraphState.IdCol).as("id")))
+      val hub = edges.map(e => math.max(e._1, e._2)).max
+      val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
+      val even = ShortestPath.PathFilter(
+        nodes,
+        _ => col(ShortestPath.NStructCol)("id") % 2 === 0,
+        ("p_nodestructs", "p_edgestructs", "p_len"))
+      val filtered =
+        distributed(rowSet(ShortestPath.bfsEdges(df, sdf, 16, even)))
+      val plain = distributed(rowSet(ShortestPath.bfsEdges(
+        df.filter(col(GraphState.DstCol) % 2 === 0)
+          .drop(ShortestPath.EStructCol),
+        sdf, 16, withPaths = true)))
+      assert(filtered.exists(_(2) != "0"))
+      assert(filtered == plain)
+    }
+  }
+
   /** A version whose one edge type "E" holds `edges`; node ids are the
     * endpoints plus one isolated node. */
   private def graphOf(edges: Seq[(Long, Long)]): GraphState = {

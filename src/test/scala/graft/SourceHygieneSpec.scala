@@ -32,7 +32,7 @@ class SourceHygieneSpec extends AnyFunSuite {
     .map(Files.readString)
     .toList
 
-  test("src/main reads exactly the five documented spark.graft keys") {
+  test("src/main reads exactly the four documented spark.graft keys") {
     // README "Configuration": every other size threshold is a named
     // constant at its use site, and the cutover ceilings are bounded by
     // spark.graft.local.edges through graft.operators.Cutover
@@ -40,7 +40,6 @@ class SourceHygieneSpec extends AnyFunSuite {
       sources("src/main").flatMap(re.findAllMatchIn(_).map(_.group(1))).toSet
     assert(literals("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r) == Set(
       "spark.graft.local.edges",
-      "spark.graft.bfs.reconstructEdges",
       "spark.graft.mutation.broadcastKeys",
       "spark.graft.adjacency.maxDeltas",
       "spark.graft.index.dir"))
