@@ -4106,6 +4106,17 @@ final class Planner(
           Seq(GraphState.IdCol, GraphState.SrcCol, GraphState.DstCol),
           "left_semi"))
 
+    // the (seed, target) pairs a bound destination reads: the searches
+    // that can stop once these are settled take them
+    val targets =
+      if (dstBound)
+        Some(cur0.df
+          .select(
+            Frames.id(srcName).as(ShortestPath.SeedCol),
+            Frames.id(dstName).as(ShortestPath.NodeCol))
+          .distinct())
+      else None
+
     // KShortestPathsCursor (operator.cpp:3716): k shortest paths by hop
     // count, via [[ShortestPath.kShortest]] — a k-truncated BFS whose
     // frontier is bounded by k per (seed, node) (the distributed Yen
@@ -4122,17 +4133,9 @@ final class Planner(
       val kSeeds = cur0.df
         .select(Frames.id(srcName).as(ShortestPath.SeedCol))
         .distinct()
-      val kTargets =
-        if (dstBound)
-          Some(cur0.df
-            .select(
-              Frames.id(srcName).as(ShortestPath.SeedCol),
-              Frames.id(dstName).as(ShortestPath.NodeCol))
-            .distinct())
-        else None
       val walks = ShortestPath.kShortest(
         searchEdges(edgesOv, rel.types, dir), kSeeds, k, math.max(minH, 1),
-        hiB, kTargets)
+        hiB, targets)
       var joined = cur0.df
         .join(walks, Frames.id(srcName) === col(ShortestPath.SeedCol))
         .drop(ShortestPath.SeedCol)
@@ -4255,7 +4258,23 @@ final class Planner(
     // the seed set reflects the statement's filters, carrying the arrays
     // through the (now small) BFS is strictly cheaper than re-deriving
     // them in extra rounds.
+
+    // a positive integer weight literal (`(r, v | 1)`) weighs every path
+    // by its hop count, so the all-shortest search is the unweighted one.
+    // `| 0` ties walks of every length and a fractional constant meets the
+    // weighted DAG test's tolerance, so neither takes this path.
+    val unitWeight = rel.weight.collect {
+      case (_, _, Lit(c: Long)) if c > 0 && pathLambda.isEmpty => c
+    }
     val res: DataFrame = lhShortest.getOrElse(rel.mode match {
+      case "ALLSHORTEST" if unitWeight.isDefined =>
+        // the seed weight is 0: the lambda reads no node
+        ShortestPath
+          .bfsAllPathsEdges(
+            searchEdges(edgesOv, rel.types, dir), seeds, maxH, targets)
+          .withColumn(
+            ShortestPath.WeightCol,
+            (col(ShortestPath.DistCol) * unitWeight.get).cast("double"))
       // inline `*allShortest (e, n | w) total`: ALL minimum-WEIGHT paths
       // (the reference's ExpandAllShortestPathsCursor is weighted)
       case "ALLSHORTEST" if rel.weight.isDefined =>
@@ -4316,9 +4335,10 @@ final class Planner(
         val search = searchEdges(edgesOv, rel.types, dir)
         val wantPaths = part.pathVar.isDefined || rel.variable.isDefined
         if (all && wantPaths)
-          ShortestPath.bfsAllPathsEdges(search, seeds, maxH)
+          ShortestPath.bfsAllPathsEdges(search, seeds, maxH, targets)
         else
-          ShortestPath.bfsEdges(search, seeds, maxH, withPaths = wantPaths)
+          ShortestPath.bfsEdges(
+            search, seeds, maxH, withPaths = wantPaths, targets)
     })
 
     var joined = cur0.df

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.GraphState
 
@@ -18,6 +19,13 @@ import graft.core.GraphState
   * (`operator.cpp:2458,3000`) are single-threaded — this IS its
   * execution model, applied when the data provably fits; above the
   * thresholds the distributed fixpoints run unchanged.
+  *
+  * The BFS family has a middle placement ([[capture]]): when the full
+  * edge set is above the cap, [[captureDag]] collects only the search's
+  * BFS-DAG edges, one Spark job per level over edge blocks cached once,
+  * stopping each seed once its bound targets are settled (the reference's
+  * `STShortestPathCursor` stops at the sink too), and the same driver
+  * kernels run on those edges.
   *
   * Determinism parity (checked by BfsPathsSpec, CutoverSpec's local ==
   * distributed properties and the oracle gates):
@@ -42,17 +50,10 @@ private[graft] object LocalSearch {
     * [[allPathsDf]]): above it the distributed walk runs. */
   private val MaxPaths = 2000000L
 
-  /** Largest hop bound the seed-reachable capture accepts. */
-  private val CaptureHops = 32
-
-  /** Largest per-level frontier the seed-reachable capture accepts. */
-  private val CaptureFrontier = 1024
-
   /** The search's (seed, initial weight) rows when there are at most
     * min([[MaxSeeds]], `spark.graft.local.edges`) of them, else None: the
-    * one seed probe of a search, whose rows both edge captures
-    * ([[captureEdges]], [[tryCollectReachable]]) take. Seed rows are read
-    * via column 0 (SeedCol); weighted searches' seeds may carry
+    * seed probe of a search, whose rows its edge captures take. Seed rows
+    * are read via column 0 (SeedCol); weighted searches' seeds may carry
     * [[ShortestPath.InitWeightCol]]. */
   def collectSeeds(seeds: DataFrame): Option[Seq[(Long, Double)]] = {
     val seedSel =
@@ -90,8 +91,7 @@ private[graft] object LocalSearch {
       edges: ShortestPath.SearchEdges,
       seeds: Seq[(Long, Double)],
       withWeight: Boolean): Option[Array[(Long, Long, Long, Double)]] = {
-    val cap = Cutover.cap(
-      spark, if (seeds.isEmpty) Long.MaxValue else MaxWork / seeds.length)
+    val cap = workCap(spark, seeds.length)
     edges match {
       case ShortestPath.TypedEdges(g, types, dir) =>
         val perTriple = if (dir == Expand.Both) 2L else 1L
@@ -121,41 +121,196 @@ private[graft] object LocalSearch {
     }
   }
 
-  /** Seed-reachable capture: when the FULL edge set is supercritical but
-    * the seed set is small and the hop bound tight, the subgraph a
-    * bounded BFS can touch is usually tiny — collect it with one
-    * frontier-pruned scan per level (`src IN frontier` pushes into the
-    * cached columnar scan, no shuffle, no checkpoint) and hand the exact
-    * driver BFS that subgraph. Identical results by construction: the
-    * capture gathers every out-edge of every node within maxHops-1, which
-    * is precisely the edge set a maxHops-bounded traversal can use.
-    * Bails (→ distributed fixpoint) when a frontier exceeds
-    * [[CaptureFrontier]] (hub explosion), the collected edges exceed the
-    * [[Cutover]] cap, or the hop bound is above [[CaptureHops]].
-    * `seeds` are the rows of the search's seed probe ([[collectSeeds]]). */
-  def tryCollectReachable(
-      edges: DataFrame,
-      seeds: Seq[Long],
-      maxHops: Int): Option[Array[(Long, Long, Long, Double)]] = {
-    if (maxHops > CaptureHops) return None
-    val cap = Cutover.cap(edges.sparkSession)
-    val seedIds = seeds.distinct
-    val sel = edges.select(
-      col("__sp_eid"), col(GraphState.SrcCol), col(GraphState.DstCol))
-    val acc = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    val reached = mutable.HashSet.empty[Long] ++ seedIds
-    var frontier: Seq[Long] = seedIds
-    var hop = 0
-    while (frontier.nonEmpty && hop < maxHops) {
-      hop += 1
-      if (frontier.size > CaptureFrontier) return None
-      val out = sel.filter(col(GraphState.SrcCol).isin(frontier: _*))
-      val batch = Cutover.within(out, cap - acc.size).getOrElse(return None)
-      acc ++= batch.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), 0.0))
-      frontier = batch.map(_.getLong(2)).distinct.filterNot(reached)
-      reached ++= frontier
+  /** A search's edges on the driver, and the levels each seed's rows are
+    * exact to: `edges` hold every edge the BFS from `seed` crosses from
+    * its level k - 1 into its level k, for every k <= `hops(seed)`. */
+  final case class Capture(
+      edges: Array[(Long, Long, Long, Double)],
+      seeds: Seq[(Long, Double)],
+      hops: Long => Int)
+
+  /** The driver capture of a BFS-family search ([[ShortestPath.bfsEdges]],
+    * [[ShortestPath.bfsAllPathsEdges]]), in placement order: the full
+    * capture ([[captureEdges]]; every seed to `maxHops`), else the DAG
+    * capture ([[captureDag]]; every seed to its stop level), else None —
+    * the distributed loop runs. One probe ([[collectPairs]]): the
+    * (SeedCol, NodeCol) `targets` of a search whose destination is bound,
+    * or its seeds. */
+  def capture(
+      search: ShortestPath.SearchEdges,
+      seeds: DataFrame,
+      targets: Option[DataFrame],
+      maxHops: Int): Option[Capture] = {
+    val spark = seeds.sparkSession
+    collectPairs(seeds, targets).flatMap { case (s, t) =>
+      captureEdges(spark, search, s, withWeight = false)
+        .map(Capture(_, s, _ => maxHops))
+        .orElse(captureDag(
+          search.frame, s, t, maxHops, workCap(spark, s.length)))
     }
-    Some(acc.toArray)
+  }
+
+  /** The search's probe: when there are at most `Cutover.cap` `targets`
+    * pairs, their rows — the seeds are the pairs' first column, bailing
+    * above [[MaxSeeds]] like [[collectSeeds]], and each seed's targets are
+    * where its DAG capture may stop; otherwise [[collectSeeds]], with no
+    * targets. */
+  private def collectPairs(
+      seeds: DataFrame,
+      targets: Option[DataFrame])
+    : Option[(Seq[(Long, Double)], Map[Long, Set[Long]])] =
+    targets.flatMap(t =>
+      Cutover.collect(
+        t.select(col(ShortestPath.SeedCol), col(ShortestPath.NodeCol))
+          .na.drop())) match {
+      case Some(rows) =>
+        val pairs = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val ids = pairs.map(_._1).distinct
+        Option.when(
+          Cutover.fits(ids.length, Cutover.cap(seeds.sparkSession, MaxSeeds)))(
+          (ids.toSeq.map((_, 0.0)),
+            pairs.groupMap(_._1)(_._2).map { case (s, ts) => s -> ts.toSet }))
+      case None => collectSeeds(seeds).map((_, Map.empty))
+    }
+
+  /** The edge cap of a search from `seeds` seeds: seeds × edges is
+    * bounded by [[MaxWork]]. */
+  private def workCap(spark: SparkSession, seeds: Int): Long =
+    Cutover.cap(spark, if (seeds == 0) Long.MaxValue else MaxWork / seeds)
+
+  /** One edge partition of a DAG capture, as primitive arrays. */
+  private final case class EdgeBlock(
+      src: Array[Long], dst: Array[Long], eid: Array[Long])
+
+  private def edgeBlock(rows: Iterator[Row]): EdgeBlock = {
+    val (s, d, e) =
+      (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Long])
+    rows.foreach { r => s += r.getLong(0); d += r.getLong(1); e += r.getLong(2) }
+    EdgeBlock(s.result(), d.result(), e.result())
+  }
+
+  /** One DAG-capture level as the executors see it: the union of the
+    * searching seeds' frontiers, sorted; per frontier node, the indices of
+    * the seeds whose frontier holds it; per seed index, its visited ids,
+    * sorted. */
+  private final case class DagLevel(
+      front: Array[Long],
+      frontSeeds: Array[Array[Int]],
+      visited: Array[Array[Long]])
+
+  /** The rows of `b` (partition `pid`) that leave a seed's frontier for a
+    * node that seed has not visited, keyed by (pid, row index); stops
+    * after `cap` + 1 rows. */
+  private def dagEdges(
+      pid: Int, b: EdgeBlock, l: DagLevel, cap: Long): (Array[Long], EdgeBlock) = {
+    val keys = Array.newBuilder[Long]
+    val (s, d, e) =
+      (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Long])
+    var n = 0L
+    var i = 0
+    while (i < b.src.length && n <= cap) {
+      val f = java.util.Arrays.binarySearch(l.front, b.src(i))
+      if (f >= 0 && l.frontSeeds(f).exists(si =>
+          java.util.Arrays.binarySearch(l.visited(si), b.dst(i)) < 0)) {
+        keys += (pid.toLong << 32) | i
+        s += b.src(i); d += b.dst(i); e += b.eid(i)
+        n += 1
+      }
+      i += 1
+    }
+    (keys.result(), EdgeBlock(s.result(), d.result(), e.result()))
+  }
+
+  /** DAG capture: when the full edge set is above the cutover, collect
+    * only the search's BFS-DAG edges, one Spark job per level. The
+    * oriented (src, dst, `__sp_eid`) rows of `edges` are cached once as
+    * primitive blocks, in at most default-parallelism partitions; each
+    * level broadcasts every searching seed's frontier and visited ids, and
+    * each partition returns its edges from a frontier node into a node
+    * that seed has not visited. The driver merges them and advances the
+    * visited sets — no Catalyst plan, shuffle or checkpoint per level.
+    *
+    * A seed stops once all its `targets` are settled, its frontier
+    * empties, or it reaches `maxHops`. The rows are exact: the edges a
+    * seed's BFS sums `npaths` over and takes its representative from are
+    * exactly its DAG edges, and the other seeds' edges out of its frontier
+    * lead into nodes it has visited, which the kernels skip. Past a seed's
+    * stop level its rows may be missing, so [[Capture.hops]] cuts it
+    * there.
+    *
+    * None once more than `cap` rows are collected (checked per partition
+    * too, so the driver holds at most (partitions + 1) × (`cap` + 1)
+    * rows). */
+  def captureDag(
+      edges: DataFrame,
+      seeds: Seq[(Long, Double)],
+      targets: Map[Long, Set[Long]],
+      maxHops: Int,
+      cap: Long): Option[Capture] = {
+    if (cap <= 0) return None
+    val ids = seeds.map(_._1).distinct.toArray
+    val visited = ids.map(s => mutable.HashSet(s))
+    val frontier = ids.map(s => Array(s))
+    val levels = new Array[Int](ids.length)
+    def searching(i: Int) =
+      frontier(i).nonEmpty && levels(i) < maxHops &&
+        !targets.get(ids(i)).exists(_.forall(visited(i)))
+    def result(rows: Iterable[(Long, Long, Long, Double)]) = {
+      val stop = ids.zip(levels).toMap
+      Some(Capture(rows.toArray, seeds, s => stop.getOrElse(s, 0)))
+    }
+    var active = ids.indices.filter(searching)
+    if (active.isEmpty) return result(Nil)
+    val sc = edges.sparkSession.sparkContext
+    val blocks = VertexResident
+      .atMostParallelism(
+        edges
+          .select(
+            col(GraphState.SrcCol), col(GraphState.DstCol), col("__sp_eid"))
+          .rdd)
+      .mapPartitions(rows => Iterator(edgeBlock(rows)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val taken = mutable.HashSet.empty[Long]
+    val acc = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
+    try {
+      while (active.nonEmpty) {
+        val bySeed = active.flatMap(i => frontier(i).map(_ -> i)).groupMap(_._1)(_._2)
+        val front = bySeed.keys.toArray.sorted
+        val on = active.toSet
+        val level = sc.broadcast(DagLevel(
+          front,
+          front.map(v => bySeed(v).toArray),
+          ids.indices.map(i =>
+            if (on(i)) visited(i).toArray.sorted
+            else Array.emptyLongArray).toArray))
+        val batches =
+          try
+            blocks
+              .mapPartitionsWithIndex((pid, bs) =>
+                bs.map(dagEdges(pid, _, level.value, cap)))
+              .collect()
+          finally level.destroy()
+        if (batches.exists(_._1.length > cap)) return None
+        val out = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
+        batches.foreach { case (keys, b) =>
+          keys.indices.foreach { j =>
+            if (taken.add(keys(j))) acc += ((b.eid(j), b.src(j), b.dst(j), 0.0))
+            out.getOrElseUpdate(b.src(j), mutable.ArrayBuffer.empty) += b.dst(j)
+          }
+        }
+        if (acc.size > cap) return None
+        active.foreach { i =>
+          val next = mutable.HashSet.empty[Long]
+          frontier(i).foreach(u =>
+            out.get(u).foreach(_.foreach(v => if (!visited(i)(v)) next += v)))
+          visited(i) ++= next
+          frontier(i) = next.toArray
+          levels(i) += 1
+        }
+        active = active.filter(searching)
+      }
+      result(acc)
+    } finally blocks.unpersist(blocking = false)
   }
 
   private val seqOrd: Ordering[Seq[Long]] =
@@ -248,12 +403,13 @@ private[graft] object LocalSearch {
           ShortestPath.PathEdgesCol, ArrayType(LongType), nullable = false)))))
   }
 
-  /** Multi-source BFS mirroring [[ShortestPath.bfsEdges]]. */
+  /** Multi-source BFS mirroring [[ShortestPath.bfsEdges]], each seed to
+    * `hops(seed)` levels. */
   def bfsDf(
       spark: SparkSession,
       edges: Array[(Long, Long, Long, Double)],
       seeds: Seq[(Long, Double)],
-      maxHops: Int,
+      hops: Long => Int,
       withPaths: Boolean): DataFrame = {
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Long, Long)]]
     edges.foreach { case (eid, s, d, _) =>
@@ -269,6 +425,7 @@ private[graft] object LocalSearch {
       var level = Seq(seed)
       var k = 0L
       out += mkRow(seed, seed, 0L, 1L, repr(seed), withPaths)
+      val maxHops = hops(seed)
       while (level.nonEmpty && k < maxHops) {
         k += 1
         val nPaths = mutable.HashMap.empty[Long, Long]
@@ -338,12 +495,12 @@ private[graft] object LocalSearch {
     * [[MaxPaths]] — path explosion
     * stays on the distributed walk. Replaces ~2·maxD fixpoint jobs with
     * zero for the common subcritical case (the reference's cursor is
-    * single-threaded here too). */
+    * single-threaded here too). Each seed searches `hops(seed)` levels. */
   def allPathsDf(
       spark: SparkSession,
       edges: Array[(Long, Long, Long, Double)],
       seeds: Seq[Long],
-      maxHops: Int): Option[DataFrame] = {
+      hops: Long => Int): Option[DataFrame] = {
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Long, Long)]]
     edges.foreach { case (eid, s, d, _) =>
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((eid, d))
@@ -362,6 +519,7 @@ private[graft] object LocalSearch {
       var k = 0L
       total += 1L
       if (total > MaxPaths) return None
+      val maxHops = hops(seed)
       while (level.nonEmpty && k < maxHops) {
         k += 1
         val nPaths = mutable.HashMap.empty[Long, Long]

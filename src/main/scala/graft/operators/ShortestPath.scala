@@ -174,27 +174,34 @@ object ShortestPath {
       Seq(filter.pathCols._1, filter.pathCols._2)
   }
 
+  /** `body` over `edges`, persisted for its duration. Only a cache this
+    * call made is dropped: a frame its caller persisted stays cached. */
+  private def persisted[T](edges: DataFrame)(body: DataFrame => T): T = {
+    val callerPersisted = edges.storageLevel != StorageLevel.NONE
+    if (!callerPersisted) edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(edges)
+    finally if (!callerPersisted) edges.unpersist(blocking = false)
+  }
+
   /** Run a path-carrying `search` over `edges0`, persisted for its
     * duration, with the carry `filter` asks for: the id arrays without one;
     * with one, the entity structs too, over its node structs (also
     * persisted), dropped from the result. */
   private def carrying(edges0: DataFrame, filter: Option[PathFilter])(
-      search: (DataFrame, Carry) => DataFrame): DataFrame = {
-    val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val res = filter match {
-      case None => search(edges, IdPath)
-      case Some(f) =>
-        val nodes = f.nodes
-          .select(col(GraphState.IdCol).as("__sp_nid"), col(NStructCol))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val carry = StructPath(f, nodes, edges.schema(EStructCol).dataType)
-        val out = search(edges, carry)
-        nodes.unpersist(blocking = false)
-        out.drop(carry.structs: _*)
+      search: (DataFrame, Carry) => DataFrame): DataFrame =
+    persisted(edges0) { edges =>
+      filter match {
+        case None => search(edges, IdPath)
+        case Some(f) =>
+          val nodes = f.nodes
+            .select(col(GraphState.IdCol).as("__sp_nid"), col(NStructCol))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val carry = StructPath(f, nodes, edges.schema(EStructCol).dataType)
+          val out = search(edges, carry)
+          nodes.unpersist(blocking = false)
+          out.drop(carry.structs: _*)
+      }
     }
-    edges.unpersist(blocking = false)
-    res
-  }
 
   /** A search's level 0, checkpointed: every seed at itself with
     * `measures` and the carry's one-node path. A filtered search starts
@@ -306,59 +313,35 @@ object ShortestPath {
       seeds: DataFrame,
       maxHops: Int,
       withPaths: Boolean = false): DataFrame =
-    bfsEdges(FrameEdges(withEid(edges0)), seeds, maxHops, withPaths)
+    bfsEdges(FrameEdges(withEid(edges0)), seeds, maxHops, withPaths, None)
 
-  /** [[bfsEdges]] over either capture source ([[SearchEdges]]). */
+  /** [[bfsEdges]] over either capture source ([[SearchEdges]]), in three
+    * placements ([[LocalSearch.capture]]): the driver BFS over the full
+    * edge set when it fits the cutover; else the driver BFS over the
+    * search's BFS-DAG edges, collected one Spark job per level
+    * ([[LocalSearch.captureDag]]); else the distributed loop.
+    *
+    * @param targets the (SeedCol, NodeCol) pairs a caller with a bound
+    *        destination reads: the DAG capture stops a seed once its
+    *        targets are settled, so only its rows up to that level are
+    *        returned (all of them exact); the other placements ignore it
+    */
   def bfsEdges(
       search: SearchEdges,
       seeds: DataFrame,
       maxHops: Int,
-      withPaths: Boolean): DataFrame = {
-    // subcritical + small seed set: one driver pass replaces the whole
-    // fixpoint (LocalSearch header; determinism rules mirrored exactly).
-    // The limit-capped probe is bounded work and runs UNPERSISTED — the
-    // common small case must not pay a cache materialization (A/B at
-    // sf3: persist-first taxed every subcritical BFS ~2×)
-    val seedRows = LocalSearch.collectSeeds(seeds)
-    for {
-      s <- seedRows
-      arr <- LocalSearch.captureEdges(
-        seeds.sparkSession, search, s, withWeight = false)
-    } return LocalSearch.bfsDf(seeds.sparkSession, arr, s, maxHops, withPaths)
-    bfsBeyondCutover(search.frame, seeds, seedRows, maxHops, withPaths)
-  }
-
-  /** [[bfsEdges]] once the driver-local probe has bailed: the seed-reachable
-    * capture when the seed probe fit (`seedRows`), else the distributed
-    * loop. `edges` carries `__sp_eid`. */
-  private def bfsBeyondCutover(
-      edges: DataFrame,
-      seeds: DataFrame,
-      seedRows: Option[Seq[(Long, Double)]],
-      maxHops: Int,
-      withPaths: Boolean): DataFrame = {
-    // only unpersist a cache THIS call created — a caller-persisted edge
-    // frame (bfsAllPathsEdges reuses it for the DAG join) must stay cached
-    val callerPersisted = edges.storageLevel != StorageLevel.NONE
-    // supercritical (or many-seed) path: persist once — the cache backs
-    // both the reachable-capture's pruned per-level scans and the
-    // distributed fixpoint rounds (A/B at sf10: capturing against the
-    // UNPERSISTED frame pays the edge derivation once per level, ~2×)
-    if (!callerPersisted) edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // small seeds + tight hop bound over a supercritical edge set:
-    // collect only the seed-reachable subgraph (one pruned in-memory
-    // scan per level) and run the exact driver pass on it — the 100 TB
-    // case where a 6-hop neighborhood of one node is KB-sized inside a
-    // TB-sized graph
-    val reachable = for {
-      s <- seedRows
-      arr <- LocalSearch.tryCollectReachable(edges, s.map(_._1), maxHops)
-    } yield LocalSearch.bfsDf(edges.sparkSession, arr, s, maxHops, withPaths)
-    val res = reachable.getOrElse(
-      bfsLoop(edges, seeds, maxHops, if (withPaths) IdPath else NoPath))
-    if (!callerPersisted) edges.unpersist(blocking = false)
-    res
-  }
+      withPaths: Boolean,
+      targets: Option[DataFrame]): DataFrame =
+    LocalSearch.capture(search, seeds, targets, maxHops) match {
+      case Some(c) =>
+        LocalSearch.bfsDf(seeds.sparkSession, c.edges, c.seeds, c.hops, withPaths)
+      case None =>
+        // only the loop persists the frame: the captures' bounded probes
+        // run unpersisted (A/B at sf3: persisting first taxed every
+        // subcritical BFS ~2×)
+        persisted(search.frame)(
+          bfsLoop(_, seeds, maxHops, if (withPaths) IdPath else NoPath))
+    }
 
   /** [[bfsEdges]] with representative paths, under a per-expansion
     * [[PathFilter]]. Always distributed: no driver mirror evaluates the
@@ -451,38 +434,37 @@ object ShortestPath {
       edges0: DataFrame,
       seeds: DataFrame,
       maxHops: Int): DataFrame =
-    bfsAllPathsEdges(FrameEdges(edges0), seeds, maxHops)
+    bfsAllPathsEdges(FrameEdges(edges0), seeds, maxHops, None)
 
-  /** [[bfsAllPathsEdges]] over either capture source ([[SearchEdges]]). */
+  /** [[bfsAllPathsEdges]] over either capture source ([[SearchEdges]]),
+    * in [[bfsEdges]]' placements and with its `targets`: the driver
+    * enumeration ([[LocalSearch.allPathsDf]], both phases) over the
+    * captured edges; when it bails on path explosion, the driver layering
+    * over them and the distributed DAG walk; with no capture, both phases
+    * distributed. */
   def bfsAllPathsEdges(
       search: SearchEdges,
       seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    // subcritical: one collect + an exact driver enumeration replaces the
-    // BFS fixpoint AND the 2·maxD-job DAG walk (LocalSearch.allPathsDf
-    // mirrors both phases bit-for-bit; bails to the distributed walk on
-    // path explosion)
-    val seedRows = LocalSearch.collectSeeds(seeds)
-    val captured = for {
-      s <- seedRows
-      arr <- LocalSearch.captureEdges(
-        seeds.sparkSession, search, s, withWeight = false)
-    } yield (arr, s)
-    captured.foreach { case (arr, s) =>
-      LocalSearch
-        .allPathsDf(seeds.sparkSession, arr, s.map(_._1), maxHops)
-        .foreach(return _)
-    }
-    val edges = search.frame.persist(StorageLevel.MEMORY_AND_DISK)
-    // the layering reuses the probe's answer: a capture that only bailed
-    // on path explosion still layers on the driver
-    val vis = captured
-      .map { case (arr, s) =>
-        LocalSearch.bfsDf(seeds.sparkSession, arr, s, maxHops, withPaths = false)
-      }
-      .getOrElse(
-        bfsBeyondCutover(edges, seeds, seedRows, maxHops, withPaths = false))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      maxHops: Int,
+      targets: Option[DataFrame]): DataFrame = {
+    val spark = seeds.sparkSession
+    val captured = LocalSearch.capture(search, seeds, targets, maxHops)
+    captured
+      .flatMap(c => LocalSearch.allPathsDf(spark, c.edges, c.seeds.map(_._1), c.hops))
+      .getOrElse(persisted(search.frame) { edges =>
+        val vis = captured
+          .map(c => LocalSearch.bfsDf(spark, c.edges, c.seeds, c.hops, withPaths = false))
+          .getOrElse(bfsLoop(edges, seeds, maxHops, NoPath))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val out = walkDag(edges, seeds, vis)
+        vis.unpersist(blocking = false)
+        out
+      })
+  }
+
+  /** Phase 2 of [[bfsAllPathsEdges]] over the layering `vis`. */
+  private def walkDag(
+      edges: DataFrame, seeds: DataFrame, vis: DataFrame): DataFrame = {
     // Per-seed shortest-path DAG: u→w survives iff w sits exactly one BFS
     // level below u for that seed.
     val dag = vis
@@ -533,9 +515,8 @@ object ShortestPath {
         .transform(Scratch.cp)
       outLevels ::= frontier
     }
-    val out = outLevels.reduce(_ unionByName _)
-    Seq(edges, vis, dag).foreach(_.unpersist(blocking = false))
-    out
+    dag.unpersist(blocking = false)
+    outLevels.reduce(_ unionByName _)
   }
 
   /** ALL minimum-WEIGHT paths per (seed, node) — the inline
@@ -554,8 +535,7 @@ object ShortestPath {
   def weightedAllPaths(
       edges0: DataFrame,
       seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    val edges = edges0.persist(StorageLevel.MEMORY_AND_DISK)
+      maxHops: Int): DataFrame = persisted(edges0) { edges =>
     val dist = weighted(seeds, edges, maxRounds = maxHops)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eps = 1e-9
@@ -606,9 +586,8 @@ object ShortestPath {
       // per-level leaves, one union at the end (see bfsAllPathsEdges)
       if (!done) outLevels ::= frontier
     }
-    val out = outLevels.reduce(_ unionByName _)
-    Seq(edges, dist, dag).foreach(_.unpersist(blocking = false))
-    out
+    Seq(dist, dag).foreach(_.unpersist(blocking = false))
+    outLevels.reduce(_ unionByName _)
   }
 
   /** ALL minimum-weight paths under a PER-EXPANSION path filter — the
@@ -872,10 +851,7 @@ object ShortestPath {
       .foreach { case (arr, s) =>
         return LocalSearch.weightedDf(edges.sparkSession, arr, s, maxRounds)
       }
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val res = relax(e, seeds, maxRounds, NoPath)
-    e.unpersist(blocking = false)
-    res
+    persisted(edges)(relax(_, seeds, maxRounds, NoPath))
   }
 
   /** [[weighted]] with representative-path carry and an optional

@@ -21,13 +21,16 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object VertexResident {
 
-  /** `edges`' first two columns as (src, dst) per row, in at most
-    * default-parallelism partitions. */
-  private def edgePartitions(edges: DataFrame): RDD[(Long, Long)] = {
-    val rdd = edges.rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val par = edges.sparkSession.sparkContext.defaultParallelism
+  /** `rdd` in at most default-parallelism partitions. */
+  def atMostParallelism[T](rdd: RDD[T]): RDD[T] = {
+    val par = rdd.sparkContext.defaultParallelism
     if (rdd.getNumPartitions > par) rdd.coalesce(par) else rdd
   }
+
+  /** `edges`' first two columns as (src, dst) per row, in at most
+    * default-parallelism partitions. */
+  private def edgePartitions(edges: DataFrame): RDD[(Long, Long)] =
+    atMostParallelism(edges.rdd.map(r => (r.getLong(0), r.getLong(1))))
 
   /** Element-wise sum into `a`; an empty array is the zero. */
   private def addInto(a: Array[Double], b: Array[Double]): Array[Double] =

@@ -2,14 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cutover, ShortestPath}
+import graft.operators.{Cutover, LocalSearch, ShortestPath}
 
-/** BFS representative-path agreement across the cutover: the driver-local
-  * mirror answers below `spark.graft.local.edges`, the distributed BFS
-  * loop (which carries the path arrays through its levels) above it. Both
-  * must return the same (seed, node, dist, npaths, path_nodes,
-  * path_edges) rows — the lexicographically-smallest-path tie-break
-  * included.
+/** BFS representative-path agreement across the placements: the
+  * driver-local mirror over the full edge set answers below
+  * `spark.graft.local.edges`, the distributed BFS loop (which carries the
+  * path arrays through its levels) above it, and the same mirror runs over
+  * the DAG capture's edges in between. All three must return the same
+  * (seed, node, dist, npaths, path_nodes, path_edges) rows — the
+  * lexicographically-smallest-path tie-break included.
   */
 class BfsPathsSpec extends SparkTestBase {
 
@@ -33,17 +34,21 @@ class BfsPathsSpec extends SparkTestBase {
         col("__dst").as(graft.core.GraphState.DstCol),
         col("__sp_eid"))
     val sdf = seeds.toDF(ShortestPath.SeedCol)
-    def go() = ShortestPath
-      .bfsEdges(edf, sdf, maxHops, withPaths = true)
-      .collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|"))
-      .toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSet
+    def go() = rows(ShortestPath.bfsEdges(edf, sdf, maxHops, withPaths = true))
     val local = go()
     val distributed = withConf(Cutover.LocalEdgesKey, "0")(go())
+    val seedRows = seeds.map((_, 0.0))
+    val viaDag = LocalSearch
+      .captureDag(edf, seedRows, Map.empty, maxHops, Long.MaxValue)
+      .map(c => rows(LocalSearch.bfsDf(spark, c.edges, c.seeds, c.hops, true)))
     def diff(a: Set[String], b: Set[String]) =
       s"\n  first-only=${a -- b}\n  second-only=${b -- a}"
     assert(local == distributed,
       "local/distributed disagree:" + diff(local, distributed))
+    assert(viaDag.contains(local),
+      "local/DAG capture disagree:" + diff(local, viaDag.getOrElse(Set.empty)))
     local
   }
 

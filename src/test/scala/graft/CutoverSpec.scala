@@ -274,6 +274,22 @@ class CutoverSpec extends SparkTestBase {
     }
   }
 
+  test("weighted leaves a cache its caller made in place") {
+    val df = edgeFrame(Seq((0L, 1L), (1L, 2L), (2L, 0L)))
+      .select(
+        col("src").as(GraphState.SrcCol),
+        col("dst").as(GraphState.DstCol),
+        lit(1.0).as(ShortestPath.EdgeWeightCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val before = df.storageLevel
+      val rows = distributed(ShortestPath
+        .weighted(Seq(0L).toDF(ShortestPath.SeedCol), df, 4).collect())
+      assert(rows.length == 3)
+      assert(df.storageLevel == before)
+    } finally df.unpersist()
+  }
+
   test("property: a node-only step filter returns the bfsEdges rows over " +
     "the edges into passing nodes") {
     forAllGraphs { edges =>
@@ -300,6 +316,90 @@ class CutoverSpec extends SparkTestBase {
         sdf, 16, withPaths = true)))
       assert(filtered.exists(_(2) != "0"))
       assert(filtered == plain)
+    }
+  }
+
+  /** The BFS-family searches of one test, as (seed, node, dist, …) rows:
+    * bfsEdges with and without paths to 16 hops, bfsAllPathsEdges to 6. */
+  private def bfsFamily(
+      search: ShortestPath.SearchEdges,
+      seeds: org.apache.spark.sql.DataFrame,
+      targets: Option[org.apache.spark.sql.DataFrame]) = Seq(
+    ShortestPath.bfsEdges(search, seeds, 16, withPaths = true, targets),
+    ShortestPath.bfsEdges(search, seeds, 16, withPaths = false, targets),
+    ShortestPath.bfsAllPathsEdges(search, seeds, 6, targets)
+  ).map(_.collect().map(_.toSeq).toSet)
+
+  test("property: bfsEdges and bfsAllPathsEdges agree at the default cap, " +
+    "under the DAG capture and at 0, with and without bound targets") {
+    forAllGraphs { edges =>
+      val search = ShortestPath.FrameEdges(edgeFrame(edges).select(
+        col("src").as(GraphState.SrcCol),
+        col("dst").as(GraphState.DstCol),
+        col("edge_id").as("__sp_eid")))
+      val hub = edges.map(e => math.max(e._1, e._2)).max
+      val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
+      val dist = distributed(bfsFamily(search, sdf, None))
+      val depth = dist.head.map(r =>
+        (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]) ->
+          r(2).asInstanceOf[Long]).toMap
+      // seed 0's target lies above its deepest level, so it stops early;
+      // the hub also names a node outside the graph, so it searches to
+      // the end
+      val deepest0 = depth.collect { case ((0L, _), d) => d }.max
+      val stop0 = math.max(1L, math.min(2L, deepest0 - 1))
+      val target0 = depth.collect { case ((0L, v), `stop0`) => v }.min
+      val near = depth.collect { case ((`hub`, v), 1L) => v }.min
+      val pairs = Seq((0L, target0), (hub, near), (hub, 1000L))
+      val tdf = pairs.toDF(ShortestPath.SeedCol, ShortestPath.NodeCol)
+      val stop = Map(0L -> stop0, hub -> Long.MaxValue)
+      def seed0Rows(rows: Set[Seq[Any]]) = rows.count(_.head == 0L)
+      def onTargets(rows: Set[Seq[Any]]) =
+        rows.filter(r => pairs.contains((r(0), r(1))))
+      // the generated graphs' self-loops are never DAG edges, so the DAG
+      // capture fits under a cap that the edge set is above
+      val between = edges.size - 1L
+      val dag = underCap(between)(LocalSearch.capture(search, sdf, None, 16))
+      assert(dag.exists(_.edges.length <= between))
+      Seq(None, Some(between), Some(0L)).foreach { cap =>
+        withClue(s"under $cap: ") {
+          def run[T](body: => T): T = cap.fold(body)(c => underCap(c)(body))
+          assert(run(bfsFamily(search, sdf, None)) == dist)
+          val stopped = run(bfsFamily(search, sdf, Some(tdf)))
+          assert(stopped.map(onTargets) == dist.map(onTargets))
+          assert(onTargets(stopped.head).size == 2)
+          if (cap.contains(between)) {
+            stopped.foreach(_.foreach(r =>
+              assert(r(2).asInstanceOf[Long] <= stop(r(0).asInstanceOf[Long]), r)))
+            if (deepest0 > stop0)
+              assert(seed0Rows(stopped.head) < seed0Rows(dist.head))
+          }
+        }
+      }
+      // one row under the DAG-edge count: the distributed loop's rows
+      val below = dag.get.edges.length - 1L
+      underCap(below) {
+        assert(LocalSearch.capture(search, sdf, None, 16).isEmpty)
+        assert(bfsFamily(search, sdf, None).head == dist.head)
+      }
+    }
+  }
+
+  test("property: louvain, leiden and label propagation local equal " +
+    "distributed") {
+    forAllGraphs { edges =>
+      Seq[(String, ProcContext => org.apache.spark.sql.DataFrame, Map[String, Any])](
+        ("louvain", Procedures.louvain, Map("iterations" -> 6)),
+        ("leiden", Procedures.leiden, Map("iterations" -> 6, "maxLevels" -> 4)),
+        ("label propagation", Procedures.labelPropagation,
+          Map("iterations" -> 10))
+      ).foreach { case (name, proc, opts) =>
+        withClue(s"$name: ") {
+          val (local, dist) = bothWays(procRows(proc, edges, opts))
+          assert(local.nonEmpty)
+          assert(local == dist)
+        }
+      }
     }
   }
 
@@ -331,8 +431,8 @@ class CutoverSpec extends SparkTestBase {
         val typed = ShortestPath.TypedEdges(g, Seq("E"), dir)
         val frame = ShortestPath.FrameEdges(typed.frame)
         def results(e: ShortestPath.SearchEdges) = (
-          rowSet(ShortestPath.bfsEdges(e, sdf, 16, withPaths = true)),
-          rowSet(ShortestPath.bfsAllPathsEdges(e, sdf, 6)))
+          rowSet(ShortestPath.bfsEdges(e, sdf, 16, withPaths = true, None)),
+          rowSet(ShortestPath.bfsAllPathsEdges(e, sdf, 6, None)))
         val dist = distributed(results(typed))
         assert(dist._1.nonEmpty && dist._2.nonEmpty)
         Seq(None, Some(between), Some(0L)).foreach { cap =>

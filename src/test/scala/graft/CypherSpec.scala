@@ -270,6 +270,54 @@ class CypherSpec extends SparkTestBase {
     assert(hit == Seq(Seq(false, 2L)))
   }
 
+  /** KNOWS edges 0→1, 0→2, 1→3 twice, 2→3, 3→4, 2→4, 4→0 and 5→6:
+    * shortest-path ties, a parallel edge, a cycle and a second component. */
+  private def tieGraph(): GraphState = {
+    import spark.implicits._
+    val nodes = (0L to 6L).map(i => (i, i)).toDF("_id", "pid")
+      .withColumn("_labels", array(lit("P")))
+    val edges = Seq((0L, 1L), (0L, 2L), (1L, 3L), (1L, 3L), (2L, 3L),
+        (3L, 4L), (2L, 4L), (4L, 0L), (5L, 6L))
+      .zipWithIndex
+      .map { case ((s, d), i) => (100L + i, s, d, "KNOWS") }
+      .toDF("_id", "_src", "_dst", "_type")
+    GraphState(Map("P" -> (() => nodes)), Map("KNOWS" -> (() => edges)))
+  }
+
+  test("*ALLSHORTEST under a positive integer weight returns the weighted " +
+    "search's paths and totals; a zero weight keeps its longer walks") {
+    val tg = tieGraph()
+    def paths(q: String) = Cypher.run(spark, tg, q, Map.empty).collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    def unbound(arrow: String, lambda: String) =
+      s"""MATCH p = (a:P {pid: 0})-[*ALLSHORTEST ..3 $lambda total_weight]$arrow(b:P)
+         |RETURN b.pid AS t, total_weight AS w, [x IN nodes(p) | x.pid] AS ns,
+         |  [r IN relationships(p) | id(r)] AS es""".stripMargin
+    def bound(arrow: String, lambda: String) =
+      s"""MATCH (a:P {pid: 0}), (b:P {pid: 3}) WITH a, b
+         |MATCH p = (a)-[*ALLSHORTEST ..3 $lambda total_weight]$arrow(b)
+         |RETURN total_weight AS w, [r IN relationships(p) | id(r)] AS es""".stripMargin
+    // under a cap of 8 the 9 edges do not fit, while the DAG edges from 0
+    // do (6 one-way, 7 oriented rows undirected): the DAG capture answers
+    Seq(None, Some(8L), Some(0L)).foreach { cap =>
+      cap.foreach(c => spark.conf.set("spark.graft.local.edges", c.toString))
+      try Seq("->", "-").foreach { arrow =>
+        Seq(unbound _, bound _).foreach { q =>
+          withClue(s"$arrow under $cap: ") {
+            val unit = paths(q(arrow, "(r, v | 1)"))
+            assert(unit.nonEmpty)
+            assert(unit == paths(q(arrow, "(r, v | coalesce(r.nope, 1))")))
+          }
+        }
+      } finally spark.conf.unset("spark.graft.local.edges")
+    }
+    // to 4 the shortest path is 0→2→4; a zero weight ties the 3-hop walks
+    val zero = paths(unbound("->", "(r, v | 0)")).filter(_.startsWith("4|"))
+    assert(zero.contains("4|0.0|ArraySeq(0, 1, 3, 4)|ArraySeq(100, 102, 105)"))
+    assert(paths(unbound("->", "(r, v | 1)")).filter(_.startsWith("4|")) ==
+      Seq("4|2.0|ArraySeq(0, 2, 4)|ArraySeq(101, 106)"))
+  }
+
   /** Two KNOWS components, 0-1-2-3-4 and 5-6-7, plus isolated 8 and 9;
     * partitioned, so every count and collect over them is a Spark job. */
   private def pathGraph(): GraphState = {
