@@ -3111,27 +3111,19 @@ final class Planner(
       if (rel.varLength.isDefined)
         pushWhere.foreach(w => cur = applyPushable(cur, w))
 
-      // per-step filter lambda: pre-filter the oriented edge set; the
+      // per-step filter lambda and property map: pre-filter the oriented
+      // edge set ([[stepEdges]]; reference ExpandVariable applies a
+      // `-[r:T*1..2 {k: v}]-` map to every traversed edge); the
       // accumulated-path form (e, n, p | …) on a DFS var-length expansion
       // applies per-prefix AFTER the expansion instead
       val pathLam: Option[StepLambda] = rel.filterLambda.filter(l =>
         l.path.isDefined && l.weightVar.isEmpty && rel.varLength.isDefined)
-      val edgesOvLam = rel.filterLambda
-        .filterNot(l => pathLam.contains(l))
-        .map(l => filteredOrientedEdges(types, dir, l, outer = Some(cur)))
-      // `-[r:T*1..2 {k: v}]-` property maps constrain EVERY step's edge
-      // (reference ExpandVariable applies the map per traversed edge)
-      val edgesOvProps: Option[DataFrame] =
-        if (rel.varLength.isEmpty || rel.props.isEmpty) None
-        else Some(propFilteredOrientedEdges(cur, types, dir, rel.props))
-      val edgesOv: Option[DataFrame] = (edgesOvLam, edgesOvProps) match {
-        case (Some(a), Some(b)) =>
-          Some(a.join(
-            b.select(col(GraphState.IdCol).as("__pp_id")),
-            col(GraphState.IdCol) === col("__pp_id"),
-            "left_semi"))
-        case (x, y) => x.orElse(y)
-      }
+      val stepLam = rel.filterLambda.filterNot(pathLam.contains)
+      val stepProps = if (rel.varLength.isEmpty) Nil else rel.props
+      val edgesOv: Option[DataFrame] =
+        Option.when(stepLam.isDefined || stepProps.nonEmpty)(
+          stepEdges(types, dir, stepLam, stepProps, cur)._1
+            .withColumnRenamed("__sp_eid", GraphState.IdCol))
 
       if (hopsLimit.isDefined && rel.varLength.isEmpty)
         hopMeta :+= ((
@@ -3195,12 +3187,8 @@ final class Planner(
             setHint(eVar, if (types.nonEmpty) Some(types.toSet) else None)
           } else {
             val dstLabel = node.labels.headOption
-            val df = dir match {
-              case Expand.Both =>
-                Expand.expandBoth(cur.df, state, srcVar, eVar, types, dstName, dstLabel)
-              case d =>
-                Expand(cur.df, state, srcVar, eVar, types, d, dstName, dstLabel)
-            }
+            val df =
+              Expand(cur.df, state, srcVar, eVar, types, dir, dstName, dstLabel)
             cur = LF(
               df,
               cur.scope + (eVar -> Binding.EdgeB) + (dstName -> Binding.NodeB))
@@ -3601,76 +3589,117 @@ final class Planner(
     } else array(elems: _*)
   }
 
-  /** Per-step filter lambda (`filter_lambda_`, ast.hpp:1899; applied per
-    * expansion in `operator.cpp:2458` region): the 2-var form `(e, n |
-    * pred)` only sees the traversed edge and its target node — path-
-    * independent — so it lowers to ONE pre-filter of the oriented edge set
-    * instead of a per-step re-evaluation: same semantics, no per-round
-    * filtering cost, and the BFS/DFS loops stay single-equi-join rounds.
-    * Returns (id, src, dst) with src→dst in TRAVERSAL orientation.
-    * The accumulated-path form routes through the searches that take a
-    * [[ShortestPath.PathFilter]] instead; callers pass only 2-var lambdas
-    * here (raises otherwise — an accepted-but-ignored lambda would be a
-    * silent wrong answer). */
-  private def filteredOrientedEdges(
+  /** One traversal step's edges, the input of every filtered or weighted
+    * expansion (var-length DFS, the BFS family, `*KSHORTEST`,
+    * `*WSHORTEST`, weighted `*ALLSHORTEST`): the typed edges bound under
+    * one edge variable and oriented by [[Expand.oriented]], joined to the
+    * target node only when the filter or the weight reads it.
+    *
+    * The 2-var filter lambda `(e, n | pred)` (`filter_lambda_`,
+    * ast.hpp:1899; applied per expansion in `operator.cpp:2458` region)
+    * and the relationship's property map see only the traversed edge and
+    * its target node, so they lower to ONE predicate over one pass instead
+    * of a per-step re-evaluation (same semantics, and the search loops
+    * stay single-equi-join rounds); [[substVars]] renames the lambdas'
+    * variables to the one (edge, node) pair. The filter applies before the
+    * weight projection: the reference filters an expansion before weighing
+    * it, so a negative weight on an excluded edge never raises. The
+    * accumulated-path form routes through the searches that take a
+    * [[ShortestPath.PathFilter]] instead; a lambda here that names a path
+    * or weight variable raises (an accepted-but-ignored lambda would be a
+    * silent wrong answer).
+    *
+    * @return (src, dst in traversal orientation, `__sp_eid`
+    *         [, [[ShortestPath.EdgeWeightCol]]][, [[ShortestPath.EStructCol]]]),
+    *         and whether the weight is a duration
+    */
+  private def stepEdges(
       types: Seq[String],
       dir: Expand.Direction,
-      lam: StepLambda,
-      outer: Option[LF] = None): DataFrame = {
-    val StepLambda(ev, nv, pv, wv, pred) = lam
-    if (pv.isDefined || wv.isDefined)
+      filter: Option[StepLambda],
+      props: Seq[(String, Expr)],
+      outer: LF,
+      weight: Option[(String, String, Expr)] = None,
+      withStruct: Boolean = false): (DataFrame, Boolean) = {
+    if (filter.exists(l => l.path.isDefined || l.weightVar.isDefined))
       throw new UnsupportedOperationException(
         "filter lambdas over the accumulated path (e, n, p | …) are only " +
           "supported on BFS/WSHORTEST expansions")
-    val eframe = Frames.bind(ev)(state.edgesOfTypes(types))
-    val srcC = Frames.src(ev)
-    val dstC = Frames.dst(ev)
-    def orientAs(s: Column, d: Column) = eframe
-      .withColumn("__fo_src", s)
-      .withColumn("__fo_dst", d)
-    val orientedE = dir match {
-      case Expand.Out => orientAs(srcC, dstC)
-      case Expand.In => orientAs(dstC, srcC)
-      case Expand.Both =>
-        orientAs(srcC, dstC).unionByName(
-          orientAs(dstC, srcC).filter(srcC =!= dstC))
-    }
-    val nframe = Frames.bind(nv)(state.allNodes)
-    val joined0 = orientedE.join(nframe, col("__fo_dst") === Frames.id(nv))
+    val ev = fresh("se")
+    val nv = fresh("sn")
+    def renamed(e: String, n: String, x: Expr) =
+      substVars(x, Map(e -> ev, n -> nv))
+    val pred = (filter.map(l => renamed(l.e, l.n, l.pred)).toSeq ++
+      props.map { case (k, x) => BinOp("=", Prop(Var(ev), k), x): Expr })
+      .reduceOption(BinOp("AND", _, _))
+    val wexpr = weight.map { case (e, n, x) => renamed(e, n, x) }
+    val o = Expand.oriented(
+      Frames.bind(ev)(state.edgesOfTypes(types)), dir,
+      s"$ev${Frames.Sep}${GraphState.SrcCol}",
+      s"$ev${Frames.Sep}${GraphState.DstCol}")
+    // the common edge-only shapes keep the slim edge frame: no node join
+    // in a search loop's cached input
+    val needsNode = (pred ++ wexpr).exists(x => varsIn(x).contains(nv))
+    val withTarget =
+      if (needsNode)
+        o.df.join(Frames.bind(nv)(state.allNodes), col(o.far) === Frames.id(nv))
+      else o.df
     // a lambda may close over OUTER bindings (`WITH ['x'] AS d MATCH
     // …-[*BFS (r, n | r.p IN d)]->…`): when the outer frame holds ONE
     // distinct value for them, broadcast it into the edge pre-filter
     // (the statement-constant case; a per-row-varying capture would make
     // the admissible edge set row-dependent — unsupported, raise)
-    val captured = outer
-      .map(o =>
-        (varsIn(pred) - ev - nv).filter(o.scope.contains).toSeq.sorted)
+    val captured = pred
+      .map(p => (varsIn(p) - ev - nv).filter(outer.scope.contains).toSeq.sorted)
       .getOrElse(Nil)
-    val (joined, capScope) = outer match {
-      case Some(o) if captured.nonEmpty =>
-        val cols = captured.flatMap(v => Frames.colsOf(o.df, v))
-        val vals = o.df.select(cols.map(col).toSeq: _*).distinct()
+    val joined =
+      if (captured.isEmpty) withTarget
+      else {
+        val cols = captured.flatMap(v => Frames.colsOf(outer.df, v))
+        val vals = outer.df.select(cols.map(col): _*).distinct()
         if (vals.count() != 1L)
           throw new UnsupportedOperationException(
             "filter lambda captures an outer variable with more than one " +
               s"distinct binding: ${captured.mkString(", ")}")
-        (joined0.crossJoin(broadcast(vals)),
-          captured.flatMap(v => o.scope.get(v).map(v -> _)))
-      case _ => (joined0, Nil)
+        withTarget.crossJoin(broadcast(vals))
+      }
+    val edgeScope = Scope.empty + (ev -> Binding.EdgeB)
+    val scope = captured.foldLeft(
+      if (needsNode) edgeScope + (nv -> Binding.NodeB) else edgeScope)(
+      (sc, v) => sc + (v -> outer.scope.get(v).get))
+    val low = new ExprLowering(joined, scope, params, enums = state.enums)
+    val kept = pred.fold(joined)(x => joined.filter(low.lower(x)))
+    val wRaw = wexpr.map(low.lower)
+    val isDur = wRaw.exists(w =>
+      low.typeOf(w).exists(_.isInstanceOf[org.apache.spark.sql.types.DayTimeIntervalType]))
+    // the reference raises on negative/non-numeric weights
+    // (operator.cpp:3000 region) — validated per ROW inside the weight
+    // column itself (raise_error), so no extra probe job on any path:
+    // the relaxation's first round materializes the full frame and with
+    // it every edge's check
+    val wChecked = wRaw.map { raw =>
+      val w = weightAsDouble(raw, isDur)
+      when(
+        w.isNull || w < 0,
+        raise_error(lit(
+          "weight lambda produced a negative or non-numeric weight"))
+          .cast("double"))
+        .otherwise(w)
+        .as(ShortestPath.EdgeWeightCol)
     }
-    val low = new ExprLowering(
-      joined,
-      capScope.foldLeft(
-        Scope.empty + (ev -> Binding.EdgeB) + (nv -> Binding.NodeB))(
-        (s, kv) => s + kv),
-      params, enums = state.enums)
-    joined
-      .filter(low.lower(pred))
-      .select(
-        Frames.id(ev).as(GraphState.IdCol),
-        col("__fo_src").as(GraphState.SrcCol),
-        col("__fo_dst").as(GraphState.DstCol))
+    val struct =
+      if (withStruct) Some(varStructCol(kept, ev).as(ShortestPath.EStructCol))
+      else None
+    (o.copy(df = kept).steps(
+      Seq(Frames.id(ev).as("__sp_eid")) ++ wChecked ++ struct: _*), isDur)
   }
+
+  /** A weight column as double; DURATION weights (reference weights.cpp
+    * duration branch) order and sum as exact decimal seconds. */
+  private def weightAsDouble(c: Column, isDur: Boolean): Column =
+    if (isDur)
+      c.cast(org.apache.spark.sql.types.DecimalType(28, 6)).cast("double")
+    else c.cast("double")
 
   /** DFS `(e, n, p | pred)` filter lambda over the ACCUMULATED path
     * (ast.hpp:1899): a path survives iff EVERY prefix satisfied the
@@ -3741,50 +3770,6 @@ final class Planner(
     LF(lf.df.filter(size(structsCol) === 0 || ok), lf.scope)
   }
 
-  /** Pre-oriented (id, src, dst) edge frame filtered by a var-length
-    * pattern's property map — the `edgesOverride` shape VarExpand steps
-    * Out against. Property expressions may reference outer frame vars
-    * only when they are statement-constant (same contract as lambda
-    * captures); plain literals are the common case. */
-  private def propFilteredOrientedEdges(
-      cur: LF,
-      types: Seq[String],
-      dir: Expand.Direction,
-      props: Seq[(String, Expr)]): DataFrame = {
-    val ev = fresh("vp")
-    val eframe = Frames.bind(ev)(state.edgesOfTypes(types))
-    val low = new ExprLowering(
-      eframe, Scope.empty + (ev -> Binding.EdgeB), params,
-      enums = state.enums)
-    var f = eframe
-    props.foreach { case (k, e) =>
-      val c =
-        if (f.columns.contains(s"$ev${Frames.Sep}$k")) Frames.f(ev, k)
-        else lit(null)
-      f = f.filter(c === low.lower(e))
-    }
-    val base = f.select(
-      Frames.id(ev).as(GraphState.IdCol),
-      Frames.src(ev).as(GraphState.SrcCol),
-      Frames.dst(ev).as(GraphState.DstCol))
-    dir match {
-      case Expand.Both =>
-        base.unionByName(
-          base
-            .filter(col(GraphState.SrcCol) =!= col(GraphState.DstCol))
-            .select(
-              col(GraphState.IdCol),
-              col(GraphState.DstCol).as(GraphState.SrcCol),
-              col(GraphState.SrcCol).as(GraphState.DstCol)))
-      case Expand.In =>
-        base.select(
-          col(GraphState.IdCol),
-          col(GraphState.DstCol).as(GraphState.SrcCol),
-          col(GraphState.SrcCol).as(GraphState.DstCol))
-      case _ => base
-    }
-  }
-
   /** Largest USING HOPS LIMIT the driver replay accepts: emitted rows are
     * bounded by the cap (each row consumes ≥1 fetched-edge quota), so
     * this bounds driver memory for the emulation's result. */
@@ -3800,43 +3785,6 @@ final class Planner(
   private def varStructCol(df: DataFrame, v: String): Column =
     struct(Frames.colsOf(df, v).map(c =>
       col(c).as(c.substring(v.length + Frames.Sep.length))): _*)
-
-  /** Oriented (eid, src, dst, full-edge-struct) frame for the per-step
-    * filtered shortest-path operators; `allowed` pre-intersects a 2-var
-    * lambda / property-map pre-filter. */
-  private def orientedStructEdges(
-      types: Seq[String],
-      dir: Expand.Direction,
-      ev: String,
-      allowed: Option[DataFrame]): DataFrame = {
-    val eframe = Frames.bind(ev)(state.edgesOfTypes(types))
-    val srcC = Frames.src(ev)
-    val dstC = Frames.dst(ev)
-    def orientAs(s: Column, d: Column) =
-      eframe.withColumn("__fo_src", s).withColumn("__fo_dst", d)
-    val orientedE = dir match {
-      case Expand.Out => orientAs(srcC, dstC)
-      case Expand.In => orientAs(dstC, srcC)
-      case Expand.Both =>
-        orientAs(srcC, dstC).unionByName(
-          orientAs(dstC, srcC).filter(srcC =!= dstC))
-    }
-    var out = orientedE.select(
-      Frames.id(ev).as("__sp_eid"),
-      col("__fo_src").as(GraphState.SrcCol),
-      col("__fo_dst").as(GraphState.DstCol),
-      varStructCol(orientedE, ev).as(ShortestPath.EStructCol))
-    allowed.foreach { a =>
-      out = out.join(
-        a.select(
-          col(GraphState.IdCol).as("__sp_eid"),
-          col(GraphState.SrcCol),
-          col(GraphState.DstCol)),
-        Seq("__sp_eid", GraphState.SrcCol, GraphState.DstCol),
-        "left_semi")
-    }
-    out
-  }
 
   /** Per-step filter for the accumulated-path lambda `(e, n, p [, w] |
     * pred)`: lowers pred against the operators' candidate frame — `e`/`n`
@@ -3876,134 +3824,42 @@ final class Planner(
     ShortestPath.PathFilter(nodes, mk, pathCols)
   }
 
-  /** Shared WSHORTEST / weighted-ALLSHORTEST prelude.
-    *
-    * The weight lambda sees the traversed edge AND its target node
-    * (`(e, v | v.w)` vertex-based weights are legal, ast.hpp
-    * weight_lambda_) — computed over the oriented edge ⨝ target node
-    * frame in traversal orientation. DURATION weights (reference
-    * weights.cpp duration branch) order/sum as exact decimal seconds and
-    * surface back as intervals ([[durationWeightOut]]). The lambda also
-    * fires once at each seed with a NULL edge (vertex weights count the
-    * source; `coalesce(r.id, 0)` in the corpus), NULL init → 0. The
-    * reference raises on negative and non-numeric weights
-    * (operator.cpp:3000 region) — one cheap aggregate over the pruned
-    * edge frame instead of a per-round probe.
-    *
-    * @return (oriented edges with `__sp_eid`/weight/[[ShortestPath.EStructCol]],
-    *         seeds with per-seed initial weight, duration flag)
+  /** The seeds of a weighted search with their initial weight. The weight
+    * lambda sees the traversed edge AND its target node (`(e, v | v.w)`
+    * vertex-based weights are legal, ast.hpp weight_lambda_; the edges
+    * come from [[stepEdges]]), and it also fires once at each seed with a
+    * NULL edge (vertex weights count the source; `coalesce(r.id, 0)` in
+    * the corpus), NULL init → 0. Edge-only weight lambdas (`e.w`) have a
+    * 0 init for every seed, so they skip the init join entirely (the
+    * common, gate-scale shape).
     */
-  private def weightedSearchFrames(
+  private def weightedSeeds(
       rel: RelPattern,
-      dir: Expand.Direction,
-      edgesOv: Option[DataFrame],
       seeds: DataFrame,
-      needStruct: Boolean = false): (DataFrame, DataFrame, Boolean) = {
-    val (wev, wnv, wexpr) = rel.weight.getOrElse(
-      throw new IllegalArgumentException(
-        "weighted shortest-path mode requires a weight lambda (e, n | expr)"))
+      isDur: Boolean): DataFrame = {
+    val (wev, wnv, wexpr) = rel.weight.get
+    if (!varsIn(wexpr).contains(wnv)) return seeds
+    // NULL edge struct for the seed's init evaluation — derived from the
+    // edge frame's own columns
     val eframe = Frames.bind(wev)(state.edgesOfTypes(rel.types))
-    val srcC = Frames.src(wev)
-    val dstC = Frames.dst(wev)
-    def orientAs(s: Column, d: Column) = eframe
-      .withColumn("__fo_src", s)
-      .withColumn("__fo_dst", d)
-    val orientedE = dir match {
-      case Expand.Out => orientAs(srcC, dstC)
-      case Expand.In => orientAs(dstC, srcC)
-      case Expand.Both =>
-        orientAs(srcC, dstC).unionByName(
-          orientAs(dstC, srcC).filter(srcC =!= dstC))
-    }
-    // join the target node ONLY when the weight lambda reads it — the
-    // common edge-only `(e, n | e.w)` shape keeps the slim edge frame
-    // (no node join in the relaxation loop's cached input)
-    val nframeW = Frames.bind(wnv)(state.allNodes)
-    val needsNode = varsIn(wexpr).contains(wnv)
-    val withTarget =
-      if (needsNode) orientedE.join(nframeW, col("__fo_dst") === Frames.id(wnv))
-      else orientedE
-    val wLow = new ExprLowering(
-      withTarget,
-      (if (needsNode)
-         Scope.empty + (wev -> Binding.EdgeB) + (wnv -> Binding.NodeB)
-       else Scope.empty + (wev -> Binding.EdgeB)),
-      params, enums = state.enums)
-    val wcolRaw = wLow.lower(wexpr)
-    val isDur = wLow
-      .typeOf(wcolRaw)
-      .exists(_.isInstanceOf[org.apache.spark.sql.types.DayTimeIntervalType])
-    def asDouble(c: Column): Column =
-      if (isDur)
-        c.cast(org.apache.spark.sql.types.DecimalType(28, 6)).cast("double")
-      else c.cast("double")
-    // the reference raises on negative/non-numeric weights
-    // (operator.cpp:3000 region) — validated per ROW inside the weight
-    // column itself (raise_error), so no extra probe job on any path:
-    // the relaxation's first round materializes the full frame and with
-    // it every edge's check
-    val wChecked = {
-      val w = asDouble(wcolRaw)
-      when(
-        w.isNull || w < 0,
-        raise_error(lit(
-          "weight lambda produced a negative or non-numeric weight"))
-          .cast("double"))
-        .otherwise(w)
-    }
-    // optional 2-var filter lambda / property map: keep allowed
-    // traversals. Applied BEFORE the weight projection — the reference
-    // evaluates the filter before weighing an expansion, so a
-    // null/negative weight on an edge the lambda excludes never raises.
-    val withTargetF = edgesOv match {
-      case Some(allowed) =>
-        withTarget.join(
-          allowed.select(
-            col(GraphState.IdCol).as("__ov_id"),
-            col(GraphState.SrcCol).as("__ov_s"),
-            col(GraphState.DstCol).as("__ov_d")),
-          Frames.id(wev) === col("__ov_id") &&
-            col("__fo_src") === col("__ov_s") &&
-            col("__fo_dst") === col("__ov_d"),
-          "left_semi")
-      case None => withTarget
-    }
-    val oriented = withTargetF.select(
-      Seq(
-        Frames.id(wev).as("__sp_eid"),
-        col("__fo_src").as(GraphState.SrcCol),
-        col("__fo_dst").as(GraphState.DstCol),
-        wChecked.as(ShortestPath.EdgeWeightCol)) ++
-        (if (needStruct)
-           Seq(varStructCol(withTargetF, wev).as(ShortestPath.EStructCol))
-         else Nil): _*)
-    // edge-only weight lambdas (`e.w`) have a NULL → 0 init for every
-    // seed — skip the init join entirely (the common/gate-scale shape)
-    val wSeeds =
-      if (!varsIn(wexpr).contains(wnv)) seeds
-      else {
-        // NULL edge struct for the seed's init evaluation — derived from
-        // the edge frame's own columns (EStructCol only exists when a
-        // step filter asked for it)
-        val eStructT =
-          eframe.select(varStructCol(eframe, wev)).schema.head.dataType
-        val initLow = new ExprLowering(
-          nframeW,
-          Scope.empty + (wnv -> Binding.NodeB),
-          params,
-          lambdaVars = Map(wev -> lit(null).cast(eStructT)),
-          enums = state.enums)
-        seeds
-          .join(
-            nframeW.select(
-              Frames.id(wnv).as("__sp_initn"),
-              coalesce(asDouble(initLow.lower(wexpr)), lit(0.0))
-                .as(ShortestPath.InitWeightCol)),
-            col(ShortestPath.SeedCol) === col("__sp_initn"),
-            "left_outer")
-          .drop("__sp_initn")
-      }
-    (oriented, wSeeds, isDur)
+    val eStructT =
+      eframe.select(varStructCol(eframe, wev)).schema.head.dataType
+    val nframe = Frames.bind(wnv)(state.allNodes)
+    val initLow = new ExprLowering(
+      nframe,
+      Scope.empty + (wnv -> Binding.NodeB),
+      params,
+      lambdaVars = Map(wev -> lit(null).cast(eStructT)),
+      enums = state.enums)
+    seeds
+      .join(
+        nframe.select(
+          Frames.id(wnv).as("__sp_initn"),
+          coalesce(weightAsDouble(initLow.lower(wexpr), isDur), lit(0.0))
+            .as(ShortestPath.InitWeightCol)),
+        col(ShortestPath.SeedCol) === col("__sp_initn"),
+        "left_outer")
+      .drop("__sp_initn")
   }
 
   /** Duration-weighted search results carry seconds — surface the total
@@ -4014,21 +3870,6 @@ final class Planner(
       col(ShortestPath.WeightCol)
         .cast(org.apache.spark.sql.types.DecimalType(28, 6))
         .cast(org.apache.spark.sql.types.DayTimeIntervalType()))
-
-  /** An unweighted search's traversal edges: the filtered frame when the
-    * pattern filters its edges, else the version's typed edge set, whose
-    * driver capture is memoized on the version. */
-  private def searchEdges(
-      filtered: Option[DataFrame],
-      types: Seq[String],
-      dir: Expand.Direction): ShortestPath.SearchEdges =
-    filtered
-      .map(e =>
-        ShortestPath.FrameEdges(e.select(
-          col(GraphState.SrcCol),
-          col(GraphState.DstCol),
-          col(GraphState.IdCol).as("__sp_eid"))))
-      .getOrElse(ShortestPath.TypedEdges(state, types, dir))
 
   /** Shortest-path pattern — `p = shortestPath((a)-[:T*..h]->(b))`,
     * `allShortestPaths(...)`, or the reference's inline modes
@@ -4080,103 +3921,49 @@ final class Planner(
     val cur0 = pushWhere.map(applyPushable(cur0raw, _)).getOrElse(cur0raw)
     val dstName = node.variable.getOrElse(fresh("n"))
     val dstBound = node.variable.exists(cur0.scope.contains)
-    // per-step filter lambda → pre-filtered traversal edge set (raises on
-    // the unsupported 3-var form instead of ignoring it). An edge property
-    // map on the relationship (`-[*allShortest {w: 1} …]->`) is the same
-    // kind of per-edge filter — synthesized as a lambda and intersected.
-    val propsPred: Option[StepLambda] =
-      if (rel.props.nonEmpty && rel.mode != "KSHORTEST") {
-        val ev = fresh("pe")
-        Some(StepLambda(ev, fresh("pn"), None, None,
-          rel.props
-            .map { case (k, e) => BinOp("=", Prop(Var(ev), k), e): Expr }
-            .reduce(BinOp("AND", _, _))))
-      } else None
-    // 2-var (edge, node) lambdas are path-independent → ONE pre-filter of
-    // the oriented edge set; the accumulated-path/weight forms must run
-    // per expansion instead (pathLambda below)
-    val pathLambda: Option[StepLambda] =
-      rel.filterLambda.filter(l => l.path.isDefined || l.weightVar.isDefined)
-    val edgesOv = Seq(rel.filterLambda.filterNot(pathLambda.contains), propsPred)
-      .flatten
-      .map(l => filteredOrientedEdges(rel.types, dir, l, outer = Some(cur0)))
-      .reduceOption((a, b) =>
-        a.join(
-          b,
-          Seq(GraphState.IdCol, GraphState.SrcCol, GraphState.DstCol),
-          "left_semi"))
-
-    // the (seed, target) pairs a bound destination reads: the searches
-    // that can stop once these are settled take them
-    val targets =
-      if (dstBound)
-        Some(cur0.df
-          .select(
-            Frames.id(srcName).as(ShortestPath.SeedCol),
-            Frames.id(dstName).as(ShortestPath.NodeCol))
-          .distinct())
-      else None
-
-    // KShortestPathsCursor (operator.cpp:3716): k shortest paths by hop
-    // count, via [[ShortestPath.kShortest]] — a k-truncated BFS whose
-    // frontier is bounded by k per (seed, node) (the distributed Yen
-    // analog; the pre-r6 plan enumerated EVERY path up to the bound and
-    // ranked afterwards — exponential on hub graphs). k comes from the
-    // relationship map: `*KSHORTEST ..h {k: 3}`.
-    if (rel.mode == "KSHORTEST") {
-      val k = rel.props.collectFirst { case ("k", Lit(n: Long)) => n.toInt }
-        .getOrElse(1)
-      val hiB = hi.getOrElse(
-        throw new IllegalArgumentException(
-          "*KSHORTEST requires an upper hop bound"))
-      val eVar = rel.variable.getOrElse(fresh("e"))
-      val kSeeds = cur0.df
-        .select(Frames.id(srcName).as(ShortestPath.SeedCol))
-        .distinct()
-      val walks = ShortestPath.kShortest(
-        searchEdges(edgesOv, rel.types, dir), kSeeds, k, math.max(minH, 1),
-        hiB, targets)
-      var joined = cur0.df
-        .join(walks, Frames.id(srcName) === col(ShortestPath.SeedCol))
-        .drop(ShortestPath.SeedCol)
-      var scope = cur0.scope + (eVar -> Binding.EdgeListB)
-      if (dstBound)
-        joined = joined
-          .filter(col(ShortestPath.NodeCol) === Frames.id(dstName))
-          .drop(ShortestPath.NodeCol)
-      else {
-        val nodesDf = node.labels.headOption
-          .map(state.nodesOrEmpty)
-          .getOrElse(state.allNodes)
-        joined = joined
-          .join(
-            Frames.bind(dstName)(nodesDf),
-            col(ShortestPath.NodeCol) === Frames.id(dstName))
-          .drop(ShortestPath.NodeCol)
-        scope += (dstName -> Binding.NodeB)
-        setHint(dstName, node.labels.headOption.map(Set(_)))
-      }
-      joined = joined
-        .withColumn(
-          s"$eVar${Frames.Sep}_ids", col(ShortestPath.PathEdgesCol))
-        .drop(ShortestPath.PathNodesCol, ShortestPath.PathEdgesCol)
-      part.pathVar.foreach { pv =>
-        joined = joined.withColumn(
-          s"$pv${Frames.Sep}_len", col(ShortestPath.DistCol))
-        scope += (pv -> Binding.PathB)
-      }
-      joined = joined.drop(ShortestPath.DistCol)
-      // endpoint label/prop constraints select which pairs survive; per-pair
-      // ranks are unaffected, so filtering after rank-k is equivalent
-      var out = LF(joined, scope)
-      if (!dstBound)
-        out = nodeConstraints(out, dstName, node.labels, node.props, node.orLabels)
-      return out
-    }
-
     val seeds = cur0.df
       .select(Frames.id(srcName).as(ShortestPath.SeedCol))
       .distinct()
+
+    // 2-var (edge, node) lambdas and the relationship's property map are
+    // path-independent → ONE pre-filter of the oriented edge set
+    // ([[stepEdges]]; raises on the unsupported 3-var form instead of
+    // ignoring it); the accumulated-path/weight forms must run per
+    // expansion instead (pathLambda below). A `*KSHORTEST` map holds k.
+    val pathLambda: Option[StepLambda] =
+      rel.filterLambda.filter(l => l.path.isDefined || l.weightVar.isDefined)
+    val stepLambda = rel.filterLambda.filterNot(pathLambda.contains)
+    val stepProps = if (rel.mode == "KSHORTEST") Nil else rel.props
+    def steps(weight: Option[(String, String, Expr)], withStruct: Boolean) =
+      stepEdges(rel.types, dir, stepLambda, stepProps, cur0, weight, withStruct)
+    lazy val edgesOv: Option[DataFrame] =
+      Option.when(stepLambda.isDefined || stepProps.nonEmpty)(
+        steps(None, withStruct = false)._1)
+    // an unweighted search's traversal edges: the filtered frame when the
+    // pattern filters its edges, else the version's typed edge set, whose
+    // driver capture is memoized on the version
+    def searchEdges: ShortestPath.SearchEdges =
+      edgesOv
+        .map(ShortestPath.FrameEdges)
+        .getOrElse(ShortestPath.TypedEdges(state, rel.types, dir))
+    // a weighted search's edges and seeds, and whether it weighs durations
+    def weightedFrames(): (DataFrame, DataFrame, Boolean) = {
+      val weight = rel.weight.getOrElse(
+        throw new IllegalArgumentException(
+          "weighted shortest-path mode requires a weight lambda (e, n | expr)"))
+      val (edges, isDur) = steps(Some(weight), pathLambda.isDefined)
+      (edges, weightedSeeds(rel, seeds, isDur), isDur)
+    }
+
+    // the (seed, target) pairs a bound destination reads: the searches
+    // that can stop once these are settled take them (their probe and the
+    // k-shortest walk take duplicates as they come)
+    val targets =
+      if (dstBound)
+        Some(cur0.df.select(
+          Frames.id(srcName).as(ShortestPath.SeedCol),
+          Frames.id(dstName).as(ShortestPath.NodeCol)))
+      else None
 
     val all = part.shortest.contains("all") || rel.mode == "ALLSHORTEST"
 
@@ -4188,7 +3975,7 @@ final class Planner(
     // sink is scannable, `operator.cpp:2590` FindPath). Breach-free
     // emulation falls through to the distributed operator (identical
     // result); weighted/kshortest modes and supercritical inputs raise.
-    val lhShortest: Option[DataFrame] = hopsLimit.flatMap { cap =>
+    lazy val lhShortest: Option[DataFrame] = hopsLimit.flatMap { cap =>
       def unsupported(msg: String) =
         throw new UnsupportedOperationException(
           s"USING HOPS LIMIT $msg — partial traversal order is " +
@@ -4204,7 +3991,7 @@ final class Planner(
       val srcIds =
         seeds.collect().map(_.getLong(0)).sorted.toSeq
       val allowedIds = edgesOv.map(
-        _.select(col(GraphState.IdCol)).collect().map(_.getLong(0)).toSet)
+        _.select(col("__sp_eid")).collect().map(_.getLong(0)).toSet)
       val dirOut = dir != Expand.In
       val dirIn = dir != Expand.Out
       val maxHL = if (maxH == Int.MaxValue) Long.MaxValue else maxH.toLong
@@ -4266,21 +4053,36 @@ final class Planner(
     val unitWeight = rel.weight.collect {
       case (_, _, Lit(c: Long)) if c > 0 && pathLambda.isEmpty => c
     }
-    val res: DataFrame = lhShortest.getOrElse(rel.mode match {
+    val res: DataFrame = rel.mode match {
+      // KShortestPathsCursor (operator.cpp:3716): k shortest paths by hop
+      // count, via [[ShortestPath.kShortest]] — a k-truncated BFS whose
+      // frontier is bounded by k per (seed, node) (the distributed Yen
+      // analog; the pre-r6 plan enumerated EVERY path up to the bound and
+      // ranked afterwards — exponential on hub graphs). k comes from the
+      // relationship map: `*KSHORTEST ..h {k: 3}`. Its path variable binds
+      // the length only. The tail's endpoint constraints select which
+      // pairs survive; per-pair ranks are unaffected, so filtering after
+      // the rank-k cut is equivalent.
+      case "KSHORTEST" =>
+        val k = rel.props.collectFirst { case ("k", Lit(n: Long)) => n.toInt }
+          .getOrElse(1)
+        val hiB = hi.getOrElse(
+          throw new IllegalArgumentException(
+            "*KSHORTEST requires an upper hop bound"))
+        ShortestPath
+          .kShortest(searchEdges, seeds, k, math.max(minH, 1), hiB, targets)
+          .drop(ShortestPath.PathNodesCol)
+      case _ if lhShortest.isDefined => lhShortest.get
       case "ALLSHORTEST" if unitWeight.isDefined =>
         // the seed weight is 0: the lambda reads no node
-        ShortestPath
-          .bfsAllPathsEdges(
-            searchEdges(edgesOv, rel.types, dir), seeds, maxH, targets)
+        ShortestPath.bfsAllPathsEdges(searchEdges, seeds, maxH, targets)
           .withColumn(
             ShortestPath.WeightCol,
             (col(ShortestPath.DistCol) * unitWeight.get).cast("double"))
       // inline `*allShortest (e, n | w) total`: ALL minimum-WEIGHT paths
       // (the reference's ExpandAllShortestPathsCursor is weighted)
       case "ALLSHORTEST" if rel.weight.isDefined =>
-        val (oriented, wSeeds, isDur) =
-          weightedSearchFrames(rel, dir, edgesOv, seeds,
-            needStruct = pathLambda.isDefined)
+        val (oriented, wSeeds, isDur) = weightedFrames()
         val aRes = pathLambda match {
           case Some(l) =>
             // path-dependent admissibility invalidates the shortest-path
@@ -4295,9 +4097,7 @@ final class Planner(
         }
         if (isDur) durationWeightOut(aRes) else aRes
       case "WSHORTEST" =>
-        val (oriented, wSeeds, isDur) =
-          weightedSearchFrames(rel, dir, edgesOv, seeds,
-            needStruct = pathLambda.isDefined)
+        val (oriented, wSeeds, isDur) = weightedFrames()
         val needCarry = pathLambda.isDefined ||
           rel.variable.isDefined || part.pathVar.isDefined
         val wRes =
@@ -4324,22 +4124,20 @@ final class Planner(
           throw new UnsupportedOperationException(
             "accumulated-weight lambda variable requires *WSHORTEST")
         ShortestPath.bfsEdges(
-          orientedStructEdges(rel.types, dir, l.e, edgesOv),
-          seeds, maxH, pathStepFilter(l))
+          steps(None, withStruct = true)._1, seeds, maxH, pathStepFilter(l))
 
       case _ =>
         // allShortestPaths with a bound path variable needs every distinct
         // path's own vertex/edge chain (operator.cpp:3309) — the DAG
         // enumeration. Without a path var the multiplicity explode below is
         // equivalent and cheaper (no arrays carried through the rounds).
-        val search = searchEdges(edgesOv, rel.types, dir)
         val wantPaths = part.pathVar.isDefined || rel.variable.isDefined
         if (all && wantPaths)
-          ShortestPath.bfsAllPathsEdges(search, seeds, maxH, targets)
+          ShortestPath.bfsAllPathsEdges(searchEdges, seeds, maxH, targets)
         else
           ShortestPath.bfsEdges(
-            search, seeds, maxH, withPaths = wantPaths, targets)
-    })
+            searchEdges, seeds, maxH, withPaths = wantPaths, targets)
+    }
 
     var joined = cur0.df
       .join(res, Frames.id(srcName) === col(ShortestPath.SeedCol))
@@ -4373,8 +4171,11 @@ final class Planner(
       joined = joined.drop(ShortestPath.NPathsCol)
 
     // bind the relationship's edge-list variable (`-[le *bfs..]->`:
-    // le = traversed edge ids, EdgeUniquenessFilter-compatible)
-    rel.variable.foreach { ev2 =>
+    // le = traversed edge ids, EdgeUniquenessFilter-compatible); a
+    // k-shortest search binds one whether it is named or not
+    val edgeList =
+      rel.variable.orElse(Option.when(rel.mode == "KSHORTEST")(fresh("e")))
+    edgeList.foreach { ev2 =>
       if (joined.columns.contains(ShortestPath.PathEdgesCol)) {
         joined = joined.withColumn(
           s"$ev2${Frames.Sep}_ids", col(ShortestPath.PathEdgesCol))

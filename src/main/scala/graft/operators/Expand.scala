@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Frames, GraphState}
@@ -24,8 +24,72 @@ object Expand {
   case object In extends Direction
   case object Both extends Direction
 
+  /** An edge frame in traversal orientation: each row steps from its
+    * `near` column to its `far` column. */
+  final case class Oriented(df: DataFrame, near: String, far: String) {
+
+    /** The rows as traversal steps: (src = near, dst = far, `cols`…). */
+    def steps(cols: Column*): DataFrame =
+      df.select(
+        col(near).as(GraphState.SrcCol) +: col(far).as(GraphState.DstCol) +:
+          cols: _*)
+
+    /** `frame` without the columns [[oriented]] added for `Both`. */
+    def dropTraversal(frame: DataFrame): DataFrame =
+      if (near == NearCol) frame.drop(NearCol, FarCol) else frame
+  }
+
+  private val NearCol = "__near"
+  private val FarCol = "__far"
+
+  /** The one orientation rule of every traversal over `edges`, whose
+    * endpoints are the columns `src` and `dst`: `Out` steps src→dst and
+    * `In` dst→src, both over the frame unchanged; `Both` adds a reversed
+    * copy of every edge but a self-loop, which the reference yields once
+    * (`operator.cpp:1904`). The edge's own columns are untouched, so edge
+    * bindings read identically downstream. [[orientedTriples]] is its
+    * driver twin. */
+  def oriented(
+      edges: DataFrame, dir: Direction, src: String, dst: String): Oriented =
+    dir match {
+      case Out => Oriented(edges, src, dst)
+      case In => Oriented(edges, dst, src)
+      case Both =>
+        def as(near: String, far: String)(df: DataFrame) =
+          df.withColumn(NearCol, col(near)).withColumn(FarCol, col(far))
+        Oriented(
+          as(src, dst)(edges).unionByName(
+            as(dst, src)(edges.filter(col(src) =!= col(dst)))),
+          NearCol, FarCol)
+    }
+
+  /** [[oriented]] over the driver's (eid, src, dst) triples (the version
+    * memo, [[GraphState.localTypedEdges]]): `mk(eid, near, far)` per
+    * oriented row, `2E - loops` rows for `Both`. */
+  def orientedTriples[T: scala.reflect.ClassTag](
+      triples: Array[(Long, Long, Long)], dir: Direction)(
+      mk: (Long, Long, Long) => T): Array[T] = {
+    val out = Array.newBuilder[T]
+    if (dir != In) triples.foreach { case (e, s, d) => out += mk(e, s, d) }
+    if (dir != Out) triples.foreach { case (e, s, d) =>
+      if (dir == In || s != d) out += mk(e, d, s)
+    }
+    out.result()
+  }
+
+  /** `edgeVar`'s `types` edges, bound and oriented by `dir`. */
+  private def boundEdges(
+      g: GraphState, edgeVar: String, types: Seq[String], dir: Direction) =
+    oriented(
+      Frames.bind(edgeVar)(g.edgesOfTypes(types)), dir,
+      s"$edgeVar${Frames.Sep}${GraphState.SrcCol}",
+      s"$edgeVar${Frames.Sep}${GraphState.DstCol}")
+
   /** Expand from bound `srcVar` over `types` edges, binding `edgeVar` and
-    * fresh node `dstVar` with label `dstLabel` (None = any label). */
+    * fresh node `dstVar` with label `dstLabel` (None = any label). An
+    * undirected hop joins the both-ways oriented edge set once, which
+    * keeps the accumulated plan linear in the number of undirected hops
+    * (a union of two expansions copied the whole upstream subtree). */
   def apply(
       frame: DataFrame,
       g: GraphState,
@@ -35,20 +99,21 @@ object Expand {
       dir: Direction,
       dstVar: String,
       dstLabel: Option[String]): DataFrame = {
-    val withEdge = joinEdge(frame, g, srcVar, edgeVar, types, dir)
+    val e = boundEdges(g, edgeVar, types, dir)
     val nodesDf = dstLabel.map(g.nodesOrEmpty).getOrElse(g.allNodes)
-    val far = farEnd(edgeVar, dir)
-    withEdge.join(
-      Frames.bind(dstVar)(nodesDf),
-      far === Frames.id(dstVar))
+    e.dropTraversal(
+      frame
+        .join(e.df, col(e.near) === Frames.id(srcVar))
+        .join(Frames.bind(dstVar)(nodesDf), col(e.far) === Frames.id(dstVar)))
   }
 
-  /** Expand to an already-bound endpoint: only adds the join predicate.
-    * For BOTH: an OR-of-equalities join condition cannot hash-partition
-    * (Catalyst falls back to BroadcastNestedLoopJoin — O(frame × edges) at
-    * scale), so each orientation is its own equi-join and the results are
-    * unioned. A self-loop (src=dst=both nodes) matches exactly once: the
-    * reversed branch excludes loops. */
+  /** Expand to an already-bound endpoint: one equi-join on both ends. An
+    * OR-of-equalities condition for `Both` cannot hash-partition (Catalyst
+    * falls back to BroadcastNestedLoopJoin, O(frame × edges) at scale);
+    * the oriented edge set keeps it one equi-join, and the doubled side is
+    * the edge scan, a base table read — unioning two copies of the
+    * accumulated frame made ldbc_bi11 execute its person/city base eight
+    * times. */
   def toExisting(
       frame: DataFrame,
       g: GraphState,
@@ -56,101 +121,12 @@ object Expand {
       edgeVar: String,
       types: Seq[String],
       dir: Direction,
-      existingVar: String): DataFrame = dir match {
-    case Both =>
-      // orient the EDGE SET (each edge twice, loops once), not the frame:
-      // unioning two copies of the accumulated frame doubled the whole
-      // upstream plan per undirected hop (2^n subtree copies on an
-      // n-undirected-hop chain — ldbc_bi11 executed its person/city base
-      // EIGHT times). The doubled side here is the edge scan, which is a
-      // base table read.
-      frame
-        .join(
-          orientedBoth(g, edgeVar, types),
-          col(nearCol(edgeVar)) === Frames.id(srcVar) &&
-            col(farCol(edgeVar)) === Frames.id(existingVar))
-        .drop(nearCol(edgeVar), farCol(edgeVar))
-    case d =>
-      joinEdge(frame, g, srcVar, edgeVar, types, d)
-        .filter(farEnd(edgeVar, d) === Frames.id(existingVar))
-  }
-
-  private def nearCol(edgeVar: String) = s"$edgeVar${Frames.Sep}__near"
-  private def farCol(edgeVar: String) = s"$edgeVar${Frames.Sep}__far"
-
-  /** Edge frame oriented BOTH ways: every edge contributes (near=src,
-    * far=dst) and — unless it is a self-loop, which the reference yields
-    * once — (near=dst, far=src). The edge's own `_src`/`_dst` columns are
-    * untouched, so edge bindings read identically downstream. */
-  private def orientedBoth(
-      g: GraphState, edgeVar: String, types: Seq[String]): DataFrame = {
-    val e0 = Frames.bind(edgeVar)(g.edgesOfTypes(types))
-    val fwd = e0
-      .withColumn(nearCol(edgeVar), Frames.src(edgeVar))
-      .withColumn(farCol(edgeVar), Frames.dst(edgeVar))
-    val rev = e0
-      .filter(Frames.src(edgeVar) =!= Frames.dst(edgeVar))
-      .withColumn(nearCol(edgeVar), Frames.dst(edgeVar))
-      .withColumn(farCol(edgeVar), Frames.src(edgeVar))
-    fwd.unionByName(rev)
-  }
-
-  private def joinEdge(
-      frame: DataFrame,
-      g: GraphState,
-      srcVar: String,
-      edgeVar: String,
-      types: Seq[String],
-      dir: Direction): DataFrame = {
-    val edges = Frames.bind(edgeVar)(g.edgesOfTypes(types))
-    val cond = dir match {
-      case Out => Frames.src(edgeVar) === Frames.id(srcVar)
-      case In => Frames.dst(edgeVar) === Frames.id(srcVar)
-      case Both =>
-        // reachable only via [[apply]], which rejects Both in farEnd;
-        // undirected one-hop goes through expandBoth / toExisting
-        throw new UnsupportedOperationException(
-          "undirected joinEdge: use expandBoth or toExisting")
-    }
-    frame.join(edges, cond)
-  }
-
-  /** The endpoint column on the far side of the traversal. */
-  private def farEnd(edgeVar: String, dir: Direction) = dir match {
-    case Out => Frames.dst(edgeVar)
-    case In => Frames.src(edgeVar)
-    case Both =>
-      // note: for Both the far end is whichever endpoint isn't the source;
-      // callers using Both must have come through joinEdge's || condition.
-      // We pick the non-matching endpoint via a CASE at the call site if
-      // needed; the simple form below is only valid for distinct endpoints.
-      throw new UnsupportedOperationException(
-        "undirected expand to fresh node: use expandBoth")
-  }
-
-  /** Undirected expand to a fresh node: union of both orientations —
-    * mirrors the reference's EdgeAtom::Direction::BOTH handling. A self-loop
-    * edge appears in both orientations with identical bindings; the reference
-    * yields it once (`operator.cpp:1904` iterates in- and out-lists but a
-    * loop is stored once per list), so the In side excludes loops. */
-  def expandBoth(
-      frame: DataFrame,
-      g: GraphState,
-      srcVar: String,
-      edgeVar: String,
-      types: Seq[String],
-      dstVar: String,
-      dstLabel: Option[String]): DataFrame = {
-    // see toExisting(Both): one join against a both-ways-oriented edge
-    // set keeps the accumulated plan LINEAR in the number of undirected
-    // hops (the old two-apply union copied the whole upstream subtree)
-    val withEdge = frame.join(
-      orientedBoth(g, edgeVar, types),
-      col(nearCol(edgeVar)) === Frames.id(srcVar))
-    val nodesDf = dstLabel.map(g.nodesOrEmpty).getOrElse(g.allNodes)
-    withEdge
-      .join(Frames.bind(dstVar)(nodesDf),
-        col(farCol(edgeVar)) === Frames.id(dstVar))
-      .drop(nearCol(edgeVar), farCol(edgeVar))
+      existingVar: String): DataFrame = {
+    val e = boundEdges(g, edgeVar, types, dir)
+    e.dropTraversal(
+      frame.join(
+        e.df,
+        col(e.near) === Frames.id(srcVar) &&
+          col(e.far) === Frames.id(existingVar)))
   }
 }

@@ -75,12 +75,20 @@ private[graft] object LocalHops {
       out.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((id, d))
       in.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += ((id, s))
     }
-    def of(v: Long, dirOut: Boolean, dirIn: Boolean, outFirst: Boolean)
+    private def of(v: Long, dirOut: Boolean, dirIn: Boolean, outFirst: Boolean)
       : Seq[(Long, Long)] = {
       val o = if (dirOut) out.getOrElse(v, Nil).toSeq else Nil
       val i = if (dirIn) in.getOrElse(v, Nil).toSeq else Nil
       if (outFirst) o ++ i else i ++ o
     }
+
+    /** `v`'s edges as fetched under `q`. An undirected fetch holds a
+      * self-loop in both lists: the quota charges it per list, and it is
+      * yielded once, the rule of every traversal ([[Expand.oriented]]). */
+    def fetch(
+        q: Quota, v: Long, dirOut: Boolean, dirIn: Boolean, outFirst: Boolean)
+      : Seq[(Long, Long)] =
+      q.fetch(of(v, dirOut, dirIn, outFirst)).distinct
   }
 
   /** Single-hop `Expand` partial: every input vertex in order fetches its
@@ -96,7 +104,7 @@ private[graft] object LocalHops {
     val adj = new Adj(edges)
     val rows = mutable.ArrayBuffer.empty[PathRow]
     sources.foreach { v =>
-      q.fetch(adj.of(v, dirOut, dirIn, outFirst = false)).foreach {
+      adj.fetch(q, v, dirOut, dirIn, outFirst = false).foreach {
         case (eid, other) => rows += PathRow(v, other, Seq(v, other), Seq(eid))
       }
     }
@@ -124,7 +132,7 @@ private[graft] object LocalHops {
       val stack = mutable.ArrayBuffer
         .empty[(Iterator[(Long, Long)], List[Long], List[Long])]
       stack += ((
-        q.fetch(adj.of(v, dirOut, dirIn, outFirst = false)).iterator,
+        adj.fetch(q, v, dirOut, dirIn, outFirst = false).iterator,
         List(v), Nil))
       while (stack.nonEmpty) {
         val (it, nodes, eids) = stack.last
@@ -137,8 +145,7 @@ private[graft] object LocalHops {
               rows += PathRow(v, other, nodes2.reverse, eids2.reverse)
             if (eids2.size < maxH)
               stack += ((
-                q.fetch(adj.of(other, dirOut, dirIn, outFirst = false))
-                  .iterator,
+                adj.fetch(q, other, dirOut, dirIn, outFirst = false).iterator,
                 nodes2, eids2))
           }
         } else stack.remove(stack.size - 1)
@@ -174,7 +181,7 @@ private[graft] object LocalHops {
         val next = mutable.ArrayBuffer.empty[Long]
         while (cur.nonEmpty) {
           val u = cur.remove(cur.size - 1) // pop_back (reference LIFO)
-          q.fetch(adj.of(u, dirOut, dirIn, outFirst = true)).foreach {
+          adj.fetch(q, u, dirOut, dirIn, outFirst = true).foreach {
             case (eid, other) =>
               if (allowed.forall(_.contains(eid)) && !visited(other)) {
                 visited += other
@@ -232,7 +239,7 @@ private[graft] object LocalHops {
             // sink expands over its in-edges
             val (useOut, useIn) =
               if (fromSource) (dirOut, dirIn) else (dirIn, dirOut)
-            q.fetch(adj.of(v, useOut, useIn, outFirst = true)).foreach {
+            adj.fetch(q, v, useOut, useIn, outFirst = true).foreach {
               case (eid, other) =>
                 if (found.isEmpty && allowed.forall(_.contains(eid)) &&
                   !own.contains(other)) {

@@ -11,7 +11,7 @@ import graft.core.GraphState
 
 /** Driver-local exact pass for the shortest-path family on subcritical
   * inputs — the same adaptive cutover [[LocalGraph]]/LocalProcs use for
-  * cycles/biconnected/iterative procedures (r8/r9): below the
+  * the cycles, biconnected and iterative procedures: below the
   * [[Cutover]] cap with a small seed set, a single-threaded
   * BFS / Bellman–Ford over collected adjacency is exact, reproduces the
   * distributed operators' determinism rules bit-for-bit, and replaces
@@ -82,10 +82,10 @@ private[graft] object LocalSearch {
     * most `cap` of them, else None; the cap bounds seeds × edges by
     * [[MaxWork]] as an edge ceiling. Both sources decide with
     * [[Cutover.fits]] on the ORIENTED row count, so they agree row for row:
-    * a typed search reads its version's memoized capture (a `Both` search
-    * counts each triple twice) and orients it on the driver, without a job
-    * once the version has been probed; a frame search collects at most
-    * cap + 1 rows of its frame. */
+    * a typed search reads its version's memoized capture and orients it on
+    * the driver ([[Expand.orientedTriples]], `2E - loops` rows for `Both`
+    * like its frame), without a job once the version has been probed; a
+    * frame search collects at most cap + 1 rows of its frame. */
   def captureEdges(
       spark: SparkSession,
       edges: ShortestPath.SearchEdges,
@@ -94,18 +94,9 @@ private[graft] object LocalSearch {
     val cap = workCap(spark, seeds.length)
     edges match {
       case ShortestPath.TypedEdges(g, types, dir) =>
-        val perTriple = if (dir == Expand.Both) 2L else 1L
         g.localTypedEdges(types)
-          .filter(t => Cutover.fits(perTriple * t.length, cap))
-          .map { t =>
-            lazy val out = t.map { case (e, s, d) => (e, s, d, 0.0) }
-            lazy val in = t.map { case (e, s, d) => (e, d, s, 0.0) }
-            dir match {
-              case Expand.Out => out
-              case Expand.In => in
-              case Expand.Both => out ++ in
-            }
-          }
+          .map(Expand.orientedTriples(_, dir)((e, s, d) => (e, s, d, 0.0)))
+          .filter(t => Cutover.fits(t.length, cap))
       case ShortestPath.FrameEdges(frame) =>
         val sel =
           if (withWeight)

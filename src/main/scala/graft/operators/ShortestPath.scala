@@ -69,23 +69,6 @@ object ShortestPath {
   val EStructCol = "__sp_estruct"
   val NStructCol = "__sp_nstruct"
 
-  /** Direction-adjusted (src, dst, …) edge view. */
-  def oriented(edges: DataFrame, dir: Expand.Direction): DataFrame = {
-    val rest = edges.columns
-      .filterNot(c => c == GraphState.SrcCol || c == GraphState.DstCol)
-      .map(col)
-      .toSeq
-    val out = edges
-    lazy val in = edges.select(
-      col(GraphState.DstCol).as(GraphState.SrcCol) +:
-        col(GraphState.SrcCol).as(GraphState.DstCol) +: rest: _*)
-    dir match {
-      case Expand.Out => out
-      case Expand.In => in
-      case Expand.Both => out.unionByName(in)
-    }
-  }
-
   /** The traversal edges of an unweighted path search ([[bfsEdges]],
     * [[bfsAllPathsEdges]], [[kShortest]]). The distributed operators run on
     * [[frame]], pre-oriented (src, dst, `__sp_eid`); the driver-local probe
@@ -106,13 +89,9 @@ object ShortestPath {
       g: GraphState, types: Seq[String], dir: Expand.Direction)
       extends SearchEdges {
     lazy val frame: DataFrame =
-      oriented(
-        g.edgesOfTypes(types)
-          .select(
-            col(GraphState.SrcCol),
-            col(GraphState.DstCol),
-            col(GraphState.IdCol).as("__sp_eid")),
-        dir)
+      Expand.oriented(
+        g.edgesOfTypes(types), dir, GraphState.SrcCol, GraphState.DstCol)
+        .steps(col(GraphState.IdCol).as("__sp_eid"))
   }
 
   /** `edges` with an `__sp_eid` column (0 when the caller has none). */

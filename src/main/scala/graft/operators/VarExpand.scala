@@ -53,6 +53,9 @@ object VarExpand {
   private val CUR = "__vx_cur"
   private val PATH = "__vx_path"
   private val RID = "__vx_rid"
+  private val EID = "__vx_eid"
+  private val NEAR = "__vx_near"
+  private val FAR = "__vx_far"
 
   /** Expand from `srcVar`, binding `edgeVar@_ids` (edge-id list, in
     * traversal order) and fresh node `dstVar`. `dir` is interpreted per-hop.
@@ -76,8 +79,8 @@ object VarExpand {
         * documented deviation, wrong/partial answers are never silent. */
       hopsLimit: Option[Long] = None,
       /** Pre-oriented (id, src, dst) edge frame override — the planner's
-        * filter-lambda path supplies traversal-ready edges; stepping is
-        * always Out against it. */
+        * filter-lambda path supplies traversal-ready edges, each stepping
+        * src → dst. */
       edgesOverride: Option[DataFrame] = None): DataFrame = {
     require(minHops >= 0, s"bad hop range $minHops..$maxHops")
     // an EMPTY interval (*2..1, *1..0) matches nothing — zero rows, not an
@@ -85,29 +88,20 @@ object VarExpand {
     // reference's ExpandVariable yields no pulls for an empty range)
     val emptyInterval = maxHops.exists(_ < minHops)
 
-    // Pre-orient once for undirected patterns (the [[ShortestPath.oriented]]
-    // pattern): the per-round frontier⋈edges join must stay a single
-    // equi-join — an OR-of-equalities condition would fall back to
-    // BroadcastNestedLoopJoin on every round. The reversed copy excludes
-    // self-loops so a loop edge traverses once, matching the reference's
-    // BOTH iteration. After orienting, every hop steps Out.
-    val edges = edgesOverride.getOrElse {
-      val edges0 = g.edgesOfTypes(types)
-        .select(col(GraphState.IdCol), col(GraphState.SrcCol), col(GraphState.DstCol))
-      dir match {
-        case Expand.Both =>
-          edges0.unionByName(
-            edges0
-              .filter(col(GraphState.SrcCol) =!= col(GraphState.DstCol))
-              .select(
-                col(GraphState.IdCol),
-                col(GraphState.DstCol).as(GraphState.SrcCol),
-                col(GraphState.SrcCol).as(GraphState.DstCol)))
-        case _ => edges0
-      }
+    // Orient once ([[Expand.oriented]]): every hop steps near → far, so
+    // the per-round frontier⋈edges join stays a single equi-join — an
+    // OR-of-equalities condition would fall back to
+    // BroadcastNestedLoopJoin on every round.
+    val edges = {
+      val o = edgesOverride
+        .map(Expand.Oriented(_, GraphState.SrcCol, GraphState.DstCol))
+        .getOrElse(Expand.oriented(
+          g.edgesOfTypes(types).select(
+            col(GraphState.IdCol), col(GraphState.SrcCol), col(GraphState.DstCol)),
+          dir, GraphState.SrcCol, GraphState.DstCol))
+      o.df.select(
+        col(GraphState.IdCol).as(EID), col(o.near).as(NEAR), col(o.far).as(FAR))
     }
-    val stepDir =
-      if (edgesOverride.isDefined || dir == Expand.Both) Expand.Out else dir
 
     val base = frame
       .withColumn(CUR, Frames.id(srcVar))
@@ -135,7 +129,7 @@ object VarExpand {
         var reached: Seq[DataFrame] = Nil
         if (minHops == 0) reached = reached :+ cur
         for (k <- 1 to h) {
-          cur = step(cur, edges, stepDir)
+          cur = step(cur, edges)
           if (k >= minHops) reached = reached :+ cur
         }
         reached.reduce(_ unionByName _)
@@ -149,14 +143,10 @@ object VarExpand {
         // the single-node reference's O(deg) adjacency fetch analog), so
         // a point-seeded traversal never scans the full edge corpus.
         var ePersisted: Option[DataFrame] = None
-        // the frontier matches the edge's SRC for Out steps but its DST
-        // for In steps — prune the column the join actually probes
-        val pruneCol =
-          if (stepDir == Expand.In) GraphState.DstCol else GraphState.SrcCol
         def edgesFor(frontierIds: Option[Seq[Long]]): DataFrame =
           frontierIds match {
             case Some(ids) =>
-              edges.filter(col(pruneCol).isin(ids.map(Long.box): _*))
+              edges.filter(col(NEAR).isin(ids.map(Long.box): _*))
             case None =>
               ePersisted.getOrElse {
                 val p = edges.persist(
@@ -211,7 +201,7 @@ object VarExpand {
                 .distinct().collect().map(_.getLong(0)).toSeq)
             else None
           cur = step(
-            cur, edgesFor(frontierIds), stepDir,
+            cur, edgesFor(frontierIds),
             bcastFrontier = curN <= Scratch.BroadcastFrontierRows)
             .transform(Scratch.cp)
           // one action per round: the frontier count serves the emptiness
@@ -265,34 +255,17 @@ object VarExpand {
     }
   }
 
-  /** One hop: join the frontier to the edge frame, enforce edge
-    * uniqueness, extend the path. */
+  /** One hop: join the frontier to the oriented (EID, NEAR, FAR) edges,
+    * enforce edge uniqueness, extend the path. */
   private def step(
       cur0: DataFrame,
       edges: DataFrame,
-      dir: Expand.Direction,
       bcastFrontier: Boolean = false): DataFrame = {
     val cur = if (bcastFrontier) broadcast(cur0) else cur0
-    val e = edges.select(
-      col(GraphState.IdCol).as("__e_id"),
-      col(GraphState.SrcCol).as("__e_src"),
-      col(GraphState.DstCol).as("__e_dst"))
-    val joined = dir match {
-      case Expand.Out =>
-        cur.join(e, col(CUR) === col("__e_src"))
-          .withColumn("__next", col("__e_dst"))
-      case Expand.In =>
-        cur.join(e, col(CUR) === col("__e_dst"))
-          .withColumn("__next", col("__e_src"))
-      case Expand.Both =>
-        // never reached: apply() pre-orients the edge frame and steps Out
-        throw new UnsupportedOperationException(
-          "undirected step: pre-orient the edge frame and step Out")
-    }
-    joined
-      .filter(!array_contains(col(PATH), col("__e_id")))
-      .withColumn(PATH, concat(col(PATH), array(col("__e_id"))))
-      .withColumn(CUR, col("__next"))
-      .drop("__e_id", "__e_src", "__e_dst", "__next")
+    cur.join(edges, col(CUR) === col(NEAR))
+      .filter(!array_contains(col(PATH), col(EID)))
+      .withColumn(PATH, concat(col(PATH), array(col(EID))))
+      .withColumn(CUR, col(FAR))
+      .drop(EID, NEAR, FAR)
   }
 }

@@ -494,9 +494,9 @@ object Procedures {
     val (nodes, edges) = selectGraph(ctx)
     val keyOf = col("node").bitwiseAND(lit((1L << 48) - 1))
     val seeds = nodes.filter(keyOf < seedMax).select(col("node").as(SeedCol))
-    val e0 = ShortestPath.oriented(
-      edges.select(col("src").as(SrcCol), col("dst").as(DstCol)),
-      if (directed) Expand.Out else Expand.Both)
+    val e0 = Expand
+      .oriented(edges, if (directed) Expand.Out else Expand.Both, "src", "dst")
+      .steps()
     val local = for {
       es <- Cutover.collect(e0)
       ns <- Cutover.collect(nodes)

@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.core.GraphState
+import graft.cypher.Cypher
 import graft.operators.{Biconnected, Cutover, Cycles, Expand, LocalSearch, ShortestPath, VertexResident}
 import graft.procedures.{ProcContext, Procedures}
 
@@ -424,9 +425,11 @@ class CutoverSpec extends SparkTestBase {
       val g = graphOf(edges)
       val hub = edges.map(e => math.max(e._1, e._2)).max
       val sdf = Seq(0L, hub).toDF(ShortestPath.SeedCol)
-      // one-way fits, Both (each triple twice) does not
+      // one-way fits, Both (2E - loops oriented rows, with at most two
+      // loops) does not
       val between = edges.size + edges.size / 2L
-      // Both orients every triple both ways, so it covers In as well
+      // Both orients every triple both ways (a loop once), so it covers In
+      // as well
       Seq(Expand.Out, Expand.Both).foreach { dir =>
         val typed = ShortestPath.TypedEdges(g, Seq("E"), dir)
         val frame = ShortestPath.FrameEdges(typed.frame)
@@ -485,6 +488,58 @@ class CutoverSpec extends SparkTestBase {
           assert(local.nonEmpty)
           assert(local == dist)
         }
+      }
+    }
+  }
+
+  /** E edges 0→1, 1→1, 1→2, 2→2 and 3→0: two self-loops. */
+  private val loopEdges = Seq((0L, 1L), (1L, 1L), (1L, 2L), (2L, 2L), (3L, 0L))
+
+  test("an undirected hop and *1..2 match each self-loop once") {
+    val g = graphOf(loopEdges)
+    def rows(q: String) =
+      Cypher.run(spark, g, q, Map.empty).collect().map(_.toSeq).toSeq
+    val hop = rows(
+      "MATCH (a:V)-[r:E]-(b:V) RETURN id(r) AS e, id(a) AS a, id(b) AS b")
+    // three edges both ways, each loop once
+    assert(hop.size == 8, hop)
+    assert(hop.filter(_.head == 1L) == Seq(Seq(1L, 1L, 1L)))
+    // from 1: one hop to 0, over the loop to 1, and to 2; two hops 1-0-3,
+    // over the loop then to 0 or 2, and 1-2 then the loop at 2
+    Seq(None, Some(0L)).foreach { cap =>
+      withClue(s"under $cap: ") {
+        val lens = cap.fold(rows _)(c => q => underCap(c)(rows(q)))(
+          "MATCH (a:V)-[rs:E *1..2]-(b:V) WHERE id(a) = 1 " +
+            "RETURN size(rs) AS n")
+        assert(lens.map(_.head).groupBy(identity).map { case (k, v) =>
+          k -> v.size } == Map(1 -> 3, 2 -> 4), lens)
+      }
+    }
+  }
+
+  test("a Both search orients 2E - loops rows, in the frame and in the " +
+    "memo capture, and *BFS / *ALLSHORTEST agree across placements") {
+    val g = graphOf(loopEdges)
+    val typed = ShortestPath.TypedEdges(g, Seq("E"), Expand.Both)
+    val oriented = 2L * loopEdges.size - 2
+    assert(typed.frame.count() == oriented)
+    assert(LocalSearch.captureEdges(spark, typed, Seq((0L, 0.0)),
+      withWeight = false).map(_.length.toLong).contains(oriented))
+    // from 0 the BFS DAG is 0-1, 0-3 and 1-2: a cap of 4 admits it, not
+    // the oriented edge set
+    val sdf = Seq(0L).toDF(ShortestPath.SeedCol)
+    assert(underCap(4L)(LocalSearch.capture(typed, sdf, None, 16))
+      .exists(_.edges.length == 3))
+    Seq("*BFS", "*ALLSHORTEST").foreach { mode =>
+      def paths = rowSet(Cypher.run(spark, g,
+        s"MATCH p = (a:V)-[:E $mode]-(b:V) WHERE id(a) = 0 " +
+          "RETURN id(b) AS b, [x IN nodes(p) | id(x)] AS ns, " +
+          "[r IN relationships(p) | id(r)] AS es", Map.empty))
+      val dflt = paths
+      assert(dflt.size == 3, dflt)
+      withClue(s"$mode: ") {
+        assert(underCap(4L)(paths) == dflt)
+        assert(distributed(paths) == dflt)
       }
     }
   }

@@ -435,4 +435,95 @@ class CypherSpec extends SparkTestBase {
     // the memoized parent still answers from its own edges
     assert(lens(Cypher.execute(spark, g0, pathLen(0, 7))).isEmpty)
   }
+
+  /** KNOWS edges with a category `k`, a positive cost `c` and a weight `w`
+    * that is negative on the one `x` edge: 0→1, 1→2, 0→3 (b), 3→2,
+    * 2→4 (b), 1→4 (x, c 5, w -1) and 4→5. Node 5 is the one with
+    * age < 20. */
+  private def stepGraph(): GraphState = {
+    import spark.implicits._
+    val nodes = Seq((0L, 30L), (1L, 50L), (2L, 20L), (3L, 40L), (4L, 60L),
+        (5L, 10L))
+      .map { case (i, age) => (i, i, age) }
+      .toDF("_id", "pid", "age")
+      .withColumn("_labels", array(lit("P")))
+    val edges = Seq(
+        (0L, 1L, "a", 1L, 1L), (1L, 2L, "a", 1L, 1L), (0L, 3L, "b", 1L, 1L),
+        (3L, 2L, "a", 1L, 1L), (2L, 4L, "b", 2L, 2L), (1L, 4L, "x", 5L, -1L),
+        (4L, 5L, "a", 1L, 1L))
+      .zipWithIndex
+      .map { case ((s, d, k, c, w), i) => (100L + i, s, d, k, c, w, "KNOWS") }
+      .toDF("_id", "_src", "_dst", "k", "c", "w", "_type")
+    GraphState(Map("P" -> (() => nodes)), Map("KNOWS" -> (() => edges)))
+  }
+
+  /** (target pid, value) rows of a search from pid 0 on [[stepGraph]],
+    * sorted; the value is rendered as a string. */
+  private def fromZero(hop: String, value: String): Seq[(Long, String)] =
+    Cypher.run(spark, stepGraph(),
+      s"MATCH p = (a:P {pid: 0})-[$hop]->(b:P) RETURN b.pid AS t, $value AS v",
+      Map.empty)
+      .collect().map(r => (r.getLong(0), String.valueOf(r.get(1))))
+      .toSeq.sorted
+
+  private val onlyEdge = "(r, n | r.k <> 'b')"
+  private val readsNode = "(r, n | n.age >= 20)"
+
+  test("2-var filter lambdas on *1..3, *BFS, *WSHORTEST and weighted " +
+    "*ALLSHORTEST, reading the edge or the target node") {
+    def ones(ts: Long*) = ts.map(t => (t, "1")).sorted
+    assert(fromZero(s":KNOWS *1..3 $onlyEdge", "1") == ones(1, 2, 4, 5))
+    assert(fromZero(s":KNOWS *1..3 $readsNode", "1") ==
+      ones(1, 2, 2, 3, 4, 4, 4))
+    assert(fromZero(s":KNOWS *BFS $onlyEdge", "size(p)") ==
+      Seq((1L, "1"), (2L, "2"), (4L, "2"), (5L, "3")))
+    assert(fromZero(s":KNOWS *BFS $readsNode", "size(p)") ==
+      Seq((1L, "1"), (2L, "2"), (3L, "1"), (4L, "2")))
+    assert(fromZero(s":KNOWS *WSHORTEST (e, v | e.c) tw $onlyEdge", "tw") ==
+      Seq((1L, "1.0"), (2L, "2.0"), (4L, "6.0"), (5L, "7.0")))
+    assert(fromZero(s":KNOWS *WSHORTEST (e, v | e.c) tw $readsNode", "tw") ==
+      Seq((1L, "1.0"), (2L, "2.0"), (3L, "1.0"), (4L, "4.0")))
+    assert(fromZero(s":KNOWS *ALLSHORTEST (e, v | e.c) tw $onlyEdge", "tw") ==
+      Seq((1L, "1.0"), (2L, "2.0"), (4L, "6.0"), (5L, "7.0")))
+    // to 2 and to 4 two paths tie: 0→1→2 / 0→3→2 and on over 2→4
+    assert(fromZero(s":KNOWS *ALLSHORTEST (e, v | e.c) tw $readsNode", "tw") ==
+      Seq((1L, "1.0"), (2L, "2.0"), (2L, "2.0"), (3L, "1.0"), (4L, "4.0"),
+        (4L, "4.0")))
+  }
+
+  test("a property map and a filter lambda on the same hop both apply") {
+    // k = 'a' keeps 0→1, 1→2, 3→2 and 4→5; the lambda drops 4→5
+    val both = s"{k: 'a'} $readsNode"
+    assert(fromZero(s":KNOWS *1..3 $both", "1") == Seq((1L, "1"), (2L, "1")))
+    assert(fromZero(s":KNOWS *BFS $both", "size(p)") ==
+      Seq((1L, "1"), (2L, "2")))
+    assert(fromZero(s":KNOWS *WSHORTEST {k: 'a'} (e, v | e.c) tw $readsNode",
+      "tw") == Seq((1L, "1.0"), (2L, "2.0")))
+  }
+
+  test("*WSHORTEST raises on a negative weight only when its filter " +
+    "keeps that edge") {
+    assert(fromZero(":KNOWS *WSHORTEST (e, v | e.w) tw (r, n | r.k <> 'x')",
+      "tw") == Seq((1L, "1.0"), (2L, "2.0"), (3L, "1.0"), (4L, "4.0"),
+        (5L, "5.0")))
+    val err = intercept[Exception](
+      fromZero(s":KNOWS *WSHORTEST (e, v | e.w) tw $onlyEdge", "tw"))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(msgs.exists(_.contains("negative or non-numeric weight")), err)
+  }
+
+  test("a filter lambda captures an outer variable with one value, and " +
+    "raises on two") {
+    def targets(head: String) =
+      Cypher.run(spark, stepGraph(),
+        s"""$head
+           |MATCH (a:P {pid: 0})-[:KNOWS *BFS (r, n | r.k = kk)]->(b:P)
+           |RETURN b.pid AS t""".stripMargin, Map.empty)
+        .collect().map(_.getLong(0)).toSeq.sorted
+    assert(targets("WITH 'a' AS kk") == Seq(1L, 2L))
+    val err = intercept[UnsupportedOperationException](
+      targets("UNWIND ['a', 'b'] AS kk"))
+    assert(err.getMessage.contains("more than one distinct binding"), err)
+  }
 }

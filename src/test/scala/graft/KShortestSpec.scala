@@ -100,10 +100,8 @@ class KShortestSpec extends SparkTestBase {
     // keeps factor×k candidates.
     val g = graphOf(
       Seq((0L, 9L), (9L, 5L), (9L, 5L), (0L, 7L), (7L, 5L), (5L, 9L)))
-    val edges = ShortestPath.oriented(
-      g.edges("E").select(
-        col("_src"), col("_dst"), col("_id").as("__sp_eid")),
-      graft.operators.Expand.Out)
+    val edges =
+      ShortestPath.TypedEdges(g, Seq("E"), graft.operators.Expand.Out).frame
     val seeds = Seq(0L).toDF(ShortestPath.SeedCol)
     val targets =
       Seq((0L, 9L)).toDF(ShortestPath.SeedCol, ShortestPath.NodeCol)
@@ -123,10 +121,8 @@ class KShortestSpec extends SparkTestBase {
     // the loop before walking the tail
     val chain = (0L until 30L).map(i => (i, i + 1))
     val g = graphOf(chain)
-    val edges = ShortestPath.oriented(
-      g.edges("E").select(
-        col("_src"), col("_dst"), col("_id").as("__sp_eid")),
-      graft.operators.Expand.Out)
+    val edges =
+      ShortestPath.TypedEdges(g, Seq("E"), graft.operators.Expand.Out).frame
     val seeds = Seq(0L).toDF(ShortestPath.SeedCol)
     val targets =
       Seq((0L, 3L)).toDF(ShortestPath.SeedCol, ShortestPath.NodeCol)

@@ -60,4 +60,14 @@ class SourceHygieneSpec extends AnyFunSuite {
       .map("""def nodeIdOf\b""".r.findAllIn(_).size).sum
     assert(defs == 1)
   }
+
+  test("every traversal orients its edges through one Expand.oriented") {
+    // Out, In and Both (a reversed copy without self-loops) are written
+    // once; Expand.orientedTriples is the driver twin
+    val main = sources("src/main")
+    assert(main.map("""def oriented\b""".r.findAllIn(_).size).sum == 1)
+    val gone = Seq("orientAs", "orientedBoth", "orientedStructEdges",
+      "propFilteredOrientedEdges")
+    assert(gone.filter(n => main.exists(_.contains(n))).isEmpty)
+  }
 }
