@@ -42,7 +42,7 @@ object PokecBench {
     val g = PokecGraphLoader(spark, dir)
     val nUsers = g.nodes("User").count()
     val nEdges = g.edges("FRIEND").count()
-    g.adjacencyBySrc.count() // pay the load-time edge index once, like the reference
+    g.allEdges.count() // read every edge frame once before the timed groups
 
     val n = nUsers
     def lcg(k: Long, a: Long, c: Long): Long = (k * a + c) % n

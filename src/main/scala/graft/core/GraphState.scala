@@ -80,30 +80,7 @@ final class GraphState(
     /** Server-side parameter store (`SET [GLOBAL] PARAMETER` /
       * `SHOW PARAMETERS`): name → (value, scope). Client-supplied
       * parameters shadow these at lowering time. */
-    val serverParams: Map[String, (Any, String)] = Map.empty,
-    /** Src-sorted adjacency cache, SHARED across GraphState versions whose
-      * edge frames are unchanged (node-only mutations carry it through;
-      * [[withEdges]] mints the derived version a fresh one and leaves this
-      * version's view intact). The reference builds its edge index at
-      * ingest (`src/storage/v2/indices/`), so the loader runs the build as
-      * a bounded load-time step rather than on first probe. */
-    private val adjCache: GraphState.AdjacencyCache =
-      new GraphState.AdjacencyCache,
-    /** Adjacency-base builder inherited from the version that OWNS
-      * [[adjCache]] (None = this version builds from its own frames).
-      * Append-derived versions keep serving the ancestor's sorted view —
-      * see [[withEdgesAppended]]. */
-    private val adjBase: Option[() => DataFrame] = None,
-    /** Adjacency-view op log since the cache-owning ancestor, in
-      * statement order: appended edge rows ([[GraphState.AdjAppend]]) and
-      * removed/replaced edge ids ([[GraphState.AdjRemove]] tombstones).
-      * The adjacency probe folds these over the base view — the reference
-      * maintains its edge index incrementally per delta for ALL delta
-      * kinds (`src/storage/v2/inmemory/storage.hpp:892`), never a full
-      * rebuild per write. Tombstones apply to the base ∪ the PRIOR
-      * appends only (fold order), so an update (= remove + re-append of
-      * the same id) stays correct. */
-    private val adjOps: Seq[GraphState.AdjOp] = Nil) {
+    val serverParams: Map[String, (Any, String)] = Map.empty) {
 
   private val nodeCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
@@ -199,26 +176,22 @@ final class GraphState(
     * every UNLABELED pattern node binds against this frame — one LDBC
     * query can hit it several times (ic5's plan carried TWO complete
     * union+SortAggregate subtrees). The deduped view is therefore
-    * memoized per state version with the [[buildAdjacency]] lifetime
-    * rules: session-persisted on pinned (loader) graphs, sweep-tracked
-    * (persist-only, recompute-safe) on mutation-derived versions. */
-  // (gen, frame): non-pinned (mutation-derived) states register the
-  // persist with Scratch, so a sweep() unpersists it — the memo re-keys on
-  // Scratch.generation and rebuilds after a sweep instead of serving an
-  // unpersisted frame (bookkeeping cost, zero reuse) for the rest of the
-  // state's life. Pinned loader states ignore the generation (never swept).
+    * memoized per state version, persisted and registered with
+    * [[graft.operators.Scratch.trackPersisted]]; the memo keys on
+    * `Scratch.generation`, so a read after a sweep rebuilds and
+    * re-registers instead of serving an unpersisted frame. */
   private var allNodesOverlapMemo: Option[(Long, DataFrame)] = None
   private def allNodesOverlapCached: DataFrame = synchronized {
     val gen = graft.operators.Scratch.generation
     allNodesOverlapMemo match {
-      case Some((g, df)) if adjCache.pinned || g == gen => df
+      case Some((g, df)) if g == gen => df
       case _ =>
         val df = nodeLabels
           .map(nodes)
           .reduce(GraphState.unionReconciled)
           .dropDuplicates(GraphState.IdCol)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!adjCache.pinned) graft.operators.Scratch.trackPersisted(df)
+        graft.operators.Scratch.trackPersisted(df)
         allNodesOverlapMemo = Some((gen, df))
         df
     }
@@ -252,64 +225,11 @@ final class GraphState(
     countCache.getOrElseUpdate(
       " all", nodeLabels.map(labelCountEstimate).sum)
 
-  /** Point-adjacency access path: the edge union range-partitioned and
-    * sorted by `_src`, persisted in the columnar cache. Cached batches
-    * keep min/max stats, so a tiny-id-list probe prunes batches instead
-    * of rescanning every type frame end-to-end — the single-node analog
-    * of sorting/bucketing the edge materialization by src at load on a
-    * real cluster (the reference's O(deg) adjacency fetch). Built lazily
-    * on the first probe of this state version and shared afterwards. */
-  def adjacencyBySrc: DataFrame = {
-    val base = adjCache.getOrBuild(
-      adjBase.map(_.apply()).getOrElse(buildAdjacency()))
-    // mutation-derived versions: serve the ancestor's sorted+persisted
-    // view (min/max batch pruning intact) plus the op log — NEVER a
-    // full-corpus re-sort per mutated version. Src predicates push below
-    // both the unions and the anti-joins (left-side pushdown), so the
-    // probe still prunes the persisted base; tombstone anti-joins touch
-    // only the rows surviving that pruning, and AQE broadcasts the
-    // (statement-sized) id frames at runtime.
-    import org.apache.spark.sql.functions.col
-    adjOps.foldLeft(base) {
-      case (acc, GraphState.AdjAppend(mk)) =>
-        GraphState.unionReconciled(acc, mk())
-      case (acc, GraphState.AdjRemove(mk)) =>
-        val ids = mk()
-        acc.join(
-          ids.select(col(ids.columns.head).as(GraphState.IdCol)),
-          Seq(GraphState.IdCol), "left_anti")
-      case (acc, GraphState.AdjRemoveIncident(mk)) =>
-        val ids = mk()
-        val c = col(ids.columns.head)
-        acc
-          .join(ids.select(c.as(GraphState.SrcCol)),
-            Seq(GraphState.SrcCol), "left_anti")
-          .join(ids.select(c.as(GraphState.DstCol)),
-            Seq(GraphState.DstCol), "left_anti")
-    }
-  }
-
-  private def buildAdjacency(): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = allEdges
-      .repartitionByRange(col(GraphState.SrcCol))
-      .sortWithinPartitions(GraphState.SrcCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // mutation-derived views are query-lifetime: let the harness sweep
-    // free their blocks (persist-only — a premature sweep just recomputes)
-    if (!adjCache.pinned) graft.operators.Scratch.trackPersisted(df)
-    df
-  }
-
-  /** Ingest-time adjacency build (load/ANALYZE — where the reference pays
-    * for its edge index): bounded background materialization; a probe
-    * arriving mid-build awaits it instead of racing a duplicate sort.
-    * Pins this version's cache for the session. Idempotent; errors are
-    * swallowed (a later probe rebuilds synchronously and surfaces them). */
-  def prewarmAdjacency(): Unit = {
-    adjCache.pin()
-    adjCache.warm(buildAdjacency())
-  }
+  /** [[allEdges]], for the benchmark's set-up (perfbench
+    * `graftbench.Main`), which counts it once after each load. The engine
+    * reads the edge frames themselves and pushes its filters into the
+    * scans. */
+  def adjacencyBySrc: DataFrame = allEdges
 
   /** Scan by label, Cypher-style: a label nothing carries matches nothing
     * (no error) — the planner's `ScanAllByLabel` entry point. */
@@ -364,97 +284,19 @@ final class GraphState(
   def withNodes(label: String, mk: () => DataFrame): GraphState =
     new GraphState(
       nodeThunks + (label -> mk), edgeThunks, idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams, adjCache,
-      adjBase, adjOps)
+      GraphState.freshTag(), indexes, descriptions, serverParams)
 
   def withEdges(tpe: String, mk: () => DataFrame): GraphState =
-    // arbitrary edge rewrite (delete / update): the src-sorted adjacency
-    // view is stale FOR THE NEW VERSION only — mint it a fresh cache and
-    // leave this (possibly still-live, possibly prewarmed-base) version's
-    // view alone. Append-only writes go through [[withEdgesAppended]],
-    // which keeps the base view and chains a delta instead.
-    new GraphState(
-      nodeThunks, edgeThunks + (tpe -> mk), idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams,
-      new GraphState.AdjacencyCache)
+    withEdges(Map(tpe -> mk))
 
-  /** New version whose `tpe` frame is replaced by an APPEND of exactly
-    * `delta` rows: the derived version serves the cache-owning ancestor's
-    * sorted base view ∪ the accumulated deltas instead of rebuilding the
-    * full-corpus sort (the reference maintains its in-memory edge index
-    * incrementally per delta, storage.hpp:892). A chain longer than
-    * `spark.graft.adjacency.maxDeltas` (default 32) falls back to a fresh
-    * rebuild-on-probe — the union plan must not grow unboundedly under
-    * thousands of driver-sequenced appends. */
-  private def adjMaxDeltas: Int =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.adjacency.maxDeltas", "32").toInt
-    catch { case _: Throwable => 32 }
-
-  def withEdgesAppended(
-      tpe: String, mk: () => DataFrame, delta: DataFrame): GraphState = {
-    if (adjOps.size >= adjMaxDeltas)
-      withEdges(tpe, mk)
-    else {
-      val parent = this
-      new GraphState(
-        nodeThunks, edgeThunks + (tpe -> mk), idBase, mayOverlap, enums,
-        GraphState.freshTag(), indexes, descriptions, serverParams,
-        adjCache,
-        adjBase.orElse(Some(() => parent.buildAdjacency())),
-        adjOps :+ GraphState.AdjAppend(() => delta))
-    }
-  }
-
-  /** New version whose `tpe` frame is replaced such that ONLY rows with
-    * `_id ∈ changedIds()` differ from the current frame: removed
-    * (delete), or — with `readdChanged` — updated in place (SET on edge
-    * properties). The derived version serves the ancestor's sorted
-    * adjacency view with the changed ids tombstoned out, plus the changed
-    * rows re-read from the NEW frame for updates; a chain past
-    * `spark.graft.adjacency.maxDeltas` falls back to a fresh
-    * rebuild-on-probe. The reference maintains its in-memory edge index
-    * per delta for every delta kind (storage.hpp:892) — replace-type
-    * writes must not re-sort the corpus either. */
-  def withEdgesMutated(
-      tpe: String,
-      mk: () => DataFrame,
-      changedIds: () => DataFrame, // single column of edge ids
-      readdChanged: Boolean): GraphState =
-    withEdgesOps(
-      Map(tpe -> mk),
-      GraphState.AdjRemove(changedIds) +: (
-        if (!readdChanged) Nil
-        else Seq(GraphState.AdjAppend(() =>
-          mk().join(
-            changedIds().select(
-              org.apache.spark.sql.functions
-                .col(changedIds().columns.head).as(GraphState.IdCol)),
-            Seq(GraphState.IdCol), "left_semi")))))
-
-  /** Replace several type frames at once and extend the adjacency op log
-    * with the given ops — the multi-frame form every id-keyed edge
-    * mutation (delete / SET / REMOVE across types) funnels through. Falls
-    * back to plain replacement + fresh rebuild-on-probe past
-    * `spark.graft.adjacency.maxDeltas`. */
-  private[graft] def withEdgesOps(
-      updates: Map[String, () => DataFrame],
-      ops: Seq[GraphState.AdjOp]): GraphState = {
-    if (adjOps.size + ops.size > adjMaxDeltas)
-      new GraphState(
-        nodeThunks, edgeThunks ++ updates, idBase, mayOverlap, enums,
-        GraphState.freshTag(), indexes, descriptions, serverParams,
-        new GraphState.AdjacencyCache)
-    else {
-      val parent = this
-      new GraphState(
-        nodeThunks, edgeThunks ++ updates, idBase, mayOverlap, enums,
-        GraphState.freshTag(), indexes, descriptions, serverParams,
-        adjCache,
-        adjBase.orElse(Some(() => parent.buildAdjacency())),
-        adjOps ++ ops)
-    }
-  }
+  /** Replace several type frames at once — the multi-frame form every
+    * id-keyed edge mutation (delete / SET / REMOVE across types) funnels
+    * through. No frame to replace returns this very version. */
+  def withEdges(updates: Map[String, () => DataFrame]): GraphState =
+    if (updates.isEmpty) this
+    else new GraphState(
+      nodeThunks, edgeThunks ++ updates, idBase, mayOverlap, enums,
+      GraphState.freshTag(), indexes, descriptions, serverParams)
 
   /** Materialize (localCheckpoint) every frame whose thunk CHANGED vs
     * `prev` — the per-batch commit step of periodic.iterate: (a) a
@@ -487,67 +329,10 @@ final class GraphState(
       if (!prev.edgeThunks.get(t).exists(_ eq th)) {
         val d = edges(t).localCheckpoint(true)
         fresh += (s"e:$t" -> d)
-        out = out.withEdgesRebound(t, () => d)
+        out = out.withEdges(t, () => d)
       }
     }
     (out, fresh)
-  }
-
-  /** Replace a frame's thunk with an EQUAL-CONTENT (checkpointed) frame:
-    * the adjacency chain carries over untouched — the view's rows did not
-    * change, only the plan backing them. */
-  private def withEdgesRebound(tpe: String, mk: () => DataFrame): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks + (tpe -> mk), idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams,
-      adjCache, adjBase, adjOps)
-
-  /** Post-batch adjacency hygiene for checkpoint-sequenced callers
-    * (periodic.iterate): the op-log entries added SINCE `prev` hold plans
-    * over this batch's pre-checkpoint frames — frames whose own
-    * checkpoints the caller unpersists once a later batch supersedes
-    * them. Checkpoint those (batch-sized) op frames now so a later probe
-    * never recomputes through a swept block. A chain whose cache lineage
-    * diverged from `prev` (maxDeltas fallback mid-batch) resets to a
-    * fresh rebuild-on-probe — the pre-fallback contract. */
-  private[graft] def checkpointAdjTail(prev: GraphState): GraphState = {
-    if (!(adjCache eq prev.adjCache))
-      return if (adjOps.isEmpty && adjBase.isEmpty) this
-      else new GraphState(
-        nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-        indexes, descriptions, serverParams, new GraphState.AdjacencyCache)
-    val shared = prev.adjOps.length
-    if (adjOps.length == shared) return this
-    if (!adjOps.take(shared).zip(prev.adjOps).forall { case (a, b) => a eq b })
-      return new GraphState(
-        nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-        indexes, descriptions, serverParams, new GraphState.AdjacencyCache)
-    // an adjBase thunk minted THIS batch closes over prev's frames, whose
-    // checkpoints the caller is about to sweep — only safe if the shared
-    // cache is already built (the thunk will never run); otherwise reset
-    // to rebuild-on-probe from this version's own checkpointed frames
-    val baseSafe = (adjBase, prev.adjBase) match {
-      case (None, _) => true
-      case (Some(a), Some(b)) if a eq b => true
-      case _ => adjCache.isBuilt
-    }
-    if (!baseSafe)
-      return new GraphState(
-        nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-        indexes, descriptions, serverParams, new GraphState.AdjacencyCache)
-    val tail = adjOps.drop(shared).map {
-      case GraphState.AdjAppend(mk) =>
-        val d = mk().localCheckpoint(true); GraphState.AdjAppend(() => d)
-      case GraphState.AdjRemove(mk) =>
-        val d = mk().localCheckpoint(true); GraphState.AdjRemove(() => d)
-      case GraphState.AdjRemoveIncident(mk) =>
-        val d = mk().localCheckpoint(true)
-        GraphState.AdjRemoveIncident(() => d)
-    }
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes, descriptions, serverParams, adjCache, adjBase,
-      adjOps.take(shared) ++ tail)
   }
 
   /** The version with the id high-water mark advanced to `base` (never
@@ -560,50 +345,49 @@ final class GraphState(
     if (base <= idBase) this
     else new GraphState(
       nodeThunks, edgeThunks, base, mayOverlap, enums,
-      indexTag, indexes, descriptions, serverParams, adjCache, adjBase, adjOps)
+      indexTag, indexes, descriptions, serverParams)
 
   /** Mark that node rows may now live in more than one label frame. */
   def withOverlap: GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap = true, enums, indexTag,
-      indexes, descriptions, serverParams, adjCache, adjBase, adjOps)
+      indexes, descriptions, serverParams)
 
   /** Register (or replace) an enum type (`CREATE ENUM`). */
   def withEnum(name: String, values: Seq[String]): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap,
       enums + (name -> values), indexTag, indexes, descriptions,
-      serverParams, adjCache, adjBase, adjOps)
+      serverParams)
 
   /** Register an index (CREATE ... INDEX). */
   def withIndex(d: GraphState.IndexDef): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes :+ d, descriptions, serverParams, adjCache, adjBase, adjOps)
+      indexes :+ d, descriptions, serverParams)
 
   /** Upsert a schema description (same-key SET replaces). */
   def withDescription(d: GraphState.DescEntry): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions.filterNot(_.sameKey(d)) :+ d, serverParams, adjCache, adjBase, adjOps)
+      descriptions.filterNot(_.sameKey(d)) :+ d, serverParams)
 
   /** Delete every description matching the predicate. */
   def dropDescriptions(p: GraphState.DescEntry => Boolean): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions.filterNot(p), serverParams, adjCache, adjBase, adjOps)
+      descriptions.filterNot(p), serverParams)
 
   /** Set / unset a server-side parameter. */
   def withServerParam(name: String, value: Any, scope: String): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions, serverParams + (name -> ((value, scope))), adjCache,
-      adjBase, adjOps)
+      descriptions, serverParams + (name -> ((value, scope))))
 
   def withoutServerParam(name: String): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions, serverParams - name, adjCache, adjBase, adjOps)
+      descriptions, serverParams - name)
 
   /** Transform every index entry in place (ANALYZE GRAPH stamps/clears
     * per-index statistics kept in `IndexDef.config`). */
@@ -611,28 +395,16 @@ final class GraphState(
       f: GraphState.IndexDef => GraphState.IndexDef): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes.map(f), descriptions, serverParams, adjCache, adjBase, adjOps)
+      indexes.map(f), descriptions, serverParams)
 
   /** Drop every index matching the predicate. */
   def dropIndexes(p: GraphState.IndexDef => Boolean): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes.filterNot(p), descriptions, serverParams, adjCache, adjBase, adjOps)
+      indexes.filterNot(p), descriptions, serverParams)
 }
 
 object GraphState {
-
-  /** One entry of the incremental-adjacency op log (see [[GraphState]]'s
-    * `adjOps`): appended edge rows, or a tombstone frame of removed /
-    * replaced edge ids (single column). Thunks, so an op over a
-    * not-yet-materialized mutation stays lazy until a probe needs it. */
-  sealed trait AdjOp
-  final case class AdjAppend(rows: () => DataFrame) extends AdjOp
-  final case class AdjRemove(ids: () => DataFrame) extends AdjOp
-  /** Tombstone every edge INCIDENT to the given node ids (DETACH DELETE):
-    * two anti-joins against the statement-sized id frame — never a scan
-    * of the edge corpus to enumerate edge ids. */
-  final case class AdjRemoveIncident(nodeIds: () => DataFrame) extends AdjOp
 
   /** Composite index label specs (reference vector-index modes,
     * `src/storage/v2/indices/vector_index.hpp`): a plain label "A", an
@@ -664,61 +436,6 @@ object GraphState {
       import org.apache.spark.sql.functions.lit
       if (isWildcard(spec)) lit(true)
       else parts(spec).map(p => tpe === p).reduce(_ || _)
-    }
-  }
-
-  /** Mutable holder for the src-sorted adjacency view. One instance is
-    * shared by every GraphState version with identical edge frames, so a
-    * node-only mutation does NOT trigger a rebuild; an edge write mints
-    * the DERIVED version a fresh cache and leaves this one untouched —
-    * prior versions are still live and their view is still correct
-    * (unpersisting it here would silently re-charge every later reader
-    * of the base graph for a full rebuild).
-    *
-    * [[pin]] marks the loader's base-graph instance: pinned views live for
-    * the session (the ingest-time index); unpinned (mutation-derived)
-    * views are query-lifetime and get registered with
-    * [[graft.operators.Scratch]] so the harness sweep frees their blocks —
-    * they are `persist`ed, not checkpointed, so an early sweep only costs
-    * a recompute, never correctness.
-    *
-    * [[warm]] is the bounded ingest-time build: one background thread
-    * materializes the view, and any probe arriving meanwhile AWAITS that
-    * build (in [[getOrBuild]]) instead of racing it for cores with a
-    * duplicate sort. */
-  final class AdjacencyCache {
-    @volatile private var cached: Option[DataFrame] = None
-    @volatile private var warmLatch: Option[java.util.concurrent.CountDownLatch] = None
-    @volatile var pinned: Boolean = false
-    def pin(): Unit = pinned = true
-    def isBuilt: Boolean = cached.nonEmpty
-    def getOrBuild(build: => DataFrame): DataFrame = {
-      warmLatch.foreach(
-        _.await(10, java.util.concurrent.TimeUnit.MINUTES))
-      synchronized {
-        cached.getOrElse { val d = build; cached = Some(d); d }
-      }
-    }
-    def warm(build: => DataFrame): Unit = {
-      val latch = new java.util.concurrent.CountDownLatch(1)
-      val mine = synchronized {
-        if (cached.nonEmpty || warmLatch.nonEmpty) false
-        else { warmLatch = Some(latch); true }
-      }
-      if (mine) {
-        val t = new Thread(() =>
-          try {
-            val d = synchronized {
-              cached.getOrElse { val b = build; cached = Some(b); b }
-            }
-            d.count()
-            ()
-          } catch { case _: Throwable => () }
-          finally latch.countDown())
-        t.setName("graft-adjacency-prewarm")
-        t.setDaemon(true)
-        t.start()
-      }
     }
   }
 

@@ -724,11 +724,7 @@ final class Planner(
           // thousands of batches don't layer thunks into one huge plan
           val (committed, fresh) =
             sub.currentState.materializeChangesTracked(preBatch)
-          // adjacency op-log hygiene: checkpoint the batch's (small) op
-          // frames so later probes never recompute through a checkpoint
-          // this loop is about to sweep — and keep serving the pre-run
-          // sorted base view instead of rebuilding per batch
-          state = committed.checkpointAdjTail(preBatch)
+          state = committed
           fresh.keys.foreach(k =>
             liveCkpt.get(k).foreach(
               graft.operators.Scratch.unpersistCheckpoint))
@@ -4054,6 +4050,8 @@ final class Planner(
       case (_, _, Lit(c: Long)) if c > 0 && pathLambda.isEmpty => c
     }
     val res: DataFrame = rel.mode match {
+      // first, so that every mode under USING HOPS LIMIT replays or raises
+      case _ if lhShortest.isDefined => lhShortest.get
       // KShortestPathsCursor (operator.cpp:3716): k shortest paths by hop
       // count, via [[ShortestPath.kShortest]] — a k-truncated BFS whose
       // frontier is bounded by k per (seed, node) (the distributed Yen
@@ -4072,7 +4070,6 @@ final class Planner(
         ShortestPath
           .kShortest(searchEdges, seeds, k, math.max(minH, 1), hiB, targets)
           .drop(ShortestPath.PathNodesCol)
-      case _ if lhShortest.isDefined => lhShortest.get
       case "ALLSHORTEST" if unitWeight.isDefined =>
         // the seed weight is 0: the lambda reads no node
         ShortestPath.bfsAllPathsEdges(searchEdges, seeds, maxH, targets)

@@ -95,15 +95,12 @@ object Mutations {
     else g.withNodes(label, () => rows)
   }
 
-  /** Append edges (schema: `_id`, `_src`, `_dst`, `_type`, props).
-    * Append-only, so the derived version keeps serving the ancestor's
-    * sorted adjacency view plus `rows` as a delta — a CREATE-then-traverse
-    * statement never pays a full-corpus adjacency rebuild. */
+  /** Append edges (schema: `_id`, `_src`, `_dst`, `_type`, props): the
+    * type's frame becomes the old frame ∪ `rows`. */
   def createEdges(g: GraphState, tpe: String, rows: DataFrame): GraphState =
     if (g.hasType(tpe))
-      g.withEdgesAppended(
-        tpe, () => unionReconciled(g.edges(tpe), rows), rows)
-    else g.withEdgesAppended(tpe, () => rows, rows)
+      g.withEdges(tpe, () => unionReconciled(g.edges(tpe), rows))
+    else g.withEdges(tpe, () => rows)
 
   /** Delete nodes by id. `detach=true` also removes incident edges (DETACH
     * DELETE); without it, dangling edges are the caller's responsibility
@@ -134,25 +131,15 @@ object Mutations {
               Seq(DstCol),
               "left_anti"))
       }.toMap
-      // ONE incident-tombstone op for the whole detach: the adjacency
-      // probe anti-joins src and dst against the statement-sized node-id
-      // frame — never a rebuild, never an edge-corpus scan to list ids
-      out = out.withEdgesOps(
-        updates,
-        Seq(GraphState.AdjRemoveIncident(() => keyG())))
+      out = out.withEdges(updates)
     }
     out
   }
 
-  /** Delete edges of one type by edge id — tombstoned in the adjacency
-    * op log, not a rebuild. */
+  /** Delete edges of one type by edge id. */
   def deleteEdges(g: GraphState, tpe: String, ids: DataFrame): GraphState = {
     val keyG = new GatedKey(ids.select(col(ids.columns.head).as(IdCol)))
-    g.withEdgesMutated(
-      tpe,
-      () => g.edges(tpe).join(keyG(), Seq(IdCol), "left_anti"),
-      () => keyG(),
-      readdChanged = false)
+    g.withEdges(tpe, () => g.edges(tpe).join(keyG(), Seq(IdCol), "left_anti"))
   }
 
   /** SET n.prop = expr for every node of a label (expr over the node
@@ -277,32 +264,8 @@ object Mutations {
           .drop("__nv", "__hit")
       })
     }.toMap
-    edgeUpdateOps(g, mks, () => upG(_.select(col(IdCol))))
+    g.withEdges(mks)
   }
-
-  /** Funnel for id-keyed edge UPDATES (SET/REMOVE property forms): replace
-    * the type frames and log one tombstone + one re-append of the changed
-    * rows, read from the NEW frames — the adjacency probe keeps serving
-    * the ancestor's sorted base view (reference storage.hpp:892 maintains
-    * its edge index per delta for updates too). */
-  private def edgeUpdateOps(
-      g: GraphState,
-      mks: Map[String, () => DataFrame],
-      changedIds: () => DataFrame): GraphState =
-    if (mks.isEmpty) g
-    else g.withEdgesOps(
-      mks,
-      Seq(
-        GraphState.AdjRemove(changedIds),
-        GraphState.AdjAppend(() =>
-          mks.values
-            .map(mk =>
-              mk().join(
-                changedIds().select(
-                  col(changedIds().columns.head).as(IdCol)),
-                Seq(IdCol), "left_semi"))
-            .reduceOption(unionReconciled)
-            .getOrElse(GraphState.emptyEdgeFrame))))
 
   /** SetProperties (operator.hpp:1539): `SET n = {map}` (replace=true) /
     * `SET n += {map}` (replace=false) for id-keyed update rows. REPLACE
@@ -336,7 +299,7 @@ object Mutations {
       t -> (() =>
         applyProps(g.edges(t), GraphState.edgeMeta, upG, keys, replace))
     }.toMap
-    edgeUpdateOps(g, mks, () => upG(_.select(col(IdCol))))
+    g.withEdges(mks)
   }
 
   private def applyProps(
@@ -533,7 +496,7 @@ object Mutations {
     val mks = prune(g.edgeTypes, only).map { t =>
       t -> (() => nestedApply(g.edges(t), upG, prop, path))
     }.toMap
-    edgeUpdateOps(g, mks, () => upG(_.select(col(IdCol))))
+    g.withEdges(mks)
   }
 
   /** `REMOVE n.p.k1…kn` (`RemoveNestedProperty`, operator.hpp:1671):
@@ -580,8 +543,7 @@ object Mutations {
     val mks = frames.map { t =>
       t -> (() => nestedRemove(g.edges(t), rmG, upG, prop, path))
     }.toMap
-    edgeUpdateOps(
-      g, mks, () => rmG(_.select(col(IdCol))))
+    g.withEdges(mks)
   }
 
   /** The two key shapes nested REMOVE can need (map-typed frames filter by
@@ -688,7 +650,7 @@ object Mutations {
         }
       })
     }.toMap
-    edgeUpdateOps(g, mks, () => keyG(_.select(col(IdCol))))
+    g.withEdges(mks)
   }
 
   /** SET n:Label / REMOVE n:Label for the given ids. */
@@ -766,8 +728,7 @@ object Mutations {
     val mks = prune(g.edgeTypes, only).map { t =>
       t -> (() => g.edges(t).join(keyG(), Seq(IdCol), "left_anti"))
     }.toMap
-    if (mks.isEmpty) g
-    else g.withEdgesOps(mks, Seq(GraphState.AdjRemove(() => keyG())))
+    g.withEdges(mks)
   }
 
   /** `CALL { … } IN TRANSACTIONS OF n ROWS` / `USING PERIODIC COMMIT`

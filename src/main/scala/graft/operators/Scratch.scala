@@ -112,7 +112,8 @@ object Scratch {
       .empty[java.lang.ref.WeakReference[DataFrame]]
 
   /** Register a `persist`ed (NOT checkpointed) query-lifetime DataFrame —
-    * e.g. a mutation-derived adjacency view — for the next [[sweep]].
+    * e.g. a version's deduped node union
+    * (GraphState.allNodesOverlapCached) — for the next [[sweep]].
     * Safe to sweep early: persisted frames recompute, they don't die. */
   def trackPersisted(df: DataFrame): DataFrame = {
     trackedDfs.synchronized {
@@ -122,8 +123,7 @@ object Scratch {
   }
 
   /** Monotonic sweep counter: memos holding a [[trackPersisted]] frame
-    * (e.g. GraphState.allNodesOverlapCached on mutation-derived states)
-    * key themselves on this so a post-sweep read rebuilds + re-registers
+    * (e.g. GraphState.allNodesOverlapCached) key themselves on this so a post-sweep read rebuilds + re-registers
     * instead of silently serving an unpersisted frame forever. */
   @volatile private var gen = 0L
   def generation: Long = gen

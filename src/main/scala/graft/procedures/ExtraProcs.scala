@@ -496,15 +496,13 @@ object ExtraProcs {
 
   /** `graph_util.connect_nodes({nodes})` — every edge whose BOTH
     * endpoints are in the given list (connect_nodes.hpp). Yields (src,
-    * dst, type) rows, one per edge instance. The probe runs against the
-    * state's src-sorted cached adjacency view: batch min/max stats prune
-    * everything outside the id range instead of rescanning every type
-    * frame (reference does an O(deg) adjacency fetch). */
+    * dst, type) rows, one per edge instance. Both id lists push into the
+    * edge scans as `isin` filters, the point fetch `VarExpand` uses. */
   def connectNodes(ctx: ProcContext): DataFrame = {
     val ids = ctx.optLongs("nodes")
     require(ids.nonEmpty, "need nodes")
     val boxed = ids.map(Long.box)
-    ctx.g.adjacencyBySrc
+    ctx.g.allEdges
       .filter(col(SrcCol).isin(boxed: _*) && col(DstCol).isin(boxed: _*))
       .select(col(SrcCol).as("src"), col(DstCol).as("dst"),
         col(TypeCol).as("rel_type"))

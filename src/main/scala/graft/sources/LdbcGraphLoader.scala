@@ -81,9 +81,7 @@ object LdbcGraphLoader {
         .map(_.head().getLong(0))
         .toArray
       val d = Dims(nMax + 1, sMax + 1, pMax + 1)
-      val g = build(spark, dir, d)
-      g.prewarmAdjacency()
-      (g, d)
+      (build(spark, dir, d), d)
     })
 
   // ---- shared derived columns (each mirrored in LdbcQueries.prelude) ----

@@ -50,11 +50,8 @@ object PokecGraphLoader {
 
   def apply(spark: SparkSession, dir: String): GraphState =
     cache.getOrElseUpdate((spark, dir), {
-      val g =
-        if (new java.io.File(s"$dir/users.parquet").exists()) native(spark, dir)
-        else derived(spark, dir)
-      g.prewarmAdjacency()
-      g
+      if (new java.io.File(s"$dir/users.parquet").exists()) native(spark, dir)
+      else derived(spark, dir)
     })
 
   /** Gate-path graph derived from the driver's TPC-H tables. */

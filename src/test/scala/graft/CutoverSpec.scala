@@ -48,7 +48,6 @@ class CutoverSpec extends SparkTestBase {
       .withColumn("_labels", array(lit("V")))
       .cache()
     val g = GraphState(Map("V" -> (() => nodes)), Map("E" -> (() => es)))
-    g.prewarmAdjacency() // pins, like every loader graph
     assert(distributed(g.localTypedEdges(Seq("E"))).isEmpty)
     assert(g.localTypedEdges(Seq("E")).map(_.length).contains(3))
   }

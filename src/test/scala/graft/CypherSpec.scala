@@ -190,6 +190,14 @@ class CypherSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("hops limit exceeded"))
     } finally spark.conf.unset("spark.graft.local.edges")
+    // a k-shortest expansion raises like the weighted and all-shortest ones
+    intercept[UnsupportedOperationException] {
+      run(
+        """USING HOPS LIMIT 1
+          |MATCH (a:Customer {c_custkey: 0})
+          |      -[:KNOWS *KSHORTEST ..4 {k: 2}]->(b:Customer)
+          |RETURN b.c_custkey""".stripMargin).collect()
+    }
   }
 
   test("kShortest returns at most k rows per pair, shortest first") {

@@ -4,8 +4,7 @@ import graft.core.GraphState
 import graft.cypher.Cypher
 
 /** MAGE helper-module write/read procedures (create/merge/nodes/node/map
-  * modules) + the round-11 scale fixes: adjacency-cache sharing across
-  * node-only mutations and the gated frontier broadcast. */
+  * modules) + the gated frontier broadcast. */
 class HelperCallsSpec extends SparkTestBase {
 
   private def empty = GraphState(Map.empty, Map.empty)
@@ -98,33 +97,6 @@ class HelperCallsSpec extends SparkTestBase {
     assert(row2.getBoolean(0) && row2.getBoolean(1))
     assert(Cypher.run(spark, r2.graph, "MATCH (:M)-[r:R]->(:M) RETURN count(r) AS c")
       .collect().head.getLong(0) == 1L)
-  }
-
-  test("adjacency view is shared across node-only mutations and extended by appends") {
-    val g1 = run(
-      empty,
-      "CREATE (a:AdjT {k: 1})-[:E]->(b:AdjT {k: 2})").graph
-    assert(g1.adjacencyBySrc.count() == 1L)
-    // the census must bracket ONLY the probes — the Cypher runs themselves
-    // localCheckpoint planner frames, which also show up as persisted RDDs
-    val g2 = run(g1, "MATCH (n:AdjT {k: 1}) SET n.tag = 'x'").graph
-    val g3 = run(g2, "MATCH (a:AdjT {k: 1}), (b:AdjT {k: 2}) CREATE (a)-[:E2]->(b)").graph
-    // census by RDD id, not size: the ContextCleaner unpersists earlier
-    // tests' scratch blocks ASYNCHRONOUSLY, so the count can shrink
-    // between reads — a rebuild would show up as a NEW persisted id
-    val persisted0 = spark.sparkContext.getPersistentRDDs.keySet
-    // node-only mutation: same base view + delta chain, no new build
-    assert(g2.adjacencyBySrc.count() == 1L)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted0),
-      "node-only mutation must reuse the adjacency view")
-    // edge CREATE is an append: the derived version serves base ∪ delta
-    // (incremental maintenance — no full rebuild, no stale data)
-    assert(g3.adjacencyBySrc.count() == 2L,
-      "append-derived version must see base plus the new edge")
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted0),
-      "append must not trigger a full-corpus rebuild")
-    // the parent's view is untouched
-    assert(g2.adjacencyBySrc.count() == 1L)
   }
 
   test("frontier broadcast is gated by the counted size") {
