@@ -52,10 +52,17 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+").head.toDouble
       catch { case _: Throwable => -1.0 }
+    // Janino compiles per pass: a last pass that still compiles is
+    // recompiling classes the codegen cache evicted since its first pass
+    def compiled: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
     val results = selected.map { case (name, fn) =>
       var ok = false
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       for (p <- 1 to passes if !(failed.contains(name))) {
+        val c0 = compiled
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
@@ -67,6 +74,7 @@ object Bench {
         }
         val sec = (System.nanoTime() - t0) / 1e9
         times += sec
+        passCompiles += compiled - c0
         // Hygiene between passes (r7 driver-bench lesson): fixpoint
         // operators eagerly localCheckpoint per round and nothing frees
         // those blocks once the query's frames go out of scope — left
@@ -83,6 +91,8 @@ object Bench {
               f"swept $swept%d scratch blocks")
       }
       locally { val _ = ok }
+      if (passCompiles.nonEmpty)
+        compiles(name) = Seq(passCompiles.head, passCompiles.last)
       // min = the contention-resistant headline; median/max ride along so
       // a judge can separate host contention (min<<median) from a real
       // regression (min~median both slow) FROM THE ARTIFACT ALONE
@@ -109,11 +119,16 @@ object Bench {
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"stats":$stats,"errors":$errs,"passes":$passes,"loadavg":$loadavg,"sf":"$sfDir"}"""
     println(json)
     // the same object goes to a file so round-over-round diffing never
-    // depends on how much stdout the harness kept
+    // depends on how much stdout the harness kept; the file alone also
+    // carries each query's compile counts, [first pass, last pass]
+    val compileCounts = compiles
+      .map { case (k, cs) => s"\"" + k + "\":" + cs.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LATEST.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(out),
-      json.getBytes("UTF-8"))
+      (json.stripSuffix("}") + s""","compiles":$compileCounts}""")
+        .getBytes("UTF-8"))
     catch {
       case e: Throwable =>
         System.err.println(s"[bench] could not write $out: ${e.getMessage}")

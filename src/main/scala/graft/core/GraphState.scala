@@ -80,7 +80,10 @@ final class GraphState(
     /** Server-side parameter store (`SET [GLOBAL] PARAMETER` /
       * `SHOW PARAMETERS`): name → (value, scope). Client-supplied
       * parameters shadow these at lowering time. */
-    val serverParams: Map[String, (Any, String)] = Map.empty) {
+    val serverParams: Map[String, (Any, String)] = Map.empty,
+    /** The execution-mode decision of the version this one derives from
+      * ([[interpreted]]); None on a root (loader or literal) version. */
+    inheritedMode: Option[ExecutionMode.Decision] = None) {
 
   private val nodeCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
@@ -225,6 +228,17 @@ final class GraphState(
     countCache.getOrElseUpdate(
       " all", nodeLabels.map(labelCountEstimate).sum)
 
+  private val mode: ExecutionMode.Decision = inheritedMode.getOrElse(
+    new ExecutionMode.Decision(() => Option.when(edgeTypes.nonEmpty)(allEdges)))
+
+  /** Whether work on this version runs on Spark's interpreted evaluators
+    * ([[ExecutionMode]]): at most [[ExecutionMode.InterpretedEdges]]
+    * edges. Memoized like [[labelCountEstimate]]: a root version decides
+    * once, with one early-stopping count of its edges, and a version
+    * derived from it by a write, DDL or id mint shares that decision and
+    * runs no job. */
+  def interpreted: Boolean = mode.interpreted
+
   /** [[allEdges]], for the benchmark's set-up (perfbench
     * `graftbench.Main`), which counts it once after each load. The engine
     * reads the edge frames themselves and pushes its filters into the
@@ -284,7 +298,7 @@ final class GraphState(
   def withNodes(label: String, mk: () => DataFrame): GraphState =
     new GraphState(
       nodeThunks + (label -> mk), edgeThunks, idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams)
+      GraphState.freshTag(), indexes, descriptions, serverParams, Some(mode))
 
   def withEdges(tpe: String, mk: () => DataFrame): GraphState =
     withEdges(Map(tpe -> mk))
@@ -296,7 +310,7 @@ final class GraphState(
     if (updates.isEmpty) this
     else new GraphState(
       nodeThunks, edgeThunks ++ updates, idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams)
+      GraphState.freshTag(), indexes, descriptions, serverParams, Some(mode))
 
   /** Materialize (localCheckpoint) every frame whose thunk CHANGED vs
     * `prev` — the per-batch commit step of periodic.iterate: (a) a
@@ -345,49 +359,49 @@ final class GraphState(
     if (base <= idBase) this
     else new GraphState(
       nodeThunks, edgeThunks, base, mayOverlap, enums,
-      indexTag, indexes, descriptions, serverParams)
+      indexTag, indexes, descriptions, serverParams, Some(mode))
 
   /** Mark that node rows may now live in more than one label frame. */
   def withOverlap: GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap = true, enums, indexTag,
-      indexes, descriptions, serverParams)
+      indexes, descriptions, serverParams, Some(mode))
 
   /** Register (or replace) an enum type (`CREATE ENUM`). */
   def withEnum(name: String, values: Seq[String]): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap,
       enums + (name -> values), indexTag, indexes, descriptions,
-      serverParams)
+      serverParams, Some(mode))
 
   /** Register an index (CREATE ... INDEX). */
   def withIndex(d: GraphState.IndexDef): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes :+ d, descriptions, serverParams)
+      indexes :+ d, descriptions, serverParams, Some(mode))
 
   /** Upsert a schema description (same-key SET replaces). */
   def withDescription(d: GraphState.DescEntry): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions.filterNot(_.sameKey(d)) :+ d, serverParams)
+      descriptions.filterNot(_.sameKey(d)) :+ d, serverParams, Some(mode))
 
   /** Delete every description matching the predicate. */
   def dropDescriptions(p: GraphState.DescEntry => Boolean): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions.filterNot(p), serverParams)
+      descriptions.filterNot(p), serverParams, Some(mode))
 
   /** Set / unset a server-side parameter. */
   def withServerParam(name: String, value: Any, scope: String): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions, serverParams + (name -> ((value, scope))))
+      descriptions, serverParams + (name -> ((value, scope))), Some(mode))
 
   def withoutServerParam(name: String): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions, serverParams - name)
+      descriptions, serverParams - name, Some(mode))
 
   /** Transform every index entry in place (ANALYZE GRAPH stamps/clears
     * per-index statistics kept in `IndexDef.config`). */
@@ -395,13 +409,13 @@ final class GraphState(
       f: GraphState.IndexDef => GraphState.IndexDef): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes.map(f), descriptions, serverParams)
+      indexes.map(f), descriptions, serverParams, Some(mode))
 
   /** Drop every index matching the predicate. */
   def dropIndexes(p: GraphState.IndexDef => Boolean): GraphState =
     new GraphState(
       nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes.filterNot(p), descriptions, serverParams)
+      indexes.filterNot(p), descriptions, serverParams, Some(mode))
 }
 
 object GraphState {

@@ -169,6 +169,7 @@ final class Planner(
     frameHints.get(v).map(_.toSeq.sorted)
 
   def plan(q: Query): DataFrame = {
+    graft.core.ExecutionMode(spark, g)
     hopsLimit = q.hopsLimit
     periodicMode = q.periodic
     // getHopsCounter() (hops_limit.hpp counter): exactly 0 for statements

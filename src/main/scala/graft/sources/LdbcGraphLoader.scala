@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.GraphState
+import graft.core.{ExecutionMode, GraphState}
 
 /** LDBC-SNB-profile social network for the mgbench LDBC workload ports
   * (`/root/reference/tests/mgbench/workloads/ldbc_interactive.py`,
@@ -68,7 +68,8 @@ object LdbcGraphLoader {
   private val cache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), (GraphState, Dims)]
 
-  def apply(spark: SparkSession, dir: String): GraphState = state(spark, dir)._1
+  def apply(spark: SparkSession, dir: String): GraphState =
+    ExecutionMode(spark, state(spark, dir)._1)
   def dims(spark: SparkSession, dir: String): Dims = state(spark, dir)._2
 
   private def state(spark: SparkSession, dir: String): (GraphState, Dims) =

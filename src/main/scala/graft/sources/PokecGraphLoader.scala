@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.core.GraphState
+import graft.core.{ExecutionMode, GraphState}
 
 /** Pokec-profile social graph for the mgbench workload port
   * (`/root/reference/tests/mgbench/workloads/pokec.py`): a single `:User`
@@ -49,10 +49,10 @@ object PokecGraphLoader {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), GraphState]
 
   def apply(spark: SparkSession, dir: String): GraphState =
-    cache.getOrElseUpdate((spark, dir), {
+    ExecutionMode(spark, cache.getOrElseUpdate((spark, dir), {
       if (new java.io.File(s"$dir/users.parquet").exists()) native(spark, dir)
       else derived(spark, dir)
-    })
+    }))
 
   /** Gate-path graph derived from the driver's TPC-H tables. */
   private def derived(spark: SparkSession, dir: String): GraphState = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.GraphState
+import graft.core.{ExecutionMode, GraphState}
 
 /** Builds a deterministic property graph from the driver-generated TPC-H-ish
   * parquet tables (see TESTDATA.md). This is our stand-in for the reference's
@@ -267,7 +267,7 @@ object TpchGraphLoader {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), GraphState]
 
   def apply(spark: SparkSession, sfDir: String): GraphState =
-    cache.getOrElseUpdate((spark, sfDir), build(spark, sfDir))
+    ExecutionMode(spark, cache.getOrElseUpdate((spark, sfDir), build(spark, sfDir)))
 
   private def nodeFrame(label: String, df: DataFrame, key: Column): DataFrame = {
     val props = df.columns.toSeq.filterNot(_.startsWith("__")).map(col)

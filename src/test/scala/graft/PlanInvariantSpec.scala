@@ -11,7 +11,7 @@ package graft
   *   - expansions are equi-joins (no CartesianProduct in a join path),
   *   - the disconnected-pattern cartesian broadcasts its small side,
   *   - aggregates are partial (map-side combine: two HashAggregate
-  *     levels) and stay inside WholeStageCodegen,
+  *     levels),
   *   - knn_graph's self-join reads ONE persisted materialization of the
   *     coded corpus.
   * A planner change that drops any of these fails sbt, not the bench.
@@ -73,11 +73,12 @@ class PlanInvariantSpec extends SparkTestBase {
       s"cy_two_pattern_disconnected does not broadcast the small side:\n$p")
   }
 
-  test("grouped aggregate is partial (map-side combine) and codegen'd") {
-    // AQE prints `isFinalPlan=false` without codegen wrappers until THIS
-    // dataframe's plan executes (a .count() builds a different plan) —
-    // collect() it so the final adaptive plan with its WholeStageCodegen
-    // spans is what the assertion reads
+  test("grouped aggregate is partial (map-side combine)") {
+    // AQE prints its initial plan until THIS dataframe's plan executes (a
+    // .count() builds a different plan) — collect() it so the final
+    // adaptive plan is what the assertion reads. Whether the aggregate is
+    // whole-stage codegen'd is the execution mode's decision, pinned on
+    // both sides of its bound by ExecutionModeSpec.
     val df = SparkEntry.queries("agg_pricing_summary")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
@@ -86,10 +87,6 @@ class PlanInvariantSpec extends SparkTestBase {
       hashAggs >= 2,
       s"agg_pricing_summary lacks partial aggregation ($hashAggs " +
         s"HashAggregate nodes):\n$p")
-    // the final adaptive plan prints codegen'd spans as `*(n) Operator`
-    assert(
-      p.contains("WholeStageCodegen") || p.contains("*("),
-      s"agg_pricing_summary falls out of whole-stage codegen:\n$p")
   }
 
   test("knn_graph self-joins ONE persisted coded materialization") {

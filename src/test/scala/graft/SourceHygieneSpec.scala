@@ -73,6 +73,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(gone.filter(n => main.exists(_.contains(n))).isEmpty)
   }
 
+  test("src/main writes spark.sql.codegen keys at exactly one site") {
+    // the codegen mode is session state the engine owns: ExecutionMode
+    // sets it for every version the engine loads or plans on, so no other
+    // write can leave a stale mode behind
+    val writers = sourceFiles("src/main")
+      .filter(p => Files.readString(p).contains("\"spark.sql.codegen."))
+    assert(writers.map(_.getFileName.toString) == List("ExecutionMode.scala"))
+    assert("""conf\.set\(""".r.findAllIn(Files.readString(writers.head)).size == 1)
+    assert(sources("src/main").forall(
+      """SQLConf\.\w*CODEGEN""".r.findFirstIn(_).isEmpty))
+  }
+
   test("no src/main file but GraphState names adjacencyBySrc") {
     // the benchmark's set-up alias of allEdges; the engine reads the edge
     // frames themselves and pushes its filters into the scans
