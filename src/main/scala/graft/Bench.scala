@@ -61,7 +61,7 @@ object Bench {
       var ok = false
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
-      for (p <- 1 to passes if !(failed.contains(name))) {
+      for (_ <- 1 to passes if !(failed.contains(name))) {
         val c0 = compiled
         val t0 = System.nanoTime()
         try {
@@ -75,20 +75,6 @@ object Bench {
         val sec = (System.nanoTime() - t0) / 1e9
         times += sec
         passCompiles += compiled - c0
-        // Hygiene between passes (r7 driver-bench lesson): fixpoint
-        // operators eagerly localCheckpoint per round and nothing frees
-        // those blocks once the query's frames go out of scope — left
-        // alone they accumulate storage-memory pressure across the run
-        // and read as phantom per-query regressions on a contended host.
-        // The operators register exactly their round-intermediate blocks
-        // with Scratch (cross-query caches — loader frames, memoized
-        // indexes — are NOT registered, so this can never invalidate
-        // them).
-        val swept = graft.operators.Scratch.sweep()
-        if (swept > 0)
-          System.err.println(
-            f"[bench] $name%s pass $p%d: $sec%.2fs, " +
-              f"swept $swept%d scratch blocks")
       }
       locally { val _ = ok }
       if (passCompiles.nonEmpty)
@@ -103,6 +89,12 @@ object Bench {
       val mx = if (sorted.isEmpty) -1.0 else sorted.last
       (name, mn, med, mx)
     }
+    // block-manager bytes still held once every query has run: blocks a
+    // live frame reads, plus any the ContextCleaner has not reached yet
+    val held = spark.sparkContext.getRDDStorageInfo
+    System.err.println(
+      f"[bench] storage at end: ${held.map(_.numCachedPartitions).sum}%d blocks, " +
+        f"${held.map(i => i.memSize + i.diskSize).sum / 1048576.0}%.1f MB")
     // sub-millisecond digits are contention noise; rounding keeps the
     // one-line JSON inside the driver's bounded stdout-tail capture
     def r4(v: Double): String = "%.4f".format(v)

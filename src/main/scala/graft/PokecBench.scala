@@ -237,7 +237,6 @@ object PokecBench {
         }
         val sec = (System.nanoTime() - t0) / 1e9
         if (sec < best) best = sec
-        graft.operators.Scratch.sweep()
       }
       (name, grp, batch, best)
     }

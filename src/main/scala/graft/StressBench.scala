@@ -37,7 +37,6 @@ object StressBench {
         thunk()
         val sec = (System.nanoTime() - t0) / 1e9
         if (sec < best) best = sec
-        graft.operators.Scratch.sweep()
       }
       best
     }

@@ -27,9 +27,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // free the query's fixpoint round blocks (see Scratch) — the result
-      // is fully on disk at this point
-      graft.operators.Scratch.sweep()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

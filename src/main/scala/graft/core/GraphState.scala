@@ -179,30 +179,19 @@ final class GraphState(
     * every UNLABELED pattern node binds against this frame — one LDBC
     * query can hit it several times (ic5's plan carried TWO complete
     * union+SortAggregate subtrees). The deduped view is therefore
-    * memoized per state version, persisted and registered with
-    * [[graft.operators.Scratch.trackPersisted]]; the memo keys on
-    * `Scratch.generation`, so a read after a sweep rebuilds and
-    * re-registers instead of serving an unpersisted frame. */
-  private var allNodesOverlapMemo: Option[(Long, DataFrame)] = None
-  private def allNodesOverlapCached: DataFrame = synchronized {
-    val gen = graft.operators.Scratch.generation
-    allNodesOverlapMemo match {
-      case Some((g, df)) if g == gen => df
-      case _ =>
-        val df = nodeLabels
-          .map(nodes)
-          .reduce(GraphState.unionReconciled)
-          .dropDuplicates(GraphState.IdCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.operators.Scratch.trackPersisted(df)
-        allNodesOverlapMemo = Some((gen, df))
-        df
-    }
-  }
+    * checkpointed once per version, on first use: the version owns its
+    * blocks, and the ContextCleaner frees them once neither the version
+    * nor a frame read from the view is reachable. */
+  private lazy val allNodesOverlap: DataFrame =
+    graft.operators.Scratch.cp(
+      nodeLabels
+        .map(nodes)
+        .reduce(GraphState.unionReconciled)
+        .dropDuplicates(GraphState.IdCol))
 
   def allNodes: DataFrame =
     if (nodeLabels.isEmpty) GraphState.emptyNodeFrame
-    else if (mayOverlap) allNodesOverlapCached
+    else if (mayOverlap) allNodesOverlap
     else nodeLabels.map(nodes).reduce(GraphState.unionReconciled)
 
   def allEdges: DataFrame =
@@ -312,41 +301,31 @@ final class GraphState(
       nodeThunks, edgeThunks ++ updates, idBase, mayOverlap, enums,
       GraphState.freshTag(), indexes, descriptions, serverParams, Some(mode))
 
-  /** Materialize (localCheckpoint) every frame whose thunk CHANGED vs
-    * `prev` — the per-batch commit step of periodic.iterate: (a) a
-    * failing write expression surfaces inside ITS batch (the thunks are
-    * lazy; without forcing, the error would escape to the first later
-    * read), and (b) thousands of driver-sequenced batches would
-    * otherwise layer thunk-over-thunk into an exploding logical plan.
-    * Untouched frames carry over for free (reference-equality compare). */
-  private[graft] def materializeChangesFrom(prev: GraphState): GraphState =
-    materializeChangesTracked(prev)._1
-
-  /** As [[materializeChangesFrom]], also returning the freshly
-    * checkpointed frames keyed by kind:name. Callers sequencing thousands
-    * of batches (periodic.iterate) unpersist a key's PREVIOUS batch
-    * checkpoint once a later batch supersedes it — superseded blocks
-    * otherwise pile up in executor storage until a GC-driven
-    * ContextCleaner pass. */
-  private[graft] def materializeChangesTracked(
-      prev: GraphState): (GraphState, Map[String, DataFrame]) = {
+  /** Materialize ([[graft.operators.Scratch.cp]]) every frame whose thunk
+    * CHANGED vs `prev` — the per-batch commit step of periodic.iterate:
+    * (a) a failing write expression surfaces inside ITS batch (the thunks
+    * are lazy; without forcing, the error would escape to the first later
+    * read), and (b) thousands of driver-sequenced batches would otherwise
+    * layer thunk-over-thunk into an exploding logical plan. Untouched
+    * frames carry over for free (reference-equality compare). A batch's
+    * checkpoint is freed by the ContextCleaner once a later batch's
+    * version supersedes it. */
+  private[graft] def materializeChangesFrom(prev: GraphState): GraphState = {
+    import graft.operators.Scratch
     var out = this
-    var fresh = Map.empty[String, DataFrame]
     nodeThunks.foreach { case (l, th) =>
       if (!prev.nodeThunks.get(l).exists(_ eq th)) {
-        val d = nodes(l).localCheckpoint(true)
-        fresh += (s"n:$l" -> d)
+        val d = Scratch.cp(nodes(l))
         out = out.withNodes(l, () => d)
       }
     }
     edgeThunks.foreach { case (t, th) =>
       if (!prev.edgeThunks.get(t).exists(_ eq th)) {
-        val d = edges(t).localCheckpoint(true)
-        fresh += (s"e:$t" -> d)
+        val d = Scratch.cp(edges(t))
         out = out.withEdges(t, () => d)
       }
     }
-    (out, fresh)
+    out
   }
 
   /** The version with the id high-water mark advanced to `base` (never

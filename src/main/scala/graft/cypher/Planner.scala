@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Frames, GraphState}
-import graft.operators.{Expand, ShortestPath, VarExpand}
+import graft.operators.{Expand, Scratch, ShortestPath, VarExpand}
 import Ast._
 
 /** Clause-by-clause lowering of a Cypher query to a DataFrame program — our
@@ -106,7 +106,7 @@ final class Planner(
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(
       df.schema.fields :+ StructField(idCol, LongType, nullable = false))
-    val head = graft.operators.Scratch.labeled(spark, s"graft:mint $idCol")(
+    val head = Scratch.labeled(spark, s"graft:mint $idCol")(
       graft.operators.Cutover.within(df, MintLocalRows))
     head match {
       case Some(small) =>
@@ -117,13 +117,13 @@ final class Planner(
           java.util.Arrays.asList(rows: _*), schema)
         (local, small.length.toLong)
       case None =>
-        graft.operators.Scratch.labeled(spark, s"graft:mint $idCol") {
-          val cp = df.localCheckpoint(true)
+        Scratch.labeled(spark, s"graft:mint $idCol") {
+          val cp = Scratch.cp(df)
           val rdd = cp.rdd.zipWithIndex().map { case (r, i) =>
             org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (start + i))
           }
           val pinned =
-            spark.createDataFrame(rdd, schema).localCheckpoint(true)
+            Scratch.cp(spark.createDataFrame(rdd, schema))
           (pinned, pinned.count())
         }
     }
@@ -683,12 +683,6 @@ final class Planner(
       var success = true
       var executed = 0L
       var b = 0L
-      // per-key live checkpoint registry: a frame checkpointed by batch N
-      // is dead the moment batch N+k checkpoints the same frame again —
-      // unpersist it then (ContextCleaner would otherwise only reclaim
-      // superseded blocks on GC pressure, long after a 10k-batch run has
-      // filled executor storage)
-      var liveCkpt = Map.empty[String, org.apache.spark.sql.DataFrame]
       while (success && b < nBatches) {
         val preBatch = state
         try {
@@ -723,13 +717,7 @@ final class Planner(
           // per-batch commit: force the batch's writes NOW so a failing
           // write expression fails (and rolls back) THIS batch, and so
           // thousands of batches don't layer thunks into one huge plan
-          val (committed, fresh) =
-            sub.currentState.materializeChangesTracked(preBatch)
-          state = committed
-          fresh.keys.foreach(k =>
-            liveCkpt.get(k).foreach(
-              graft.operators.Scratch.unpersistCheckpoint))
-          liveCkpt ++= fresh
+          state = sub.currentState.materializeChangesFrom(preBatch)
           subHigh = math.max(subHigh, sub.idHighWater)
           executed += 1
         } catch {
@@ -1713,7 +1701,7 @@ final class Planner(
           col("__d.__do").as("__do"), col("__d.__di").as("__di"))
         .groupBy("__dn")
         .agg(sum("__do").as("__dout"), sum("__di").as("__din"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       degreeCache = Some((state, df))
       df
   }
@@ -1865,7 +1853,7 @@ final class Planner(
     val pathProjected = pc.pattern.pathVar.exists(pv =>
       (pc.where.toSeq :+ pc.proj).exists(e => varsIn(e).contains(pv)))
     val seed = LF(
-      if (pathProjected) seed0.localCheckpoint(true) else seed0,
+      if (pathProjected) Scratch.cp(seed0) else seed0,
       seedScope)
     var (sub, subEdges) = planPattern(seed, pc.pattern)
     sub = edgeUniqueness(sub, subEdges)
@@ -1987,7 +1975,7 @@ final class Planner(
           // per-row DYNAMIC labels (with.feature 17-24): rows group by
           // their evaluated label array, one frame append per distinct
           // set — bounded driver loop, the reference evaluates per row
-          val rcp = rows.localCheckpoint(true)
+          val rcp = Scratch.cp(rows)
           val distinctArrs = rcp
             .select(col(GraphState.LabelsCol)).distinct().limit(65).collect()
           require(
@@ -2072,7 +2060,7 @@ final class Planner(
             col(s"$eName${Frames.Sep}$k").as(k)
           }: _*)
       if (dynT) {
-        val rcp = rows.localCheckpoint(true)
+        val rcp = Scratch.cp(rows)
         val distinctTs = rcp
           .select(col(GraphState.TypeCol)).distinct().limit(65).collect()
         require(
@@ -2259,7 +2247,7 @@ final class Planner(
         .reduce(_ unionByName _)
         .filter(col("__dl").isNotNull)
         .distinct()
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       val distinctLs = pairs
         .select(col("__dl")).distinct().limit(65).collect().map(_.getString(0))
       require(
@@ -2885,7 +2873,7 @@ final class Planner(
     // pattern join from scratch.
     val (sub0, subEdges) = planPattern(seed, part)
     val sub1 = edgeUniqueness(sub0, subEdges)
-    val sub = LF(graft.operators.Scratch.cp(sub1.df), sub1.scope)
+    val sub = LF(Scratch.cp(sub1.df), sub1.scope)
 
     // 2. bindings with no match → create branch (undirected hops create
     //    outgoing, the openCypher MERGE direction rule)
@@ -3318,7 +3306,7 @@ final class Planner(
               import spark.implicits._
               // row-count-gated: a near-budget emulation result (up to 2M
               // path rows) must shuffle-join, not force-broadcast
-              val rowsDf = graft.operators.Scratch.gatedBroadcast(
+              val rowsDf = Scratch.gatedBroadcast(
                 emu.rows
                   .map(r => (r.src, r.dst, r.eids))
                   .toDF("__lh_src", "__lh_dst", "__lh_eids"),
@@ -4603,7 +4591,7 @@ final class Planner(
     val identKeys = ident.map(_._1)
     // pin the input ONCE: ids, first-row-wins order, and the output
     // re-bind all read this same frame
-    val base = graft.operators.Scratch.cp(
+    val base = Scratch.cp(
       ident.zipWithIndex.foldLeft(
         onMatch.zipWithIndex.foldLeft(
           onCreate.zipWithIndex.foldLeft(
@@ -4847,7 +4835,7 @@ final class Planner(
     // common pattern shapes keep the cheaper decorrelated patternJoin)
     val seeded = LF(
       lf.df.withColumn(keyCol, monotonically_increasing_id())
-        .localCheckpoint(true),
+        .transform(Scratch.cp),
       lf.scope + (kv -> Binding.ValueB))
     val outer = lf.scope.vars.map(_._1) :+ kv
     def planInner(sq: SingleQuery): DataFrame = {
@@ -5102,7 +5090,7 @@ final class Planner(
                     e.getField(GraphState.SrcCol) === element_at(acc, -1),
                     e.getField(GraphState.DstCol))
                     .otherwise(e.getField(GraphState.SrcCol)))))))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     out = out
       .join(
         collected(out, "__pm_walk", state.allNodes, nsCol),

@@ -696,7 +696,7 @@ object Mutations {
             .withColumn(
               LabelsCol,
               array_union(col(LabelsCol), array(labels.map(lit): _*)))
-            .localCheckpoint(true))
+            .transform(Scratch.cp))
       matched.foreach { mc =>
         labels.foreach { l =>
           val cur = out
@@ -751,7 +751,7 @@ object Mutations {
     val numbered = Ranks.orderedIds(rows, "__rn", orderCols: _*)
       .withColumn("__batch", (col("__rn") / batchSize).cast("int"))
       .drop("__rn")
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     val batches = numbered.select("__batch").distinct()
       .orderBy("__batch").collect().map(_.getInt(0))
     batches.foldLeft(g) { (state, b) =>

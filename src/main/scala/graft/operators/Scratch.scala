@@ -1,28 +1,23 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 
-/** Registry of ROUND-INTERMEDIATE checkpoint blocks. Driver fixpoints
-  * (`localCheckpoint(eager = true)` per round) pin their blocks in the
-  * block manager until the SparkContext dies — nothing unpersists them
-  * when the query's frames go out of scope, so a long bench/verify run
-  * accumulates storage-memory pressure that reads as phantom per-query
-  * regressions on a contended host (the r7 driver bench).
+/** Engine scratch helpers, and the one way the engine materializes an
+  * intermediate frame: [[cp]], an eager `localCheckpoint`.
   *
-  * Operators wrap per-round eager checkpoints in [[cp]]; the harness
-  * mains ([[graft.Bench]], [[graft.Verify]]) call [[sweep]] BETWEEN
-  * queries, after the previous query's result is fully consumed.
-  * Unpersisting a locally-checkpointed RDD destroys it irrecoverably, so
-  * only frames that are dead once the query's output is materialized may
-  * be registered — never cross-query caches (loader frames, memoized
-  * text/vector indexes) and never frames a returned GraphState retains.
+  * Block ownership: a block lives as long as some frame that reads it.
+  * A checkpointed frame's plan holds its block-backed RDD, so every frame
+  * derived from it, and every `GraphState` version whose thunks return
+  * it, keeps the blocks alive; once none is reachable, Spark's
+  * ContextCleaner unpersists them on its next GC-driven pass. A frame
+  * that must live as long as a version therefore goes through [[cp]] and
+  * is held by the version; nothing frees checkpoint blocks by hand,
+  * because they do not recompute. A frame persisted with
+  * `Dataset.persist` for one statement is unpersisted in the same scope:
+  * Spark's CacheManager holds a persisted Dataset until it is
+  * unpersisted, so the cleaner never frees it.
   */
 object Scratch {
-
-  private val tracked =
-    scala.collection.mutable.ArrayBuffer.empty[java.lang.ref.WeakReference[RDD[_]]]
 
   /** Exact UPPER BOUND on an optimized plan's row count, derivable on the
     * driver with no Spark job — Some(n) only when every leaf is a
@@ -64,19 +59,9 @@ object Scratch {
     finally sc.setJobDescription(prev)
   }
 
-  /** Eagerly localCheckpoint `df` and register the resulting block-backed
-    * RDD for the next [[sweep]]. */
-  def cp(df: DataFrame): DataFrame = {
-    val d = labeled(df.sparkSession, "graft:cp")(df.localCheckpoint(true))
-    d.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        tracked.synchronized {
-          tracked += new java.lang.ref.WeakReference[RDD[_]](lr.rdd)
-        }
-      case _ => ()
-    }
-    d
-  }
+  /** Eagerly localCheckpoint `df`, as a `graft:cp` job. */
+  def cp(df: DataFrame): DataFrame =
+    labeled(df.sparkSession, "graft:cp")(df.localCheckpoint(true))
 
   /** Known-row-count ceiling for a broadcast frontier. */
   val BroadcastFrontierRows = 100000L
@@ -93,66 +78,5 @@ object Scratch {
     if (knownCount >= 0 && knownCount <= BroadcastFrontierRows)
       org.apache.spark.sql.functions.broadcast(df)
     else df
-  }
-
-  /** Destroy a `localCheckpoint`ed frame's backing blocks NOW. The caller
-    * guarantees no live GraphState / result still reads the frame —
-    * checkpoint blocks don't recompute, so a premature call here breaks
-    * later readers (see the registry contract above). */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        try lr.rdd.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-      case _ => ()
-    }
-
-  private val trackedDfs =
-    scala.collection.mutable.ArrayBuffer
-      .empty[java.lang.ref.WeakReference[DataFrame]]
-
-  /** Register a `persist`ed (NOT checkpointed) query-lifetime DataFrame —
-    * e.g. a version's deduped node union
-    * (GraphState.allNodesOverlapCached) — for the next [[sweep]].
-    * Safe to sweep early: persisted frames recompute, they don't die. */
-  def trackPersisted(df: DataFrame): DataFrame = {
-    trackedDfs.synchronized {
-      trackedDfs += new java.lang.ref.WeakReference[DataFrame](df)
-    }
-    df
-  }
-
-  /** Monotonic sweep counter: memos holding a [[trackPersisted]] frame
-    * (e.g. GraphState.allNodesOverlapCached) key themselves on this so a post-sweep read rebuilds + re-registers
-    * instead of silently serving an unpersisted frame forever. */
-  @volatile private var gen = 0L
-  def generation: Long = gen
-
-  /** Unpersist every registered block (non-blocking) and clear the
-    * registry. Returns how many live entries were swept. */
-  def sweep(): Int = {
-    var n = 0
-    gen += 1
-    tracked.synchronized {
-      tracked.foreach { ref =>
-        val rdd = ref.get()
-        if (rdd != null) {
-          try { rdd.unpersist(blocking = false); n += 1 }
-          catch { case _: Throwable => () }
-        }
-      }
-      tracked.clear()
-    }
-    trackedDfs.synchronized {
-      trackedDfs.foreach { ref =>
-        val df = ref.get()
-        if (df != null) {
-          try { df.unpersist(blocking = false); n += 1 }
-          catch { case _: Throwable => () }
-        }
-      }
-      trackedDfs.clear()
-    }
-    n
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
-import graft.operators.Cutover
+import graft.operators.{Cutover, Scratch}
 
 /** The apoc-style workhorse modules — the reference's
   * `src/mage/cpp/neighbors_module`, `path_module` and `refactor_module`
@@ -259,7 +259,7 @@ object ApocProcs {
       case None =>
         val steps = orientedSteps(ctx.g, st)
           .select(col("s"), col("d")).persist()
-        var seen = starts.toDF("n").localCheckpoint(true)
+        var seen = Scratch.cp(starts.toDF("n"))
         var frontier = seen
         var layers = spark.emptyDataset[(Int, Long)].toDF("hop", "n")
         var hop = 1
@@ -267,15 +267,15 @@ object ApocProcs {
         // and the broadcast gate (never force-broadcast a big frontier)
         var frontierN = frontier.count()
         while (hop <= distance && frontierN > 0) {
-          val next = graft.operators.Scratch.gatedBroadcast(frontier, frontierN)
+          val next = Scratch.gatedBroadcast(frontier, frontierN)
             .join(steps, col("n") === col("s"))
             .select(col("d").as("n")).distinct()
             .join(seen, Seq("n"), "left_anti")
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
           frontierN = next.count()
           layers =
             layers.unionByName(next.select(lit(hop).as("hop"), col("n")))
-          seen = seen.union(next).localCheckpoint(true)
+          seen = Scratch.cp(seen.union(next))
           frontier = next
           hop += 1
         }
@@ -450,7 +450,7 @@ object ApocProcs {
             array(col("last")).as("nodes"),
             array().cast(ArrayType(LongType)).as("eids"))
           .join(bools, col("last") === col("nid"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
         if (minHops <= 0)
           emitted += level.filter(validCol(lf))
             .select(col("start"), col("last"), lit(0L).as("hops"), col("nodes"))
@@ -468,7 +468,7 @@ object ApocProcs {
               concat(col("nodes"), array(col("d"))).as("nodes"),
               concat(col("eids"), array(col("eid"))).as("eids"))
             .join(bools, col("last") === col("nid"))
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
           l += 1
           if (l >= minHops && l <= maxHops)
             emitted += next.filter(validCol(lf))
@@ -544,9 +544,9 @@ object ApocProcs {
           if (beginSeq) steps
           else orientedSteps(ctx.g, anySteps).select(col("s"), col("d"))
         val bools = labelBools(ctx.g, lf).persist()
-        var seen = starts.toDF("n").localCheckpoint(true)
+        var seen = Scratch.cp(starts.toDF("n"))
         var frontier = seen
-        var accDf = starts.map((_, 0)).toDF("n", "hop").localCheckpoint(true)
+        var accDf = starts.map((_, 0)).toDF("n", "hop").transform(Scratch.cp)
         var hop = 0
         // frontier count = emptiness probe + broadcast gate (the filtered
         // frontier is a subset, so gating on the full count is safe)
@@ -554,17 +554,17 @@ object ApocProcs {
         while (frontierN > 0 && hop < maxHops) {
           val contOk = if (hop == 0 && !filterStart) lit(true) else contCol(lf)
           val src = if (hop == 0) steps0 else steps
-          val next = graft.operators.Scratch.gatedBroadcast(
+          val next = Scratch.gatedBroadcast(
               frontier.join(bools, col("n") === col("nid")).filter(contOk)
                 .select(col("n")), frontierN)
             .join(src, col("n") === col("s"))
             .select(col("d").as("n")).distinct()
             .join(seen, Seq("n"), "left_anti")
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
           frontierN = next.count()
           hop += 1
           accDf = accDf.unionByName(next.withColumn("hop", lit(hop)))
-          seen = seen.union(next).localCheckpoint(true)
+          seen = Scratch.cp(seen.union(next))
           frontier = next
         }
         steps.unpersist()
@@ -581,7 +581,7 @@ object ApocProcs {
               col("n").as("node"), col("hop").cast("long").as("hop"))
           else {
             val nodesDf = returnedDf.select(col("n")).distinct()
-              .localCheckpoint(true)
+              .transform(Scratch.cp)
             // edges among result nodes, every type (SubgraphAll scans
             // OutRelationships unfiltered): two semi-joins, collected only
             // at the single list-valued yield row

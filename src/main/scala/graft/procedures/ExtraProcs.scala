@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, SrcCol, TypeCol}
-import graft.operators.Cutover
+import graft.operators.{Cutover, Scratch}
 
 /** The remaining MAGE algorithm tail: `union_find` and `max_flow`
   * (reference `src/mage/python/union_find.py`, `max_flow.py`) and the
@@ -395,19 +395,19 @@ object ExtraProcs {
           // the single-id seed is always broadcast-safe)
           var frontier = broadcast(Seq(start).toDF("n"))
             .join(steps, col("n") === col("s"))
-            .select(col("d").as("n")).distinct().localCheckpoint(true)
+            .select(col("d").as("n")).distinct().transform(Scratch.cp)
           var visited = frontier
           // count = emptiness probe + broadcast gate, one action per round
           var frontierN = frontier.count()
           while (frontierN > 0) {
-            val next = graft.operators.Scratch
+            val next = Scratch
               .gatedBroadcast(frontier, frontierN)
               .join(steps, col("n") === col("s"))
               .select(col("d").as("n")).distinct()
               .join(visited, Seq("n"), "left_anti")
-              .localCheckpoint(true)
+              .transform(Scratch.cp)
             frontierN = next.count()
-            visited = visited.union(next).localCheckpoint(true)
+            visited = Scratch.cp(visited.union(next))
             frontier = next
           }
           steps.unpersist()
@@ -459,7 +459,7 @@ object ExtraProcs {
     }
     val ordered: Seq[Long] = local.getOrElse {
       val e = edges.persist()
-      var remaining = nodes.localCheckpoint(true)
+      var remaining = Scratch.cp(nodes)
       val acc = mutable.ArrayBuffer.empty[Long]
       var total = 0L
       var done = false
@@ -469,7 +469,7 @@ object ExtraProcs {
       var remainingN = remaining.count()
       while (!done) {
         val live = e.join(
-          graft.operators.Scratch.gatedBroadcast(
+          Scratch.gatedBroadcast(
             remaining.select(col("node").as("s")), remainingN),
           Seq("s"), "leftsemi")
         val layer = remaining
@@ -483,7 +483,7 @@ object ExtraProcs {
           remainingN -= layer.length
           remaining = remaining
             .join(layer.toSeq.toDF("node"), Seq("node"), "left_anti")
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
         }
       }
       e.unpersist()

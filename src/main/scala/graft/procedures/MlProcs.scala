@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, SrcCol}
-import graft.operators.Cutover
+import graft.operators.{Cutover, Scratch}
 
 /** Deterministic variants of the Python MAGE analytics modules
   * (`src/mage/python/set_cover.py`, `kmeans.py`, `link_prediction.py`).
@@ -104,7 +104,7 @@ object MlProcs {
     val clusterProp = ctx.args.lift(2).map(_.toString).getOrElse("cluster_id")
     val assigned = kmeansAssignments(ctx)
       .select(col(IdCol), col("cluster_id").as("__km_cid"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     var g = ctx.g
     val base = ctx.g
     g.nodeLabels.filter(l => base.nodes(l).columns.contains(prop)).foreach {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
-import graft.operators.{Cutover, Expand, LocalProcs, ShortestPath, VertexResident}
+import graft.operators.{Cutover, Expand, LocalProcs, Scratch, ShortestPath, VertexResident}
 
 /** `CALL name(args) YIELD …` procedure registry — the reference's query
   * modules (`CallProcedure`, `src/query/plan/operator.hpp:2891`; module
@@ -202,7 +202,7 @@ object Procedures {
     val n = nodes.count().toDouble
     val e = edges.persist()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-    var pr = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
+    var pr = nodes.withColumn("rank", lit(1.0 / n)).transform(Scratch.cp)
     for (_ <- 1 to iters) {
       val contrib = pr
         .join(outdeg, col("node") === col("src"))
@@ -216,7 +216,7 @@ object Procedures {
           col("node"),
           (lit((1 - d) / n) + lit(d) * coalesce(col("in_rank"), lit(0.0)))
             .as("rank"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
     }
     e.unpersist(blocking = false)
     outdeg.unpersist(blocking = false)
@@ -254,7 +254,7 @@ object Procedures {
     val und = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
-    var comp = nodes.withColumn("comp", col("node")).localCheckpoint(true)
+    var comp = nodes.withColumn("comp", col("node")).transform(Scratch.cp)
     var converged = false
     var rounds = 0
     val maxRounds = 64
@@ -283,7 +283,7 @@ object Procedures {
           "left_outer")
         .select(col("node"), col("comp"),
           (col("__old").isNull || col("comp") < col("__old")).as("__ch"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       converged = next.filter(col("__ch")).isEmpty
       comp = next.select("node", "comp")
     }
@@ -336,7 +336,7 @@ object Procedures {
     }
     if (local.nonEmpty) return local.get
     val e = edges.persist()
-    var c = nodes.withColumn("centrality", lit(0.0)).localCheckpoint(true)
+    var c = nodes.withColumn("centrality", lit(0.0)).transform(Scratch.cp)
     for (_ <- 1 to iters) {
       val in = c
         .join(e, col("node") === col("src"))
@@ -350,7 +350,7 @@ object Procedures {
           col("node"),
           (lit(beta) + lit(alpha) * coalesce(col("__s"), lit(0.0)))
             .as("centrality"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
     }
     e.unpersist(blocking = false)
     c
@@ -547,7 +547,7 @@ object Procedures {
     var delta = vis
       .select(col(SeedCol), col(NodeCol), lit(0.0).as("__delta"))
       .limit(0)
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     for (l <- maxD to 1 by -1) {
       val contrib = dag
         .filter(col("__dw") === l)
@@ -566,7 +566,7 @@ object Procedures {
         .groupBy(SeedCol, NodeCol)
         .agg(
           sum(col("__c").cast("decimal(38,12)")).cast("double").as("__delta"))
-      delta = delta.unionByName(contrib).localCheckpoint(true)
+      delta = Scratch.cp(delta.unionByName(contrib))
     }
     val bc = delta
       .filter(col(NodeCol) =!= col(SeedCol))
@@ -577,7 +577,7 @@ object Procedures {
       .select(
         col("node"),
         coalesce(col("__bc").cast("double"), lit(0.0)).as("centrality"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     Seq(e, vis, dag).foreach(_.unpersist(blocking = false))
     out
   }
@@ -614,7 +614,7 @@ object Procedures {
     val out = nodes
       .join(counts, Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("__t"), lit(0L)).as("triangles"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     und.unpersist(blocking = false)
     out
   }
@@ -636,7 +636,7 @@ object Procedures {
     var cur = nodes
       .filter(keyOf(col("node")) < seedMax)
       .select(keyOf(col("node")).as("walk"), lit(0).as("step"), col("node"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     var out = cur
     for (s <- 1 to len) {
       cur = cur
@@ -650,7 +650,7 @@ object Procedures {
         .groupBy("walk")
         .agg(min("__ch").as("__ch"))
         .select(col("walk"), lit(s).as("step"), col("__ch")("d").as("node"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       out = out.unionByName(cur)
     }
     e.unpersist(blocking = false)
@@ -688,7 +688,7 @@ object Procedures {
       .select(
         keyOf(col("node")).as("walk"), lit(0).as("step"),
         col("node"), lit(null).cast("long").as("prev"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     var out = cur.select(col("walk"), col("step"), col("node"))
     for (s <- 1 to len) {
       cur = cur
@@ -715,7 +715,7 @@ object Procedures {
         .select(
           col("walk"), lit(s).as("step"),
           col("__ch")("d").as("node"), col("__ch")("pv").as("prev"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       out = out.unionByName(cur.select(col("walk"), col("step"), col("node")))
     }
     e.unpersist(blocking = false)
@@ -803,10 +803,10 @@ object Procedures {
   /** Per-(graph version, label, kind) memo of built text indexes — the
     * `degreeFrame` pattern (Planner): an index rebuilt from the corpus on
     * every CALL is not an index. Keyed weakly on GraphState identity so
-    * superseded versions free theirs; built frames are eagerly
-    * `localCheckpoint`ed, so a second CALL against the same version plans
+    * superseded versions free theirs; built frames are checkpointed
+    * ([[Scratch.cp]]), so a second CALL against the same version plans
     * a leaf scan instead of the scan+explode+groupBy build (see
-    * ExplainCheck). At 100 TB this memo is the in-session stand-in for a
+    * `graft.Dev explain`). At 100 TB this memo is the in-session stand-in for a
     * persisted index table (the reference persists tantivy indexes,
     * text_index.hpp:37-48). */
   private val textIndexCache =
@@ -842,7 +842,7 @@ object Procedures {
       build: => DataFrame): DataFrame = {
     val dir = org.apache.spark.sql.SparkSession.active.conf
       .get("spark.graft.index.dir", null)
-    if (dir == null) build.localCheckpoint(true)
+    if (dir == null) Scratch.cp(build)
     else {
       val full = s"${g.indexTag}:$key"
       val path = s"$dir/${full.replaceAll("[^A-Za-z0-9_.-]", "_")}"
@@ -996,11 +996,11 @@ object Procedures {
     val nd = nodes
       .join(deg, Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     val m2 = math.max(und.count(), 1L) // = 2m (each edge counted twice)
     var comm = nd
       .select(col("node"), col("deg"), col("node").as("community"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     for (_ <- 1 to iters) {
       val vol = comm.groupBy("community").agg(sum("deg").as("vol"))
       val wvc = und
@@ -1033,7 +1033,7 @@ object Procedures {
           col("node"),
           col("deg"),
           coalesce(col("community"), col("node")).as("community"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
     }
     und.unpersist(blocking = false)
     comm.select(col("node"), col("community"))
@@ -1076,12 +1076,12 @@ object Procedures {
       .unionByName(simple.select(col("dst").as("src"), col("src").as("dst")))
       .groupBy("src", "dst")
       .agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
-    var selfw = nodes.select(col("node"), lit(0L).as("sw")).localCheckpoint(true)
-    var lvlNodes = nodes.select(col("node")).localCheckpoint(true)
+      .transform(Scratch.cp)
+    var selfw = nodes.select(col("node"), lit(0L).as("sw")).transform(Scratch.cp)
+    var lvlNodes = nodes.select(col("node")).transform(Scratch.cp)
     // original node -> current level node
     var mapping = nodes.select(col("node"), col("node").as("lvl"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     var level = 0
     var progressed = true
     while (progressed && level < maxLevels) {
@@ -1094,12 +1094,12 @@ object Procedures {
           col("node"),
           (coalesce(col("dw"), lit(0L)) + lit(2L) * coalesce(col("sw"), lit(0L)))
             .as("deg"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       val m2 =
         math.max(nd.agg(sum("deg")).first.getLong(0), 1L)
       var comm = nd
         .select(col("node"), col("deg"), col("node").as("community"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       var round = 0
       var changed = true
       while (changed && round < iters) {
@@ -1133,7 +1133,7 @@ object Procedures {
             col("node"),
             col("deg"),
             coalesce(col("community"), col("node")).as("community"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
         changed = !next
           .join(
             comm.select(col("node"), col("community").as("__old")),
@@ -1151,7 +1151,7 @@ object Procedures {
             cm.select(col("node").as("lvl"), col("community")),
             Seq("lvl"))
           .select(col("node"), col("community").as("lvl"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
         val e2 = und
           .join(
             cm.select(col("node").as("src"), col("community").as("cs")),
@@ -1170,7 +1170,7 @@ object Procedures {
           .groupBy(col("community").as("node"))
           .agg(sum("sw").as("swO"))
         lvlNodes = cm.select(col("community").as("node")).distinct()
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
         selfw = lvlNodes
           .join(intra, Seq("node"), "left_outer")
           .join(oldSelf, Seq("node"), "left_outer")
@@ -1178,12 +1178,12 @@ object Procedures {
             col("node"),
             (coalesce(col("swE"), lit(0L)) + coalesce(col("swO"), lit(0L)))
               .as("sw"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
         und = e2
           .filter(col("cs") =!= col("cd"))
           .groupBy(col("cs").as("src"), col("cd").as("dst"))
           .agg(sum("w").as("w"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
       }
     }
     mapping.select(col("node"), col("lvl").as("community"))
@@ -1195,7 +1195,7 @@ object Procedures {
     * dense cores, parallel edges — in O(forest depth) rounds). Yields
     * (src, dst) per bridge edge, canonical src < dst. */
   def bridgesProc(ctx: ProcContext): DataFrame = {
-    val edges = selectedEdges(ctx).localCheckpoint(true)
+    val edges = Scratch.cp(selectedEdges(ctx))
     val flags = graft.operators.Biconnected(ctx.spark, edges)
       .select(col("edge_id"), col("is_bridge"))
     edges
@@ -1226,7 +1226,7 @@ object Procedures {
     * bcc ids dense from 0 by min member edge id (assigned by distributed
     * sort + zipWithIndex, no single-partition window). */
   def biconnectedProc(ctx: ProcContext): DataFrame = {
-    val edges = selectedEdges(ctx).localCheckpoint(true)
+    val edges = Scratch.cp(selectedEdges(ctx))
     val flags = graft.operators.Biconnected(ctx.spark, edges)
     val ids = graft.operators.Ranks.orderedIds(
       flags.select("bcc").distinct(), "bcc_id", "bcc")
@@ -1275,7 +1275,7 @@ object Procedures {
     val und = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
-    var lab = nodes.withColumn("community", col("node")).localCheckpoint(true)
+    var lab = nodes.withColumn("community", col("node")).transform(Scratch.cp)
     for (_ <- 1 to iters) {
       val votes = lab
         .join(und, col("node") === col("src"))
@@ -1291,7 +1291,7 @@ object Procedures {
         .select(
           col("node"),
           coalesce(col("__new"), col("community")).as("community"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
     }
     und.unpersist(blocking = false)
     lab

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
+import graft.operators.Scratch
 
 /** Second python-MAGE tranche (reference `src/mage/python/`):
   * `node_classification.py`, `xml_module.py`, `export_util.py`,
@@ -145,7 +146,7 @@ object PyTail2Procs {
       case Some(n: java.lang.Number) => n.intValue()
       case _ => ncNum("num_epochs").toInt
     }
-    val data = ncData(ctx).localCheckpoint(true)
+    val data = Scratch.cp(ncData(ctx))
     require(!data.isEmpty, "node_classification.train: graph is empty")
     // deterministic split: xxhash64(id) mod 10 under split_ratio*10
     val cut = math.round(ncNum("split_ratio") * 10).toInt
@@ -397,7 +398,7 @@ object PyTail2Procs {
           flatProps(nodes0).map { case (k, c) => c.as(k) }): _*),
       "__idx", "__old")
       .withColumn(IdCol, (lit(base) * lit(1L << 48) + col("__idx")).cast("long"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     val idMap = nodes.select(col("__old"), col(IdCol))
     var g = g0
     val labels = nodes.select(explode(col(LabelsCol)).as("l"))
@@ -432,7 +433,7 @@ object PyTail2Procs {
         .join(
           idMap.select(col("__old").as("__e"), col(IdCol).as(DstCol)),
           Seq("__e"))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       val types = rels.select(col(TypeCol)).distinct()
         .collect().map(_.getString(0))
       types.foreach { t =>

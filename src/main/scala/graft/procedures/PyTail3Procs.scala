@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
 import graft.core.GraphState.{DstCol, IdCol, LabelsCol, SrcCol, TypeCol}
+import graft.operators.Scratch
 
 /** Third python-MAGE tranche (reference `src/mage/python/`): `tgn.py`
   * (temporal graph networks) and `gnn.py` (PyG / TF-GNN export-import) —
@@ -108,13 +109,13 @@ object PyTail3Procs {
           lit(5000.0)) - lit(1.0))
     var emb = g.allNodes
       .select(col(IdCol), normalized(seed).as("emb"))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     if (layers > 0) {
       val und = g.allEdges
         .select(col(SrcCol).as("__a"), col(DstCol).as("__b"))
         .unionByName(g.allEdges
           .select(col(DstCol).as("__a"), col(SrcCol).as("__b")))
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       for (_ <- 1 to layers) {
         val neigh = und
           .join(emb.select(col(IdCol).as("__b"), col("emb")), Seq("__b"))
@@ -134,7 +135,7 @@ object PyTail3Procs {
               col("__nemb").isNotNull,
               zip_with(col("emb"), col("__nemb"), (a, b) => a + b))
               .otherwise(col("emb"))).as("emb"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
       }
     }
     emb
@@ -277,7 +278,7 @@ object PyTail3Procs {
     // records (the deterministic model has no gradient path)
     val all = graft.operators.Ranks.orderedIds(
       ctx.g.allEdges.select(IdCol, SrcCol, DstCol), "__rn", IdCol)
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     val split = st.trainEvalIndexSplit
     val bs = st.batchSize
     val train = all.filter(col("__rn") < split).drop("__rn")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.GraphState
-import graft.operators.{Mutations, Ranks}
+import graft.operators.{Mutations, Ranks, Scratch}
 
 /** The refactor module's structural write procedures
   * (`/root/reference/src/mage/cpp/refactor_module/algorithm/refactor.cpp`):
@@ -90,7 +90,7 @@ object RefactorProcs {
       .withColumn(IdCol, lit(newId))
       .withColumn(SrcCol, if (newFrom) lit(n) else col(SrcCol))
       .withColumn(DstCol, if (newFrom) col(DstCol) else lit(n))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     require(rows.count() == 1, s"$what: unknown relationship ${e.id}")
     import ctx.spark.implicits._
     g = Mutations.createEdges(g, e.tpe, rows)
@@ -131,7 +131,7 @@ object RefactorProcs {
         var row = g.nodes(l).filter(col(IdCol) === oldId)
           .withColumn(IdCol, lit(newId))
         skip.filter(row.columns.contains).foreach(p => row = row.drop(p))
-        g = Mutations.createNodes(g, l, row.localCheckpoint(true))
+        g = Mutations.createNodes(g, l, Scratch.cp(row))
       }
       if (targets.size > 1) g = g.withOverlap
       if (withRels) g.edgeTypes.foreach { t =>
@@ -149,7 +149,7 @@ object RefactorProcs {
               IdCol,
               lit((base << 48) + (1L << 47)) + lit(edgeCursor) + col("__idx"))
             .drop("__idx")
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
           edgeCursor += n
           g = Mutations.createEdges(g, t, rows)
         }
@@ -290,7 +290,7 @@ object RefactorProcs {
               IdCol,
               lit((base << 48) + (1L << 47)) + lit(edgeCursor) + col("__idx"))
             .drop("__idx")
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
           edgeCursor += n
           g = Mutations.createEdges(g, t, rows)
         }
@@ -349,7 +349,7 @@ object RefactorProcs {
       props.foreach { case (k, v) =>
         row = row.withColumn(k, litAny(ctx, v))
       }
-      g = Mutations.createEdges(g, tpe, row.localCheckpoint(true))
+      g = Mutations.createEdges(g, tpe, Scratch.cp(row))
       import ctx.spark.implicits._
       g = Mutations.deleteNodes(g, Seq(id).toDF(IdCol), detach = true)
       yields :+= ((id, newId))
@@ -397,7 +397,7 @@ object RefactorProcs {
         .withColumn(IdCol, lit(newNode))
         .withColumn(LabelsCol, array(labels.map(lit): _*).cast("array<string>"))
         .drop(SrcCol, DstCol, TypeCol)
-        .localCheckpoint(true)
+        .transform(Scratch.cp)
       require(row.count() == 1, s"$what: unknown relationship ${e.id}")
       val targets = if (labels.isEmpty) Seq("_") else labels
       targets.foreach(l => g = Mutations.createNodes(g, l, row))
@@ -489,7 +489,7 @@ object RefactorProcs {
           var row = ctx.g.nodes(l).filter(col(IdCol) === oldId)
             .withColumn(IdCol, lit(newId))
           skip.filter(row.columns.contains).foreach(p => row = row.drop(p))
-          g = Mutations.createNodes(g, l, row.localCheckpoint(true))
+          g = Mutations.createNodes(g, l, Scratch.cp(row))
         }
         if (targets.size > 1) g = g.withOverlap
         mirror += (oldId -> newId)
@@ -511,7 +511,7 @@ object RefactorProcs {
         .withColumn(SrcCol, lit(s))
         .withColumn(DstCol, lit(d))
       skip.filter(row.columns.contains).foreach(p => row = row.drop(p))
-      g = Mutations.createEdges(g, e.tpe, row.localCheckpoint(true))
+      g = Mutations.createEdges(g, e.tpe, Scratch.cp(row))
     }
     (g.withIdBase(base), entityYield(g, pairs))
   }
@@ -601,7 +601,7 @@ object RefactorProcs {
       copyProps.filter(k => k != newPropKey && all.columns.contains(k))
     val src = all.filter(col(orig).isNotNull)
       .select((col(IdCol) +: col(orig).as("__cat") +: copyKeys.map(col)): _*)
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     val cats = Ranks
       .orderedIds(src.select(col("__cat")).distinct(), "__idx", "__cat")
       .withColumn(IdCol, lit(base << 48) + col("__idx"))
@@ -616,7 +616,7 @@ object RefactorProcs {
     val catFrame = catProps.select(
       (col(IdCol) +: array(lit(newLabel)).as(LabelsCol) +:
         col("__cat").as(newPropKey) +: copyKeys.map(col)): _*)
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     g = Mutations.createNodes(g, newLabel, catFrame)
     val withCat = src.select(col(IdCol).as("__nid"), col("__cat"))
       .join(catProps.select(col("__cat"), col(IdCol).as("__cid")), "__cat")
@@ -626,7 +626,7 @@ object RefactorProcs {
         (if (isOutgoing) col("__nid") else col("__cid")).as(SrcCol),
         (if (isOutgoing) col("__cid") else col("__nid")).as(DstCol),
         lit(relType).as(TypeCol))
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     g = Mutations.createEdges(g, relType, edges)
     val ids = src.select(col(IdCol))
     g = Mutations.removePropertyByIds(g, ids, orig)

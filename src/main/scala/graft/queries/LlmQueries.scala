@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.llm.LlmOps._
+import graft.operators.Scratch
 import graft.sources.TpchGraphLoader
 
 /** Oracle-checked LLM-data-pipeline catalog over `documents.parquet` and
@@ -125,7 +126,7 @@ object LlmQueries {
         s"b$b",
         concat(
           (0 until BandSize).map(j => col(s"m${b * BandSize + j}")): _*))
-    }.localCheckpoint(true)
+    }.transform(Scratch.cp)
     // ONE equi-join for ALL bands: explode each signature to one row per
     // band keyed by a band-id-prefixed band value, then self-join on that
     // single key. One shuffle per side instead of one full self-join per
@@ -146,7 +147,7 @@ object LlmQueries {
         count(lit(1)).over(Window.partitionBy("__bv")))
       .filter(col("__bn") <= MaxBandBucket)
       .drop("__bn")
-      .localCheckpoint(true)
+      .transform(Scratch.cp)
     val right = exploded.select(
       exploded.columns.map(c => col(c).as(s"${c}_r")).toSeq: _*)
     val est = ((0 until NumHashes)
@@ -198,7 +199,7 @@ object LlmQueries {
             count(when(col("est") >= 0.5, 1)).as("n_near"),
             round(avg(col("est")), 4).as("avg_est"))
         } else {
-          val reps = repDocs(s, dir, minWords = 1).localCheckpoint(true)
+          val reps = Scratch.cp(repDocs(s, dir, minWords = 1))
           // one row per DISTINCT document — corpus-sized on a crawl, so
           // the broadcast hint must be count-gated (the checkpoint makes
           // the count a cached-block scan); above the gate the bucketed
@@ -210,9 +211,9 @@ object LlmQueries {
               explode(array_distinct(words(col("text")))).as("w")))
           val mult = reps.select(col("doc_id"), col("mult"))
           val cross = pairs
-            .join(graft.operators.Scratch.gatedBroadcast(mult, nReps), Seq("doc_id"))
+            .join(Scratch.gatedBroadcast(mult, nReps), Seq("doc_id"))
             .join(
-              graft.operators.Scratch.gatedBroadcast(
+              Scratch.gatedBroadcast(
                 mult.select(
                   col("doc_id").as("doc_id_r"), col("mult").as("mult_r")),
                 nReps),
@@ -299,14 +300,14 @@ object LlmQueries {
                    .filter(size(words(col("text"))) < 3)
                    .select(
                      col("doc_id"), col("text"), lit(1L).as("mult"))))
-            .localCheckpoint(true)
+            .transform(Scratch.cp)
         val sh = reps
           .select(col("doc_id"), words(col("text")).as("ws"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
           .select(
             col("doc_id"),
             array_distinct(shingles3(col("ws"))).as("sh"))
-          .localCheckpoint(true)
+          .transform(Scratch.cp)
         val cand = minhashPairsFrom(
           sh.select(col("doc_id"), explode(col("sh")).as("w")))
         val verified = cand

@@ -28,10 +28,6 @@ class CatalogSpec extends SparkTestBase {
       val n = q.fn(spark, sfDir).count()
       if (!knownEmpty(q.name))
         assert(n > 0, s"query ${q.name} returned 0 rows")
-      // free the query's fixpoint round blocks (same hygiene as
-      // Verify/Bench — 352 queries of accumulated checkpoint blocks read
-      // as storage pressure on the shared 4-core test session)
-      graft.operators.Scratch.sweep()
     }
   }
 

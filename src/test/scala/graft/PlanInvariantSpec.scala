@@ -24,8 +24,8 @@ class PlanInvariantSpec extends SparkTestBase {
 
   /** BroadcastNestedLoop/Cartesian nodes that merely attach a broadcast
     * 1-row aggregate (the `__N` keyspace constant) are fine; a real
-    * cartesian between row sets is not. This mirrors ExplainCheck's
-    * audit rule. */
+    * cartesian between row sets is not. This mirrors the audit rule of
+    * `graft.Dev joins`. */
   private def assertNoCartesian(name: String): Unit = {
     val p = plan(name)
     assert(
@@ -230,14 +230,18 @@ class PlanInvariantSpec extends SparkTestBase {
     // r17 Finding 6: without the memo, every unlabeled bind re-planned a
     // full union+dedup-by-id subtree (ldbc_ic5's plan carried TWO).
     // The memoized frame must be the SAME object on repeated access and
-    // persisted, so every consumer shares one materialization.
+    // materialized, so every consumer shares one materialization: a
+    // checkpoint the version owns, whose blocks every consumer reads.
     val g = graft.sources.TpchGraphLoader(spark, sfDir).withOverlap
     val a = g.allNodes
     val b = g.allNodes
     assert(a eq b, "allNodes rebuilt the dedup view on the second access")
-    assert(
-      a.storageLevel.useMemory || a.storageLevel.useDisk,
-      "the memoized allNodes view is not persisted")
+    val stored = a.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.graft.StoredBlocks.rddIds(spark.sparkContext).contains(r.rdd.id)
+      case _ => false
+    }
+    assert(stored, "the memoized allNodes view is not materialized")
   }
 
   test("meta.stats rides one grouped scan, not two full edge passes") {

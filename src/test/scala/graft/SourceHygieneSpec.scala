@@ -93,4 +93,21 @@ class SourceHygieneSpec extends AnyFunSuite {
       .map(_.getFileName.toString)
     assert(users == List("GraphState.scala"))
   }
+
+  test("src/main materializes through Scratch.cp and frees no block by hand") {
+    // a block lives as long as some frame that reads it: the
+    // ContextCleaner frees checkpoint blocks once no version or frame
+    // reaches them, so no registry may free one that a live version reads
+    val checkpointers = sourceFiles("src/main")
+      .filter(Files.readString(_).contains("localCheckpoint("))
+      .map(_.getFileName.toString)
+    assert(checkpointers == List("Scratch.scala"))
+    val main = sources("src/main")
+    assert(Seq("WeakReference", "Scratch.sweep", "trackPersisted")
+      .filter(n => main.exists(_.contains(n))).isEmpty)
+    // a version's derived frames are checkpoints it owns, never
+    // CacheManager entries that outlive it
+    assert(!Files.readString(Paths.get("src/main/scala/graft/core/GraphState.scala"))
+      .contains(".persist("))
+  }
 }
