@@ -280,14 +280,30 @@ final class GraphState(
     }
   }
 
+  /** A derived version: the given fields replaced, the rest carried over,
+    * and this version's execution-mode decision inherited. */
+  private def copy(
+      nodeThunks: Map[String, () => DataFrame] = nodeThunks,
+      edgeThunks: Map[String, () => DataFrame] = edgeThunks,
+      idBase: Long = idBase,
+      mayOverlap: Boolean = mayOverlap,
+      enums: Map[String, Seq[String]] = enums,
+      indexTag: String = indexTag,
+      indexes: Seq[GraphState.IndexDef] = indexes,
+      descriptions: Seq[GraphState.DescEntry] = descriptions,
+      serverParams: Map[String, (Any, String)] = serverParams): GraphState =
+    new GraphState(
+      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
+      descriptions, serverParams, Some(mode))
+
   /** New graph version with one node frame replaced/added — the snapshot
     * step every mutation funnels through (our Accumulate barrier analog,
     * `operator.hpp:1870`: writes become visible as a whole new state, never
     * mid-read). */
   def withNodes(label: String, mk: () => DataFrame): GraphState =
-    new GraphState(
-      nodeThunks + (label -> mk), edgeThunks, idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams, Some(mode))
+    copy(
+      nodeThunks = nodeThunks + (label -> mk),
+      indexTag = GraphState.freshTag())
 
   def withEdges(tpe: String, mk: () => DataFrame): GraphState =
     withEdges(Map(tpe -> mk))
@@ -297,9 +313,10 @@ final class GraphState(
     * through. No frame to replace returns this very version. */
   def withEdges(updates: Map[String, () => DataFrame]): GraphState =
     if (updates.isEmpty) this
-    else new GraphState(
-      nodeThunks, edgeThunks ++ updates, idBase, mayOverlap, enums,
-      GraphState.freshTag(), indexes, descriptions, serverParams, Some(mode))
+    else
+      copy(
+        edgeThunks = edgeThunks ++ updates,
+        indexTag = GraphState.freshTag())
 
   /** Materialize ([[graft.operators.Scratch.cp]]) every frame whose thunk
     * CHANGED vs `prev` — the per-batch commit step of periodic.iterate:
@@ -336,65 +353,44 @@ final class GraphState(
     * memos; no frame content changes, so the index tag carries over. */
   def withIdBase(base: Long): GraphState =
     if (base <= idBase) this
-    else new GraphState(
-      nodeThunks, edgeThunks, base, mayOverlap, enums,
-      indexTag, indexes, descriptions, serverParams, Some(mode))
+    else copy(idBase = base)
 
   /** Mark that node rows may now live in more than one label frame. */
   def withOverlap: GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap = true, enums, indexTag,
-      indexes, descriptions, serverParams, Some(mode))
+    copy(mayOverlap = true)
 
   /** Register (or replace) an enum type (`CREATE ENUM`). */
   def withEnum(name: String, values: Seq[String]): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap,
-      enums + (name -> values), indexTag, indexes, descriptions,
-      serverParams, Some(mode))
+    copy(enums = enums + (name -> values))
 
   /** Register an index (CREATE ... INDEX). */
   def withIndex(d: GraphState.IndexDef): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes :+ d, descriptions, serverParams, Some(mode))
+    copy(indexes = indexes :+ d)
 
   /** Upsert a schema description (same-key SET replaces). */
   def withDescription(d: GraphState.DescEntry): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions.filterNot(_.sameKey(d)) :+ d, serverParams, Some(mode))
+    copy(descriptions = descriptions.filterNot(_.sameKey(d)) :+ d)
 
   /** Delete every description matching the predicate. */
   def dropDescriptions(p: GraphState.DescEntry => Boolean): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions.filterNot(p), serverParams, Some(mode))
+    copy(descriptions = descriptions.filterNot(p))
 
   /** Set / unset a server-side parameter. */
   def withServerParam(name: String, value: Any, scope: String): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions, serverParams + (name -> ((value, scope))), Some(mode))
+    copy(serverParams = serverParams + (name -> ((value, scope))))
 
   def withoutServerParam(name: String): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag, indexes,
-      descriptions, serverParams - name, Some(mode))
+    copy(serverParams = serverParams - name)
 
   /** Transform every index entry in place (ANALYZE GRAPH stamps/clears
     * per-index statistics kept in `IndexDef.config`). */
   def mapIndexes(
       f: GraphState.IndexDef => GraphState.IndexDef): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes.map(f), descriptions, serverParams, Some(mode))
+    copy(indexes = indexes.map(f))
 
   /** Drop every index matching the predicate. */
   def dropIndexes(p: GraphState.IndexDef => Boolean): GraphState =
-    new GraphState(
-      nodeThunks, edgeThunks, idBase, mayOverlap, enums, indexTag,
-      indexes.filterNot(p), descriptions, serverParams, Some(mode))
+    copy(indexes = indexes.filterNot(p))
 }
 
 object GraphState {

@@ -6,22 +6,26 @@ package graft.cypher
   * procedure arguments.
   *
   * The reference executes these per input row against the mgp write API.
-  * Here the constant-argument forms are re-expressed at plan time as the
-  * equivalent Cypher statement and run through the normal planner — one
-  * batch plan, reusing the whole tested mutation path (id allocation,
-  * label frames, overlap tracking) instead of a parallel write API.
-  * Entity-argument forms (`create.relationship`, `merge.relationship`)
-  * are synthesized as Create/Merge AST clauses inline in the Planner —
-  * see `Planner.planHelperWrite`. */
+  * Here each desugars to the Cypher clause it performs and plans through
+  * the normal mutation path (id allocation, label frames, overlap
+  * tracking) instead of a parallel write API:
+  *  - `create.node` / `merge.node` plan as a CREATE / MERGE clause over
+  *    the current frame, constant and per-row arguments alike
+  *    (`Planner.planHelperNodeWrite`);
+  *  - `create.relationship` / `merge.relationship` take bound node
+  *    variables and plan as a CREATE / MERGE clause over them
+  *    (`Planner.planHelperRelationship`);
+  *  - the constant-argument forms below render to a Cypher statement
+  *    ([[render]]) that a sub-planner runs. */
 object HelperCalls {
 
   /** Procedures rewritten to Cypher text (constant args only). */
   val textForms: Set[String] = Set(
-    "create.node", "create.nodes", "create.set_property",
+    "create.nodes", "create.set_property",
     "create.set_properties", "create.remove_properties",
     "create.remove_labels", "create.set_rel_property",
     "create.set_rel_properties", "create.remove_rel_properties",
-    "merge.node", "nodes.link", "nodes.delete")
+    "nodes.link", "nodes.delete")
 
   /** Procedures synthesized as AST against bound node variables. */
   val entityForms: Set[String] =
@@ -80,12 +84,6 @@ object HelperCalls {
   /** The Cypher statement a constant-arg helper call plans to. The yield
     * column names match the reference's Return declarations. */
   def render(name: String, cv: Seq[Any]): String = name match {
-    case "create.node" =>
-      // create.node(labels, props) → node (create_module.cpp:49)
-      val ls = strings(cv.head, "create.node labels")
-      val props = mapOf(cv.lift(1).orNull, "create.node props")
-      val p = if (props.isEmpty) "" else " " + lit(props)
-      s"CREATE (n${labelSpec(ls)}$p) RETURN n AS node"
     case "create.nodes" =>
       // create.nodes(label, props) → one node per props map
       val ls = strings(cv.head, "create.nodes labels")
@@ -158,19 +156,6 @@ object HelperCalls {
       val rm = keys.map(k => s"r.`$k`").mkString(", ")
       s"MATCH ()-[r]->() WHERE id(r) IN [${ids.mkString(", ")}] " +
         s"REMOVE $rm RETURN r AS relationship"
-    case "merge.node" =>
-      // merge.node(labels, identProps, createProps, matchProps) → node
-      // (merge_module.cpp:20)
-      val ls = strings(cv.head, "merge.node labels")
-      val ident = mapOf(cv.lift(1).orNull, "merge.node identProps")
-      val onCreate = mapOf(cv.lift(2).orNull, "merge.node createProps")
-      val onMatch = mapOf(cv.lift(3).orNull, "merge.node matchProps")
-      val p = if (ident.isEmpty) "" else " " + lit(ident)
-      val oc =
-        if (onCreate.isEmpty) "" else s" ON CREATE SET n += ${lit(onCreate)}"
-      val om =
-        if (onMatch.isEmpty) "" else s" ON MATCH SET n += ${lit(onMatch)}"
-      s"MERGE (n${labelSpec(ls)}$p)$oc$om RETURN n AS node"
     case "nodes.link" =>
       // nodes.link(nodes, type): chain-link the id list in order
       // (nodes_module.cpp Link)

@@ -749,22 +749,17 @@ final class Planner(
         .map(w => LF(lfOut.df.filter(lowering(lfOut).lower(w)), lfOut.scope))
         .getOrElse(lfOut)
 
+    case CallProc(name @ ("create.node" | "merge.node"), args, yieldsRaw,
+        callWhere) =>
+      planHelperNodeWrite(lf, name, args, yieldsRaw, callWhere)
+
     case CallProc(name, args, yieldsRaw, callWhere)
         if HelperCalls.textForms.contains(name) &&
           (lf.df.columns.nonEmpty || args.exists(constValueOpt(_).isEmpty)) =>
-      // PER-ROW helper write (`UNWIND rows AS r CALL create.node(r.labels,
-      // r.props)`): the reference runs these once per input row
-      // (create_module.cpp:49, merge_module.cpp:20) — a preceding
-      // row-producing clause or a non-constant argument means the
-      // standalone constant rewrite below would be wrong (one write,
-      // cross-joined). Creates get genuinely per-row plans; id-targeted
-      // property/label writes are idempotent, so the one-batch rewrite IS
-      // the per-row result — only the creates need the distinction.
+      // PER-ROW helper write: id-targeted property/label writes are
+      // idempotent, so the one-batch constant rewrite IS the per-row
+      // result; anything else has no per-row form here.
       name match {
-        case "create.node" =>
-          planHelperCreateNodeRows(lf, args, yieldsRaw, callWhere)
-        case "merge.node" =>
-          planHelperMergeNodeRows(lf, args, yieldsRaw, callWhere)
         case "create.set_property" | "create.set_properties" |
             "create.remove_properties" | "create.remove_labels" |
             "create.set_rel_property" | "create.set_rel_properties" |
@@ -1064,7 +1059,7 @@ final class Planner(
       }
       lf
     case RemoveCl(items) => planRemove(lf, items)
-    case m: MergeCl => planMergeAndBind(lf, m)
+    case m: MergeCl => planMerge(lf, m)
     case ForeachCl(v, listE, updates) =>
       // Foreach (operator.hpp:3032): run the update clauses against the
       // exploded frame; the outer frame and scope are unchanged. The list
@@ -1935,12 +1930,23 @@ final class Planner(
         val low = new ExprLowering(
           base, baseLf.scope, params, enums = state.enums)
         val hasDyn = n.labels.exists(isDynLabel)
+        // a dynamic label evaluates to one label or to a list of them
+        // (`create.node(r.labels, …)`)
         val labelsArr =
           if (n.labels.isEmpty) array().cast("array<string>")
+          else if (!hasDyn) array(n.labels.map(lit): _*)
           else
-            array(n.labels.map(l =>
-              if (isDynLabel(l)) low.lower(dynLabelExpr(l)).cast("string")
-              else lit(l)): _*)
+            concat(n.labels.map { l =>
+              if (!isDynLabel(l)) array(lit(l))
+              else {
+                val c = low.lower(dynLabelExpr(l))
+                low.typeOf(c) match {
+                  case Some(_: org.apache.spark.sql.types.ArrayType) =>
+                    c.cast("array<string>")
+                  case _ => array(c.cast("string"))
+                }
+              }
+            }: _*)
         var withNew = base
           .withColumn(s"$name${Frames.Sep}${GraphState.LabelsCol}", labelsArr)
         propItems.foreach { case (k, e) =>
@@ -1983,10 +1989,10 @@ final class Planner(
             "dynamic CREATE labels: more than 64 distinct label sets")
           var all = Set.empty[String]
           distinctArrs.foreach { r =>
-            val arr = Option(r.getSeq[String](0)).getOrElse(Seq.empty)
             require(
-              arr.forall(_ != null),
+              !r.isNullAt(0) && r.getSeq[String](0).forall(_ != null),
               "dynamic label evaluated to NULL")
+            val arr = r.getSeq[String](0)
             val subset = rcp.filter(
               if (arr.isEmpty) size(col(GraphState.LabelsCol)) === 0
               else
@@ -2648,164 +2654,121 @@ final class Planner(
     }
   }
 
-  /** MERGE (v:L {props}) — distinct prop rows; missing ones are created
-    * (with ON CREATE SET columns), existing ones get ON MATCH SET updates.
-    * Anti-join on the property columns = the reference's match-miss branch.
-    */
-  private def planMerge(lf: LF, m: MergeCl): Unit = {
+  /** MERGE (`Merge` operator.hpp:2579). The reference pulls one input row
+    * at a time: the first row whose pattern matches nothing creates it,
+    * later rows match what earlier rows created, and ON CREATE / ON MATCH
+    * SET run with their own row in scope. A node MERGE plans that as one
+    * batch: the input is pinned once with a row id, the ident join splits
+    * rows that hit existing nodes from rows that miss, the first row of
+    * each missing ident creates the node through [[planCreate]] and runs
+    * ON CREATE SET, and every other row (a hit, or a later row of a
+    * just-created ident) runs ON MATCH SET. Rows that write one node
+    * resolve as [[dedupUpdates]] does. Each input row is then re-bound to
+    * its node(s) by id against the post-merge state. A prop-less
+    * `MERGE (n:L)` is the one-ident case: all its rows share the empty
+    * ident, so it creates at most one node. */
+  private def planMerge(lf: LF, m: MergeCl): LF = {
     if ((m.pattern.start +: m.pattern.hops.map(_._2))
         .exists(_.orLabels.nonEmpty))
       throw new IllegalArgumentException(
         "Label alternation (|) is not allowed in MERGE")
-    if (m.pattern.hops.nonEmpty) { planMergeRel(lf, m); return }
+    if (m.pattern.hops.nonEmpty) return planMergeRel(lf, m)
     val n = m.pattern.start
-    val low = lowering(lf)
-    val propNames = n.props.map(_._1)
-    // label is optional (unlabeled MERGE matches/creates "_"-frame nodes);
-    // props are optional (MERGE (n:L) matches ANY :L node, creates one
-    // when none exists)
+    n.variable.filter(lf.scope.contains).foreach { v =>
+      throw new IllegalArgumentException(
+        s"MERGE cannot reuse the bound variable $v")
+    }
+    val v = n.variable.getOrElse(fresh("mn"))
     // ON CREATE SET a:Foo adds labels to CREATED rows only — they join
     // the pattern labels in the stored row and its frame placement
     val onCreateLabels = m.onCreate.collect {
-      case SetLabelsItem(v, ls) if n.variable.contains(v) => ls
+      case SetLabelsItem(sv, ls) if sv == v => ls
     }.flatten
-    val createLabels = (n.labels ++ onCreateLabels).distinct
-    val storeTargets = if (createLabels.isEmpty) Seq("_") else createLabels
-    val labelsArr =
-      if (createLabels.isEmpty) array().cast("array<string>")
-      else array(createLabels.map(lit): _*)
-    def existingFrame: DataFrame = {
+    // the ident values (pattern comprehensions included) are evaluated
+    // against the pre-merge state; the row id orders rows sharing an ident
+    val (wl, items) = rewritePatternComprehensions(lf, n.props)
+    val wLow = lowering(wl)
+    val keyVars = items.map(_ => fresh("mk"))
+    val keyCols = keyVars.map(k => s"$k${Frames.Sep}_val")
+    val keyed = keyCols.zip(items).foldLeft(
+      wl.df.withColumn("__mg_row", monotonically_increasing_id())) {
+      case (d, (c, (_, e))) => d.withColumn(c, mergePropNotNull(wLow.lower(e)))
+    }
+    val scope =
+      keyVars.foldLeft(wl.scope)((sc, k) => sc + (k -> Binding.ValueB))
+    // label is optional (unlabeled MERGE matches/creates "_"-frame nodes)
+    def nodeFrame: DataFrame = {
       val base = n.labels.headOption
         .map(state.nodesOrEmpty)
         .getOrElse(state.allNodes)
       n.labels.foldLeft(base)((d, l) =>
         d.filter(array_contains(col(GraphState.LabelsCol), l)))
     }
-    def createRows(fromWant: DataFrame): DataFrame = {
-      val (withId, n) = withSeqIdPinned(
-        fromWant.select(
-          labelsArr.as(GraphState.LabelsCol) +: propNames.map(col): _*),
-        GraphState.IdCol,
-        (myBase << 48) + nodeCursor)
-      nodeCursor += n
-      withId
+    // the scan may lack some ident columns entirely (e.g. unlabeled MERGE
+    // against frames that never saw the property) — pad with NULLs
+    val existing = nodeFrame
+    val eKeyed = existing.select(
+      col(GraphState.IdCol).as("__mg_eid") +:
+        items.zip(keyCols).map { case ((p, _), k) =>
+          (if (existing.columns.contains(p)) col(p)
+           else lit(null).cast(keyed.schema(k).dataType)).as(k)
+        }: _*)
+    // pin the input ONCE, classified: a hit row carries the node it matched
+    // (several nodes sharing one ident fan it out — Cypher MERGE
+    // multi-match); a missing row carries the first row of its ident
+    val classified = Scratch.cp {
+      val joined = keyed.join(eKeyed, keyCols, "left_outer")
+      val firsts = joined
+        .filter(col("__mg_eid").isNull)
+        .groupBy(keyCols.map(col): _*)
+        .agg(min(col("__mg_row")).as("__mg_first"))
+      joined.join(firsts, keyCols, "left_outer")
     }
-    def createInto(rows: DataFrame): Unit = {
-      storeTargets.foreach(l =>
-        state = Mutations.createNodes(state, l, rows))
-      if (storeTargets.size > 1) state = state.withOverlap
-      // ON CREATE SET runs with the created node bound (reference Merge
-      // pulls the create branch with the entity in scope,
-      // operator.hpp:2579) — the full planSet surface (nested props, +=,
-      // pattern comprehensions) applies; labels were already folded into
-      // the stored rows above.
-      val propItems = m.onCreate.filterNot(_.isInstanceOf[SetLabelsItem])
-      if (propItems.nonEmpty) {
-        val v = n.variable.getOrElse(fresh("mc"))
-        val bound = Frames.bind(v)(rows)
-        setHint(v, Some(storeTargets.toSet))
-        // ON CREATE SET may read the OUTER row's variables
-        // (MergeNodeAcceptance "use properties from match in ON CREATE"):
-        // the reference pulls per row and creates on the FIRST unmatched
-        // pull — the set-based equivalent seeds the SET frame with that
-        // first outer row (entity-id order = creation order). Only the
-        // prop-less (single-create) MERGE takes this path.
-        val valueVars = propItems.flatMap {
-          case SetProp(_, _, e) => varsIn(e)
-          case SetNestedProp(_, _, e, _) => varsIn(e)
-          case SetAllProps(_, e, _) => varsIn(e)
-          case _ => Set.empty[String]
-        }.toSet - v
-        val usesOuter = valueVars.exists(lf.scope.contains)
-        val (seedDf, seedScope) =
-          if (!usesOuter) (bound, Scope.empty + (v -> Binding.NodeB))
-          else {
-            val idCols = lf.df.columns
-              .filter(_.endsWith(s"${Frames.Sep}${GraphState.IdCol}"))
-              .sorted
-            val first =
-              (if (idCols.nonEmpty)
-                 lf.df.orderBy(idCols.map(c => col(c).asc_nulls_last): _*)
-               else lf.df).limit(1)
-            (bound.crossJoin(first), lf.scope + (v -> Binding.NodeB))
-          }
-        planSet(LF(seedDf, seedScope), propItems)
-      }
-    }
-    def applyOnMatch(matched0: DataFrame): Unit = if (m.onMatch.nonEmpty) {
-      // bind the FULL matched node frame so ON MATCH SET expressions can
-      // reference the node's properties (reference Merge runs its
-      // on-match branch with the entity in scope, operator.hpp:2579)
-      val v = n.variable.getOrElse(fresh("m"))
-      val matched = Frames.bind(v)(matched0)
+    val created = planCreate(
+      LF(classified.filter(col("__mg_row") === col("__mg_first")), scope),
+      PatternPart(
+        None,
+        NodePattern(
+          Some(v),
+          (n.labels ++ onCreateLabels).distinct,
+          items.zip(keyVars).map { case ((p, _), k) => p -> Var(k) }),
+        Nil))
+    val onCreateProps = m.onCreate.filterNot(_.isInstanceOf[SetLabelsItem])
+    if (onCreateProps.nonEmpty) planSet(created, onCreateProps)
+    // a missing row resolves to the node its ident's first row created
+    val matched =
+      col("__mg_first").isNull || col("__mg_row") =!= col("__mg_first")
+    val rowNodes = classified
+      .join(
+        created.df.select(
+          col("__mg_row").as("__mg_first"), Frames.id(v).as("__mg_new")),
+        Seq("__mg_first"), "left_outer")
+      .withColumn("__mg_eid", coalesce(col("__mg_eid"), col("__mg_new")))
+    def bindRows(rows: DataFrame): LF = {
       setHint(
         v,
-        if (state.mayOverlap) None
-        else n.labels.headOption.map(Set(_)))
-      planSet(LF(matched, Scope.empty + (v -> Binding.NodeB)), m.onMatch)
+        if (state.mayOverlap) None else n.labels.headOption.map(Set(_)))
+      LF(
+        rows.join(
+          Frames.bind(v)(nodeFrame), col("__mg_eid") === Frames.id(v)),
+        scope + (v -> Binding.NodeB))
     }
-
-    if (propNames.isEmpty) {
-      // match-anything MERGE: create exactly one node when nothing matches
-      val existing = existingFrame
-      if (existing.isEmpty)
-        createInto(createRows(spark.range(1).toDF().select()))
-      else applyOnMatch(existing)
-      return
-    }
-
-    val want = {
-      val (wl, wItems) = rewritePatternComprehensions(
-        LF(oneRow(lf), lf.scope), n.props)
-      val wLow = new ExprLowering(wl.df, wl.scope, params, enums = state.enums)
-      wl.df
-        .select(wItems.map { case (k, e) =>
-          mergePropNotNull(wLow.lower(e)).as(k)
-        }: _*)
-        .distinct()
-    }
-
-    {
-      // the scan may lack some merge-prop columns entirely (e.g. unlabeled
-      // MERGE against frames that never saw the property) — pad with NULLs
-      val existing = propNames.foldLeft(existingFrame)((d, p) =>
-        if (d.columns.contains(p)) d
-        else d.withColumn(p, lit(null).cast(want.schema(p).dataType)))
-      val missing = want.join(existing, propNames, "left_anti")
-      createInto(createRows(missing))
-      applyOnMatch(existing.join(want, propNames, "left_semi"))
+    if (m.onMatch.nonEmpty && !classified.filter(matched).isEmpty)
+      planSet(bindRows(rowNodes.filter(matched)), m.onMatch)
+    val bound = bindRows(rowNodes)
+    val keep = n.variable.isDefined || m.pattern.pathVar.isDefined
+    val kept =
+      lf.df.columns.toSet ++ (if (keep) Frames.colsOf(bound.df, v) else Nil)
+    val out = LF(
+      bound.df.drop(bound.df.columns.filterNot(kept).toSeq: _*),
+      if (keep) lf.scope + (v -> Binding.NodeB) else lf.scope)
+    m.pattern.pathVar.fold(out) { _ =>
+      planPattern(
+        out,
+        m.pattern.copy(start = NodePattern(Some(v), Nil, Nil)))._1
     }
   }
 
-  /** Node MERGE + variable binding: after the merge mutations, the merged
-    * variable is bound by re-scanning the post-merge state for the pattern
-    * (matched and created rows alike), joined to the input frame on the
-    * merge-property expressions. */
-  private def planMergeAndBind(lf: LF, m: MergeCl): LF = {
-    if (m.pattern.hops.nonEmpty) return planMergeRel(lf, m)
-    planMerge(lf, m)
-    val n = m.pattern.start
-    if (n.variable.exists(lf.scope.contains) && m.pattern.pathVar.isEmpty) lf
-    else {
-      // bind by re-matching the post-merge state (also constructs the
-      // named path for `MERGE p = (a {…})`)
-      val (bound, _) = planPattern(lf, m.pattern)
-      bound
-    }
-  }
-
-  /** Relationship MERGE (`Merge` operator.hpp:2579 on a pattern with ≥1
-    * hop): per distinct binding of the pattern's already-bound variables
-    * the WHOLE pattern is matched; bindings with no match run the create
-    * branch (bound vars reused, everything else created — openCypher MERGE
-    * semantics; an undirected hop creates outgoing). ON MATCH SET applies
-    * to the pre-existing matches, ON CREATE SET to the created rows, both
-    * with the pattern's entities bound (full planSet surface). Finally the
-    * pattern is re-matched from the input frame against the post-merge
-    * state, binding every pattern variable (edge vars, endpoints, named
-    * path) with post-SET property values — the reference streams
-    * matched-or-created rows; after the merge the two sets ARE the
-    * re-match. */
   /** Reference MERGE rejects NULL property values at runtime ("Can't
     * have null literal properties inside merge!") — null never matches,
     * so the row would mint an unfindable entity. */
@@ -2838,9 +2801,22 @@ final class Planner(
         "Can't have null literal properties inside merge!")
   }
 
+  /** Relationship MERGE (`Merge` operator.hpp:2579 on a pattern with ≥1
+    * hop), with the row semantics of [[planMerge]]: the merge key is the
+    * pattern's already-bound variables plus the frame variables its
+    * property expressions read. Per distinct key the WHOLE pattern is
+    * matched; the first input row of a key with no match creates it
+    * (bound vars reused, everything else created — openCypher MERGE
+    * semantics; an undirected hop creates outgoing) and runs ON CREATE
+    * SET; every other row re-matches against the post-create state and
+    * runs ON MATCH SET. Both SETs see their own input row. Finally the
+    * pattern is re-matched from the pinned input against the post-merge
+    * state, binding every pattern variable (edge vars, endpoints, named
+    * path) with post-SET property values — the reference streams
+    * matched-or-created rows; after the merge the two sets ARE the
+    * re-match. */
   private def planMergeRel(lf: LF, m: MergeCl): LF = {
     val part = m.pattern
-    assertMergePropsNotNull(lf, part)
     val patVars = part.start.variable.toSeq ++ part.hops.flatMap {
       case (r, n) => r.variable.toSeq ++ n.variable.toSeq
     }
@@ -2851,6 +2827,11 @@ final class Planner(
         throw new IllegalArgumentException(
           s"MERGE cannot reuse the bound variable $v")
       }
+    // pin the input once: the row id orders rows that share a merge key
+    val pinned = LF(
+      Scratch.cp(lf.df.withColumn("__mg_row", monotonically_increasing_id())),
+      lf.scope)
+    assertMergePropsNotNull(pinned, part)
     // the merge key: bound pattern vars + frame vars its property
     // expressions consume (each distinct key is one match-or-create unit)
     val propExprVars =
@@ -2864,67 +2845,70 @@ final class Planner(
       Scope(lf.scope.vars.filter { case (nm, _) => shared.contains(nm) })
     val seed =
       if (shared.nonEmpty)
-        LF(lf.df.select(seedCols.map(col): _*).distinct(), seedScope)
+        LF(pinned.df.select(seedCols.map(col): _*).distinct(), seedScope)
       else initial
 
-    // 1. match branch against the pre-merge state. Checkpoint it: the
-    // match frame feeds the miss anti-join, the ON MATCH updates and the
-    // emptiness probes — left lazy, each consumer re-ran the whole
-    // pattern join from scratch.
+    // 1. match branch against the pre-merge state
     val (sub0, subEdges) = planPattern(seed, part)
-    val sub1 = edgeUniqueness(sub0, subEdges)
-    val sub = LF(Scratch.cp(sub1.df), sub1.scope)
+    val sub = edgeUniqueness(sub0, subEdges)
 
-    // 2. bindings with no match → create branch (undirected hops create
-    //    outgoing, the openCypher MERGE direction rule)
+    // 2. rows whose key matched nothing; the first row of each key creates
+    //    (undirected hops create outgoing, the openCypher MERGE direction
+    //    rule)
     val partOut = part.copy(hops = part.hops.map { case (r, n) =>
       (if (r.direction == BothDir) r.copy(direction = OutDir) else r, n)
     })
-    val missLf: Option[LF] =
+    val keyCols = shared.map(v => varKeyCol(seed.df, v))
+    val missing =
       if (shared.isEmpty) {
-        if (sub.df.isEmpty) Some(LF(spark.range(1).toDF().select(), Scope.empty))
-        else None
-      } else {
-        val keyCols = shared.map(v => varKeyCol(seed.df, v))
-        val subKeys = sub.df.select(keyCols.map(col): _*).distinct()
-        var miss = seed.df.join(subKeys, keyCols, "left_anti")
-        // an UNDIRECTED single-hop merge sees (a,b) and (b,a) as the same
-        // pattern: the reference's second pull matches what the first
-        // created (read-your-writes) — collapse symmetric pairs so the
-        // batch creates one edge per unordered pair
-        if (part.hops.size == 1 &&
-          part.hops.head._1.direction == BothDir) {
-          val aV = part.start.variable.filter(shared.contains)
-          val bV = part.hops.head._2.variable.filter(shared.contains)
-          (aV, bV) match {
-            case (Some(a), Some(b)) if a != b =>
-              val aId = s"$a${Frames.Sep}${GraphState.IdCol}"
-              val bId = s"$b${Frames.Sep}${GraphState.IdCol}"
-              val others = keyCols.filterNot(Set(aId, bId))
-              miss = miss
-                .withColumn("__mlo", least(col(aId), col(bId)))
-                .withColumn("__mhi", greatest(col(aId), col(bId)))
-                .dropDuplicates(others ++ Seq("__mlo", "__mhi"))
-                .drop("__mlo", "__mhi")
-            case _ => ()
-          }
+        if (sub.df.isEmpty) pinned.df else pinned.df.limit(0)
+      } else
+        pinned.df.join(
+          sub.df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+    // an UNDIRECTED single-hop merge sees (a,b) and (b,a) as the same
+    // pattern: the reference's second pull matches what the first created
+    // (read-your-writes) — symmetric pairs share one key, so the batch
+    // creates one edge per unordered pair
+    val ends = part.hops match {
+      case Seq((r, nd)) if r.direction == BothDir =>
+        (part.start.variable.toSeq ++ nd.variable)
+          .filter(shared.contains).distinct match {
+          case Seq(a, b) => Some((a, b))
+          case _ => None
         }
-        Some(LF(miss, seedScope))
-      }
-    missLf.foreach { ml =>
-      val created = planCreate(ml, partOut)
-      if (m.onCreate.nonEmpty && !created.df.isEmpty)
-        planSet(created, m.onCreate)
+      case _ => None
+    }
+    val groupKey = ends.fold(keyCols.map(col)) { case (a, b) =>
+      val endCols = Set(a, b).map(varKeyCol(seed.df, _))
+      val (aId, bId) = (Frames.id(a), Frames.id(b))
+      keyCols.filterNot(endCols).map(col) :+ least(aId, bId) :+
+        greatest(aId, bId)
+    }
+    val creating = missing.join(
+      missing.groupBy(groupKey: _*).agg(min(col("__mg_row")).as("__mg_row"))
+        .select("__mg_row"),
+      Seq("__mg_row"), "left_semi")
+    val created = planCreate(LF(creating, lf.scope), partOut)
+    val anyCreated = !created.df.isEmpty
+    if (m.onCreate.nonEmpty && anyCreated) planSet(created, m.onCreate)
+
+    // 3. ON MATCH SET on every other row: rows whose key matched before
+    //    the merge, and later rows of a key the first row just created
+    if (m.onMatch.nonEmpty) {
+      val others =
+        if (anyCreated)
+          pinned.df.join(created.df.select("__mg_row"), Seq("__mg_row"),
+            "left_anti")
+        else pinned.df
+      val (mt, mtEdges) = planPattern(LF(others, lf.scope), part)
+      planSet(edgeUniqueness(mt, mtEdges), m.onMatch)
     }
 
-    // 3. ON MATCH SET on the pre-existing matches
-    if (m.onMatch.nonEmpty && !sub.df.isEmpty)
-      planSet(sub, m.onMatch)
-
-    // 4. bind: re-match from the input frame against the post-merge state
+    // 4. bind: re-match from the pinned input against the post-merge state
     //    (every input row now has ≥1 match; SET writes are visible)
-    val (bound, newEdges) = planPattern(lf, part)
-    edgeUniqueness(bound, newEdges)
+    val (bound0, newEdges) = planPattern(pinned, part)
+    val bound = edgeUniqueness(bound0, newEdges)
+    LF(bound.df.drop("__mg_row"), bound.scope)
   }
 
   /** Refresh the outer frame's bound columns for every (var, key) a body's
@@ -3412,10 +3396,12 @@ final class Planner(
           if (hopMeta.size == 1 && hopCheckFrames.size == 1 &&
             lim <= LocalHopsMaxCap && !hopMeta.head._6) {
             val (preSrc, sV, eV, tps, d, _) = hopMeta.head
-            state.localTypedEdges(tps) match {
-              case Some(le) =>
-                val srcIds =
-                  preSrc.collect().map(_.getLong(0)).sorted.toSeq
+            val local = for {
+              le <- state.localTypedEdges(tps)
+              srcRows <- graft.operators.Cutover.collect(preSrc)
+            } yield (le, srcRows.map(_.getLong(0)).sorted.toSeq)
+            local match {
+              case Some((le, srcIds)) =>
                 val emu = graft.operators.LocalHops.singleHop(
                   le, srcIds,
                   dirOut = d != Expand.In, dirIn = d != Expand.Out,
@@ -3973,8 +3959,12 @@ final class Planner(
       val le = state.localTypedEdges(rel.types).getOrElse(
         unsupported(
           "over a supercritical edge set cannot be replayed exactly"))
-      val srcIds =
-        seeds.collect().map(_.getLong(0)).sorted.toSeq
+      def capped(df: DataFrame, what: String): Seq[Long] =
+        graft.operators.Cutover.collect(df)
+          .getOrElse(unsupported(
+            s"over more $what than the local cutover holds cannot be replayed"))
+          .map(_.getLong(0)).sorted.toSeq
+      val srcIds = capped(seeds, "seeds")
       val allowedIds = edgesOv.map(
         _.select(col("__sp_eid")).collect().map(_.getLong(0)).toSet)
       val dirOut = dir != Expand.In
@@ -3984,22 +3974,11 @@ final class Planner(
         if (dstBound || node.props.nonEmpty) {
           val sinkIds: Seq[Long] =
             if (dstBound)
-              cur0.df
-                .select(Frames.id(dstName))
-                .distinct()
-                .collect()
-                .map(_.getLong(0))
-                .sorted
-                .toSeq
+              capped(cur0.df.select(Frames.id(dstName)).distinct(), "sinks")
             else {
               val (sinkLf, sinkVar) =
                 bindNode(initial, node.copy(variable = Some(fresh("sink"))))
-              sinkLf.df
-                .select(Frames.id(sinkVar))
-                .collect()
-                .map(_.getLong(0))
-                .sorted
-                .toSeq
+              capped(sinkLf.df.select(Frames.id(sinkVar)), "sinks")
             }
           graft.operators.LocalHops.st(
             le,
@@ -4430,282 +4409,91 @@ final class Planner(
         s"$name yields only `node`, got ${other.map(_._1)}")
   }
 
-  /** `CALL create.node(labels, props)` with a row-producing prefix and/or
-    * per-row arguments (reference create_module.cpp:49 — the procedure
-    * runs once per input row): ONE distributed plan creates one node per
-    * input row, labels and properties evaluated as expressions over the
-    * frame. Dynamic label LISTS are supported by grouping the created
-    * rows per distinct label-set (driver-bounded: the distinct label
-    * combinations of a create call are schema-like, not data-like);
-    * dynamic property maps need static keys (struct-typed lowering or a
-    * map column, whose key set is collected once). */
-  private def planHelperCreateNodeRows(
+  /** `create.node(labels, props)` / `merge.node(labels, identProps,
+    * createProps, matchProps)` (create_module.cpp:49, merge_module.cpp:20)
+    * run once per input row, so they plan as the clauses they name over
+    * the current frame: `CREATE (node:labels {props})` and `MERGE
+    * (node:labels {ident}) ON CREATE SET node += create ON MATCH SET node
+    * += match`. Constant and per-row arguments take this one path.
+    * Constant labels stay static; per-row labels (create.node only — a
+    * MERGE has no per-row label key) become a dynamic label over the
+    * projected label list. A property map expands to one item per key:
+    * the items of a map literal, the fields of a struct, or the keys of a
+    * map value (collected once). */
+  private def planHelperNodeWrite(
       lf: LF,
+      name: String,
       args: Seq[Expr],
       yieldsRaw: Seq[(String, Option[String])],
       callWhere: Option[Expr]): LF = {
-    import org.apache.spark.sql.types.{
-      ArrayType, MapType, NullType, StringType, StructType}
-    val alias = helperNodeAlias("create.node", yieldsRaw)
-    val low = lowering(lf)
-    val labelsC0 = low.lower(
-      args.headOption.getOrElse(
-        throw new IllegalArgumentException("create.node needs labels")))
-    def typeOf(c: Column): org.apache.spark.sql.types.DataType =
-      lf.df.select(c.as("__t")).schema("__t").dataType
-    val labelsC = typeOf(labelsC0) match {
-      case StringType => array(labelsC0)
-      case NullType => array().cast("array<string>")
-      case _: ArrayType => labelsC0.cast("array<string>")
-      case other =>
-        throw new IllegalArgumentException(
-          s"create.node labels: need string(s), got $other")
+    import org.apache.spark.sql.types.{MapType, NullType, StructType}
+    val alias = helperNodeAlias(name, yieldsRaw)
+    // a non-constant argument is projected once into a hidden value column
+    var cur = lf
+    var hidden = Vector.empty[String]
+    def project(e: Expr): (String, Column) = {
+      val h = fresh("hc")
+      val c = s"$h${Frames.Sep}_val"
+      cur = LF(
+        cur.df.withColumn(c, lowering(cur).lower(e)),
+        cur.scope + (h -> Binding.ValueB))
+      hidden :+= h
+      (h, col(c))
     }
-    var withNew = lf.df.withColumn(
-      s"$alias${Frames.Sep}${GraphState.LabelsCol}", labelsC)
-    // property columns — static keys, per-row values
-    var propNames = Vector.empty[String]
-    args.lift(1).foreach { pe =>
-      val pc = low.lower(pe)
-      typeOf(pc) match {
-        case s: StructType =>
-          s.fieldNames.foreach { f =>
-            propNames :+= f
-            withNew = withNew.withColumn(
-              s"$alias${Frames.Sep}$f", pc.getField(f))
-          }
-        case _: MapType =>
-          // key set collected ONCE (schema-sized, not data-sized)
-          val keys = lf.df
-            .select(explode(map_keys(pc)).as("__k")).distinct()
-            .collect().map(_.getString(0)).filter(_ != null).sorted
-          keys.foreach { f =>
-            propNames :+= f
-            withNew = withNew.withColumn(
-              s"$alias${Frames.Sep}$f", element_at(pc, lit(f)))
-          }
-        case NullType => ()
-        case other =>
+    val labels: Seq[String] = args.headOption.fold(Seq.empty[String]) { e =>
+      constValueOpt(e) match {
+        case Some(null) => Nil
+        case Some(l: String) => Seq(l)
+        case Some(ls: Seq[_]) => ls.map(_.toString)
+        case Some(other) =>
           throw new IllegalArgumentException(
-            s"create.node props: need a map, got $other")
+            s"$name labels: need string(s), got $other")
+        case None if name == "merge.node" =>
+          throw new UnsupportedOperationException(
+            "merge.node: labels must be constant (a per-row dynamic-label " +
+              "merge has no batch key)")
+        case None => Seq("$." + project(e)._1)
       }
     }
-    locally {
-      val (m, n) = withSeqIdPinned(
-        withNew,
-        s"$alias${Frames.Sep}${GraphState.IdCol}",
-        (myBase << 48) + nodeCursor)
-      withNew = m // ids assigned exactly once
-      nodeCursor += n
-    }
-    val rows = withNew.select(
-      col(s"$alias${Frames.Sep}${GraphState.IdCol}").as(GraphState.IdCol) +:
-        col(s"$alias${Frames.Sep}${GraphState.LabelsCol}")
-          .as(GraphState.LabelsCol) +:
-        propNames.map(f => col(s"$alias${Frames.Sep}$f").as(f)): _*)
-    // per distinct label-set, append into every named frame (frames are
-    // the label index; multi-label rows live in each, allNodes dedups)
-    val labelSets = rows
-      .select(col(GraphState.LabelsCol)).distinct()
-      .collect().map(r => Option(r.getSeq[String](0)).getOrElse(Nil))
-    labelSets.foreach { ls =>
-      val sub =
-        if (ls.isEmpty) rows.filter(size(col(GraphState.LabelsCol)) === 0)
-        else rows.filter(
-          col(GraphState.LabelsCol) === array(ls.map(lit): _*))
-      val targets = if (ls.isEmpty) Seq("_") else ls
-      targets.foreach(l => state = Mutations.createNodes(state, l, sub))
-      if (targets.size > 1) state = state.withOverlap
-    }
-    setHint(
-      alias,
-      Some(labelSets.flatMap(ls => if (ls.isEmpty) Seq("_") else ls).toSet))
-    val lf2 = LF(withNew, lf.scope + (alias -> Binding.NodeB))
-    callWhere
-      .map(w => LF(lf2.df.filter(lowering(lf2).lower(w)), lf2.scope))
-      .getOrElse(lf2)
-  }
-
-  /** `CALL merge.node(labels, identProps, createProps, matchProps)` with a
-    * row-producing prefix and/or per-row property arguments
-    * (merge_module.cpp:20 — the reference runs MATCH-or-CREATE once per
-    * input row): planned as ONE distributed match/create split. Rows whose
-    * ident props hit an existing node apply matchProps; the rest create —
-    * the FIRST row per distinct ident creates (with identProps ∪
-    * createProps), later duplicates of the same ident match it and apply
-    * matchProps, mirroring the reference's serial order. Labels must be
-    * constant (a per-row dynamic-label MERGE has no batch key); property
-    * maps need static keys; conflicting per-row match values for one node
-    * resolve by max (the batch analog of last-write-wins). */
-  private def planHelperMergeNodeRows(
-      lf: LF,
-      args: Seq[Expr],
-      yieldsRaw: Seq[(String, Option[String])],
-      callWhere: Option[Expr]): LF = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.StructType
-    val alias = helperNodeAlias("merge.node", yieldsRaw)
-    val labels = constValueOpt(args.headOption.getOrElse(Lit(null))) match {
-      case Some(s: String) => Seq(s)
-      case Some(xs: Seq[_]) => xs.map(_.toString)
-      case _ =>
-        throw new UnsupportedOperationException(
-          "merge.node: labels must be constant (a per-row dynamic-label " +
-            "merge has no batch key)")
-    }
-    require(labels.nonEmpty, "merge.node: need at least one label")
-    val low = lowering(lf)
-    def mapCols(e: Option[Expr], what: String): Seq[(String, Column)] =
-      e match {
-        case None | Some(Lit(null)) => Nil
-        case Some(MapLit(items)) =>
-          items.map { case (k, v) => k -> low.lower(v) }
-        case Some(p @ Param(_)) =>
-          constValue(p) match {
-            case null => Nil
-            case m: Map[_, _] =>
-              m.toSeq.map { case (k, v) =>
-                k.toString -> low.lower(Lit(v))
-              }
+    def props(i: Int): Seq[(String, Expr)] = args.lift(i) match {
+      case None => Nil
+      case Some(MapLit(items)) => items
+      case Some(e) => constValueOpt(e) match {
+        case Some(null) => Nil
+        case Some(m: Map[_, _]) =>
+          m.toSeq.map { case (k, x) => k.toString -> valueExpr(x) }
+        case Some(other) =>
+          throw new IllegalArgumentException(
+            s"$name: need a property map, got $other")
+        case None =>
+          val (h, c) = project(e)
+          val keys = cur.df.select(c).schema.head.dataType match {
+            case s: StructType => s.fieldNames.toSeq
+            case _: MapType =>
+              // key set collected ONCE (schema-sized, not data-sized)
+              cur.df.select(explode(map_keys(c)).as("__k")).distinct()
+                .collect().map(_.getString(0)).filter(_ != null).sorted.toSeq
+            case NullType => Nil
             case other =>
               throw new IllegalArgumentException(
-                s"merge.node $what: need a map, got $other")
+                s"$name: need a property map, got $other")
           }
-        case Some(dyn) =>
-          val c = low.lower(dyn)
-          lf.df.select(c.as("__t")).schema("__t").dataType match {
-            case s: StructType =>
-              s.fieldNames.toSeq.map(f => f -> c.getField(f))
-            case other =>
-              throw new UnsupportedOperationException(
-                s"merge.node $what: need a map with static keys, got $other")
-          }
+          keys.map(k => k -> Prop(Var(h), k))
       }
-    val ident = mapCols(args.lift(1), "identProps")
-    val onCreate = mapCols(args.lift(2), "createProps")
-    val onMatch = mapCols(args.lift(3), "matchProps")
-    if (ident.isEmpty)
-      throw new UnsupportedOperationException(
-        "merge.node: per-row form needs non-empty identProps " +
-          "(match-anything merge: use a standalone constant CALL)")
-    val identKeys = ident.map(_._1)
-    // pin the input ONCE: ids, first-row-wins order, and the output
-    // re-bind all read this same frame
-    val base = Scratch.cp(
-      ident.zipWithIndex.foldLeft(
-        onMatch.zipWithIndex.foldLeft(
-          onCreate.zipWithIndex.foldLeft(
-            lf.df.withColumn("__mg_row", monotonically_increasing_id())) {
-            case (d, ((k, c), i)) => d.withColumn(s"__mg_c$i", c)
-          }) { case (d, ((k, c), i)) => d.withColumn(s"__mg_m$i", c) }) {
-        case (d, ((k, c), i)) => d.withColumn(s"__mg_k$i", c)
-      })
-    val identCols = ident.indices.map(i => s"__mg_k$i")
-    // existing nodes carrying ALL the labels, ident columns padded
-    val existing0 = labels.foldLeft(state.nodesOrEmpty(labels.head))(
-      (d, l) => d.filter(array_contains(col(GraphState.LabelsCol), l)))
-    val existing = identKeys.foldLeft(existing0)((d, p) =>
-      if (d.columns.contains(p)) d
-      else d.withColumn(
-        p, lit(null).cast(base.schema(s"__mg_k${identKeys.indexOf(p)}").dataType)))
-    val eKeyed = existing.select(
-      col(GraphState.IdCol).as("__mg_eid") +:
-        identKeys.zipWithIndex.map { case (p, i) =>
-          col(p).as(s"__mg_k$i")
-        }: _*)
-    val missing = base.join(eKeyed, identCols, "left_anti")
-    // FIRST row per distinct ident creates; its props = ident ∪ onCreate.
-    // Window partitioning groups NULL idents too, so NULL-ident duplicates
-    // resolve to THEIR created node below instead of re-joining by value.
-    val wIdent = Window.partitionBy(identCols.map(col): _*)
-    val numberedMissing = missing
-      .withColumn(
-        "__mg_rn", row_number().over(wIdent.orderBy(col("__mg_row"))))
-      .withColumn("__mg_firstrow", min(col("__mg_row")).over(wIdent))
-    val firstRows = numberedMissing.filter(col("__mg_rn") === 1)
-    val createdPropNames =
-      (identKeys ++ onCreate.map(_._1).filterNot(identKeys.contains)).distinct
-    // keep the creating row's __mg_row: later duplicates and the output
-    // re-bind resolve to the created node BY ID, never by ident value
-    val (created, nCreated) = withSeqIdPinned(
-      firstRows.select(
-        col("__mg_row") +:
-          array(labels.map(lit): _*).as(GraphState.LabelsCol) +:
-          createdPropNames.map { p =>
-            val ki = identKeys.indexOf(p)
-            val ci = onCreate.indexWhere(_._1 == p)
-            // onCreate overrides an ident key of the same name
-            (if (ci >= 0) col(s"__mg_c$ci") else col(s"__mg_k$ki")).as(p)
-          }: _*),
-      GraphState.IdCol,
-      (myBase << 48) + nodeCursor)
-    nodeCursor += nCreated
-    val createdRows = created.drop("__mg_row")
-    labels.foreach(l => state = Mutations.createNodes(state, l, createdRows))
-    if (labels.size > 1) state = state.withOverlap
-    // per-input-row resolved node id(s): hit rows via the ident join
-    // (several existing nodes sharing one ident fan out — Cypher MERGE
-    // multi-match); missing rows via their ident partition's created id
-    val hitMap = base.join(eKeyed, identCols)
-      .select(
-        col("__mg_row") +: col("__mg_eid") +:
-          onMatch.indices.map(i => col(s"__mg_m$i")): _*)
-    val missMap = numberedMissing
-      .join(
-        created.select(
-          col("__mg_row").as("__mg_firstrow"),
-          col(GraphState.IdCol).as("__mg_eid")),
-        Seq("__mg_firstrow"))
-      .select(
-        col("__mg_row") +: col("__mg_eid") +: col("__mg_rn") +:
-          onMatch.indices.map(i => col(s"__mg_m$i")): _*)
-    // ON MATCH applies to: rows that hit a pre-existing node, plus
-    // duplicate-ident rows that matched a node created just above.
-    // Multi-label nodes live in EVERY label frame, so the update may not
-    // be pruned to the head frame — stale copies in the other frames
-    // would surface nondeterministically through allNodes' dedup.
-    if (onMatch.nonEmpty) {
-      val updates = hitMap
-        .unionByName(missMap.filter(col("__mg_rn") > 1).drop("__mg_rn"))
-        .select(col("__mg_eid").as(GraphState.IdCol) +:
-          onMatch.indices.map(i => col(s"__mg_m$i")): _*)
-        .groupBy(GraphState.IdCol)
-        .agg(
-          max(col(s"__mg_m0")).as(s"__nv_${onMatch.head._1}"),
-          onMatch.zipWithIndex.tail.map { case ((k, _), i) =>
-            max(col(s"__mg_m$i")).as(s"__nv_$k")
-          }: _*)
-        .withColumn("__hit", lit(true))
-      state = Mutations.setNodePropertiesByIds(
-        state, updates, onMatch.map(_._1), replace = false,
-        if (labels.size > 1 || state.mayOverlap) None
-        else Some(Seq(labels.head)))
     }
-    setHint(
-      alias,
-      if (state.mayOverlap) None else Some(labels.toSet))
-    // re-bind per input row against the POST-merge state BY NODE ID — the
-    // ident-value re-join this replaces used null-safe equality, which (a)
-    // fanned a NULL-ident creating row out to every pre-existing
-    // NULL-ident node and (b) disagreed with the match split's
-    // null-rejecting join semantics
-    val rowMap = hitMap.select(col("__mg_row"), col("__mg_eid"))
-      .unionByName(missMap.select(col("__mg_row"), col("__mg_eid")))
-    val post0 = labels.foldLeft(state.nodesOrEmpty(labels.head))(
-      (d, l) => d.filter(array_contains(col(GraphState.LabelsCol), l)))
-    val post = identKeys.zipWithIndex.foldLeft(post0) { case (d, (p, i)) =>
-      if (d.columns.contains(p)) d
-      else d.withColumn(p, lit(null).cast(base.schema(s"__mg_k$i").dataType))
+    val node =
+      PatternPart(None, NodePattern(Some(alias), labels, props(1)), Nil)
+    def setAll(i: Int): Seq[SetItem] = props(i) match {
+      case Nil => Nil
+      case kvs => Seq(SetAllProps(alias, MapLit(kvs), update = true))
     }
-    val postB = Frames.bind(alias)(post)
-    val outDf = base
-      .join(rowMap, Seq("__mg_row"))
-      .join(postB, col("__mg_eid") === Frames.id(alias))
-      .drop("__mg_row", "__mg_eid")
-      .drop(identCols: _*)
-      .drop(onCreate.indices.map(i => s"__mg_c$i"): _*)
-      .drop(onMatch.indices.map(i => s"__mg_m$i"): _*)
-    val lf2 = LF(outDf, lf.scope + (alias -> Binding.NodeB))
+    val clause =
+      if (name == "create.node") CreateCl(Seq(node))
+      else MergeCl(node, setAll(2), setAll(3))
+    val out = planClause(cur, clause)
+    val lf2 = LF(
+      Frames.unbind(out.df, hidden),
+      Scope(out.scope.vars.filterNot { case (v, _) => hidden.contains(v) }))
     callWhere
       .map(w => LF(lf2.df.filter(lowering(lf2).lower(w)), lf2.scope))
       .getOrElse(lf2)

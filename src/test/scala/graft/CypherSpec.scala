@@ -222,6 +222,57 @@ class CypherSpec extends SparkTestBase {
     assert(back.collect()(0).getLong(0) == g.nodes("Nation").count())
   }
 
+  private def emptyGraph = GraphState(Map.empty, Map.empty)
+
+  /** (k, c, m) of every :N node after `stmts` run in order. */
+  private def mergedN(stmts: String*): Seq[(String, Any, Any)] = {
+    val out = stmts.foldLeft(emptyGraph)((gr, q) =>
+      Cypher.execute(spark, gr, q).graph)
+    Cypher.run(spark, out,
+      "MATCH (n:N) RETURN n.k AS k, n.c AS c, n.m AS m ORDER BY k")
+      .collect().map(r => (r.getString(0), r.get(1), r.get(2))).toSeq
+  }
+
+  test("MERGE: ON CREATE SET reads the row that created the node") {
+    assert(mergedN(
+      """UNWIND [{k: 'a', v: 1}, {k: 'b', v: 2}, {k: 'c', v: 3}] AS r
+        |MERGE (n:N {k: r.k}) ON CREATE SET n.c = r.v""".stripMargin) ==
+      Seq(("a", 1L, null), ("b", 2L, null), ("c", 3L, null)))
+  }
+
+  test("MERGE: ON MATCH SET reads the row that matched the node") {
+    assert(mergedN(
+      "CREATE (:N {k: 'a'}), (:N {k: 'b'})",
+      """UNWIND [{k: 'a', t: 4}, {k: 'b', t: 5}] AS r
+        |MERGE (n:N {k: r.k}) ON MATCH SET n.m = r.t""".stripMargin) ==
+      Seq(("a", null, 4L), ("b", null, 5L)))
+  }
+
+  test("MERGE: a duplicated ident in one batch creates once, then matches") {
+    val rows = Cypher.execute(spark, emptyGraph,
+      """UNWIND [{k: 'y', t: 6}, {k: 'y', t: 7}] AS r
+        |MERGE (n:N {k: r.k}) ON CREATE SET n.c = r.t ON MATCH SET n.m = r.t
+        |RETURN r.t AS t, id(n) AS i, n.c AS c, n.m AS m ORDER BY t""".stripMargin)
+      .result.collect()
+    assert(rows.map(_.getLong(1)).distinct.length == 1)
+    assert(rows.map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSeq ==
+      Seq((6L, 6L, 7L), (7L, 6L, 7L)))
+  }
+
+  test("relationship MERGE: ON CREATE / ON MATCH SET read the input row") {
+    val setup = Cypher.execute(spark, emptyGraph,
+      "UNWIND [1, 2] AS i CREATE (:A {i: i}), (:B {i: i})").graph
+    val out = Cypher.execute(spark, setup,
+      """UNWIND [{i: 1, w: 5}, {i: 2, w: 7}, {i: 1, w: 9}] AS r
+        |MATCH (a:A {i: r.i}), (b:B {i: r.i})
+        |MERGE (a)-[e:T]->(b) ON CREATE SET e.w = r.w ON MATCH SET e.m = r.w
+        |""".stripMargin).graph
+    val edges = Cypher.run(spark, out,
+      "MATCH (a:A)-[e:T]->(:B) RETURN a.i AS i, e.w AS w, e.m AS m ORDER BY i")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSeq
+    assert(edges == Seq((1L, 5L, 9L), (2L, 7L, null)))
+  }
+
   test("CALL subquery aggregates per imported row") {
     val rows = run(
       """MATCH (r:Region)

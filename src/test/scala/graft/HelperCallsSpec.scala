@@ -99,6 +99,33 @@ class HelperCallsSpec extends SparkTestBase {
       .collect().head.getLong(0) == 1L)
   }
 
+  test("merge.node and create.node agree given constants or per-row values") {
+    // the same arguments as literals, and (from index `from` on) as fields
+    // of a one-row UNWIND; merge.node's labels must stay constant
+    def both(call: String, from: Int, args: String*): Unit = {
+      val constant = s"CALL $call(${args.mkString(", ")})"
+      val perRow = "UNWIND [{" +
+        args.indices.drop(from).map(i => s"a$i: ${args(i)}").mkString(", ") +
+        s"}] AS r CALL $call(" +
+        args.indices.map(i => if (i < from) args(i) else s"r.a$i")
+          .mkString(", ") + ")"
+      val ret = " YIELD node RETURN labels(node) AS l, properties(node) AS p"
+      val seed = run(empty, "CREATE (:M {k: 1, v: 'old'})").graph
+      def graphRows(g: GraphState) = Cypher.run(spark, g,
+        "MATCH (n) RETURN labels(n) AS l, properties(n) AS p")
+        .collect().map(_.toString).sorted.toSeq
+      val (c, p) = (run(seed, constant + ret), run(seed, perRow + ret))
+      val (cRows, pRows) = (
+        c.result.collect().map(_.toString).sorted.toSeq,
+        p.result.collect().map(_.toString).sorted.toSeq)
+      assert(cRows.nonEmpty && cRows == pRows, s"$call: $cRows vs $pRows")
+      assert(graphRows(c.graph) == graphRows(p.graph), call)
+    }
+    both("merge.node", 1, "['M']", "{k: 1}", "{v: 'created'}", "{v: 'matched'}")
+    both("merge.node", 1, "['M']", "{k: 2}", "{v: 'created'}", "{v: 'matched'}")
+    both("create.node", 0, "['M', 'X']", "{k: 3, v: 'new'}")
+  }
+
   test("frontier broadcast is gated by the counted size") {
     import org.apache.spark.sql.functions.col
     val df = spark.range(10).toDF("n")
