@@ -2658,13 +2658,14 @@ final class Planner(
     * at a time: the first row whose pattern matches nothing creates it,
     * later rows match what earlier rows created, and ON CREATE / ON MATCH
     * SET run with their own row in scope. A node MERGE plans that as one
-    * batch: the input is pinned once with a row id, the ident join splits
-    * rows that hit existing nodes from rows that miss, the first row of
-    * each missing ident creates the node through [[planCreate]] and runs
-    * ON CREATE SET, and every other row (a hit, or a later row of a
-    * just-created ident) runs ON MATCH SET. Rows that write one node
-    * resolve as [[dedupUpdates]] does. Each input row is then re-bound to
-    * its node(s) by id against the post-merge state. A prop-less
+    * batch: the ident join splits rows that hit existing nodes from rows
+    * that miss, [[classifyMergeRows]] pins them once with a row id, the
+    * first row of each missing ident creates the node through
+    * [[planCreate]] and runs ON CREATE SET, and every other row (a hit,
+    * or a later row of a just-created ident) runs ON MATCH SET. Rows that
+    * write one node resolve as [[dedupUpdates]] does. Each input row is
+    * then re-bound to its node(s) by id against the post-merge state
+    * ([[mergedIds]]). A prop-less
     * `MERGE (n:L)` is the one-ident case: all its rows share the empty
     * ident, so it creates at most one node. */
   private def planMerge(lf: LF, m: MergeCl): LF = {
@@ -2716,16 +2717,12 @@ final class Planner(
     // pin the input ONCE, classified: a hit row carries the node it matched
     // (several nodes sharing one ident fan it out — Cypher MERGE
     // multi-match); a missing row carries the first row of its ident
-    val classified = Scratch.cp {
-      val joined = keyed.join(eKeyed, keyCols, "left_outer")
-      val firsts = joined
-        .filter(col("__mg_eid").isNull)
-        .groupBy(keyCols.map(col): _*)
-        .agg(min(col("__mg_row")).as("__mg_first"))
-      joined.join(firsts, keyCols, "left_outer")
-    }
+    val classified = classifyMergeRows(
+      keyed.join(eKeyed, keyCols, "left_outer"),
+      keyCols.map(col),
+      col("__mg_eid").isNotNull)
     val created = planCreate(
-      LF(classified.filter(col("__mg_row") === col("__mg_first")), scope),
+      LF(classified.filter(mergeCreates), scope),
       PatternPart(
         None,
         NodePattern(
@@ -2735,27 +2732,20 @@ final class Planner(
         Nil))
     val onCreateProps = m.onCreate.filterNot(_.isInstanceOf[SetLabelsItem])
     if (onCreateProps.nonEmpty) planSet(created, onCreateProps)
-    // a missing row resolves to the node its ident's first row created
-    val matched =
-      col("__mg_first").isNull || col("__mg_row") =!= col("__mg_first")
-    val rowNodes = classified
-      .join(
-        created.df.select(
-          col("__mg_row").as("__mg_first"), Frames.id(v).as("__mg_new")),
-        Seq("__mg_first"), "left_outer")
-      .withColumn("__mg_eid", coalesce(col("__mg_eid"), col("__mg_new")))
     def bindRows(rows: DataFrame): LF = {
       setHint(
         v,
         if (state.mayOverlap) None else n.labels.headOption.map(Set(_)))
       LF(
-        rows.join(
-          Frames.bind(v)(nodeFrame), col("__mg_eid") === Frames.id(v)),
+        bindById(
+          mergedIds(rows, created.df, Seq("__mg_eid" -> Frames.id(v))),
+          "__mg_eid", v, nodeFrame),
         scope + (v -> Binding.NodeB))
     }
-    if (m.onMatch.nonEmpty && !classified.filter(matched).isEmpty)
-      planSet(bindRows(rowNodes.filter(matched)), m.onMatch)
-    val bound = bindRows(rowNodes)
+    val matching = classified.filter(!mergeCreates)
+    if (m.onMatch.nonEmpty && !matching.isEmpty)
+      planSet(bindRows(matching), m.onMatch)
+    val bound = bindRows(classified)
     val keep = n.variable.isDefined || m.pattern.pathVar.isDefined
     val kept =
       lf.df.columns.toSet ++ (if (keep) Frames.colsOf(bound.df, v) else Nil)
@@ -2801,43 +2791,86 @@ final class Planner(
         "Can't have null literal properties inside merge!")
   }
 
+  /** MERGE's row rule (`Merge` operator.hpp:2579) over one batch: of the
+    * rows whose merge key matched nothing, the first creates, and every
+    * other row matches. `rows` carries a `__mg_row` id assigned in its own
+    * plan, and `hit` holds on a row whose key matched before the merge.
+    * The frame is pinned, so the ids are assigned once, with `__mg_first`:
+    * on a missed row the least `__mg_row` of the missed rows of its `key`,
+    * NULL on a hit. An empty key is one key that every row shares. */
+  private def classifyMergeRows(
+      rows: DataFrame, key: Seq[Column], hit: Column): DataFrame = {
+    val keyWindow = org.apache.spark.sql.expressions.Window
+      .partitionBy((if (key.isEmpty) Seq(lit(0)) else key): _*)
+    Scratch.cp(
+      rows.withColumn(
+        "__mg_first",
+        when(!hit, min(when(!hit, col("__mg_row"))).over(keyWindow))))
+  }
+
+  /** The rows of a [[classifyMergeRows]] frame that create. */
+  private def mergeCreates: Column =
+    coalesce(col("__mg_row") === col("__mg_first"), lit(false))
+
+  /** The entity ids each classified row is bound to after the merge: a hit
+    * keeps the ids of its match in the `ids` frame columns; any other row
+    * takes the ids its key's first row created, read from `created` (the
+    * created rows carry their `__mg_row`). */
+  private def mergedIds(
+      rows: DataFrame,
+      created: DataFrame,
+      ids: Seq[(String, Column)]): DataFrame = {
+    val news = ids.indices.map(i => s"__mg_new$i")
+    val made = created.select(
+      col("__mg_row").as("__mg_first") +:
+        ids.zip(news).map { case ((_, c), nc) => c.as(nc) }: _*)
+    ids.zip(news).foldLeft(rows.join(made, Seq("__mg_first"), "left_outer")) {
+      case (d, ((c, _), nc)) =>
+        d.withColumn(c, coalesce(col(c), col(nc))).drop(nc)
+    }
+  }
+
+  /** Binds entity variable `v` on `rows` to the row of `frame` whose id is
+    * in column `idCol`. */
+  private def bindById(
+      rows: DataFrame, idCol: String, v: String, frame: DataFrame): DataFrame =
+    rows.join(Frames.bind(v)(frame), col(idCol) === Frames.id(v)).drop(idCol)
+
   /** Relationship MERGE (`Merge` operator.hpp:2579 on a pattern with ≥1
-    * hop), with the row semantics of [[planMerge]]: the merge key is the
+    * hop), with the row rule of [[planMerge]]: the merge key is the
     * pattern's already-bound variables plus the frame variables its
-    * property expressions read. Per distinct key the WHOLE pattern is
-    * matched; the first input row of a key with no match creates it
-    * (bound vars reused, everything else created — openCypher MERGE
-    * semantics; an undirected hop creates outgoing) and runs ON CREATE
-    * SET; every other row re-matches against the post-create state and
-    * runs ON MATCH SET. Both SETs see their own input row. Finally the
-    * pattern is re-matched from the pinned input against the post-merge
-    * state, binding every pattern variable (edge vars, endpoints, named
-    * path) with post-SET property values — the reference streams
-    * matched-or-created rows; after the merge the two sets ARE the
-    * re-match. */
+    * property expressions read. The WHOLE pattern is matched once per
+    * distinct key, and each input row is pinned together with its key's
+    * matches ([[classifyMergeRows]]). The first row of a key with no match
+    * creates the pattern (bound vars reused, everything else created —
+    * openCypher MERGE semantics; an undirected hop creates outgoing) and
+    * runs ON CREATE SET. Every other row runs ON MATCH SET, its new named
+    * variables re-bound by id to what it matched or what its key's first
+    * row created (the path variable is not bound there). Both SETs see
+    * their own input row. Finally the pattern is re-matched from the input
+    * rows against the post-merge state, binding every pattern variable
+    * (edge vars, endpoints, named path) with post-SET property values —
+    * the reference streams matched-or-created rows; after the merge the
+    * two sets ARE the re-match. */
   private def planMergeRel(lf: LF, m: MergeCl): LF = {
     val part = m.pattern
+    val nodes = part.start +: part.hops.map(_._2)
+    val rels = part.hops.map(_._1)
     val patVars = part.start.variable.toSeq ++ part.hops.flatMap {
       case (r, n) => r.variable.toSeq ++ n.variable.toSeq
     }
     // a MERGE pattern may not reuse a bound relationship/path variable
-    (part.pathVar.toSeq ++ part.hops.flatMap(_._1.variable))
+    (part.pathVar.toSeq ++ rels.flatMap(_.variable))
       .filter(lf.scope.contains)
       .foreach { v =>
         throw new IllegalArgumentException(
           s"MERGE cannot reuse the bound variable $v")
       }
-    // pin the input once: the row id orders rows that share a merge key
-    val pinned = LF(
-      Scratch.cp(lf.df.withColumn("__mg_row", monotonically_increasing_id())),
-      lf.scope)
-    assertMergePropsNotNull(pinned, part)
     // the merge key: bound pattern vars + frame vars its property
     // expressions consume (each distinct key is one match-or-create unit)
     val propExprVars =
-      (part.start.props ++ part.hops.flatMap { case (r, n) =>
-        r.props ++ n.props
-      }).flatMap { case (_, e) => varsIn(e) }
+      (nodes.flatMap(_.props) ++ rels.flatMap(_.props))
+        .flatMap { case (_, e) => varsIn(e) }
     val shared =
       (patVars ++ propExprVars).distinct.filter(lf.scope.contains)
     val seedCols = shared.flatMap(v => Frames.colsOf(lf.df, v))
@@ -2845,26 +2878,22 @@ final class Planner(
       Scope(lf.scope.vars.filter { case (nm, _) => shared.contains(nm) })
     val seed =
       if (shared.nonEmpty)
-        LF(pinned.df.select(seedCols.map(col): _*).distinct(), seedScope)
+        LF(lf.df.select(seedCols.map(col): _*).distinct(), seedScope)
       else initial
+    val keyCols = shared.map(v => varKeyCol(seed.df, v))
 
-    // 1. match branch against the pre-merge state
+    // 1. match branch against the pre-merge state, joined to the input
+    //    rows on the key and pinned with them
     val (sub0, subEdges) = planPattern(seed, part)
     val sub = edgeUniqueness(sub0, subEdges)
-
-    // 2. rows whose key matched nothing; the first row of each key creates
-    //    (undirected hops create outgoing, the openCypher MERGE direction
-    //    rule)
-    val partOut = part.copy(hops = part.hops.map { case (r, n) =>
-      (if (r.direction == BothDir) r.copy(direction = OutDir) else r, n)
-    })
-    val keyCols = shared.map(v => varKeyCol(seed.df, v))
-    val missing =
-      if (shared.isEmpty) {
-        if (sub.df.isEmpty) pinned.df else pinned.df.limit(0)
-      } else
-        pinned.df.join(
-          sub.df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+    // the pattern's new named variables: ON MATCH re-binds them by id
+    val newVars = (nodes.flatMap(n => n.variable.map(_ -> n)) ++
+      rels.flatMap(r => r.variable.map(_ -> r)))
+      .filterNot { case (v, _) => lf.scope.contains(v) }
+      .distinctBy(_._1)
+    val matches = sub.df.select(
+      keyCols.map(col) ++ newVars.map(nv => Frames.id(nv._1)) :+
+        lit(true).as("__mg_hit"): _*)
     // an UNDIRECTED single-hop merge sees (a,b) and (b,a) as the same
     // pattern: the reference's second pull matches what the first created
     // (read-your-writes) — symmetric pairs share one key, so the batch
@@ -2884,29 +2913,56 @@ final class Planner(
       keyCols.filterNot(endCols).map(col) :+ least(aId, bId) :+
         greatest(aId, bId)
     }
-    val creating = missing.join(
-      missing.groupBy(groupKey: _*).agg(min(col("__mg_row")).as("__mg_row"))
-        .select("__mg_row"),
-      Seq("__mg_row"), "left_semi")
-    val created = planCreate(LF(creating, lf.scope), partOut)
-    val anyCreated = !created.df.isEmpty
-    if (m.onCreate.nonEmpty && anyCreated) planSet(created, m.onCreate)
+    val classified = classifyMergeRows(
+      lf.df.withColumn("__mg_row", monotonically_increasing_id())
+        .join(matches, keyCols, "left_outer"),
+      groupKey,
+      col("__mg_hit").isNotNull)
+    val inputCols = (lf.df.columns :+ "__mg_row").map(col)
+    assertMergePropsNotNull(LF(classified, lf.scope), part)
+
+    // 2. the first row of each missed key creates (undirected hops create
+    //    outgoing, the openCypher MERGE direction rule)
+    val partOut = part.copy(hops = part.hops.map { case (r, n) =>
+      (if (r.direction == BothDir) r.copy(direction = OutDir) else r, n)
+    })
+    val created = planCreate(
+      LF(classified.filter(mergeCreates).select(inputCols: _*), lf.scope),
+      partOut)
+    if (m.onCreate.nonEmpty && !created.df.isEmpty)
+      planSet(created, m.onCreate)
 
     // 3. ON MATCH SET on every other row: rows whose key matched before
     //    the merge, and later rows of a key the first row just created
-    if (m.onMatch.nonEmpty) {
-      val others =
-        if (anyCreated)
-          pinned.df.join(created.df.select("__mg_row"), Seq("__mg_row"),
-            "left_anti")
-        else pinned.df
-      val (mt, mtEdges) = planPattern(LF(others, lf.scope), part)
-      planSet(edgeUniqueness(mt, mtEdges), m.onMatch)
+    val matching = classified.filter(!mergeCreates)
+    if (m.onMatch.nonEmpty && !matching.isEmpty) {
+      val ids = newVars.indices.map(i => s"__mg_id$i")
+      val rows = mergedIds(
+        matching.select(inputCols ++ (col("__mg_first") +:
+          newVars.zip(ids).map { case ((v, _), i) => Frames.id(v).as(i) }): _*),
+        created.df,
+        ids.zip(newVars).map { case (i, (v, _)) => i -> Frames.id(v) })
+      val bound = newVars.zip(ids).foldLeft(LF(rows, lf.scope)) {
+        case (cur, ((v, el), i)) =>
+          val (frame, binding) = el match {
+            case n: NodePattern =>
+              setHint(v, n.labels.headOption.map(Set(_)))
+              (n.labels.headOption.fold(state.allNodes)(state.nodesOrEmpty),
+                Binding.NodeB)
+            case r: RelPattern =>
+              setHint(v, Option.when(r.types.nonEmpty)(r.types.toSet))
+              (state.edgesOfTypes(r.types), Binding.EdgeB)
+          }
+          LF(bindById(cur.df, i, v, frame), cur.scope + (v -> binding))
+      }
+      planSet(bound, m.onMatch)
     }
 
-    // 4. bind: re-match from the pinned input against the post-merge state
+    // 4. bind: re-match from the input rows against the post-merge state
     //    (every input row now has ≥1 match; SET writes are visible)
-    val (bound0, newEdges) = planPattern(pinned, part)
+    val (bound0, newEdges) = planPattern(
+      LF(classified.select(inputCols: _*).dropDuplicates("__mg_row"), lf.scope),
+      part)
     val bound = edgeUniqueness(bound0, newEdges)
     LF(bound.df.drop("__mg_row"), bound.scope)
   }

@@ -273,6 +273,21 @@ class CypherSpec extends SparkTestBase {
     assert(edges == Seq((1L, 5L, 9L), (2L, 7L, null)))
   }
 
+  test("relationship MERGE: ON MATCH binds matched and just-created nodes") {
+    val setup = Cypher.execute(spark, emptyGraph,
+      "CREATE (:A {i: 1})-[:T]->(:B {k: 1}), (:A {i: 2})").graph
+    val res = Cypher.execute(spark, setup,
+      """MATCH (a:A) UNWIND [1, 2] AS x
+        |MERGE (a)-[:T]->(b:B {k: 1}) ON CREATE SET b.c = x ON MATCH SET b.m = x
+        |RETURN a.i AS i, x, b.c AS c, b.m AS m ORDER BY i, x""".stripMargin)
+    assert(res.result.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.get(2), r.getLong(3))).toSeq ==
+      Seq((1L, 1L, null, 2L), (1L, 2L, null, 2L), (2L, 1L, 1L, 2L),
+        (2L, 2L, 1L, 2L)))
+    assert(Cypher.run(spark, res.graph, "MATCH (b:B) RETURN count(b)")
+      .collect()(0).getLong(0) == 2L)
+  }
+
   test("CALL subquery aggregates per imported row") {
     val rows = run(
       """MATCH (r:Region)
