@@ -19,10 +19,14 @@ object Frames {
 
   /** Rename every column of `df` into variable `v`'s namespace. */
   def bind(v: String)(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => col(c).as(s"$v$Sep$c")).toSeq: _*)
+    df.select(df.columns.map(c => named(c).as(s"$v$Sep$c")).toSeq: _*)
+
+  /** The column called `name`, taken literally: a property key may hold a
+    * dot or a backtick, which `col` would parse. */
+  def named(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Column of variable `v`'s field `name` (meta `_id`/`_src`/… or prop). */
-  def f(v: String, name: String): Column = col(s"$v$Sep$name")
+  def f(v: String, name: String): Column = named(s"$v$Sep$name")
 
   def id(v: String): Column = f(v, GraphState.IdCol)
   def src(v: String): Column = f(v, GraphState.SrcCol)

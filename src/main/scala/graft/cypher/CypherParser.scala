@@ -30,12 +30,17 @@ object CypherParser extends RegexParsers {
     ("""(?i)""" + s + """\b""").r ^^ (_ => s.toUpperCase)
 
   private val identRe = """[a-zA-Z_][a-zA-Z0-9_]*""".r
-  private val backtickRe = "`[^`]+`".r
 
   private val identP: Parser[String] = regex(identRe)
 
+  /** `name` as Cypher text: a plain identifier as it is, anything else
+    * backquoted with its backticks doubled. */
+  def quoteName(name: String): String =
+    if (identRe.matches(name)) name
+    else "`" + name.replace("`", "``") + "`"
+
   def ident: Parser[String] =
-    backtickRe ^^ (s => s.substring(1, s.length - 1)) |
+    bqName |
       Parser { in =>
         identP(in) match {
           case Success(name, next) if !reserved(name.toUpperCase) =>
@@ -599,7 +604,7 @@ object CypherParser extends RegexParsers {
     * only the raw identifier grammar applies, not the reserved-word
     * filter. */
   private def aliasName: Parser[String] =
-    backtickRe ^^ (s => s.substring(1, s.length - 1)) | identP
+    bqName | identP
 
   def returnItem: Parser[ReturnItem] =
     expr ~ opt(kw("AS") ~> aliasName) ^^ { case e ~ a => ReturnItem(e, a) }
@@ -636,7 +641,7 @@ object CypherParser extends RegexParsers {
   /** Yield names are output-column labels, never expressions — reserved
     * words are legal here (`node.relationship_exists` yields `exists`). */
   private def yieldName: Parser[String] =
-    backtickRe ^^ (s => s.substring(1, s.length - 1)) | identP
+    bqName | identP
 
   private def yieldItem: Parser[(String, Option[String])] =
     yieldName ~ opt(kw("AS") ~> yieldName) ^^ { case n ~ a => (n, a) }

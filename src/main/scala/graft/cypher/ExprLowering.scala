@@ -543,7 +543,7 @@ final class ExprLowering(
   def varStruct(n: String): Column = {
     val cols = Frames.colsOf(df, n)
     val s = struct(cols.map(c =>
-      col(c).as(c.substring(n.length + Frames.Sep.length))): _*)
+      Frames.named(c).as(c.substring(n.length + Frames.Sep.length))): _*)
     when(Frames.id(n).isNull, lit(null)).otherwise(s)
   }
 
@@ -557,7 +557,7 @@ final class ExprLowering(
     val s =
       if (cols.isEmpty) map()
       else struct(cols.map(c =>
-        col(c).as(c.substring(n.length + Frames.Sep.length))): _*)
+        Frames.named(c).as(c.substring(n.length + Frames.Sep.length))): _*)
     when(Frames.id(n).isNull, lit(null)).otherwise(s)
   }
 

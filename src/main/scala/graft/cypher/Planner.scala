@@ -749,91 +749,10 @@ final class Planner(
         .map(w => LF(lfOut.df.filter(lowering(lfOut).lower(w)), lfOut.scope))
         .getOrElse(lfOut)
 
-    case CallProc(name @ ("create.node" | "merge.node"), args, yieldsRaw,
-        callWhere) =>
-      planHelperNodeWrite(lf, name, args, yieldsRaw, callWhere)
-
     case CallProc(name, args, yieldsRaw, callWhere)
-        if HelperCalls.textForms.contains(name) &&
-          (lf.df.columns.nonEmpty || args.exists(constValueOpt(_).isEmpty)) =>
-      // PER-ROW helper write: id-targeted property/label writes are
-      // idempotent, so the one-batch constant rewrite IS the per-row
-      // result; anything else has no per-row form here.
-      name match {
-        case "create.set_property" | "create.set_properties" |
-            "create.remove_properties" | "create.remove_labels" |
-            "create.set_rel_property" | "create.set_rel_properties" |
-            "create.remove_rel_properties" | "nodes.delete"
-            if args.forall(constValueOpt(_).isDefined) =>
-          planHelperTextForm(lf, name, args, yieldsRaw, callWhere)
-        case other =>
-          throw new UnsupportedOperationException(
-            s"$other: per-row / non-constant argument form not supported — " +
-              "use a standalone CALL with constant arguments")
-      }
-
-    case CallProc(name, args, yieldsRaw, callWhere)
-        if HelperCalls.textForms.contains(name) =>
-      // Standalone CALL with constant args: re-expressed as the
-      // equivalent Cypher statement at plan time and run through a
-      // sub-planner — one batch plan over the normal mutation path
-      // (HelperCalls).
-      planHelperTextForm(lf, name, args, yieldsRaw, callWhere)
-
-    case CallProc(name, args, yieldsRaw, callWhere)
-        if HelperCalls.entityForms.contains(name) =>
-      planHelperRelationship(lf, name, args, yieldsRaw, callWhere)
-
-    case CallProc(name, args, yieldsRaw, callWhere)
-        if name.startsWith("set_property.copyproperty") =>
-      // set_property module (set_property_module.cpp:220-262): copy
-      // properties between BOUND entities, once per input row — lowered
-      // to the equivalent per-row SET items (one batch plan; the
-      // Node2Node/Node2Rel/Rel2Node/Rel2Rel variants only differ in the
-      // binding kinds, which planSet dispatches on anyway)
-      val srcVar = args.headOption match {
-        case Some(Var(v)) => v
-        case other =>
-          throw new IllegalArgumentException(
-            s"$name: source must be a bound entity variable, got $other")
-      }
-      val dstVar = args.lift(2) match {
-        case Some(Var(v)) => v
-        case other =>
-          throw new IllegalArgumentException(
-            s"$name: target must be a bound entity variable, got $other")
-      }
-      def propNames(e: Option[Expr], what: String): Seq[String] =
-        e.map(constValue) match {
-          case Some(s: String) => Seq(s)
-          case Some(xs: Seq[_]) => xs.map(_.toString)
-          case other =>
-            throw new IllegalArgumentException(
-              s"$name $what: need property name(s), got $other")
-        }
-      val sp = propNames(args.lift(1), "source_properties")
-      val tp = propNames(args.lift(3), "target_properties")
-      require(
-        sp.size == tp.size,
-        s"$name: source/target property lists must match in length")
-      val lf2 = planSet(
-        lf,
-        sp.zip(tp).map { case (s, t) =>
-          SetProp(dstVar, t, Prop(Var(srcVar), s))
-        })
-      val alias = yieldsRaw match {
-        case Nil => "result"
-        case Seq(("result", a)) => a.getOrElse("result")
-        case other =>
-          throw new IllegalArgumentException(
-            s"$name yields only `result`, got ${other.map(_._1)}")
-      }
-      val lf3 = LF(
-        lf2.df.withColumn(s"$alias${Frames.Sep}_val", lit(true)),
-        lf2.scope + (alias -> Binding.ValueB))
-      callWhere
-        .map(w => LF(lf3.df.filter(lowering(lf3).lower(w)), lf3.scope))
-        .getOrElse(lf3)
+        if HelperWrites(name) ||
+          name.startsWith("set_property.copyproperty") =>
+      planHelperWrite(lf, name, args, yieldsRaw, callWhere)
 
     case CallProc(name, args, yields, callWhere)
         if lf.df.columns.nonEmpty && args.exists(constValueOpt(_).isEmpty) =>
@@ -1973,7 +1892,7 @@ final class Planner(
             col(s"$name${Frames.Sep}${GraphState.LabelsCol}")
               .as(GraphState.LabelsCol) +:
             n.props.map { case (k, _) =>
-              col(s"$name${Frames.Sep}$k").as(k)
+              Frames.f(name, k).as(k)
             }: _*)
         // multi-label create: the row goes into EVERY label frame (frames
         // are the label index; scans re-filter on _labels, allNodes dedups)
@@ -2063,7 +1982,7 @@ final class Planner(
           col(s"$eName${Frames.Sep}${GraphState.TypeCol}")
             .as(GraphState.TypeCol) +:
           rel.props.map { case (k, _) =>
-            col(s"$eName${Frames.Sep}$k").as(k)
+            Frames.f(eName, k).as(k)
           }: _*)
       if (dynT) {
         val rcp = Scratch.cp(rows)
@@ -3811,7 +3730,7 @@ final class Planner(
     * the whole-entity value the step-filtered operators carry. */
   private def varStructCol(df: DataFrame, v: String): Column =
     struct(Frames.colsOf(df, v).map(c =>
-      col(c).as(c.substring(v.length + Frames.Sep.length))): _*)
+      Frames.named(c).as(c.substring(v.length + Frames.Sep.length))): _*)
 
   /** Per-step filter for the accumulated-path lambda `(e, n, p [, w] |
     * pred)`: lowers pred against the operators' candidate frame — `e`/`n`
@@ -4415,120 +4334,288 @@ final class Planner(
     case other => Lit(other)
   }
 
-  /** The constant-argument rewrite for helper write procedures: render
-    * the equivalent Cypher and run it through a sub-planner (standalone
-    * CALLs, or id-targeted idempotent writes where once == per-row). */
-  private def planHelperTextForm(
+  /** The helper write procedures of the `create`, `merge` and `nodes`
+    * modules (reference `src/mage/cpp/create_module/`, `merge_module/`,
+    * `nodes_module/`); `set_property.copyproperty*` plans here too. */
+  private val HelperWrites: Set[String] = Set(
+    "create.node", "create.nodes", "merge.node",
+    "create.relationship", "merge.relationship",
+    "create.set_property", "create.set_properties",
+    "create.remove_properties", "create.remove_labels",
+    "create.set_rel_property", "create.set_rel_properties",
+    "create.remove_rel_properties", "nodes.link", "nodes.delete")
+
+  /** A helper write procedure ([[HelperWrites]]). The reference runs each
+    * once per input row through the mgp write API, where labels, keys and
+    * values are data. Here each plans as the clauses it names, as AST over
+    * the current frame, so id allocation, label frames and overlap
+    * tracking are the clauses' own:
+    *  - `create.node(labels, props)` / `merge.node(labels, ident, onCreate,
+    *    onMatch)`: CREATE / MERGE `(node:labels {props})`, ON CREATE / ON
+    *    MATCH SET `node += map`; `create.nodes(labels, maps)` is one
+    *    CREATE pattern per map, or for a per-row list one `create.node`
+    *    per map through UNWIND;
+    *  - `create.relationship(from, type, props, to)` /
+    *    `merge.relationship(start, type, ident, onCreate, end, onMatch)`:
+    *    CREATE / MERGE `(from)-[:type {props}]->(to)`;
+    *  - `create.set_property` / `set_properties` / `remove_properties` /
+    *    `remove_labels` and the three `_rel_` forms: SET / REMOVE items on
+    *    the target;
+    *  - `nodes.link(nodes, type)`: CREATE `(a)-[:type]->(b)` for each
+    *    consecutive pair (fewer than two nodes raise);
+    *    `nodes.delete(nodes)`: DETACH DELETE;
+    *  - `set_property.copyproperty*(source, keys, target, keys)`: `SET
+    *    target.t = source.s` per key pair.
+    * A target is one entity, a list of them, one id or a list of ids,
+    * constant or per row ([[HelperArgs.target]]). Labels, types and keys
+    * are constant strings that enter the AST as names; values and property
+    * maps are expressions over the input row, so rows that write one
+    * property resolve as SET does ([[dedupUpdates]]). The yield is a node
+    * or relationship binding under the reference's YIELD name
+    * (`nodes.delete` yields nothing). */
+  private def planHelperWrite(
       lf: LF,
       name: String,
       args: Seq[Expr],
       yieldsRaw: Seq[(String, Option[String])],
       callWhere: Option[Expr]): LF = {
-    val q = HelperCalls.render(name, args.map(constValue))
-    val sub = new Planner(spark, rebased, params)
-    val out = sub.plan(CypherParser.parse(q))
-    state = sub.currentState
-    subHigh = math.max(subHigh, sub.idHighWater)
-    val yields1: Seq[(String, String)] =
-      if (yieldsRaw.isEmpty) out.columns.toSeq.map(c => (c, c))
-      else yieldsRaw.map { case (n, a) => (n, a.getOrElse(n)) }
-    if (yields1.isEmpty) lf // yield-less write (nodes.delete)
-    else {
-      val missing = yields1.map(_._1).filterNot(out.columns.contains)
-      require(missing.isEmpty, s"procedure $name does not yield: $missing")
-      val selected = out.select(
-        yields1.map { case (n, al) =>
-          col(n).as(s"$al${Frames.Sep}_val")
-        }: _*)
-      val df =
-        if (lf.df.columns.isEmpty) selected
-        else lf.df.crossJoin(selected)
-      val lf2 = LF(
-        df,
-        yields1.foldLeft(lf.scope)((sc, y) =>
-          sc + (y._2 -> Binding.ValueB)))
-      callWhere
-        .map(w => LF(lf2.df.filter(lowering(lf2).lower(w)), lf2.scope))
-        .getOrElse(lf2)
+    val a = new HelperArgs(name, args, lf)
+    // the create.*_rel_* forms write a relationship, yielded as such
+    val onRel = name.contains("_rel_")
+    val written = if (onRel) "relationship" else "node"
+    def rel(from: String, tpe: String, props: Seq[(String, Expr)],
+        to: String, r: String): PatternPart =
+      PatternPart(
+        None,
+        NodePattern(Some(from), Nil, Nil),
+        Seq((
+          RelPattern(Some(r), Seq(tpe), props, OutDir, None),
+          NodePattern(Some(to), Nil, Nil))))
+    def setAll(v: String, props: Seq[(String, Expr)]): Seq[SetItem] =
+      if (props.isEmpty) Nil else Seq(SetAllProps(v, MapLit(props), update = true))
+    // runs on the clause's output frame before the yield binds
+    var after: LF => LF = identity
+    // (clause, the variable yielded, its reference YIELD name); the
+    // arguments decode (and may widen a.lf) before the clause plans
+    val (clause, result, yieldName): (Clause, String, String) = name match {
+      case "create.nodes" if a.mapList(1).exists(_.nonEmpty) =>
+        // one pattern per map, so each keeps its own value types; the
+        // created nodes then bind by id, one row per node
+        val labels = a.labels(0, perRow = true)
+        val vs = a.mapList(1).get.map { m =>
+          val v = fresh("hn")
+          (v, NodePattern(Some(v), labels, m))
+        }
+        a.hidden ++= vs.map(_._1)
+        val v = fresh("hn")
+        after = o => {
+          val ids = explode(array(vs.map(x => Frames.id(x._1)): _*))
+          LF(bindById(o.df.withColumn("__hn_id", ids), "__hn_id", v, state.allNodes),
+            o.scope + (v -> Binding.NodeB))
+        }
+        (CreateCl(vs.map(x => PatternPart(None, x._2, Nil))), v, "node")
+      case "create.node" | "create.nodes" | "merge.node" =>
+        val v = fresh("hn")
+        val labels = a.labels(0, perRow = name != "merge.node")
+        val props = a.props(
+          if (name == "create.nodes") Some(a.unwind(1)) else args.lift(1))
+        val node = PatternPart(None, NodePattern(Some(v), labels, props), Nil)
+        val c =
+          if (name != "merge.node") CreateCl(Seq(node))
+          else
+            MergeCl(node, setAll(v, a.props(args.lift(2))),
+              setAll(v, a.props(args.lift(3))))
+        (c, v, "node")
+      case "create.relationship" =>
+        val (from, tpe) = (a.target(0, edge = false), a.typeName(1))
+        val props = a.props(args.lift(2))
+        val r = fresh("hr")
+        (CreateCl(Seq(rel(from, tpe, props, a.target(3, edge = false), r))),
+          r, "relationship")
+      case "merge.relationship" =>
+        val (from, tpe) = (a.target(0, edge = false), a.typeName(1))
+        val ident = a.props(args.lift(2))
+        val (onCreate, to) = (a.props(args.lift(3)), a.target(4, edge = false))
+        val onMatch = a.props(args.lift(5))
+        val r = fresh("hr")
+        (MergeCl(rel(from, tpe, ident, to, r), setAll(r, onCreate),
+          setAll(r, onMatch)), r, "rel")
+      case "create.set_property" | "create.set_rel_property" =>
+        val t = a.target(0, onRel)
+        (SetCl(Seq(SetProp(t, a.key(1), a.arg(2)))), t, written)
+      case "create.set_properties" | "create.set_rel_properties" =>
+        val t = a.target(0, onRel)
+        val keys = a.names(1, "keys")
+        (SetCl(keys.zip(a.values(2, keys.size)).map { case (k, e) =>
+          SetProp(t, k, e)
+        }), t, written)
+      case "create.remove_properties" | "create.remove_rel_properties" =>
+        val t = a.target(0, onRel)
+        (RemoveCl(a.names(1, "keys").map(RemoveProp(t, _))), t, written)
+      case "create.remove_labels" =>
+        val t = a.target(0, edge = false)
+        (RemoveCl(a.labels(1, perRow = false) match {
+          case Nil => Nil
+          case ls => Seq(RemoveLabelsItem(t, ls))
+        }), t, "node")
+      case "nodes.link" =>
+        val (from, to) = a.pairs(0)
+        val r = fresh("hr")
+        (CreateCl(Seq(rel(from, a.typeName(1), Nil, to, r))), r,
+          "relationships")
+      case "nodes.delete" =>
+        (DeleteCl(detach = true, Seq(Var(a.target(0, edge = false)))), "", "")
+      case _ => // set_property.copyproperty*: bound source and target
+        def bound(i: Int, what: String): String = a.arg(i) match {
+          case Var(v) if lf.scope.get(v).exists(b =>
+              b == Binding.NodeB || b == Binding.EdgeB) => v
+          case other =>
+            throw new IllegalArgumentException(
+              s"$name: $what must be a bound entity variable, got $other")
+        }
+        val (src, dst) = (bound(0, "source"), bound(2, "target"))
+        val (sp, tp) = (a.names(1, "source_properties"),
+          a.names(3, "target_properties"))
+        require(sp.size == tp.size,
+          s"$name: source/target property lists must match in length")
+        val r = a.project(Lit(true))
+        (SetCl(sp.zip(tp).map { case (s, t) =>
+          SetProp(dst, t, Prop(Var(src), s))
+        }), r, "result")
     }
+    val out = after(planClause(a.lf, clause))
+    if (yieldName.isEmpty) {
+      require(yieldsRaw.isEmpty, s"$name yields nothing")
+      return lf
+    }
+    val alias = yieldsRaw match {
+      case Nil => yieldName
+      case Seq((n, al)) if n == yieldName => al.getOrElse(n)
+      case other =>
+        throw new IllegalArgumentException(
+          s"$name yields only `$yieldName`, got ${other.map(_._1)}")
+    }
+    val kind = out.scope.get(result).get
+    val df =
+      if (alias == result) out.df
+      else {
+        require(!lf.scope.contains(alias),
+          s"$name: variable `$alias` is already declared")
+        setHint(alias, frameHints.get(result))
+        if (!lf.scope.contains(result)) renameVar(out.df, result, alias)
+        else // a bound target stays bound: its yield is a copy
+          Frames.colsOf(out.df, result).foldLeft(out.df)((d, c) =>
+            d.withColumn(
+              alias + c.substring(result.length),
+              Frames.named(c)))
+      }
+    val drop = (a.hidden :+ result).distinct
+      .filterNot(v => v == alias || lf.scope.contains(v))
+    val lf2 = LF(
+      Frames.unbind(df, drop),
+      Scope(out.scope.vars.filterNot(v => drop.contains(v._1))) +
+        (alias -> kind))
+    callWhere
+      .map(w => LF(lf2.df.filter(lowering(lf2).lower(w)), lf2.scope))
+      .getOrElse(lf2)
   }
 
-  /** The single yield alias of a helper node write (`YIELD node [AS x]`;
-    * empty YIELD = the reference's declared name). */
-  private def helperNodeAlias(
-      name: String,
-      yieldsRaw: Seq[(String, Option[String])]): String = yieldsRaw match {
-    case Nil => "node"
-    case Seq(("node", a)) => a.getOrElse("node")
-    case other =>
-      throw new IllegalArgumentException(
-        s"$name yields only `node`, got ${other.map(_._1)}")
-  }
-
-  /** `create.node(labels, props)` / `merge.node(labels, identProps,
-    * createProps, matchProps)` (create_module.cpp:49, merge_module.cpp:20)
-    * run once per input row, so they plan as the clauses they name over
-    * the current frame: `CREATE (node:labels {props})` and `MERGE
-    * (node:labels {ident}) ON CREATE SET node += create ON MATCH SET node
-    * += match`. Constant and per-row arguments take this one path.
-    * Constant labels stay static; per-row labels (create.node only — a
-    * MERGE has no per-row label key) become a dynamic label over the
-    * projected label list. A property map expands to one item per key:
-    * the items of a map literal, the fields of a struct, or the keys of a
-    * map value (collected once). */
-  private def planHelperNodeWrite(
-      lf: LF,
-      name: String,
-      args: Seq[Expr],
-      yieldsRaw: Seq[(String, Option[String])],
-      callWhere: Option[Expr]): LF = {
-    import org.apache.spark.sql.types.{MapType, NullType, StructType}
-    val alias = helperNodeAlias(name, yieldsRaw)
-    // a non-constant argument is projected once into a hidden value column
-    var cur = lf
+  /** Decodes the arguments of a helper write ([[planHelperWrite]]) over
+    * the frame `lf`. A per-row argument is projected once into a hidden
+    * value variable, and a target that binds by id adds a hidden entity
+    * variable; [[hidden]] lists them for the caller to drop. */
+  private final class HelperArgs(name: String, args: Seq[Expr], var lf: LF) {
     var hidden = Vector.empty[String]
-    def project(e: Expr): (String, Column) = {
+
+    def arg(i: Int): Expr = args.lift(i).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name: missing argument ${i + 1}"))
+
+    /** Binds `e`, evaluated per row, to a hidden value variable. */
+    def project(e: Expr): String = {
       val h = fresh("hc")
-      val c = s"$h${Frames.Sep}_val"
-      cur = LF(
-        cur.df.withColumn(c, lowering(cur).lower(e)),
-        cur.scope + (h -> Binding.ValueB))
+      lf = LF(
+        lf.df.withColumn(s"$h${Frames.Sep}_val", lowering(lf).lower(e)),
+        lf.scope + (h -> Binding.ValueB))
       hidden :+= h
-      (h, col(c))
+      h
     }
-    val labels: Seq[String] = args.headOption.fold(Seq.empty[String]) { e =>
-      constValueOpt(e) match {
+
+    private def typeOf(h: String) =
+      lf.df.schema(s"$h${Frames.Sep}_val").dataType
+
+    /** Constant string(s): one string or a list (NULL = none). */
+    def names(i: Int, what: String): Seq[String] =
+      constValueOpt(arg(i)) match {
         case Some(null) => Nil
-        case Some(l: String) => Seq(l)
-        case Some(ls: Seq[_]) => ls.map(_.toString)
+        case Some(s: String) => Seq(s)
+        case Some(xs: Seq[_]) if xs.forall(_.isInstanceOf[String]) =>
+          xs.map(_.toString)
         case Some(other) =>
           throw new IllegalArgumentException(
-            s"$name labels: need string(s), got $other")
-        case None if name == "merge.node" =>
+            s"$name $what: need string(s), got $other")
+        case None =>
           throw new UnsupportedOperationException(
-            "merge.node: labels must be constant (a per-row dynamic-label " +
-              "merge has no batch key)")
-        case None => Seq("$." + project(e)._1)
+            s"$name $what must be constant")
       }
+
+    def key(i: Int): String = names(i, "key") match {
+      case Seq(k) => k
+      case other =>
+        throw new IllegalArgumentException(s"$name: need one key, got $other")
     }
-    def props(i: Int): Seq[(String, Expr)] = args.lift(i) match {
+
+    /** Constant labels or types. In a pattern a leading `$` marks a
+      * parameter or a dynamic label, so such a name is refused rather than
+      * read as one. */
+    private def labelNames(i: Int, what: String): Seq[String] = {
+      val ls = names(i, what)
+      ls.find(_.startsWith("$")).foreach { l =>
+        throw new IllegalArgumentException(
+          s"$name $what: a name may not begin with `$$`, got $l")
+      }
+      ls
+    }
+
+    def typeName(i: Int): String = labelNames(i, "type") match {
+      case Seq(t) => t
+      case other =>
+        throw new IllegalArgumentException(s"$name: need one type, got $other")
+    }
+
+    /** Node labels; with `perRow`, a per-row label list becomes a dynamic
+      * label over its hidden variable (CREATE evaluates it per row). */
+    def labels(i: Int, perRow: Boolean): Seq[String] =
+      if (args.lift(i).isEmpty) Nil
+      else if (constValueOpt(arg(i)).isDefined) labelNames(i, "labels")
+      else if (perRow) Seq("$." + project(arg(i)))
+      else
+        throw new UnsupportedOperationException(
+          s"$name: labels must be constant (a per-row dynamic-label merge " +
+            "has no batch key)")
+
+    /** A property map as (key, value) items: the items of a map literal,
+      * the entries of a constant map, or, per row, the fields of a struct
+      * or the keys of a map value (collected once). */
+    def props(e: Option[Expr]): Seq[(String, Expr)] = e match {
       case None => Nil
       case Some(MapLit(items)) => items
-      case Some(e) => constValueOpt(e) match {
+      case Some(m0) => constValueOpt(m0) match {
         case Some(null) => Nil
-        case Some(m: Map[_, _]) =>
-          m.toSeq.map { case (k, x) => k.toString -> valueExpr(x) }
+        case Some(m: Map[_, _]) => mapItems(m)
         case Some(other) =>
           throw new IllegalArgumentException(
             s"$name: need a property map, got $other")
         case None =>
-          val (h, c) = project(e)
-          val keys = cur.df.select(c).schema.head.dataType match {
+          import org.apache.spark.sql.types.{MapType, NullType, StructType}
+          val h = project(m0)
+          val keys = typeOf(h) match {
             case s: StructType => s.fieldNames.toSeq
             case _: MapType =>
               // key set collected ONCE (schema-sized, not data-sized)
-              cur.df.select(explode(map_keys(c)).as("__k")).distinct()
-                .collect().map(_.getString(0)).filter(_ != null).sorted.toSeq
+              lf.df.select(explode(map_keys(col(s"$h${Frames.Sep}_val")))
+                .as("__k")).distinct().collect().map(_.getString(0))
+                .filter(_ != null).sorted.toSeq
             case NullType => Nil
             case other =>
               throw new IllegalArgumentException(
@@ -4537,88 +4624,108 @@ final class Planner(
           keys.map(k => k -> Prop(Var(h), k))
       }
     }
-    val node =
-      PatternPart(None, NodePattern(Some(alias), labels, props(1)), Nil)
-    def setAll(i: Int): Seq[SetItem] = props(i) match {
-      case Nil => Nil
-      case kvs => Seq(SetAllProps(alias, MapLit(kvs), update = true))
-    }
-    val clause =
-      if (name == "create.node") CreateCl(Seq(node))
-      else MergeCl(node, setAll(2), setAll(3))
-    val out = planClause(cur, clause)
-    val lf2 = LF(
-      Frames.unbind(out.df, hidden),
-      Scope(out.scope.vars.filterNot { case (v, _) => hidden.contains(v) }))
-    callWhere
-      .map(w => LF(lf2.df.filter(lowering(lf2).lower(w)), lf2.scope))
-      .getOrElse(lf2)
-  }
 
-  /** `create.relationship(from, type, props, to)` /
-    * `merge.relationship(start, type, identProps, createProps, end,
-    * matchProps)` (reference create_module.cpp:105, merge_module.cpp:31):
-    * endpoints are BOUND node variables, so the call is synthesized as a
-    * Create/Merge clause against the current frame — a single batch plan
-    * per statement (the reference runs the procedure once per input row;
-    * same result, one shuffle instead of a driver loop). */
-  private def planHelperRelationship(
-      lf: LF,
-      name: String,
-      args: Seq[Expr],
-      yieldsRaw: Seq[(String, Option[String])],
-      callWhere: Option[Expr]): LF = {
-    def nodeVar(i: Int, what: String): String = args.lift(i) match {
-      case Some(Var(n)) if lf.scope.get(n).contains(Binding.NodeB) => n
-      case other =>
-        throw new IllegalArgumentException(
-          s"$name: $what must be a bound node variable, got $other")
-    }
-    def constMapExprs(i: Int): Seq[(String, Expr)] =
-      args.lift(i).map(constValue).orNull match {
-        case null => Nil
-        case m: Map[_, _] =>
-          m.toSeq.map { case (k, x) => k.toString -> valueExpr(x) }
-        case other =>
-          throw new IllegalArgumentException(s"$name: need a map, got $other")
-      }
-    val tpe = constValue(args(1)).toString
-    val rv = fresh("hrel")
-    def chain(fromV: String, toV: String, props: Seq[(String, Expr)]) =
-      PatternPart(
-        None,
-        NodePattern(Some(fromV), Nil, Nil),
-        Seq((
-          RelPattern(Some(rv), Seq(tpe), props, OutDir, None),
-          NodePattern(Some(toV), Nil, Nil))))
-    val (lf2, dfltYield) = name match {
-      case "create.relationship" =>
-        val part = chain(nodeVar(0, "from"), nodeVar(3, "to"), constMapExprs(2))
-        (planClause(lf, CreateCl(Seq(part))), "relationship")
-      case _ => // merge.relationship
-        val part =
-          chain(nodeVar(0, "startNode"), nodeVar(4, "endNode"), constMapExprs(2))
-        def setAll(i: Int): Seq[SetItem] = constMapExprs(i) match {
-          case Nil => Nil
-          case kvs => Seq(SetAllProps(rv, MapLit(kvs), update = true))
+    /** `n` values from a list argument: its items, or per row its
+      * elements. */
+    def values(i: Int, n: Int): Seq[Expr] = {
+      val items = arg(i) match {
+        case ListLit(items) => items
+        case e => constValueOpt(e) match {
+          case Some(xs: Seq[_]) => xs.map(valueExpr)
+          case Some(other) =>
+            throw new IllegalArgumentException(
+              s"$name: need a value list, got $other")
+          case None =>
+            val h = project(e)
+            (0 until n).map(j => Subscript(Var(h), Lit(j.toLong)))
         }
-        (planClause(lf, MergeCl(part, setAll(3), setAll(5))), "rel")
+      }
+      require(items.size == n, s"$name: keys/values length mismatch")
+      items
     }
-    val alias = yieldsRaw match {
-      case Seq() => dfltYield
-      case Seq((n, a)) if n == dfltYield => a.getOrElse(n)
-      case other =>
-        throw new IllegalArgumentException(
-          s"$name yields only '$dfltYield', got $other")
+
+    private def mapItems(m: Map[_, _]): Seq[(String, Expr)] =
+      m.toSeq.map { case (k, x) => k.toString -> valueExpr(x) }
+
+    /** The maps of a list argument given as map literals or as a constant,
+      * each as (key, value) items; None for a per-row list. */
+    def mapList(i: Int): Option[Seq[Seq[(String, Expr)]]] = arg(i) match {
+      case ListLit(ms) if ms.forall(_.isInstanceOf[MapLit]) =>
+        Some(ms.collect { case MapLit(items) => items })
+      case e => constValueOpt(e).collect {
+        case ms: Seq[_] if ms.forall(_.isInstanceOf[Map[_, _]]) =>
+          ms.collect { case m: Map[_, _] => mapItems(m) }
+      }
     }
-    val renamed = Frames.colsOf(lf2.df, rv).foldLeft(lf2.df)((d, c) =>
-      d.withColumnRenamed(c, alias + c.substring(rv.length)))
-    val lf3 = LF(
-      renamed,
-      Scope(lf2.scope.vars.filterNot(_._1 == rv) :+ (alias -> Binding.EdgeB)))
-    callWhere
-      .map(w => LF(lf3.df.filter(lowering(lf3).lower(w)), lf3.scope))
-      .getOrElse(lf3)
+
+    /** UNWINDs a per-row list of maps into a hidden variable. */
+    def unwind(i: Int): Expr = {
+      val u = fresh("hm")
+      lf = planClause(lf, Unwind(arg(i), u))
+      hidden :+= u
+      Var(u)
+    }
+
+    /** The ids a target argument names, as an array column over a hidden
+      * variable: one entity, a list of them, one id or a list of ids. */
+    private def ids(i: Int): Column = {
+      import org.apache.spark.sql.types._
+      val h = project(arg(i))
+      val c = col(s"$h${Frames.Sep}_val")
+      def entity(t: DataType) = t match {
+        case s: StructType => s.fieldNames.contains(GraphState.IdCol)
+        case _ => false
+      }
+      def id(t: DataType) = t match {
+        case NullType | LongType | IntegerType | ShortType | ByteType => true
+        case _ => false
+      }
+      typeOf(h) match {
+        case t if id(t) => array(c.cast("long"))
+        case t if entity(t) => array(c.getField(GraphState.IdCol))
+        case ArrayType(t, _) if id(t) => c.cast("array<bigint>")
+        case ArrayType(t, _) if entity(t) =>
+          transform(c, _.getField(GraphState.IdCol))
+        case other =>
+          throw new IllegalArgumentException(
+            s"$name: need entities or ids, got $other")
+      }
+    }
+
+    /** Binds id column `idCol` of `df` to a new hidden entity variable. */
+    private def bindId(df: DataFrame, idCol: String, edge: Boolean): String = {
+      val t = fresh("ht")
+      lf = LF(
+        bindById(df, idCol, t, if (edge) state.allEdges else state.allNodes),
+        lf.scope + (t -> (if (edge) Binding.EdgeB else Binding.NodeB)))
+      hidden :+= t
+      t
+    }
+
+    /** The variable a target argument binds, one row per entity it names:
+      * a bound variable of the kind is the target itself; anything else
+      * binds by id through the node or relationship frames. */
+    def target(i: Int, edge: Boolean): String = arg(i) match {
+      case Var(v) if lf.scope.get(v).contains(
+          if (edge) Binding.EdgeB else Binding.NodeB) => v
+      case _ =>
+        val c = ids(i)
+        bindId(lf.df.withColumn("__ht_id", explode(c)), "__ht_id", edge)
+    }
+
+    /** The node variables of each consecutive pair in a target list; a
+      * row whose list holds fewer than two nodes raises. */
+    def pairs(i: Int): (String, String) = {
+      val c = ids(i)
+      val paired = lf.df
+        .withColumn("__hp", explode(when(size(c) > 1, sequence(lit(1), size(c) - 1))
+          .otherwise(raise_error(lit(s"$name: need at least two nodes")))))
+        .withColumn("__ha", element_at(c, col("__hp")))
+        .withColumn("__hb", element_at(c, col("__hp") + 1))
+        .drop("__hp")
+      val a = bindId(paired, "__ha", edge = false)
+      (a, bindId(lf.df, "__hb", edge = false))
+    }
   }
 
   private def planWhere(lf: LF, where: Expr): LF =
@@ -5598,7 +5705,8 @@ final class Planner(
   private def structOf(df: DataFrame, v: String): Column = {
     val cols = Frames.colsOf(df, v)
     val s =
-      struct(cols.map(c => col(c).as(c.substring(v.length + Frames.Sep.length))): _*)
+      struct(cols.map(c =>
+        Frames.named(c).as(c.substring(v.length + Frames.Sep.length))): _*)
     // unbound entity (OPTIONAL MATCH miss) surfaces as NULL, not a struct
     // of NULL fields — the id column witnesses the bind
     when(col(s"$v${Frames.Sep}${GraphState.IdCol}").isNull, lit(null))
@@ -5641,7 +5749,7 @@ final class Planner(
         case many =>
           many.foreach { a =>
             Frames.colsOf(d, t).foreach { c =>
-              d = d.withColumn(s"$a${c.substring(t.length)}", col(c))
+              d = d.withColumn(s"$a${c.substring(t.length)}", Frames.named(c))
             }
           }
           d = d.drop(Frames.colsOf(d, t): _*)
@@ -5669,7 +5777,7 @@ final class Planner(
       case (alias, Left(_)) => Frames.colsOf(d, alias)
       case (alias, Right(_)) => Seq(s"$alias${Frames.Sep}_val")
     } ++ keep
-    d.select(cols.distinct.map(col): _*)
+    d.select(cols.distinct.map(Frames.named): _*)
   }
 
   private def constInt(e: Expr, what: String): Int = e match {

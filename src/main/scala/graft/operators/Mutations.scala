@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, MapType, NullType, StringType, StructType}
 
-import graft.core.GraphState
+import graft.core.{Frames, GraphState}
 
 /** Graph mutations (SURVEY.md §2.6) — each produces a **new immutable
   * GraphState version** instead of the reference's MVCC delta chains
@@ -74,12 +74,12 @@ object Mutations {
             val dt = rows.schema(rows.schema.fieldIndex(p)).dataType
             val badPred = dt match {
               case _: org.apache.spark.sql.types.ArrayType =>
-                size(col(p).cast("array<double>")) =!= n
+                size(Frames.named(p).cast("array<double>")) =!= n
               case _: org.apache.spark.sql.types.NullType => lit(false)
               case _ => lit(true) // wrong type entirely
             }
             val bad = rows
-              .filter(rowGate && col(p).isNotNull && badPred)
+              .filter(rowGate && Frames.named(p).isNotNull && badPred)
               .limit(1)
             if (!bad.isEmpty)
               throw new IllegalArgumentException(
@@ -230,7 +230,7 @@ object Mutations {
           // `SET n.p = null` REMOVES the property (reference SetProperty
           // null semantics); a coalesce would silently keep the old value
           val (oldC, newC) = reconciled(
-            col(prop), base.schema(prop).dataType, col("__nv"), vtype)
+            Frames.named(prop), base.schema(prop).dataType, col("__nv"), vtype)
           base
             .join(upG(), Seq(IdCol), "left_outer")
             .withColumn(prop, when(col("__hit"), newC).otherwise(oldC))
@@ -260,7 +260,7 @@ object Mutations {
         base
           .join(upG(), Seq(IdCol), "left_outer")
           .withColumn(
-            prop, when(col("__hit"), col("__nv")).otherwise(col(prop)))
+            prop, when(col("__hit"), col("__nv")).otherwise(Frames.named(prop)))
           .drop("__nv", "__hit")
       })
     }.toMap
@@ -319,12 +319,12 @@ object Mutations {
         .foreach { p =>
           out = out.withColumn(
             p,
-            when(hit, lit(null).cast(frame.schema(p).dataType)).otherwise(col(p)))
+            when(hit, lit(null).cast(frame.schema(p).dataType)).otherwise(Frames.named(p)))
         }
     keys.foreach { k =>
       val nv = col(s"__nv_$k")
       val old =
-        if (frame.columns.contains(k)) col(k)
+        if (frame.columns.contains(k)) Frames.named(k)
         else lit(null).cast(updates.schema(s"__nv_$k").dataType)
       out = out.withColumn(k, when(hit, nv).otherwise(old))
     }
@@ -439,12 +439,12 @@ object Mutations {
             prop,
             when(
               col("__hit").isNotNull,
-              upsert(col(prop), m, path, col("__nv")))
-              .otherwise(col(prop)))
+              upsert(Frames.named(prop), m, path, col("__nv")))
+              .otherwise(Frames.named(prop)))
           .drop("__hit", "__nv")
       case NullType | _: StructType =>
         val cur =
-          if (frame.columns.contains(prop)) col(prop) else lit(null)
+          if (frame.columns.contains(prop)) Frames.named(prop) else lit(null)
         val (oldV, _) = nestedGet(cur, t, path)
         val perRow =
           when(col("__hit").isNotNull, col("__nv")).otherwise(oldV)
@@ -589,8 +589,8 @@ object Mutations {
         frame.join(rmG(), Seq(IdCol), "left_outer")
           .withColumn(
             prop,
-            when(col("__rm").isNotNull, dropAt(col(prop), mType, path))
-              .otherwise(col(prop)))
+            when(col("__rm").isNotNull, dropAt(Frames.named(prop), mType, path))
+              .otherwise(Frames.named(prop)))
           .drop("__rm")
       case _ =>
         nestedApply(frame, upG, prop, path)
@@ -618,7 +618,7 @@ object Mutations {
               .withColumn(
                 prop,
                 when(col("__rm").isNotNull, lit(null).cast(t))
-                  .otherwise(col(prop)))
+                  .otherwise(Frames.named(prop)))
               .drop("__rm")
           }
         })
@@ -645,7 +645,7 @@ object Mutations {
             .withColumn(
               prop,
               when(col("__rm").isNotNull, lit(null).cast(vt))
-                .otherwise(col(prop)))
+                .otherwise(Frames.named(prop)))
             .drop("__rm")
         }
       })
@@ -759,6 +759,10 @@ object Mutations {
     }
   }
 
+  /** Row gate of [[GatedKey]]: a mutation's key or updates frame of at
+    * most this many rows is broadcast-hinted. */
+  val BroadcastKeys = 100000L
+
   /** Count-gated broadcast hint for a mutation statement's key/updates
     * frame. Mutation key-sets are usually tiny relative to the frames they
     * prune, and broadcasting keeps DELETE/SET from shuffling the whole
@@ -778,8 +782,7 @@ object Mutations {
     // stays lazy and gates with zero jobs; anything else is
     // localCheckpointed so the probe and every thunk read stored blocks.
     private lazy val resolved: (DataFrame, Boolean) = {
-      val max = df0.sparkSession.conf
-        .get("spark.graft.mutation.broadcastKeys", "100000").toLong
+      val max = BroadcastKeys
       Scratch.boundedRows(df0.queryExecution.optimizedPlan) match {
         case Some(n) => (df0, n <= max)
         case None =>

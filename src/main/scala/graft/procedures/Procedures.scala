@@ -735,9 +735,13 @@ object Procedures {
     val meta = Set(
       GraphState.IdCol, GraphState.LabelsCol,
       GraphState.SrcCol, GraphState.DstCol, GraphState.TypeCol)
+    // names backquote unless plain; strings escape `\` and `'`
+    def name(s: String) = graft.cypher.CypherParser.quoteName(s)
     def repr(c: Column, dt: DataType): Column = dt match {
       case StringType =>
-        concat(lit("'"), regexp_replace(c, "'", "\\\\'"), lit("'"))
+        val escaped = regexp_replace(
+          regexp_replace(c, "\\\\", "\\\\\\\\"), "'", "\\\\'")
+        concat(lit("'"), escaped, lit("'"))
       case TimestampType | TimestampNTZType =>
         concat(
           lit("datetime('"),
@@ -754,10 +758,10 @@ object Procedures {
         .sortBy(_.name)
       if (fields.isEmpty) None
       else {
-        val frags = fields.map(f =>
-          when(
-            col(f.name).isNotNull,
-            concat(lit(s"${f.name}: "), repr(col(f.name), f.dataType))))
+        val frags = fields.map { f =>
+          val c = graft.core.Frames.named(f.name)
+          when(c.isNotNull, concat(lit(s"${name(f.name)}: "), repr(c, f.dataType)))
+        }
         Some(concat(lit(" {"), concat_ws(", ", frags.toSeq: _*), lit("}")))
       }
     }
@@ -765,7 +769,8 @@ object Procedures {
       val frame = ctx.g.nodes(l)
       frame.select(
         concat(
-          Seq(lit(s"CREATE (:$l")) ++ propPart(frame) ++ Seq(lit(");")): _*)
+          Seq(lit(s"CREATE (:${name(l)}")) ++ propPart(frame) ++
+            Seq(lit(");")): _*)
           .as("stmt"))
     }
     val edgeStmts = ctx.opts.get("type").map(_.toString).toSeq.map { t =>
@@ -777,7 +782,7 @@ object Procedures {
             col(GraphState.SrcCol).cast("string"),
             lit(" AND id(v) = "),
             col(GraphState.DstCol).cast("string"),
-            lit(s" CREATE (u)-[:$t")) ++
+            lit(s" CREATE (u)-[:${name(t)}")) ++
             propPart(frame) ++ Seq(lit("]->(v);")): _*)
           .as("stmt"))
     }

@@ -8,7 +8,7 @@ import graft.operators.Mutations
 import graft.sources.TpchGraphLoader
 
 /** The mutation key/updates broadcast must be COUNT-GATED
-  * (`spark.graft.mutation.broadcastKeys`): `MATCH (n:Lineitem) SET …`
+  * (`Mutations.BroadcastKeys` rows): `MATCH (n:Lineitem) SET …`
   * derives an updates frame the size of the whole label, and a forced
   * broadcast of that at cluster scale is an 8 GB-limit / driver OOM. Above
   * the gate the join must carry NO broadcast hint (AQE may still choose
@@ -26,20 +26,20 @@ class MutationGateSpec extends SparkTestBase {
     }.size
 
   test("big SET (updates >> gate) is NOT broadcast-hinted and stays correct") {
-    spark.conf.set("spark.graft.mutation.broadcastKeys", "10")
-    try {
-      val li = g.nodes("Lineitem")
-      val total = li.count()
-      assert(total > 10, "gate must be far below the label size")
-      val updates = li.select(
-        col(GraphState.IdCol), lit(1L).as("__nv"))
-      val g2 = Mutations.setPropertyByIds(
-        g, updates, "gate_flag", Some(Seq("Lineitem")))
-      val out = g2.nodes("Lineitem")
-      assert(forcedBroadcastJoins(out) == 0,
-        "updates above the gate must not carry a broadcast hint")
-      assert(out.filter(col("gate_flag") === 1L).count() == total)
-    } finally spark.conf.unset("spark.graft.mutation.broadcastKeys")
+    val li = g.nodes("Lineitem")
+    val total = li.count()
+    assert(total > 10, "gate must be far below the label size")
+    // the label's ids plus enough ids that match no node to pass the gate
+    val updates = li.select(col(GraphState.IdCol), lit(1L).as("__nv"))
+      .unionByName(spark.range(1, Mutations.BroadcastKeys + 1)
+        .select((-col("id")).as(GraphState.IdCol), lit(1L).as("__nv")))
+    assert(updates.count() > Mutations.BroadcastKeys)
+    val g2 = Mutations.setPropertyByIds(
+      g, updates, "gate_flag", Some(Seq("Lineitem")))
+    val out = g2.nodes("Lineitem")
+    assert(forcedBroadcastJoins(out) == 0,
+      "updates above the gate must not carry a broadcast hint")
+    assert(out.filter(col("gate_flag") === 1L).count() == total)
   }
 
   test("small DELETE key (under the gate) keeps the broadcast hint") {
